@@ -339,11 +339,15 @@ def match_turns(
     (Arrow-native mapInArrow -- see ``_arrow_match_batches``).
 
     ``carry_cols``: extra input columns appended verbatim to every
-    match row (one zero-copy ``pc.take`` each). For SAME-turn context
-    (role/tool of the matched turn) this replaces the T5 stream-stream
-    join entirely -- no second source scan, no join state stores --
-    and is the scale-safe plan; the true stream-stream join remains
-    the operator for CROSS-turn enrichment.
+    match row (one zero-copy ``pc.take`` each). This is how
+    ``start_pipeline(with_context_join=True)`` serves SAME-turn context
+    (role/tool of the matched turn), in either ``context_mode``: one
+    source scan, no join state stores. A stream-stream join cannot
+    share that scan -- even with both legs derived from one
+    ``readStream`` frame, each batch's plan scans the files twice and
+    buffers both sides in a ``StreamingSymmetricHashJoin`` -- so the
+    T5 join (``stream_join_context``) is kept for CROSS-turn
+    enrichment only.
 
     ``ipc_meter``: optional 4-tuple of Spark accumulators
     (in_bytes, in_rows, out_bytes, out_rows) that tallies the Arrow

@@ -1309,11 +1309,13 @@ def q_cep_transcripts_flagship(spark, sf_dir):
 
 def q_cep_actions_with_context(spark, sf_dir):
     """T5's row contract in batch form, driver-oracled: every flagship
-    action row re-joined to its source turn's role/tool context -- the
-    same (conv_id, turn_idx) equality the streaming context join
-    performs statefully (stream_join_context /
-    start_pipeline(with_context_join=True); streaming parity is pinned
-    by tests/test_streaming.py::test_context_join_pipeline_end_to_end).
+    action row re-joined to its source turn's role/tool context by
+    (conv_id, turn_idx) equality. The streaming form,
+    start_pipeline(with_context_join=True), carries the same columns
+    through the match operator instead of joining them back (a
+    stream-stream join would scan the source a second time and keep
+    join state); its parity is pinned by
+    tests/test_streaming.py::test_context_join_pipeline_end_to_end.
     Reference analog: actions carry the original logLine forward
     (ActionManager.h:22, set at ActionManager.cpp:82)."""
     FX.transcripts_fixture_path()
@@ -1336,10 +1338,10 @@ def q_cep_actions_ctx_carry(spark, sf_dir):
     zero-copy ``pc.take`` per column) instead of being joined back
     from a second pass over the turns. The cooldown gate still sees
     pure MATCHES_SCHEMA columns (its Arrow path maps by POSITION), so
-    context is split off and re-attached after step expansion --
-    exactly the micro-batch shape of
-    ``start_pipeline(context_mode='carry')``. Oracled with the SAME
-    SQL as the join variant: two physical plans, one logical result."""
+    context is split off and re-attached after step expansion
+    (``start_pipeline(with_context_join=True)`` carries it through
+    the gate instead). Oracled with the SAME SQL as the join variant:
+    two physical plans, one logical result."""
     FX.transcripts_fixture_path()
     turns = transcripts_df(
         spark, make_transcripts(n_convs=FX.TRANSCRIPTS_N_CONVS, seed=42)

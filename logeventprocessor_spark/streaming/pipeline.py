@@ -20,6 +20,16 @@ so the batch and streaming semantics cannot diverge; state is one
 ``last_fire_ns`` per key, evicted by event-time timeout once the
 watermark passes last_fire + cooldown (bounded state at 10^12-turn
 scale -- north-rule requirement).
+
+Same-turn context (the matched turn's role/tool) is CARRIED through the
+match operator's Arrow boundary (``match_turns(carry_cols=...)``), not
+joined back. A stream-stream join cannot share the match side's scan:
+on Spark 4.1.2, deriving both join legs from ONE ``readStream`` frame
+gives one source, yet every data batch's executed plan still holds two
+``FileScan parquet`` nodes, two ``Exchange ... REQUIRED_BY_STATEFUL_
+OPERATOR`` and a ``StreamingSymmetricHashJoin`` (four state stores per
+partition). ``stream_join_context`` stays the operator for CROSS-turn
+context, where the enrichment comes from another turn or stream.
 """
 
 from __future__ import annotations
@@ -501,7 +511,9 @@ def stream_join_context(
     """T5 as a true stateful STREAM-STREAM join: re-attach full turn
     context (role, tool) to the matched-events stream. Both sides carry
     watermarks; the time-range predicate bounds the join state so Spark
-    can evict buffered rows (mandatory at 10^12-turn scale).
+    can evict buffered rows (mandatory at 10^12-turn scale). This is
+    the CROSS-turn operator; ``start_pipeline`` serves same-turn
+    context by carrying it (module header).
 
     Reference analog: actions carry the original logLine forward
     (ActionManager.h:22, set at ActionManager.cpp:82).
@@ -699,40 +711,34 @@ def start_pipeline(
     email no longer fires once the email is a ``<EMAIL>`` token).
 
     ``with_context_join`` (snapshot backend only): every sink row
-    carries the turn's role/tool context, via one of two plans
-    (``context_mode``), pinned output-identical by
-    tests/test_streaming_extras.py:
+    carries its own turn's role/tool. The matched turn's columns ride
+    through the match operator's Arrow boundary
+    (``match_turns(carry_cols=...)``, one zero-copy ``pc.take`` per
+    column), then THROUGH the cooldown gate and step expansion as
+    pass-through columns (the gate's keyed scan only reads
+    conv_id/rule_id/ts and only ever drops rows). So the action rows
+    equal the plain pipeline's, late zero-cooldown matches included,
+    with one source scan and no join state. A stream-stream join
+    cannot share that scan (module header), so the T5 join
+    (``stream_join_context``) is left to CROSS-turn enrichment.
 
-    * ``"join"``: the T5 watermarked stream-stream join
-      (``stream_join_context``) between match and cooldown. The
-      context side is a SECOND scan of the source stream -- the
-      inherent price of a true stream-stream join (both sides buffer
-      keyed state inside the join window); measured as its own bench
-      line (``cep_streaming_ctx_pipeline``). This is the GENERAL T5
-      operator: use it when the context comes from a DIFFERENT turn
-      or stream (cross-turn enrichment).
-    * ``"carry"``: the matched turn's own role/tool ride through the
-      match operator's Arrow boundary (``match_turns(carry_cols=...)``,
-      one zero-copy ``pc.take`` per column) -- no second scan, no join
-      state stores, no extra shuffle. For SAME-turn context this is
-      the scale-safe plan (round-5 verdict #4); bench line
-      ``cep_streaming_ctx_carry_pipeline``.
-
-    Either way the context columns ride THROUGH the cooldown gate and
-    step expansion as pass-through columns (the gate's keyed scan only
-    reads conv_id/rule_id/ts and only ever drops rows), so suppression
-    semantics are pinned identical to the plain pipeline -- with no
-    per-batch context split/dedup/re-join.
+    ``context_mode``: ``"join"`` or ``"carry"``. Both select the carry
+    plan above; the parameter stays for callers that name a mode.
+    Any other value raises ``ValueError``. Checkpoints written by the
+    earlier ``"join"`` plan (two sources plus join state) cannot be
+    resumed: Spark's offset log refuses a query with fewer sources
+    ("There are [2] sources in the checkpoint offsets and now there
+    are [1]"). Start such a query on a fresh checkpoint.
 
     ``state_partitions``: shuffle-partition count pinned into THIS
     query's checkpoint at first start (Spark reads the session conf at
     query planning; the session value is restored right after
-    ``start()``). Stateful operators pay a FIXED per-partition cost
-    per micro-batch (store open/commit/maintenance x 4 stores per
-    partition for a stream-stream join) -- measured at 32 vs 8 on a
-    ~100K-row trigger: 24.1 s vs 5.0 s per batch. Size it to the
-    per-trigger state volume, not the core count; on a 100 TB cluster
-    those are close, at bench scale they are 4x apart.
+    ``start()``). On the snapshot backend the streaming plan holds no
+    stateful operator, so it sizes only the gate/advance shuffles run
+    inside ``foreachBatch``. On the ``'state'`` backend it also sets
+    the partition count of the cooldown state stores, each paying a
+    FIXED open/commit/maintenance cost per micro-batch: size it to the
+    per-trigger state volume, not the core count.
 
     ``ack_types``: action types that additionally produce an ``acks``
     row (K4, the reference's acknowledgment email after processing a
@@ -756,7 +762,23 @@ def start_pipeline(
       backend removes that floor and the hot/cold double source scan.
     * ``'state'``: the store-native form -- hot/cold rule split with
       ``applyInPandasWithState`` eviction timers (build_match_stream).
+
+    Any other ``cooldown_backend`` raises ``ValueError``.
     """
+    if cooldown_backend not in ("snapshot", "state"):
+        raise ValueError(
+            f"cooldown_backend must be 'snapshot' or 'state', "
+            f"got {cooldown_backend!r}"
+        )
+    if context_mode not in ("join", "carry"):
+        raise ValueError(
+            f"context_mode must be 'join' or 'carry', got {context_mode!r}"
+        )
+    if with_context_join and cooldown_backend != "snapshot":
+        raise ValueError(
+            "with_context_join is implemented for the snapshot "
+            "backend (use stream_join_context directly otherwise)"
+        )
     if state_store == "rocksdb":
         spark.conf.set(
             "spark.sql.streaming.stateStore.providerClass",
@@ -778,42 +800,12 @@ def start_pipeline(
 
         if late_cutoff is not None:
             stream = stream.filter(F.col("ts") >= F.lit(late_cutoff))
-        enabled = [r for r in rules if r.enabled]
-        carry_ctx = with_context_join and context_mode == "carry"
-        matched = match_turns(
+        actions = match_turns(
             stream,
-            enabled,
+            [r for r in rules if r.enabled],
             ipc_meter=ipc_meter,
-            carry_cols=("role", "tool") if carry_ctx else (),
+            carry_cols=("role", "tool") if with_context_join else (),
         )
-        if with_context_join and context_mode == "join":
-            from logeventprocessor_spark.operators.match import (
-                prefilter_condition,
-            )
-
-            ctx_src = read_transcripts_stream(
-                spark, input_dir, max_files_per_trigger
-            )
-            if pii_scrub:
-                # the context side must see the same scrubbed text the
-                # match side prefilters on
-                ctx_src = scrub_stream_text(ctx_src)
-            if late_cutoff is not None:
-                ctx_src = ctx_src.filter(F.col("ts") >= F.lit(late_cutoff))
-            # the context side only exists to serve MATCHED turns, and
-            # a match requires some rule literal -- the same codegen'd
-            # prefilter that gates the Arrow boundary prunes the join
-            # state ~5x (unfiltered, EVERY turn in the watermark
-            # horizon sits in the join's state store)
-            pre = prefilter_condition(enabled)
-            if pre is not None:
-                ctx_src = ctx_src.filter(pre)
-            # join_window is a pure state-size knob here: a match row
-            # carries the turn's OWN ts, so the equality join always
-            # lands at zero time distance -- keep the buffer tight
-            matched = stream_join_context(
-                matched, ctx_src, watermark, join_window="1 minute"
-            )
         cool = CooldownSnapshotState(
             spark,
             _os.path.join(out_dir, "cooldown_state"),
@@ -886,14 +878,7 @@ def start_pipeline(
                 })
             finally:
                 gated.unpersist()
-
-        actions = matched
     else:
-        if with_context_join:
-            raise ValueError(
-                "with_context_join is implemented for the snapshot "
-                "backend (use stream_join_context directly otherwise)"
-            )
         actions = build_match_stream(stream, rules, watermark, late_cutoff)
 
         if ack_types:
@@ -920,37 +905,18 @@ def start_pipeline(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    # confs pinned into THIS query at start (session value restored
-    # right after start(), same mechanism as the state_partitions pin)
-    pinned: dict[str, str] = {}
-    if state_partitions is not None:
-        pinned["spark.sql.shuffle.partitions"] = str(state_partitions)
-    if cooldown_backend == "snapshot" and with_context_join \
-            and context_mode == "join":
-        # Skip the trailing NO-DATA micro-batch: for this query it
-        # exists only to advance the watermark and evict join state --
-        # an INNER time-bounded join emits every pair on the data batch
-        # and emits nothing at eviction, so the sink output is
-        # byte-identical (A/B at 1M turns local[32]: same 234,056 rows
-        # and checksum; wall 8.4 s -> ~6.1 s, the no-data batch's
-        # state-store scan + ~full-state eviction commit across
-        # 4 stores x state_partitions). Eviction then happens lazily on
-        # the next DATA batch -- delayed eviction can only RETAIN extra
-        # state, never drop a row that could still match (late rows are
-        # filtered at input by the watermark, not by state eviction),
-        # so continuous deployments trade a bounded state-size bump
-        # between sparse batches for one fewer stateful commit cycle
-        # per trigger.
-        pinned["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
-    old_vals = {k: spark.conf.get(k, None) for k in pinned}
-    for k, v in pinned.items():
-        spark.conf.set(k, v)
+    if state_partitions is None:
+        return writer.start(), sink
+    # pinned into THIS query at start; the session value is restored
+    # right after start()
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, str(state_partitions))
     try:
         q = writer.start()
     finally:
-        for k, v in old_vals.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
     return q, sink

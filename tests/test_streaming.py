@@ -363,12 +363,12 @@ def test_stream_sequence_all_cap(spark, tmp_path):
 
 
 def test_context_join_pipeline_end_to_end(spark, fixture_dirs, tmp_path):
-    """T5 wired INTO the snapshot pipeline (round-4 verdict task #7):
-    match -> watermarked stream-stream context join -> cooldown gate ->
-    step expansion -> exactly-once sink. The action rows must be
-    IDENTICAL to the plain pipeline's (the join must not perturb
-    cooldown semantics), every row must carry the source turn's
-    role/tool, and a restart on the same checkpoint must add nothing."""
+    """Same-turn context wired INTO the snapshot pipeline: match (role/
+    tool carried) -> cooldown gate -> step expansion -> exactly-once
+    sink. The action rows must be IDENTICAL to the plain pipeline's
+    (context must not perturb cooldown semantics), every row must
+    carry the source turn's role/tool, and a restart on the same
+    checkpoint must add nothing."""
     pdf, input_dir, _ = fixture_dirs
     rules = canonical_rules()
     out = str(tmp_path / "out_ctx")
@@ -408,11 +408,10 @@ def test_context_join_pipeline_end_to_end(spark, fixture_dirs, tmp_path):
 
 
 def test_context_carry_matches_context_join(spark, fixture_dirs, tmp_path):
-    """context_mode='carry' (role/tool ride the match operator's Arrow
-    boundary -- no second scan, no join state) must produce the
-    IDENTICAL sink table as context_mode='join' (the true stream-stream
-    join). Same-turn context has two physical plans, one logical
-    result (round-5 verdict task #4)."""
+    """Both context_mode values produce the IDENTICAL sink table from
+    ONE plan: role/tool ride the match operator's Arrow boundary. The
+    query reads one source, and its executed plan scans the files once
+    and holds no stream-stream join (no join state stores)."""
     pdf, input_dir, _ = fixture_dirs
     rules = canonical_rules()
     cols = CMP + ["role", "tool"]
@@ -424,6 +423,11 @@ def test_context_carry_matches_context_join(spark, fixture_dirs, tmp_path):
             with_context_join=True, context_mode=mode,
         )
         q.awaitTermination(300)
+        assert len(q.lastProgress["sources"]) == 1
+        plan = q._jsq.streamingQuery().lastExecution().executedPlan()
+        plan = plan.toString()
+        assert plan.count("FileScan") == 1, plan
+        assert "StreamingSymmetricHashJoin" not in plan, plan
         raw = sink.read(spark).toPandas()
         assert {"role", "tool"} <= set(raw.columns)
         out = raw[cols].copy()
@@ -435,6 +439,81 @@ def test_context_carry_matches_context_join(spark, fixture_dirs, tmp_path):
         )
     assert len(outs["carry"]) > 0
     pd.testing.assert_frame_equal(outs["join"], outs["carry"])
+
+
+def _write_turn_files(input_dir, files):
+    """One parquet file per list of (conv_id, turn_idx, role, text,
+    tool, ts) rows, with increasing mtimes so the file source reads
+    them in list order."""
+    from logeventprocessor_spark.schema import TRANSCRIPTS_SCHEMA
+
+    os.makedirs(input_dir)
+    for i, rows in enumerate(files):
+        pdf = pd.DataFrame(
+            rows, columns=[f.name for f in TRANSCRIPTS_SCHEMA.fields]
+        )
+        pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
+        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+        p = f"{input_dir}/part-{i}.parquet"
+        pdf.to_parquet(p, index=False)
+        os.utime(p, ns=(1_000_000_000_000_000_000 + i * 10**9,) * 2)
+
+
+def test_context_join_keeps_late_cold_matches(spark, tmp_path):
+    """A zero-cooldown match arriving 50 min behind the max event time
+    (40 min behind the watermark) is kept by the plain pipeline, so
+    with_context_join=True must keep it too: the context output is
+    the plain action rows plus each row's own role/tool."""
+    base = pd.Timestamp("2024-03-01 10:00:00")
+    m = pd.Timedelta(minutes=1)
+    input_dir = str(tmp_path / "input")
+    _write_turn_files(input_dir, [
+        [("a", 0, "user", "hi clarice", "", base)],
+        [("b", 0, "assistant", "clarice there", "search", base + 30 * m)],
+        [("c", 0, "user", "clarice again", "", base + 60 * m),
+         ("c", 1, "tool", "spam ping", "shell", base + 60 * m + m)],
+        # late: the watermark (10 min delay) already sits at base+51min
+        [("d", 0, "assistant", "late clarice", "grep", base + 11 * m)],
+    ])
+    outs = {}
+    for ctx in (False, True):
+        q, sink = start_pipeline(
+            spark, input_dir, canonical_rules(), str(tmp_path / f"out_{ctx}"),
+            str(tmp_path / f"ckpt_{ctx}"), max_files_per_trigger=1,
+            with_context_join=ctx,
+        )
+        q.awaitTermination(300)
+        outs[ctx] = sink.read(spark).toPandas()
+    plain, got = outs[False], outs[True]
+    assert ("d", 0) in set(zip(plain["conv_id"], plain["turn_idx"]))
+    pd.testing.assert_frame_equal(_norm(got), _norm(plain))
+    ctx_of = {
+        ("a", 0): ("user", ""), ("b", 0): ("assistant", "search"),
+        ("c", 0): ("user", ""), ("c", 1): ("tool", "shell"),
+        ("d", 0): ("assistant", "grep"),
+    }
+    for r in got.itertuples(index=False):
+        assert (r.role, r.tool) == ctx_of[(r.conv_id, r.turn_idx)]
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        dict(with_context_join=True, context_mode="Join"),
+        dict(cooldown_backend="rocksdb"),
+    ],
+)
+def test_start_pipeline_rejects_unknown_modes(spark, tmp_path, kw):
+    """An unknown context_mode or cooldown_backend fails at the call,
+    before any query starts (not inside the first micro-batch, and not
+    by silently picking another backend)."""
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="must be"):
+        start_pipeline(
+            spark, str(tmp_path / "in"), canonical_rules(),
+            str(tmp_path / "out"), str(tmp_path / "ckpt"), **kw,
+        )
+    assert len(spark.streams.active) == active
 
 
 def test_cooldown_backends_agree(spark, fixture_dirs, tmp_path):
@@ -520,35 +599,21 @@ def test_cooldown_backends_agree_on_late_data(spark, tmp_path):
     dropped by BOTH backends -- the store backend drops it before the
     stateful op; the snapshot backend's gate() must replicate that,
     else an evicted key lets a within-cooldown fire through."""
-    import os
-
-    from logeventprocessor_spark.schema import TRANSCRIPTS_SCHEMA
-
     base = pd.Timestamp("2024-03-01 10:00:00")
-
-    def turns(rows):
-        pdf = pd.DataFrame(
-            rows, columns=["conv_id", "turn_idx", "text", "ts"]
-        ).assign(role="user", tool="")
-        pdf = pdf[[f.name for f in TRANSCRIPTS_SCHEMA.fields]]
-        pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        return pdf
-
     input_dir = str(tmp_path / "input")
-    os.makedirs(input_dir)
-    # batch 0: conv c fires spam_guard (cooldown 5 s) at T
-    f0 = turns([("c", 1, "spam ping one", base)])
-    # batch 1: conv d fires at T+30min -> watermark (1 min delay)
-    # reaches T+29min, far past c's cooldown window -> c evicted
-    f1 = turns([("d", 1, "spam ping two", base + pd.Timedelta(minutes=30))])
-    # batch 2: LATE fire for c at T+2s -- inside c's original cooldown
-    # window AND older than the watermark -> must be dropped, not fired
-    f2 = turns([("c", 2, "spam ping late", base + pd.Timedelta(seconds=2))])
-    for i, pdf in enumerate((f0, f1, f2)):
-        p = f"{input_dir}/part-{i}.parquet"
-        pdf.to_parquet(p, index=False)
-        os.utime(p, ns=(1_000_000_000_000_000_000 + i * 10**9,) * 2)
+    _write_turn_files(input_dir, [
+        # batch 0: conv c fires spam_guard (cooldown 5 s) at T
+        [("c", 1, "user", "spam ping one", "", base)],
+        # batch 1: conv d fires at T+30min -> watermark (1 min delay)
+        # reaches T+29min, far past c's cooldown window -> c evicted
+        [("d", 1, "user", "spam ping two", "",
+          base + pd.Timedelta(minutes=30))],
+        # batch 2: LATE fire for c at T+2s -- inside c's original
+        # cooldown window AND older than the watermark -> must be
+        # dropped, not fired
+        [("c", 2, "user", "spam ping late", "",
+          base + pd.Timedelta(seconds=2))],
+    ])
 
     outs = {}
     for backend in ("snapshot", "state"):

@@ -71,6 +71,37 @@ def test_stream_stream_context_join(spark, stream_input, tmp_path):
     )
 
 
+def test_stream_stream_join_scans_once_per_leg(spark, stream_input, tmp_path):
+    """Both legs of the T5 join come from ONE readStream frame, and the
+    query has one source, yet each data batch still scans the files
+    once per leg and shuffles both into the stateful join. That is why
+    start_pipeline carries same-turn context instead of joining it.
+
+    A second query on the same frames, run without the trailing
+    no-data batch so its last execution is a data batch; the output
+    check above runs with Spark's defaults."""
+    _, input_dir, _ = stream_input
+    stream = read_transcripts_stream(spark, input_dir, max_files_per_trigger=1)
+    joined = stream_join_context(match_turns(stream, canonical_rules()), stream)
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(no_data, "false")
+    try:
+        q = (
+            joined.writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.unset(no_data)
+    q.awaitTermination(300)
+    assert len(q.lastProgress["sources"]) == 1
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 2, plan
+    assert plan.count("REQUIRED_BY_STATEFUL_OPERATOR") == 2, plan
+    assert "StreamingSymmetricHashJoin" in plan, plan
+
 def test_hot_rule_reload(spark, stream_input, tmp_path):
     """Rules re-read per micro-batch: edit the YAML between runs and
     the next batches use the new rule set on the same checkpoint."""
