@@ -14,7 +14,7 @@ but still too large to scan twice:
 
     matches -> repartition(conv_id, rule_id)
             -> sortWithinPartitions(conv_id, rule_id, ts, turn_idx)
-            -> mapInArrow(C++ hot/cold split + group-aware greedy scan)
+            -> mapInArrow(C++ hot/cold split + greedy_keep over each chunk)
 
 ``mapInArrow`` (not ``applyInPandas``) avoids one Python call per
 (conv, rule) group -- a partition's many groups are processed in one
@@ -24,53 +24,65 @@ may split a partition into multiple record batches, the trailing group
 of each chunk is carried into the next chunk so no keyed scan is ever
 cut mid-group.
 
-The streaming form (streaming/pipeline.py) keys real state by
-(conv_id, rule_id) via ``applyInPandasWithState`` and shares
-``suppress_group`` below so the two paths cannot diverge.
+``greedy_keep`` is the ONE implementation of the greedy scan: this
+batch operator calls it with many keyed runs per Arrow chunk, the
+store-native streaming backend (streaming/pipeline.py,
+``applyInPandasWithState`` keyed by (conv_id, rule_id)) with one run
+per key, so the paths cannot diverge.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from logeventprocessor_spark.rules import Rule
 
 
-def suppress_group(
-    g: pd.DataFrame, cooldown_ms: int, last_fire_ns: int | None = None
-) -> tuple[pd.DataFrame, int | None]:
-    """Greedy event-time cooldown scan over ONE (conv_id, rule_id) group.
+# "no prior fire" in a prior_ns seed: every real epoch-ns timestamp,
+# pre-1970 ones included, is greater (pandas' Timestamp.min is
+# INT64_MIN + 1), so a negative prior is a real fire, not a missing one
+NO_PRIOR = -(2**63)
 
-    ``g`` must be sorted by (ts, turn_idx). Returns (kept rows,
-    new last-fire time in ns) so the streaming path can persist state
-    across micro-batches.
-    """
-    # normalize to ns regardless of the frame's datetime unit: pandas
-    # frames born from Arrow batches carry datetime64[us] (int64 cast
-    # would be microseconds -- a silent 1000x cooldown inflation),
-    # while applyInPandasWithState delivers datetime64[ns]. Strip any
-    # tz first: a tz-aware column's to_numpy() yields object Timestamps
-    # whose datetime64 astype goes through numpy's deprecated tz parse.
-    # tz_convert("UTC") BEFORE dropping the tz keeps the ns values
-    # epoch-based whatever the session timezone -- the streaming
-    # backends seed prior_ns from JVM unix_micros (UTC epoch), and a
-    # bare tz_localize(None) on a non-UTC frame would skew every
-    # cross-batch cooldown seed by the tz offset.
-    s = g["ts"]
-    if getattr(s.dtype, "tz", None) is not None:
-        s = s.dt.tz_convert("UTC").dt.tz_localize(None)
-    ts_ns = s.to_numpy().astype("datetime64[ns]").astype("int64")
-    keep = [False] * len(g)
-    cd_ns = int(cooldown_ms) * 1_000_000
-    last = last_fire_ns
-    for i in range(len(g)):
-        if last is None or ts_ns[i] - last >= cd_ns:
-            keep[i] = True
-            last = int(ts_ns[i])
-    return g[pd.Series(keep, index=g.index)], last
+
+def _epoch_ns(ts: pd.Series) -> np.ndarray:
+    """A timestamp column as int64 UTC epoch ns, whatever its unit or tz.
+
+    Frames born from Arrow batches carry datetime64[us] (a bare int64
+    cast would be microseconds -- a silent 1000x cooldown inflation),
+    while applyInPandasWithState delivers datetime64[ns]. A tz-aware
+    column is converted to UTC BEFORE its tz is dropped: the seeds
+    (snapshot ``prior_ns``, store ``last_fire_ns``) are UTC epoch ns,
+    and wall time in a non-UTC zone would skew every cross-batch
+    cooldown by the tz offset."""
+    if getattr(ts.dtype, "tz", None) is not None:
+        ts = ts.dt.tz_convert("UTC").dt.tz_localize(None)
+    return ts.to_numpy().astype("datetime64[ns]").astype("int64")
+
+
+def greedy_keep(ts_ns, run_starts, cd_ns, prior_ns) -> np.ndarray:
+    """The T1 greedy event-time scan: a bool keep-mask over ``ts_ns``.
+
+    ``ts_ns`` holds one or more keyed runs back to back, each sorted by
+    (ts, turn_idx); ``run_starts`` are the runs' first indices (the
+    first is 0). ``cd_ns`` and ``prior_ns`` give each run its cooldown
+    and its last fire before this scan (``NO_PRIOR`` for none). A row
+    fires when no fire precedes it in its run or its gap to the last
+    fire is >= the cooldown; a suppressed row does not advance the
+    clock."""
+    ts = np.asarray(ts_ns, dtype=np.int64).tolist()
+    bounds = [int(s) for s in run_starts] + [len(ts)]
+    keep = np.zeros(len(ts), dtype=bool)
+    for r, (cd, last) in enumerate(zip(cd_ns, prior_ns)):
+        cd = int(cd)
+        last = None if last == NO_PRIOR else int(last)
+        for i in range(bounds[r], bounds[r + 1]):
+            t = ts[i]
+            if last is None or t - last >= cd:
+                keep[i] = True
+                last = t
+    return keep
 
 
 def apply_cooldown(
@@ -95,9 +107,9 @@ def apply_cooldown(
     key's greedy scan with its last fire from an earlier batch -- the
     cross-batch half of the snapshot-state streaming backend
     (streaming/batch_state.py). Joined BEFORE the repartition so the
-    seed rides the same shuffle; nulls become -1 JVM-side (a ns value
-    must never pass through a nullable float, 2^63-scale ints lose
-    precision there)."""
+    seed rides the same shuffle; nulls become ``NO_PRIOR`` JVM-side (a
+    ns value must never pass through a nullable float, 2^63-scale ints
+    lose precision there)."""
     cooldowns = {r.rule_id: r.cooldown_ms for r in rules if r.cooldown_ms > 0}
     if not cooldowns:
         return matches
@@ -122,7 +134,8 @@ def apply_cooldown(
         matches = (
             matches.join(prior, ["conv_id", "rule_id"], "left")
             .withColumn(
-                "prior_ns", F.coalesce(F.col("prior_ns"), F.lit(-1)).cast("long")
+                "prior_ns",
+                F.coalesce(F.col("prior_ns"), F.lit(NO_PRIOR)).cast("long"),
             )
             .select(*cols, "prior_ns")
         )
@@ -144,47 +157,26 @@ def apply_cooldown(
         carry: pd.DataFrame | None = None
 
         def scan(pdf: pd.DataFrame) -> pa.RecordBatch | None:
-            # Run-boundary numpy scan, NOT a pandas groupby loop: the
-            # rows arrive SORTED by (conv_id, rule_id, ts, turn_idx),
-            # so each keyed group is one contiguous run. Hot groups are
-            # tiny (1-3 fires) and numerous (one per active (conv,
-            # rule)); building a pandas sub-frame per group cost
-            # ~300 us EACH -- measured +1.5 s on the sf0.1 batch
-            # pipeline when fixture v2 doubled the hot-group count
-            # (BENCH/batch_ab.json, round-5 verdict task #3). Same
-            # greedy semantics as suppress_group (the streaming
-            # backends' shared scan, pinned identical by
-            # test_cooldown_backends_agree): suppressed fires do not
-            # advance the clock; gap test is >= cooldown; ns
-            # normalization mirrors suppress_group's tz handling.
-            import numpy as np
-
-            s = pdf["ts"]
-            if getattr(s.dtype, "tz", None) is not None:
-                s = s.dt.tz_convert("UTC").dt.tz_localize(None)
-            ts_ns = s.to_numpy().astype("datetime64[ns]").astype("int64")
+            # rows arrive SORTED by (conv_id, rule_id, ts, turn_idx), so
+            # each keyed group is one contiguous run: one kernel call
+            # per chunk, NOT a pandas groupby -- hot groups are tiny
+            # (1-3 fires) and numerous, and a pandas sub-frame per group
+            # cost ~300 us EACH (+1.5 s on the sf0.1 batch pipeline,
+            # BENCH/batch_ab.json, round-5 verdict task #3)
             conv = pdf["conv_id"].to_numpy()
             rule = pdf["rule_id"].to_numpy()
-            n = len(pdf)
-            brk = np.empty(n, dtype=bool)
+            brk = np.empty(len(pdf), dtype=bool)
             brk[0] = True
             brk[1:] = (conv[1:] != conv[:-1]) | (rule[1:] != rule[:-1])
             starts = np.flatnonzero(brk)
-            ends = np.append(starts[1:], n)
-            prior = pdf["prior_ns"].to_numpy() if has_prior else None
-            keep = np.zeros(n, dtype=bool)
-            for s_i, e_i in zip(starts.tolist(), ends.tolist()):
-                cd_ns = int(cooldowns[rule[s_i]]) * 1_000_000
-                last = None
-                if prior is not None:
-                    p = int(prior[s_i])
-                    if p >= 0:
-                        last = p
-                for i in range(s_i, e_i):
-                    t = int(ts_ns[i])
-                    if last is None or t - last >= cd_ns:
-                        keep[i] = True
-                        last = t
+            keep = greedy_keep(
+                _epoch_ns(pdf["ts"]),
+                starts,
+                [cooldowns[r] * 1_000_000 for r in rule[starts]],
+                pdf["prior_ns"].to_numpy()[starts]
+                if has_prior
+                else [NO_PRIOR] * len(starts),
+            )
             if not keep.any():
                 return None
             out = pdf[keep]

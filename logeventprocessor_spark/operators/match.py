@@ -7,9 +7,9 @@ ActionManager.cpp:49-120, index-order determinism :126), emit one match
 row per (turn, rule) that fires, with ``extracted`` = group(1) if the
 pattern has >=1 group else group(0) (ActionManager.cpp:72-77).
 
-Two implementations that must agree (tests pin this):
+Three entry points remain, each for the reason written next to it:
 
-* ``match_turns`` -- Arrow-native ``mapInArrow``. Patterns are
+* ``match_turns`` -- the hot path: Arrow-native ``mapInArrow``. Patterns are
   compiled ONCE per executor per rule-set (module-level cache keyed by
   a rules fingerprint -- the reference's regex precompilation,
   RegexMatcher.cpp:104-117, minus its per-event recompile anti-pattern
@@ -26,20 +26,23 @@ Two implementations that must agree (tests pin this):
   columnar batches, so the operator needs NO shuffle at all -- it
   scales linearly with input partitions on a 1000-executor cluster.
 
-* ``match_turns_sql`` -- pure-Catalyst variant (RLIKE +
-  regexp_extract inside whole-stage codegen) used for plan-quality
-  comparison and as the JVM-only path for rule corpora whose
-  group(1)-else-group(0) semantics regexp_extract can express
-  (we wrap group-free patterns in one capture group, which makes
-  group(1) == group(0)).
+* ``match_turns_dynamic`` -- hot reload: the same Arrow kernel
+  (``_arrow_match_batches``) against whatever rule set the rules file
+  holds at execution time (``dynamic_rules``), not at plan time; the
+  match half of ``streaming.pipeline.start_pipeline_with_reload``.
+
+* ``match_turns_sql`` -- the dialect-parity reference: pure-Catalyst
+  variant (RLIKE + regexp_extract inside whole-stage codegen) for rule
+  corpora whose group(1)-else-group(0) semantics regexp_extract can
+  express (we wrap group-free patterns in one capture group, which
+  makes group(1) == group(0)); pinned equal to ``match_turns`` by
+  tests/test_match_batch.py::test_sql_variant_agrees_with_udf_variant.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -287,46 +290,6 @@ def _arrow_match_batches(batches, compiled, carry_cols=()):
                 ]
                 + list(carry_cols),
             )
-
-
-def _match_batch(pdf: pd.DataFrame, compiled: list) -> pd.DataFrame | None:
-    """Vectorized match of one Arrow batch against a compiled rule
-    list; returns MATCHES_SCHEMA-ordered rows or None."""
-    import warnings
-
-    text = pdf["text"].fillna("")
-    # one lowercase pass shared by every rule's literal
-    # pre-filter (substring scan ~10x cheaper than the regex)
-    lowered = text.str.lower()
-    outs = []
-    for rule_id, rule_idx, pat, extract_pat, literal, _safe_re2 in compiled:
-        cand = text
-        if literal is not None:
-            pre = lowered.str.contains(literal, regex=False, na=False)
-            if not pre.any():
-                continue
-            cand = text[pre]
-        with warnings.catch_warnings():
-            # pandas warns that a grouped pattern in contains()
-            # discards groups -- intended: groups are read in
-            # the extract() pass below.
-            warnings.simplefilter("ignore", UserWarning)
-            sub_mask = cand.str.contains(pat, na=False)
-        if not sub_mask.any():
-            continue
-        matched = cand[sub_mask]
-        sub = pdf.loc[matched.index, ["conv_id", "turn_idx", "text", "ts"]].copy()
-        ext = matched.str.extract(extract_pat, expand=True).iloc[:, 0]
-        sub["rule_id"] = rule_id
-        sub["rule_idx"] = rule_idx
-        sub["extracted"] = ext.fillna("").values
-        outs.append(sub)
-    if not outs:
-        return None
-    out = pd.concat(outs, ignore_index=True)
-    return out[
-        ["conv_id", "turn_idx", "rule_id", "rule_idx", "extracted", "text", "ts"]
-    ]
 
 
 def match_turns(

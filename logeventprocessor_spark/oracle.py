@@ -96,8 +96,11 @@ def oracle_matches(
             if with_cooldown and rule.cooldown_ms > 0:
                 key = (row.conv_id, rule.rule_id)
                 prev = last_fire.get(key)
+                # exact Timedelta comparison: float milliseconds round
+                # some exact-boundary gaps (1001 ms -> 1000.999...) below
+                # the cooldown and would suppress a fire that is due
                 if prev is not None and (
-                    (row.ts - prev).total_seconds() * 1000.0 < rule.cooldown_ms
+                    row.ts - prev < pd.Timedelta(milliseconds=rule.cooldown_ms)
                 ):
                     suppressed = True
                 else:

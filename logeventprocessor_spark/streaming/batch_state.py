@@ -2,12 +2,12 @@
 managed inside ``foreachBatch`` -- the high-throughput backend of the
 streaming cooldown operator (T1).
 
-Why this exists (round-3 verdict task #4, measured in
-scripts/stream_floor.py): ``applyInPandasWithState`` carries ~3-4 s of
-FIXED per-trigger cost at 32 shuffle partitions on this host -- a
-dedicated Python-worker fleet, state-store load/commit and timer scans
-per partition -- even with ZERO input rows, plus per-group dispatch on
-top. The same cooldown computed as a seeded batch ``mapInArrow``
+Why this exists (round-3 verdict task #4; historical local[32] numbers
+from a since-deleted probe, see BENCH/BASELINE.md):
+``applyInPandasWithState`` carried ~3-4 s of FIXED per-trigger cost at
+32 shuffle partitions on that host -- a dedicated Python-worker fleet,
+state-store load/commit and timer scans per partition -- even with ZERO
+input rows, plus per-group dispatch on top. The same cooldown computed as a seeded batch ``mapInArrow``
 (operators/cooldown.py) costs ~0.3 s. This module supplies the missing
 cross-batch half: each micro-batch reads the last committed snapshot,
 seeds the greedy scan, and writes a new snapshot keyed by batch id.

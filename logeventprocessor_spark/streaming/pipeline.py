@@ -15,8 +15,10 @@ Layout of the query DAG (all public APIs, no custom Catalyst rules):
     -> foreachBatch(ParquetUpsertSink)      # T2 (stable sort) + T6/K1
                                             # exactly-once idempotent write
 
-The cooldown state function reuses ``operators.cooldown.suppress_group``
-so the batch and streaming semantics cannot diverge; state is one
+The one cooldown state function (``_keyed_cooldown``, behind
+``stream_cooldown`` and the hot-reload ``stream_cooldown_dynamic``)
+scans with ``operators.cooldown.greedy_keep``, the kernel the batch and
+snapshot paths use, so their semantics cannot diverge; state is one
 ``last_fire_ns`` per key, evicted by event-time timeout once the
 watermark passes last_fire + cooldown (bounded state at 10^12-turn
 scale -- north-rule requirement).
@@ -40,7 +42,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
-from logeventprocessor_spark.operators.cooldown import suppress_group
+from logeventprocessor_spark.operators.cooldown import (
+    NO_PRIOR,
+    _epoch_ns,
+    greedy_keep,
+)
 from logeventprocessor_spark.operators.match import match_turns
 from logeventprocessor_spark.operators.steps import expand_steps
 from logeventprocessor_spark.rules import Rule
@@ -65,46 +71,49 @@ def read_transcripts_stream(
     return r.parquet(input_dir)
 
 
-def stream_cooldown(matches: DataFrame, rules: list[Rule]) -> DataFrame:
-    """Streaming T1: applyInPandasWithState keyed (conv_id, rule_id).
+def _keyed_cooldown(matches: DataFrame, cooldown_ms_of) -> DataFrame:
+    """Streaming T1: ``applyInPandasWithState`` keyed (conv_id, rule_id).
 
     Rows of each key inside a micro-batch are processed in
     (ts, turn_idx) order -- the engine's deterministic ordering
-    contract; ``last_fire_ns`` persists across micro-batches.
-    """
-    cooldowns = {r.rule_id: r.cooldown_ms for r in rules if r.cooldown_ms > 0}
-    if not cooldowns:
-        return matches
+    contract -- by ``greedy_keep`` (one run per key); ``last_fire_ns``
+    persists across micro-batches. ``cooldown_ms_of(rule_id)`` is
+    looked up per key and call; a key whose cooldown is 0 passes its
+    rows through and leaves its state untouched."""
 
     def fn(key, pdf_iter, state: GroupState):
         if state.hasTimedOut:
             state.remove()
             return
-        conv_id, rule_id = key
-        cd = cooldowns[rule_id]
+        _, rule_id = key
         pdfs = [p for p in pdf_iter if not p.empty]
         if not pdfs:
             return
         g = pd.concat(pdfs, ignore_index=True)
         g = g.sort_values(["ts", "turn_idx"], kind="mergesort")
-        last = state.getOption
-        last_ns = last[0] if last is not None else None
-        kept, new_last = suppress_group(g, cd, last_fire_ns=last_ns)
-        if new_last is not None:
-            state.update((int(new_last),))
-            # evict once the watermark passes last_fire + cooldown (+1 s
-            # slack); must stay above the current watermark
-            wm = state.getCurrentWatermarkMs()
-            timeout_ms = max(new_last // 1_000_000 + cd + 1000, wm + 1000)
-            state.setTimeoutTimestamp(timeout_ms)
-        if len(kept):
-            yield kept
+        cd = int(cooldown_ms_of(rule_id))
+        if cd <= 0:
+            yield g
+            return
+        prior = state.getOption
+        ts_ns = _epoch_ns(g["ts"])
+        keep = greedy_keep(
+            ts_ns,
+            [0],
+            [cd * 1_000_000],
+            [NO_PRIOR if prior is None else prior[0]],
+        )
+        # g is non-empty, so a key without a prior fire keeps its first row
+        last = int(ts_ns[keep][-1]) if keep.any() else prior[0]
+        state.update((last,))
+        # evict once the watermark passes last_fire + cooldown (+1 s
+        # slack); must stay above the current watermark
+        wm = state.getCurrentWatermarkMs()
+        state.setTimeoutTimestamp(max(last // 1_000_000 + cd + 1000, wm + 1000))
+        if keep.any():
+            yield g[keep]
 
-    # callers route only cooldown-bearing matches here (see
-    # build_match_stream); any zero-cooldown stragglers pass through
-    # the state fn untouched would be wrong, so filter defensively
-    hot = matches.filter(F.col("rule_id").isin(list(cooldowns.keys())))
-    return hot.groupBy("conv_id", "rule_id").applyInPandasWithState(
+    return matches.groupBy("conv_id", "rule_id").applyInPandasWithState(
         fn,
         outputStructType=MATCHES_SCHEMA,
         stateStructType=COOLDOWN_STATE_SCHEMA,
@@ -113,109 +122,14 @@ def stream_cooldown(matches: DataFrame, rules: list[Rule]) -> DataFrame:
     )
 
 
-def stream_cooldown_tws(matches: DataFrame, rules: list[Rule]) -> DataFrame:
-    """T1 on the Spark 4 arbitrary-state API
-    (``transformWithStateInPandas`` + ``StatefulProcessor``): same
-    semantics as ``stream_cooldown`` (shares ``suppress_group``), but
-    state is a typed ValueState with an EXPLICIT event-time timer for
-    eviction instead of the applyInPandasWithState timeout -- the API
-    Spark is converging on for custom stateful operators (timers,
-    typed value/list/map state, TTL, state schema evolution).
-    REQUIRES the RocksDB state store provider (a transformWithState
-    constraint) AND the ``protobuf`` package (the API's state protocol
-    is protobuf-based; this sandbox container lacks it, so the parity
-    test skips here and the operator is exercised on protobuf-equipped
-    clusters -- recorded like the absent Iceberg jar). Kept alongside
-    the applyInPandasWithState form with a pytest parity pin so the
-    two can never diverge.
-
-    STATE-SCHEMA COMPATIBILITY: the ValueState widened from
-    ``last_fire_ns long`` to ``(last_fire_ns, timer_ms)``. Under the
-    default UnsafeRow state encoding Spark validates the stored schema
-    at query START, so restarting on a checkpoint written by the
-    1-field build fails before the in-code 1-tuple guards below ever
-    run -- those guards only help under
-    ``spark.sql.streaming.stateStore.encodingFormat=avro`` (schema
-    evolution). Upgrading an UnsafeRow-encoded deployment therefore
-    requires a fresh checkpoint (the sink is batch-id idempotent, so a
-    bounded replay from the source is safe)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
+def stream_cooldown(matches: DataFrame, rules: list[Rule]) -> DataFrame:
+    """Streaming T1 over a fixed rule set (``_keyed_cooldown``). Only
+    cooldown-bearing matches reach the state operator."""
     cooldowns = {r.rule_id: r.cooldown_ms for r in rules if r.cooldown_ms > 0}
     if not cooldowns:
         return matches
-
-    class CooldownProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            # (last_fire_ns, timer_ms): the registered eviction timer is
-            # tracked IN state so each fire can delete the previous one
-            # -- unlike applyInPandasWithState's setTimeoutTimestamp,
-            # registerTimer accumulates timers, and a stale timer from
-            # fire #1 expiring after fire #2 would wipe live state and
-            # let a within-cooldown match through
-            self.state = handle.getValueState(
-                "last_fire", "last_fire_ns long, timer_ms long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            conv_id, rule_id = key
-            cd = cooldowns[rule_id]
-            pdfs = [p for p in rows if not p.empty]
-            if not pdfs:
-                return
-            g = pd.concat(pdfs, ignore_index=True).sort_values(
-                ["ts", "turn_idx"], kind="mergesort"
-            )
-            prior = self.state.get()
-            last_ns = prior[0] if prior is not None else None
-            kept, new_last = suppress_group(g, cd, last_fire_ns=last_ns)
-            if new_last is not None:
-                # explicit event-time timer: fire once the watermark
-                # passes last_fire + cooldown, then drop the state
-                wm = timerValues.getCurrentWatermarkInMs()
-                timer_ms = max(new_last // 1_000_000 + cd + 1000, wm + 1000)
-                # len guard: state persisted by a build predating the
-                # timer_ms field is a 1-tuple
-                prior_timer = (
-                    prior[1] if prior is not None and len(prior) > 1 else None
-                )
-                if prior_timer is not None and prior_timer != timer_ms:
-                    self.handle.deleteTimer(prior_timer)
-                self.state.update((int(new_last), int(timer_ms)))
-                if prior_timer != timer_ms:
-                    self.handle.registerTimer(timer_ms)
-            if len(kept):
-                yield kept
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # second line of defense: even if a stale timer survived
-            # (e.g. state written by an older build without timer_ms),
-            # only clear state the expired timer actually covers;
-            # old-format 1-tuple state is treated as always-covered
-            prior = self.state.get()
-            if prior is not None:
-                covered = (
-                    len(prior) < 2
-                    or expiredTimerInfo.getExpiryTimeInMs() >= prior[1]
-                )
-                if covered:
-                    self.state.clear()
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    hot = matches.filter(F.col("rule_id").isin(list(cooldowns.keys())))
-    return hot.groupBy("conv_id", "rule_id").transformWithStateInPandas(
-        CooldownProcessor(),
-        outputStructType=MATCHES_SCHEMA,
-        outputMode="Append",
-        timeMode="EventTime",
-    )
+    hot = matches.filter(F.col("rule_id").isin(list(cooldowns)))
+    return _keyed_cooldown(hot, cooldowns.__getitem__)
 
 
 SEQUENCE_SCHEMA = T.StructType(
@@ -540,60 +454,29 @@ def stream_join_context(
 
 
 def stream_cooldown_dynamic(matches: DataFrame, rules_path: str) -> DataFrame:
-    """Streaming T1 with HOT-RELOADABLE cooldown values: keyed
-    (conv_id, rule_id) ``applyInPandasWithState`` whose cooldown map is
-    re-read from the rules file per task (mtime-cached), NOT captured
-    in the closure -- so editing a rule's pattern or cooldown changes
-    behavior on the next micro-batch while every key's suppression
-    history (``last_fire_ns``) survives the swap. This is the
-    reference's semantics exactly: the config watcher swaps the rule
+    """Streaming T1 with HOT-RELOADABLE cooldown values: the keyed
+    state function of ``stream_cooldown`` (``_keyed_cooldown``), but its
+    cooldown map is re-read from the rules file per task (mtime-cached),
+    NOT captured in the closure -- so editing a rule's pattern or
+    cooldown changes behavior on the next micro-batch while every key's
+    suppression history (``last_fire_ns``) survives the swap. This is
+    the reference's semantics exactly: the config watcher swaps the rule
     set (main.cpp:185-241) while the cooldown map lives on in
     ActionManager (ActionManager.h:148-150).
 
     Routes ALL matches through the state operator (rules may gain or
     lose a cooldown at any time, so a plan-time hot/cold split is
     impossible); rows of currently-cooldown-free rules pass through
-    without touching state. Measured cost of that flexibility
-    (scripts/stream_ab.py, 1M turns, local[32]): ~2.3x the fixed-rules
-    pipeline, dominated by per-(conv,rule)-group Python dispatch --
-    use ``start_pipeline`` when the rule set is static."""
+    without touching state (the rule may regain its cooldown later; the
+    reference's map likewise never forgets on config swap). Measured
+    cost of that flexibility (historical local[32] figure from a
+    since-deleted probe, see BENCH/BASELINE.md; 1M turns): ~2.3x the
+    fixed-rules pipeline, dominated by per-(conv,rule)-group Python
+    dispatch -- use ``start_pipeline`` when the rule set is static."""
     from logeventprocessor_spark.operators.match import dynamic_rules
 
-    def fn(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        conv_id, rule_id = key
-        _, cooldowns = dynamic_rules(rules_path)
-        cd = int(cooldowns.get(rule_id, 0))
-        pdfs = [p for p in pdf_iter if not p.empty]
-        if not pdfs:
-            return
-        g = pd.concat(pdfs, ignore_index=True)
-        g = g.sort_values(["ts", "turn_idx"], kind="mergesort")
-        if cd <= 0:
-            # no active cooldown: pass through, leave any prior state
-            # untouched (the rule may regain its cooldown later; the
-            # reference's map likewise never forgets on config swap)
-            yield g
-            return
-        st = state.getOption
-        last_ns = st[0] if st is not None else None
-        kept, new_last = suppress_group(g, cd, last_fire_ns=last_ns)
-        if new_last is not None:
-            state.update((int(new_last),))
-            wm = state.getCurrentWatermarkMs()
-            timeout_ms = max(new_last // 1_000_000 + cd + 1000, wm + 1000)
-            state.setTimeoutTimestamp(timeout_ms)
-        if len(kept):
-            yield kept
-
-    return matches.groupBy("conv_id", "rule_id").applyInPandasWithState(
-        fn,
-        outputStructType=MATCHES_SCHEMA,
-        stateStructType=COOLDOWN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _keyed_cooldown(
+        matches, lambda rule_id: dynamic_rules(rules_path)[1].get(rule_id, 0)
     )
 
 
@@ -653,13 +536,11 @@ def build_match_stream(
     rules: list[Rule],
     watermark: str = "10 minutes",
     late_cutoff=None,
-    cooldown_impl=None,
 ) -> DataFrame:
-    """source stream -> rendered action rows (unsunk).
-    ``cooldown_impl`` selects the keyed-state backend:
-    ``stream_cooldown`` (applyInPandasWithState, default) or
-    ``stream_cooldown_tws`` (Spark 4 transformWithStateInPandas,
-    requires RocksDB)."""
+    """source stream -> rendered action rows (unsunk), the ``'state'``
+    backend of ``start_pipeline``: zero-cooldown rules match straight
+    into the output, cooldown-bearing rules go through the keyed
+    ``applyInPandasWithState`` operator (``stream_cooldown``)."""
     if late_cutoff is not None:
         stream = stream.filter(F.col("ts") >= F.lit(late_cutoff))
     # the DAG forks per branch and each branch re-executes its lineage
@@ -677,7 +558,7 @@ def build_match_stream(
         # input: mapInPandas produces a fresh event-time column, so
         # the marker is (re)declared on the matches stream
         mh = match_turns(stream, hot_rules).withWatermark("ts", watermark)
-        parts.append((cooldown_impl or stream_cooldown)(mh, hot_rules))
+        parts.append(stream_cooldown(mh, hot_rules))
     m = parts[0]
     for p in parts[1:]:
         m = m.unionByName(p)
@@ -756,12 +637,15 @@ def start_pipeline(
     * ``'snapshot'`` (default, the throughput path): ONE match pass
       over all rules in the DAG, cooldown as a seeded batch
       ``mapInArrow`` inside ``foreachBatch`` with per-batch-id parquet
-      state snapshots (streaming/batch_state.py). Measured
-      (scripts/stream_floor.py): applyInPandasWithState costs ~3-4 s
-      FIXED per trigger at 32 partitions even with zero rows; this
-      backend removes that floor and the hot/cold double source scan.
+      state snapshots (streaming/batch_state.py). Measured at
+      local[32] by a since-deleted probe (historical, see
+      BENCH/BASELINE.md): applyInPandasWithState cost ~3-4 s FIXED per
+      trigger at 32 partitions even with zero rows; this backend
+      removes that floor and the hot/cold double source scan.
     * ``'state'``: the store-native form -- hot/cold rule split with
-      ``applyInPandasWithState`` eviction timers (build_match_stream).
+      ``applyInPandasWithState`` eviction timers (build_match_stream),
+      the one keyed-state backend; both call the same ``greedy_keep``
+      kernel.
 
     Any other ``cooldown_backend`` raises ``ValueError``.
     """

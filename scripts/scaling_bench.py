@@ -203,7 +203,7 @@ executor count. Per-round interpretation belongs in the curated
 
 **Streaming backends (history, round 4).** The default snapshot cooldown
 backend (streaming/batch_state.py) removed applyInPandasWithState's
-~3-4 s fixed per-trigger floor (scripts/stream_floor.py) and raised
+~3-4 s fixed per-trigger floor (measured by a since-deleted probe) and raised
 ABSOLUTE stream throughput at every size vs round 3 (local[4]
 192.6K -> ~535-557K turns/s, local[16] 719.9K -> ~1.11-1.17M,
 local[32] 1.27M -> 1.32M). The store-native backend remains

@@ -547,64 +547,3 @@ def test_streaming_session_window(spark, stream_input, tmp_path):
     key = ["conv_id", "session_start", "session_end", "n_events"]
     merged = got[key].merge(exp[key], on=key, how="left", indicator=True)
     assert (merged["_merge"] == "both").all()
-
-
-def test_transform_with_state_cooldown_parity(stream_input, tmp_path):
-    """The Spark 4 arbitrary-state cooldown (transformWithStateInPandas
-    + ValueState + explicit event-time timer) produces the identical
-    exactly-once output as the applyInPandasWithState form and the
-    pure-Python oracle. RocksDB provider required by the API; the
-    state protocol is protobuf-based, absent from this container, so
-    the test self-skips here (runs on protobuf-equipped clusters)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState state protocol needs protobuf "
-               "(not installed in this container). Install attempt "
-               "recorded 2026-08-17: no python protobuf anywhere on "
-               "the image (only JVM-side shaded jars, unusable by the "
-               "Python StatefulProcessor protocol) and the sandbox "
-               "policy forbids pip/apt installs -- same standing as "
-               "the absent Iceberg runtime jar.",
-    )
-    from logeventprocessor_spark.oracle import oracle_matches
-    from logeventprocessor_spark.rules import canonical_rules
-    from logeventprocessor_spark.session import get_spark
-    from logeventprocessor_spark.streaming.pipeline import (
-        build_match_stream,
-        read_transcripts_stream,
-        stream_cooldown_tws,
-    )
-    from logeventprocessor_spark.streaming.sink import ParquetUpsertSink
-
-    pdf, input_dir, _ = stream_input
-    spark2 = get_spark("tws-test", master="local[4]", shuffle_partitions=4)
-    spark2.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_transcripts_stream(spark2, input_dir, 1)
-        acts = build_match_stream(
-            stream, canonical_rules(), cooldown_impl=stream_cooldown_tws
-        )
-        sink = ParquetUpsertSink(str(tmp_path / "out"))
-        q = (
-            acts.writeStream.foreachBatch(sink.foreach_batch())
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        got = (
-            sink.read(spark2)
-            .toPandas()
-            .sort_values(["conv_id", "turn_idx", "rule_idx", "step_idx"])
-            .reset_index(drop=True)
-        )
-        exp = oracle_matches(pdf, canonical_rules())
-        assert len(got) == len(exp) > 0
-        assert got["rendered_value"].tolist() == exp["rendered_value"].tolist()
-    finally:
-        spark2.conf.unset("spark.sql.streaming.stateStore.providerClass")
