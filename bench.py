@@ -202,9 +202,10 @@ def main():
         spread["cep_streaming_pipeline"] = xs
         throughput["stream_turns_per_sec"] = round(n_turns / med, 1)
 
-        # --- same pipeline + the T5 watermarked stream-stream context
-        # join (second source scan + keyed join state) -- its own line
-        # so the join's cost is measured, not guessed ---
+        # --- same pipeline with same-turn context: role/tool ride the
+        # match operator's Arrow boundary and pass through the gate and
+        # step expansion (one source scan, no join state) -- its own
+        # line so the context columns' cost is measured, not guessed ---
         def stream_ctx_once():
             sdir = tempfile.mkdtemp(prefix="bench_sctx_", dir=tmp)
             q, _ = start_pipeline(
@@ -212,13 +213,12 @@ def main():
                 out_dir=f"{sdir}/out", checkpoint_dir=f"{sdir}/ckpt",
                 watermark="10 minutes", max_files_per_trigger=None,
                 with_context_join=True,
-                # join-state partitions sized to the per-trigger state
-                # volume, not the core count: stateful ops pay a FIXED
-                # per-partition store cost per batch (measured: 32 vs 8
-                # on a ~1M-turn input = 24 s vs 5 s per batch; 8 vs 2
-                # on a 67K-turn input = 8.2 vs 4.5 s end-to-end,
-                # identical rows). ~120K turns per state partition,
-                # floor 2, cap 8 -- reproduces both measured optima.
+                # shuffle partitions pinned into the query: on the
+                # snapshot backend they size the gate/advance shuffles.
+                # The heuristic (~120K turns per partition, floor 2,
+                # cap 8) was measured for the former join state stores
+                # (32 vs 8 on a ~1M-turn input = 24 s vs 5 s per batch)
+                # and is kept so this line stays comparable.
                 state_partitions=max(2, min(8, n_turns // 120_000)),
             )
             q.awaitTermination(3600)
@@ -229,28 +229,6 @@ def main():
         timings["cep_streaming_ctx_pipeline"] = med
         spread["cep_streaming_ctx_pipeline"] = xs
         throughput["stream_ctx_turns_per_sec"] = round(n_turns / med, 1)
-
-        # --- same-turn context via carry-through (role/tool ride the
-        # match operator's Arrow boundary; no second scan, no join
-        # state) -- pinned output-identical to the join variant by
-        # tests/test_streaming.py; this line measures what the
-        # stream-stream join costs OVER the scale-safe plan ---
-        def stream_ctx_carry_once():
-            sdir = tempfile.mkdtemp(prefix="bench_scarry_", dir=tmp)
-            q, _ = start_pipeline(
-                spark, f"{tmp}/turns", rules,
-                out_dir=f"{sdir}/out", checkpoint_dir=f"{sdir}/ckpt",
-                watermark="10 minutes", max_files_per_trigger=None,
-                with_context_join=True, context_mode="carry",
-            )
-            q.awaitTermination(3600)
-            shutil.rmtree(sdir, ignore_errors=True)
-
-        stream_ctx_carry_once()
-        med, xs = _median_runs(stream_ctx_carry_once, N_PIPE_RUNS)
-        timings["cep_streaming_ctx_carry_pipeline"] = med
-        spread["cep_streaming_ctx_carry_pipeline"] = xs
-        throughput["stream_ctx_carry_turns_per_sec"] = round(n_turns / med, 1)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -9,7 +9,7 @@ Usage:
       session/config as bench.py; prints median/min per query.
   python bench_extra.py explain <query> [...] --out plans/r07 --tag before
       write .explain("formatted") to plans/r07/<query>_<tag>.txt
-  python bench_extra.py stream [--mode plain|join|carry] [--runs N]
+  python bench_extra.py stream [--mode plain|join] [--runs N]
       run one streaming pipeline variant over the generated transcript
       corpus (same shape as bench.py) and print per-run wall + the
       sink's per-batch phase decomposition.
@@ -113,8 +113,6 @@ def cmd_stream(args) -> None:
         if args.mode == "join":
             kw = dict(with_context_join=True,
                       state_partitions=max(2, min(8, n_turns // 120_000)))
-        elif args.mode == "carry":
-            kw = dict(with_context_join=True, context_mode="carry")
 
         def once(idx: int):
             sdir = tempfile.mkdtemp(prefix=f"run{idx}_", dir=tmp)
@@ -161,7 +159,7 @@ def main():
     e.add_argument("--tag", default="before")
     s = sub.add_parser("stream")
     s.add_argument("--mode", default="plain",
-                   choices=["plain", "join", "carry"])
+                   choices=["plain", "join"])
     s.add_argument("--runs", type=int, default=3)
     args = p.parse_args()
     {"time": cmd_time, "explain": cmd_explain, "stream": cmd_stream}[args.cmd](args)

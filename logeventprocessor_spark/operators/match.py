@@ -7,7 +7,7 @@ ActionManager.cpp:49-120, index-order determinism :126), emit one match
 row per (turn, rule) that fires, with ``extracted`` = group(1) if the
 pattern has >=1 group else group(0) (ActionManager.cpp:72-77).
 
-Three entry points remain, each for the reason written next to it:
+Two entry points remain, each for the reason written next to it:
 
 * ``match_turns`` -- the hot path: Arrow-native ``mapInArrow``. Patterns are
   compiled ONCE per executor per rule-set (module-level cache keyed by
@@ -25,11 +25,9 @@ Three entry points remain, each for the reason written next to it:
   the task closure (a few KB), the turns side streams through in
   columnar batches, so the operator needs NO shuffle at all -- it
   scales linearly with input partitions on a 1000-executor cluster.
-
-* ``match_turns_dynamic`` -- hot reload: the same Arrow kernel
-  (``_arrow_match_batches``) against whatever rule set the rules file
-  holds at execution time (``dynamic_rules``), not at plan time; the
-  match half of ``streaming.pipeline.start_pipeline_with_reload``.
+  Hot rule reload needs no variant: ``streaming.pipeline.start_pipeline``
+  resolves a rule set per micro-batch on the driver and calls
+  ``match_turns`` with it, so every task of a batch sees one version.
 
 * ``match_turns_sql`` -- the dialect-parity reference: pure-Catalyst
   variant (RLIKE + regexp_extract inside whole-stage codegen) for rule
@@ -463,131 +461,6 @@ def prefilter_condition(rules: list[Rule]):
         c = F.col("text").rlike(f"(?i){pat}")
         cond = c if cond is None else (cond | c)
     return F.coalesce(cond, F.lit(False))
-
-
-# --- dynamic (hot-reload) rule loading: per-worker two-level cache ---
-# (path, pin_key) -> mtime_ns: WHICH version each micro-batch pinned.
-# Keyed by pin so a second streaming query or an unpinned batch caller
-# on the same path can never clobber another batch's pin (a single
-# shared slot would reopen the mid-batch version-mix window).
-_PIN_CACHE: dict[tuple, int] = {}
-# (path, mtime_ns) -> (payload, cooldowns): compiled content per
-# version; a few generations kept so an in-flight batch's pin stays
-# resolvable after a newer version loads.
-_CONTENT_CACHE: dict[tuple, tuple] = {}
-_CONTENT_KEEP = 4
-_PIN_KEEP = 8
-# (path, pin_key) pairs whose pinned version's compiled content was
-# evicted AND no longer resolvable from disk -- those tasks fell back
-# to the newest version, reopening the mid-batch version-mix window
-# the pin exists to close. Counted + warned (never silent) so an
-# operator flooding publishes mid-batch is observable; bump
-# _CONTENT_KEEP if this ever fires in practice.
-_PIN_FALLBACKS: dict[tuple, int] = {}
-
-
-def _batch_pin_key() -> str | None:
-    """The current micro-batch id as seen by this task (Structured
-    Streaming publishes it as the ``streaming.sql.batchId`` task-local
-    property); None outside a streaming task."""
-    from pyspark import TaskContext
-
-    tc = TaskContext.get()
-    return tc.getLocalProperty("streaming.sql.batchId") if tc else None
-
-
-def dynamic_rules(path: str, pin_key: str | None = None) -> tuple[tuple, dict]:
-    """The CURRENT rule file content as (match payload, cooldown map) --
-    a rule edit takes effect on the next micro-batch WITHOUT restarting
-    the query (reference hot reload, main.cpp:185-241). Runs
-    executor-side: on a cluster ``path`` must be shared storage, exactly
-    like the reference's watched config file.
-
-    Version-consistency contract (the Spark analog of the reference's
-    mutex-guarded swap, main.cpp:202-223):
-
-    * writers MUST publish via atomic replacement
-      (``rules.publish_rules``) -- no reader ever observes a
-      half-written rule set;
-    * within one worker process, all tasks of one micro-batch resolve
-      the SAME version: the first resolution of a batch is pinned under
-      the batch id (``streaming.sql.batchId``), and later tasks of that
-      batch skip the stat() entirely (also saving one stat per task);
-    * across workers, a publish landing mid-batch can still split a
-      micro-batch between two complete versions -- the unavoidable
-      residue of distributed execution (the reference is single-
-      threaded, so "during the swap" cannot span events there). The
-      window closes at the next batch boundary; with pre-boundary
-      publishes (the normal case) every batch is single-version.
-      Pinned by tests/test_rules.py::test_dynamic_rules_batch_pin.
-    """
-    import os
-
-    if pin_key is None:
-        pin_key = _batch_pin_key()
-    pinned_lost = None
-    if pin_key is not None:
-        m = _PIN_CACHE.get((path, pin_key))
-        if m is not None:
-            got = _CONTENT_CACHE.get((path, m))
-            if got is not None:
-                return got
-            pinned_lost = m  # evicted by >_CONTENT_KEEP publishes
-    mtime = os.stat(path).st_mtime_ns
-    if pinned_lost is not None and mtime != pinned_lost:
-        # the pinned version is neither cached nor on disk (atomic
-        # replacement discarded it) -- the fallback below re-pins this
-        # batch to the newest version. Count + warn instead of failing:
-        # a version mix is the reference's own behavior for a mid-batch
-        # swap, and killing the batch would trade a soft consistency
-        # residue for an availability loss.
-        import warnings
-
-        k = (path, pin_key)
-        _PIN_FALLBACKS[k] = _PIN_FALLBACKS.get(k, 0) + 1
-        warnings.warn(
-            f"dynamic_rules: pinned version {pinned_lost} of {path} was "
-            f"evicted and is no longer on disk; batch {pin_key} re-pins "
-            f"to {mtime} (fallback #{_PIN_FALLBACKS[k]}). More than "
-            f"{_CONTENT_KEEP} publishes landed while this batch was in "
-            "flight -- throttle publishes or raise _CONTENT_KEEP.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    got = _CONTENT_CACHE.get((path, mtime))
-    if got is None:
-        from logeventprocessor_spark.rules import load_rules_yaml
-
-        rules = load_rules_yaml(path)
-        got = (
-            _rules_payload(rules),
-            {r.rule_id: r.cooldown_ms for r in rules if r.enabled},
-        )
-        _CONTENT_CACHE[(path, mtime)] = got
-        stale = sorted(
-            (k for k in _CONTENT_CACHE if k[0] == path), key=lambda k: k[1]
-        )[:-_CONTENT_KEEP]
-        for k in stale:
-            del _CONTENT_CACHE[k]
-    if pin_key is not None:
-        _PIN_CACHE[(path, pin_key)] = mtime
-        pins = [k for k in _PIN_CACHE if k[0] == path]
-        for k in pins[:-_PIN_KEEP]:  # dict order = insertion = oldest first
-            del _PIN_CACHE[k]
-    return got
-
-
-def match_turns_dynamic(turns: DataFrame, rules_path: str) -> DataFrame:
-    """``match_turns`` against whatever rule set ``rules_path`` holds
-    AT EXECUTION TIME (per micro-batch), not at plan time -- the match
-    half of hot reload with persistent state."""
-
-    def fn(batches):
-        payload, _ = dynamic_rules(rules_path)
-        yield from _arrow_match_batches(batches, _compiled(payload))
-
-    cols = [c for c in ("conv_id", "turn_idx", "text", "ts") if c in turns.columns]
-    return turns.select(*cols).mapInArrow(fn, schema=MATCHES_SCHEMA)
 
 
 def _java_pattern(pattern: str, for_extract: bool) -> str:

@@ -26,10 +26,12 @@ from logeventprocessor_spark.schema import rules_df
 
 # (row-tuple fingerprint) -> (session, DataFrame): PLAN memo for the
 # tiny steps dimension. createDataFrame costs ~50-100 ms of driver
-# work per call, and the streaming pipelines call steps_df once per
-# MICRO-BATCH (plus once per query build in the batch family) for a
-# table whose content is a pure function of the rule set. Bounded LRU
-# (hot-reload alternates rule sets between batches).
+# work per call, and the snapshot streaming backend calls steps_df once
+# per MICRO-BATCH (plus once per query build in the batch family) for a
+# table whose content is a pure function of the rule set. Keyed by
+# content, not identity: under hot reload ``start_pipeline`` loads a
+# fresh rule list each batch, and an unchanged file must still hit.
+# Bounded LRU (a reload can alternate rule sets between batches).
 _STEPS_MEMO: dict[tuple, tuple] = {}
 _STEPS_MEMO_CAP = 4
 

@@ -17,9 +17,10 @@ Semantics re-expressed from the reference (cited file:line are inside
   ``regex_search`` with ``icase``, ``RegexMatcher.cpp:69`` and ``:109``)
   -> Python ``re.search`` + ``re.IGNORECASE``.
 
-This module is pure driver-side Python (runs once per rule-set load /
-hot reload); nothing here touches Spark executors except through the
-broadcast rule list.
+This module is pure driver-side Python: a rule set is loaded once per
+query, or once per micro-batch under hot reload
+(``streaming.pipeline.start_pipeline`` given a rules path); nothing here
+touches Spark executors except through the broadcast rule list.
 """
 
 from __future__ import annotations
@@ -175,10 +176,11 @@ def publish_rules(path: str, yaml_text: str) -> None:
     suffixed temp name in the same directory, then ``os.replace``.
     This is the WRITER half of the hot-reload contract (the Spark
     analog of the reference's mutex-guarded swap, main.cpp:202-223):
-    with atomic publication no reader -- driver or executor task --
-    can ever observe a half-written rule set, only the old or the new
-    complete version. See ``operators.match.dynamic_rules`` for the
-    reader half (per-micro-batch version pinning)."""
+    with atomic publication the reader -- ``start_pipeline``'s driver,
+    which loads the file once per micro-batch -- can never observe a
+    half-written rule set, only the old or the new complete version,
+    and the whole batch (match, cooldown, steps) runs on the version it
+    loaded."""
     import os
 
     tmp = f"{path}.tmp.{os.getpid()}"

@@ -76,28 +76,41 @@ def delay_to_ms(delay: str) -> int:
     return int(n) * _UNITS_MS[unit.lower()]
 
 
+def hot_cooldowns(rules: list[Rule]) -> dict[str, int]:
+    """rule_id -> cooldown_ms of the enabled cooldown-bearing rules."""
+    return {
+        r.rule_id: r.cooldown_ms
+        for r in rules
+        if r.enabled and r.cooldown_ms > 0
+    }
+
+
 class CooldownSnapshotState:
     """Layout:  state_dir/batch_id=N/{data/*.parquet, meta.json}
     (meta.json last = completeness marker; snapshots pruned to
     ``retention`` generations -- a restart only ever replays the last
-    uncommitted batch, so 2 would suffice)."""
+    uncommitted batch, so 2 would suffice).
+
+    The rule set is an argument of every ``gate``/``advance`` call, not
+    state of this object: ``start_pipeline`` resolves ONE rule set per
+    micro-batch (a list, or a rules file re-read per batch) and hands
+    the same list to match, gate, step rendering and advance. Eviction
+    policy under a changing rule set: a snapshot key is evicted by the
+    batch's CURRENT rule set -- its cooldown in that batch sets the
+    ``last_fire + cooldown + grace`` horizon, and a rule that has no
+    cooldown in a batch (removed, disabled or set to 0) drops its keys
+    at that batch's ``advance``. A raised cooldown thus keeps history
+    a shorter one would already have evicted."""
 
     def __init__(
         self,
         spark: SparkSession,
         state_dir: str,
-        rules: list[Rule],
         watermark_delay_ms: int,
         retention: int = 4,
     ):
         self.spark = spark
         self.dir = state_dir
-        self.rules = rules
-        self.cooldowns = {
-            r.rule_id: r.cooldown_ms
-            for r in rules
-            if r.enabled and r.cooldown_ms > 0
-        }
         self.delay_ms = watermark_delay_ms
         self.retention = retention
         # per-batch memo of (batch_id, prior_df, prior_wm_ns): gate()
@@ -151,10 +164,13 @@ class CooldownSnapshotState:
         return df, wm
 
     # -- the operator --------------------------------------------------
-    def gate(self, matches: DataFrame, batch_id: int) -> DataFrame:
-        """Cooldown-suppress this batch's matches, seeded by the prior
-        snapshot. Zero-cooldown rules never touch the scan (the same
-        hot/cold Arrow split as the batch pipeline).
+    def gate(
+        self, matches: DataFrame, batch_id: int, rules: list[Rule]
+    ) -> DataFrame:
+        """Cooldown-suppress this batch's matches under this batch's
+        ``rules``, seeded by the prior snapshot. Zero-cooldown rules
+        never touch the scan (the same hot/cold Arrow split as the batch
+        pipeline).
 
         Late-data contract (parity with the store backend, where Spark
         drops rows older than the watermark before the stateful op):
@@ -163,10 +179,10 @@ class CooldownSnapshotState:
         (they bypass state entirely). The snapshot watermark can lag
         the store backend's by < cooldown (it derives from KEPT fires),
         which is conservative -- it only ever drops a subset."""
-        if not self.cooldowns:
+        hot_ids = list(hot_cooldowns(rules))
+        if not hot_ids:
             return matches
         prior_df, wm_ns = self._prior_cached(batch_id)
-        hot_ids = list(self.cooldowns)
         if wm_ns > 0:
             matches = matches.filter(
                 (~F.col("rule_id").isin(hot_ids))
@@ -181,63 +197,80 @@ class CooldownSnapshotState:
             if prior_df is not None
             else None
         )
-        return apply_cooldown(matches, self.rules, prior=pri)
+        return apply_cooldown(matches, rules, prior=pri)
 
     def advance(
-        self, gated: DataFrame, batch_id: int, max_ts=None
+        self, gated: DataFrame, batch_id: int, rules: list[Rule], max_ts=None
     ) -> None:
         """Commit snapshot N = prior keys max-merged with this batch's
-        kept fires, evicted at the advanced watermark. ``gated`` should
-        be persisted by the caller (it also feeds the sink write).
+        kept fires, evicted at the advanced watermark under this batch's
+        ``rules`` (class docstring). ``gated`` should be persisted by
+        the caller (it also feeds the sink write).
 
-        ``max_ts``: the batch's max event time, ideally harvested for
-        free from the sink-write job via ``Observation`` (see
-        ``start_pipeline``) -- passing None falls back to an extra agg
-        job over ``gated``. Using gated (not raw) matches for the
+        ``max_ts``: the batch's max HOT-rule event time, ideally
+        harvested for free from the sink-write job via ``Observation``
+        (see ``start_pipeline``) -- passing None falls back to an extra
+        agg job over ``gated``'s hot rows. Cold rows never advance the
+        watermark, as on the store backend, whose ``withWatermark`` sits
+        on the hot match stream. Using gated (not raw) matches for the
         watermark is sound: a suppressed fire's later ts would only
         advance the watermark by < cooldown, and a SMALLER watermark is
         always conservative (delays eviction, never wrong results)."""
-        if not self.cooldowns:
-            return
         import pandas as pd
 
+        cooldowns = hot_cooldowns(rules)
         prior_df, prior_wm = self._prior_cached(batch_id)
-        if max_ts is None:
-            max_ts = gated.agg(F.max("ts")).collect()[0][0]
+        if not cooldowns and prior_df is None:
+            return  # no keys to keep and none to evict
+        if max_ts is None and cooldowns:
+            max_ts = (
+                gated.filter(F.col("rule_id").isin(list(cooldowns)))
+                .agg(F.max("ts"))
+                .collect()[0][0]
+            )
         wm_ns = prior_wm
         if max_ts is not None:
             wm_ns = max(
                 prior_wm,
                 int(pd.Timestamp(max_ts).value) - self.delay_ms * 1_000_000,
             )
-        # greedy invariant: the last KEPT fire of a key IS its last fire
-        fires = (
-            gated.filter(F.col("rule_id").isin(list(self.cooldowns)))
-            .groupBy("conv_id", "rule_id")
-            .agg((F.unix_micros(F.max("ts")) * 1000).alias("last_fire_ns"))
-        )
-        merged = (
-            prior_df.unionByName(fires)
-            .groupBy("conv_id", "rule_id")
-            .agg(F.max("last_fire_ns").alias("last_fire_ns"))
-            if prior_df is not None
-            else fires
-        )
-        cd_ms = F.create_map(
-            *[
-                x
-                for k, v in self.cooldowns.items()
-                for x in (F.lit(k), F.lit(int(v)))
-            ]
-        )[F.col("rule_id")]
-        live = merged.filter(
-            F.col("last_fire_ns")
-            + (cd_ms.cast("long") + F.lit(GRACE_MS).cast("long"))
-            * F.lit(1_000_000).cast("long")
-            > F.lit(int(wm_ns))
-        )
         snap = self._snap_dir(batch_id)
-        live.write.mode("overwrite").parquet(os.path.join(snap, "data"))
+        data = os.path.join(snap, "data")
+        if cooldowns:
+            # greedy invariant: the last KEPT fire of a key IS its last fire
+            fires = (
+                gated.filter(F.col("rule_id").isin(list(cooldowns)))
+                .groupBy("conv_id", "rule_id")
+                .agg((F.unix_micros(F.max("ts")) * 1000).alias("last_fire_ns"))
+            )
+            merged = (
+                prior_df.unionByName(fires)
+                .groupBy("conv_id", "rule_id")
+                .agg(F.max("last_fire_ns").alias("last_fire_ns"))
+                if prior_df is not None
+                else fires
+            )
+            # a key whose rule has no cooldown in this batch looks up
+            # null and fails the filter: it is evicted here
+            cd_ms = F.create_map(
+                *[
+                    x
+                    for k, v in cooldowns.items()
+                    for x in (F.lit(k), F.lit(int(v)))
+                ]
+            )[F.col("rule_id")]
+            live = merged.filter(
+                F.col("last_fire_ns")
+                + (cd_ms.cast("long") + F.lit(GRACE_MS).cast("long"))
+                * F.lit(1_000_000).cast("long")
+                > F.lit(int(wm_ns))
+            )
+            live.write.mode("overwrite").parquet(data)
+        else:
+            # no rule has a cooldown in this batch: every key is evicted
+            # (a data-less snapshot reads back as "no prior")
+            shutil.rmtree(data, ignore_errors=True)
+        os.makedirs(snap, exist_ok=True)
         tmp = f"{self._meta_path(batch_id)}.tmp.{os.getpid()}"
         with open(tmp, "w") as f:
             json.dump({"batch_id": batch_id, "wm_ns": int(wm_ns)}, f)

@@ -231,104 +231,3 @@ def test_compiled_cache_keeps_two_rule_sets():
     M._compiled(set_c)
     assert set_a not in M._COMPILED_CACHE
     assert set_b in M._COMPILED_CACHE and set_c in M._COMPILED_CACHE
-
-
-def test_dynamic_rules_batch_pin(tmp_path):
-    """Torn-batch guard (round-3 verdict task #7): within one worker,
-    every dynamic_rules() resolution under the SAME micro-batch id
-    returns the version pinned at the batch's first resolution, even
-    if the file is atomically republished mid-batch; the next batch id
-    picks up the new version. Without a pin key (batch queries), every
-    call re-stats -- the old behavior."""
-    from logeventprocessor_spark.operators import match as M
-    from logeventprocessor_spark.rules import publish_rules
-
-    import os
-
-    path = str(tmp_path / "rules.yaml")
-    v1 = "regex_rules:\n  - name: r1\n    pattern: alpha\n"
-    v2 = "regex_rules:\n  - name: r2\n    pattern: beta\n"
-
-    def bump_mtime(prev_ns):
-        # fs clocks can be too coarse to distinguish the writes
-        if os.stat(path).st_mtime_ns == prev_ns:
-            os.utime(path, ns=(os.stat(path).st_atime_ns, prev_ns + 1))
-
-    publish_rules(path, v1)
-    for k in [k for k in M._PIN_CACHE if k[0] == path]:
-        del M._PIN_CACHE[k]
-    for k in [k for k in M._CONTENT_CACHE if k[0] == path]:
-        del M._CONTENT_CACHE[k]
-
-    p1, cd1 = M.dynamic_rules(path, pin_key="7")
-    assert "r1" in str(p1)
-    m1 = os.stat(path).st_mtime_ns
-    publish_rules(path, v2)  # swap lands mid-batch
-    bump_mtime(m1)
-    p2, _ = M.dynamic_rules(path, pin_key="7")
-    assert p2 == p1, "same micro-batch must not mix rule versions"
-    # an UNPINNED caller (or another query's batch) resolving between
-    # two pinned calls must not clobber batch 7's pin
-    M.dynamic_rules(path)
-    M.dynamic_rules(path, pin_key="3")
-    p2b, _ = M.dynamic_rules(path, pin_key="7")
-    assert p2b == p1, "a concurrent caller clobbered the batch pin"
-    p3, _ = M.dynamic_rules(path, pin_key="8")
-    assert "r2" in str(p3), "next micro-batch sees the new version"
-    # unpinned (batch / non-streaming) callers track the file freely
-    m2 = os.stat(path).st_mtime_ns
-    publish_rules(path, v1)
-    bump_mtime(m2)
-    p4, _ = M.dynamic_rules(path)
-    assert "r1" in str(p4)
-
-
-def test_dynamic_rules_pin_eviction_fallback_warns(tmp_path):
-    """If > _CONTENT_KEEP publishes land while a batch is in flight,
-    the batch's pinned version is evicted and unrecoverable; the
-    fallback to the newest version must be COUNTED and WARNED, never
-    silent (round-4 advice) -- and a pinned version still on disk must
-    be reloaded, not fallen back from."""
-    import os
-    import warnings
-
-    from logeventprocessor_spark.operators import match as M
-    from logeventprocessor_spark.rules import publish_rules
-
-    path = str(tmp_path / "rules.yaml")
-
-    def bump_mtime(prev_ns):
-        if os.stat(path).st_mtime_ns == prev_ns:
-            os.utime(path, ns=(os.stat(path).st_atime_ns, prev_ns + 1))
-
-    publish_rules(path, "regex_rules:\n  - name: r0\n    pattern: p0\n")
-    for cache in (M._PIN_CACHE, M._CONTENT_CACHE, M._PIN_FALLBACKS):
-        for k in [k for k in cache if k[0] == path]:
-            del cache[k]
-
-    p0, _ = M.dynamic_rules(path, pin_key="42")
-    assert "r0" in str(p0)
-
-    # Case 1: content evicted but the pinned version is still the file
-    # on disk -> silent reload, no fallback
-    m0 = os.stat(path).st_mtime_ns
-    del M._CONTENT_CACHE[(path, m0)]
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        p0b, _ = M.dynamic_rules(path, pin_key="42")
-    assert p0b == p0
-    assert not M._PIN_FALLBACKS
-
-    # Case 2: flood _CONTENT_KEEP+1 publishes -> version 0 evicted AND
-    # replaced on disk -> warned, counted, re-pinned to newest
-    for i in range(M._CONTENT_KEEP + 1):
-        prev = os.stat(path).st_mtime_ns
-        publish_rules(
-            path, f"regex_rules:\n  - name: r{i + 1}\n    pattern: p{i + 1}\n"
-        )
-        bump_mtime(prev)
-        M.dynamic_rules(path)  # compile each version into the cache
-    with pytest.warns(RuntimeWarning, match="re-pins"):
-        p_new, _ = M.dynamic_rules(path, pin_key="42")
-    assert f"r{M._CONTENT_KEEP + 1}" in str(p_new)
-    assert M._PIN_FALLBACKS[(path, "42")] == 1

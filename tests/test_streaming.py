@@ -501,17 +501,22 @@ def test_context_join_keeps_late_cold_matches(spark, tmp_path):
     [
         dict(with_context_join=True, context_mode="Join"),
         dict(cooldown_backend="rocksdb"),
+        # hot reload (a rules path) runs on the snapshot backend only
+        dict(rules="rules.yaml", cooldown_backend="state"),
     ],
 )
 def test_start_pipeline_rejects_unknown_modes(spark, tmp_path, kw):
-    """An unknown context_mode or cooldown_backend fails at the call,
-    before any query starts (not inside the first micro-batch, and not
-    by silently picking another backend)."""
+    """An unknown context_mode or cooldown_backend, or a backend that
+    cannot serve the given rules, fails at the call, before any query
+    starts (not inside the first micro-batch, and not by silently
+    picking another backend)."""
+    kw = {"rules": canonical_rules(), **kw}
     active = len(spark.streams.active)
     with pytest.raises(ValueError, match="must be"):
         start_pipeline(
-            spark, str(tmp_path / "in"), canonical_rules(),
-            str(tmp_path / "out"), str(tmp_path / "ckpt"), **kw,
+            spark, str(tmp_path / "in"),
+            out_dir=str(tmp_path / "out"),
+            checkpoint_dir=str(tmp_path / "ckpt"), **kw,
         )
     assert len(spark.streams.active) == active
 
@@ -560,37 +565,71 @@ def test_snapshot_state_replay_identical(spark, tmp_path):
         return spark.createDataFrame(pdf, MATCHES_SCHEMA)
 
     cool = CooldownSnapshotState(
-        spark, str(tmp_path / "state"), rules, watermark_delay_ms=600_000
+        spark, str(tmp_path / "state"), watermark_delay_ms=600_000
     )
     cd_s = rules[0].cooldown_ms / 1000.0
 
     # batch 0: two fires inside one cooldown window -> second suppressed
     b0 = matches([("c", 1, base), ("c", 2, base + pd.Timedelta(seconds=cd_s / 2))])
-    g0 = cool.gate(b0, 0).persist()
+    g0 = cool.gate(b0, 0, rules).persist()
     assert sorted(g0.toPandas()["turn_idx"]) == [1]
-    cool.advance(g0, 0)
+    cool.advance(g0, 0, rules)
     g0.unpersist()
 
     # batch 1: one fire still inside batch-0's window -> suppressed
     b1 = matches([("c", 3, base + pd.Timedelta(seconds=cd_s * 0.75))])
-    g1 = cool.gate(b1, 1).persist()
+    g1 = cool.gate(b1, 1, rules).persist()
     first = sorted(g1.toPandas()["turn_idx"])
-    cool.advance(g1, 1)
+    cool.advance(g1, 1, rules)
     g1.unpersist()
     assert first == []
 
     # REPLAY batch 1 (the snapshot written by the crashed attempt at 1
     # must be ignored): identical result, identical snapshot
-    g1r = cool.gate(b1, 1).persist()
+    g1r = cool.gate(b1, 1, rules).persist()
     assert sorted(g1r.toPandas()["turn_idx"]) == first
-    cool.advance(g1r, 1)
+    cool.advance(g1r, 1, rules)
     g1r.unpersist()
 
     # batch 2 past the window -> fires again, seeded by the replayed
     # (not doubled) state
     b2 = matches([("c", 4, base + pd.Timedelta(seconds=cd_s + 1))])
-    g2 = cool.gate(b2, 2)
+    g2 = cool.gate(b2, 2, rules)
     assert sorted(g2.toPandas()["turn_idx"]) == [4]
+
+
+def test_snapshot_state_evicts_under_batch_rules(spark, tmp_path):
+    """A snapshot key is evicted by the batch's CURRENT rule set: a
+    batch in which spam_guard has no cooldown drops its keys at that
+    batch's advance, so once the cooldown returns, a fire 1 s after
+    the first is kept rather than suppressed by forgotten history."""
+    from dataclasses import replace
+
+    from logeventprocessor_spark.schema import MATCHES_SCHEMA
+    from logeventprocessor_spark.streaming.batch_state import (
+        CooldownSnapshotState,
+    )
+
+    rules = [r for r in canonical_rules() if r.rule_id == "spam_guard"]
+    no_cd = [replace(r, cooldown_ms=0) for r in rules]
+    base = pd.Timestamp("2024-03-01 10:00:00")
+
+    def fire(turn_idx, ts):
+        return spark.createDataFrame(
+            [("c", turn_idx, "spam_guard", 0, "", "spam ping",
+              ts.to_pydatetime())],
+            MATCHES_SCHEMA,
+        )
+
+    cool = CooldownSnapshotState(
+        spark, str(tmp_path / "state"), watermark_delay_ms=600_000
+    )
+    for batch_id, batch_rules in enumerate([rules, no_cd]):
+        g = cool.gate(fire(batch_id, base), batch_id, batch_rules).persist()
+        cool.advance(g, batch_id, batch_rules)
+        g.unpersist()
+    g2 = cool.gate(fire(2, base + pd.Timedelta(seconds=1)), 2, rules)
+    assert g2.toPandas()["turn_idx"].tolist() == [2]
 
 
 def test_cooldown_backends_agree_on_late_data(spark, tmp_path):
@@ -631,3 +670,149 @@ def test_cooldown_backends_agree_on_late_data(spark, tmp_path):
         c_turns = set(got[got["conv_id"] == "c"]["turn_idx"])
         assert 2 not in c_turns, f"{backend} emitted the late fire"
     pd.testing.assert_frame_equal(outs["snapshot"], outs["state"])
+
+
+
+def test_cooldown_backends_agree_after_cold_only_batch(spark, tmp_path):
+    """A batch holding only zero-cooldown matches must not advance the
+    snapshot watermark: on the store backend the watermark comes from
+    cooldown-bearing matches alone, so a later hot fire 30 min behind
+    the cold row is on time there and must be kept by both backends."""
+    base = pd.Timestamp("2024-03-01 10:00:00")
+    m = pd.Timedelta(minutes=1)
+    input_dir = str(tmp_path / "input")
+    _write_turn_files(input_dir, [
+        [("c", 1, "user", "spam ping one", "", base)],
+        [("d", 1, "user", "clarice here", "", base + 60 * m)],
+        [("e", 1, "user", "spam ping two", "", base + 30 * m)],
+    ])
+    outs = {}
+    for backend in ("snapshot", "state"):
+        q, sink = start_pipeline(
+            spark, input_dir, canonical_rules(),
+            str(tmp_path / f"out_{backend}"),
+            str(tmp_path / f"ckpt_{backend}"),
+            watermark="1 minute", max_files_per_trigger=1,
+            cooldown_backend=backend,
+        )
+        q.awaitTermination(300)
+        outs[backend] = _norm(sink.read(spark).toPandas())
+    assert "e" in set(outs["snapshot"]["conv_id"])
+    pd.testing.assert_frame_equal(outs["snapshot"], outs["state"])
+
+# --- hot rule reload: start_pipeline given a rules path ---------------
+
+RELOAD_RULES = """
+regex_rules:
+  - name: spam
+    pattern: ".*spam ping.*"
+    cooldown_ms: {spam_ms}
+    action_type: command
+    action_value: "ack"
+  - name: tick
+    pattern: ".*tick.*"
+    action_type: keystroke
+    action_value: "t"
+"""
+
+
+def test_hot_reload_batch_sees_one_rule_version(spark, tmp_path, monkeypatch):
+    """A rules file republished WHILE batch 0 runs (here: while its
+    steps are being rendered) must not split the batch between two
+    versions: the match, the gate and the rendered action values all
+    come from the version the batch resolved first."""
+    from logeventprocessor_spark.rules import publish_rules
+    from logeventprocessor_spark.streaming import pipeline as SP
+
+    rule = """
+regex_rules:
+  - name: r
+    pattern: "{pat}"
+    action_type: keystroke
+    action_value: "{val}"
+"""
+    rules_path = str(tmp_path / "rules.yaml")
+    publish_rules(rules_path, rule.format(pat=".*alpha.*", val="A"))
+    base = pd.Timestamp("2024-03-01 10:00:00")
+    input_dir = str(tmp_path / "input")
+    _write_turn_files(input_dir, [[
+        ("c", 0, "user", "alpha", "", base),
+        ("c", 1, "user", "beta", "", base + pd.Timedelta(seconds=1)),
+    ]])
+    orig = SP.expand_steps
+
+    def publish_mid_batch(*a, **kw):
+        publish_rules(rules_path, rule.format(pat=".*beta.*", val="B"))
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(SP, "expand_steps", publish_mid_batch)
+    q, sink = start_pipeline(
+        spark, input_dir, rules_path, str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(300)
+    got = sink.read(spark).toPandas()
+    assert set(zip(got["turn_idx"], got["rendered_value"])) == {(0, "A")}
+
+
+def test_hot_reload_raised_cooldown_keeps_history(spark, tmp_path):
+    """Raising a rule's cooldown keeps the suppression history a
+    shorter cooldown would already have evicted: after spam goes from
+    60 s to 1 h, a spam fire 40 min after the first is suppressed,
+    even though zero-cooldown rows in between moved event time well
+    past the old 60 s horizon. One file per query run, so each file is
+    its own batch."""
+    import shutil
+
+    from logeventprocessor_spark.rules import publish_rules
+
+    base = pd.Timestamp("2024-03-01 10:00:00")
+    m = pd.Timedelta(minutes=1)
+    stage = str(tmp_path / "stage")
+    _write_turn_files(stage, [
+        [("c", 0, "user", "spam ping", "", base)],
+        [("d", 0, "user", "tick", "", base + 30 * m)],
+        [("d", 1, "user", "tick", "", base + 45 * m)],
+        [("c", 1, "user", "spam ping", "", base + 40 * m)],
+    ])
+    rules_path = str(tmp_path / "rules.yaml")
+    publish_rules(rules_path, RELOAD_RULES.format(spam_ms=60000))
+    input_dir = str(tmp_path / "input")
+    os.makedirs(input_dir)
+    for i in range(4):
+        if i == 1:
+            publish_rules(rules_path, RELOAD_RULES.format(spam_ms=3600000))
+        shutil.copy2(f"{stage}/part-{i}.parquet", input_dir)
+        q, sink = start_pipeline(
+            spark, input_dir, rules_path, str(tmp_path / "out"),
+            str(tmp_path / "ckpt"),
+        )
+        q.awaitTermination(300)
+    got = sink.read(spark).toPandas()
+    spam = got[got["rule_id"] == "spam"]
+    assert list(zip(spam["conv_id"], spam["turn_idx"])) == [("c", 0)]
+
+
+def test_hot_reload_keeps_late_cold_matches(spark, tmp_path):
+    """A zero-cooldown match behind the watermark is kept under hot
+    reload, as it is with a fixed rule list: only cooldown-bearing
+    matches are late-filtered."""
+    base = pd.Timestamp("2024-03-01 10:00:00")
+    m = pd.Timedelta(minutes=1)
+    input_dir = str(tmp_path / "input")
+    _write_turn_files(input_dir, [
+        [("d", 0, "user", "tick", "", base)],
+        [("d", 1, "user", "tick", "", base + 60 * m)],
+        [("d", 2, "user", "tick", "", base + 61 * m)],
+        [("e", 0, "user", "tick", "", base + 10 * m)],
+    ])
+    rules_path = str(tmp_path / "rules.yaml")
+    with open(rules_path, "w") as f:
+        f.write(RELOAD_RULES.format(spam_ms=60000))
+    q, sink = start_pipeline(
+        spark, input_dir, rules_path, str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(300)
+    got = sink.read(spark).toPandas()
+    assert ("e", 0) in set(zip(got["conv_id"], got["turn_idx"]))

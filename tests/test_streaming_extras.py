@@ -22,7 +22,7 @@ from logeventprocessor_spark.streaming.metrics import (
 )
 from logeventprocessor_spark.streaming.pipeline import (
     read_transcripts_stream,
-    start_pipeline_with_reload,
+    start_pipeline,
     stream_join_context,
 )
 
@@ -129,7 +129,7 @@ regex_rules:
         f.write(v1)
     shutil.copy(files[0], input_dir)
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q, sink = start_pipeline_with_reload(spark, input_dir, rules_path, out, ckpt)
+    q, sink = start_pipeline(spark, input_dir, rules_path, out, ckpt)
     q.awaitTermination(300)
     first = sink.read(spark).toPandas()
     assert set(first["rule_id"]) == {"clarice_rule"}
@@ -137,7 +137,7 @@ regex_rules:
     with open(rules_path, "w") as f:
         f.write(v2)
     shutil.copy(files[1], input_dir)
-    q, sink = start_pipeline_with_reload(spark, input_dir, rules_path, out, ckpt)
+    q, sink = start_pipeline(spark, input_dir, rules_path, out, ckpt)
     q.awaitTermination(300)
     second = sink.read(spark).toPandas()
     assert "error_rule" in set(second["rule_id"]), "new rule active after reload"
@@ -154,10 +154,6 @@ def test_hot_reload_preserves_cooldown_state(spark, tmp_path):
     changed in between (reference: config swap main.cpp:185-241 leaves
     the ActionManager cooldown map intact, ActionManager.h:148-150)."""
     import time
-
-    from logeventprocessor_spark.streaming.pipeline import (
-        start_pipeline_with_reload,
-    )
 
     def mk(rows):
         return pd.DataFrame(
@@ -200,7 +196,7 @@ regex_rules:
         ]
     ).to_parquet(f"{input_dir}/a.parquet", index=False)
 
-    q, sink = start_pipeline_with_reload(
+    q, sink = start_pipeline(
         spark, input_dir, rules_path,
         out_dir=str(tmp_path / "out"), checkpoint_dir=str(tmp_path / "ckpt"),
         available_now=False, max_files_per_trigger=None,
