@@ -16,6 +16,12 @@ file:line citations into the reference.
 
 __version__ = "0.1.0"
 
+from logeventprocessor_spark import zipcache as _zipcache
+
+# Python workers import this package when they unpickle its UDFs, so
+# this installs the cache in every reused worker (see zipcache.py).
+_zipcache.install()
+
 from logeventprocessor_spark.rules import (  # noqa: F401
     Rule,
     RuleStep,

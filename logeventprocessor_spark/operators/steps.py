@@ -7,9 +7,13 @@ each '#' in the step value is replaced by the extracted text when it is
 non-empty (ActionManager.cpp:83-90); sms/email steps forward the FULL
 turn text (ActionManager.cpp:82, ActionSender.cpp:564-588).
 
-Spark realization: the rules/steps table is tiny -> ``broadcast`` hash
-join (no shuffle of the match stream); rendering is pure built-in
-column expressions (whole-stage codegen, no Python).
+Spark realization: the rule set is tiny, so each rule's ordered step
+list is a JVM literal -- a ``rule_id -> array<struct<step_idx, type,
+value, cum_delay_ms>>`` map that Catalyst constant-folds -- and a match
+expands by ``explode`` of its lookup. No join, no broadcast, no Python
+task: a ``createDataFrame(list)`` steps table was a Python RDD whose
+broadcast ran one Python task per partition every micro-batch.
+Rendering is pure built-in column expressions (whole-stage codegen).
 ``effective_ts`` materializes the reference's between-step delays
 (config delay_ms, blocking sleep ActionManager.cpp:188-199) as data:
 step ts + cumulative delay of PRECEDING steps.
@@ -17,30 +21,28 @@ step ts + cumulative delay of PRECEDING steps.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import lru_cache
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from logeventprocessor_spark.rules import Rule
-from logeventprocessor_spark.schema import rules_df
 
 
-# (row-tuple fingerprint) -> (session, DataFrame): PLAN memo for the
-# tiny steps dimension. createDataFrame costs ~50-100 ms of driver
-# work per call, and the snapshot streaming backend calls steps_df once
-# per MICRO-BATCH (plus once per query build in the batch family) for a
-# table whose content is a pure function of the rule set. Keyed by
-# content, not identity: under hot reload ``start_pipeline`` loads a
-# fresh rule list each batch, and an unchanged file must still hit.
-# Bounded LRU (a reload can alternate rule sets between batches).
-_STEPS_MEMO: dict[tuple, tuple] = {}
-_STEPS_MEMO_CAP = 4
+def _sql_str(s: str | None) -> str:
+    # hex-encoded UTF-8: exact for any quote, backslash or newline, and
+    # independent of spark.sql.parser.escapedStringLiterals
+    if s is None:
+        return "CAST(NULL AS STRING)"
+    return f"CAST(X'{s.encode().hex()}' AS STRING)"
 
 
-def steps_df(spark: SparkSession, rules: list[Rule]) -> DataFrame:
-    """Flat (rule_id, step_idx, type, value, modifiers, delay_ms,
-    cum_delay_ms) dimension: enabled rules x enabled steps, with the
-    cumulative delay of preceding steps precomputed driver-side."""
-    rows = []
+def _step_entries(rules: list[Rule]) -> tuple:
+    """(rule_id, ((step_idx, type, value, cum_delay_ms), ...)) per
+    rule_id with enabled steps: enabled rules x enabled steps in step
+    order, cum_delay_ms the delay of this and preceding steps. A
+    rule_id repeated in a hand-built list gets both rules' steps."""
+    by_id: dict[str, list] = {}
     for r in rules:
         if not r.enabled:
             continue
@@ -49,23 +51,32 @@ def steps_df(spark: SparkSession, rules: list[Rule]) -> DataFrame:
             if not s.enabled:
                 continue
             cum += s.delay_ms
-            rows.append((r.rule_id, s.step_idx, s.type, s.value, s.modifiers,
-                         s.delay_ms, cum))
-    key = tuple(rows)
-    hit = _STEPS_MEMO.get(key)
-    if hit is not None and hit[0] is spark:
-        _STEPS_MEMO.pop(key)
-        _STEPS_MEMO[key] = hit  # refresh recency
-        return hit[1]
-    df = spark.createDataFrame(
-        list(rows),
-        "rule_id string, step_idx int, type string, value string, "
-        "modifiers int, delay_ms int, cum_delay_ms long",
+            by_id.setdefault(r.rule_id, []).append(
+                (s.step_idx, s.type, s.value, cum)
+            )
+    return tuple((rid, tuple(steps)) for rid, steps in by_id.items())
+
+
+# Keyed by content, not identity: under hot reload ``start_pipeline``
+# loads a fresh rule list each batch, and an unchanged file must still
+# hit. One py4j call (the SQL parse) per distinct rule set.
+@lru_cache(maxsize=8)
+def _steps_lookup(entries: tuple) -> Column:
+    """The literal step map as ONE SQL expression."""
+    pairs = ", ".join(
+        f"{_sql_str(rid)}, array("
+        + ", ".join(
+            f"named_struct('step_idx', {i}, 'type', {_sql_str(t)}, "
+            f"'value', {_sql_str(v)}, 'cum_delay_ms', {cum}L)"
+            for i, t, v, cum in steps
+        )
+        + ")"
+        for rid, steps in entries
     )
-    while len(_STEPS_MEMO) >= _STEPS_MEMO_CAP:
-        _STEPS_MEMO.pop(next(iter(_STEPS_MEMO)))
-    _STEPS_MEMO[key] = (spark, df)
-    return df
+    return F.expr(
+        f"CAST(map({pairs}) AS map<string, array<struct<step_idx: int, "
+        "type: string, value: string, cum_delay_ms: bigint>>>)"
+    )
 
 
 def expand_steps(
@@ -78,31 +89,34 @@ def expand_steps(
     (e.g. carried role/tool context riding through from the match
     operator -- replaces a per-batch dropDuplicates + re-join in the
     context pipelines)."""
-    spark = matches.sparkSession
-    steps = steps_df(spark, rules)
+    step = "_step"
     rendered = F.when(
-        F.col("type").isin("sms", "email"), F.col("text")
+        F.col(f"{step}.type").isin("sms", "email"), F.col("text")
     ).otherwise(
         F.when(
             F.col("extracted") != F.lit(""),
-            F.replace(F.col("value"), F.lit("#"), F.col("extracted")),
-        ).otherwise(F.col("value"))
+            F.replace(F.col(f"{step}.value"), F.lit("#"), F.col("extracted")),
+        ).otherwise(F.col(f"{step}.value"))
     )
+    lookup = _steps_lookup(_step_entries(rules))
     return (
-        matches.join(F.broadcast(steps), "rule_id")
+        matches.select(
+            "*", F.explode(lookup[F.col("rule_id")]).alias(step)
+        )
         .select(
             "conv_id",
             "turn_idx",
             "rule_id",
             "rule_idx",
-            "step_idx",
+            F.col(f"{step}.step_idx").alias("step_idx"),
             "extracted",
-            F.col("type").alias("action_type"),
+            F.col(f"{step}.type").alias("action_type"),
             rendered.alias("rendered_value"),
             "ts",
             (
                 F.col("ts")
-                + (F.col("cum_delay_ms") * F.expr("INTERVAL 1 MILLISECOND"))
+                + (F.col(f"{step}.cum_delay_ms")
+                   * F.expr("INTERVAL 1 MILLISECOND"))
             ).alias("effective_ts"),
             *extra_cols,
         )

@@ -5,7 +5,7 @@ order" -- the full data path of the reference (SURVEY.md 3.2) as one
 declarative plan:
 
     turns -> vectorized match (M1/M2) -> cooldown state (T1)
-          -> broadcast step-join + render (T3/T4/M3) -> stable order (T2)
+          -> literal step-map explode + render (T3/T4/M3) -> stable order (T2)
 
 The batch form is the semantic ground truth; the streaming form
 (streaming/pipeline.py) must produce the identical row set under

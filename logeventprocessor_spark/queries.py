@@ -972,14 +972,15 @@ PII_PLANTED = [
 
 
 
-# (constant-rows key) -> (session, DataFrame): plan memo for the tiny
-# planted-row frames -- createDataFrame is ~50-100 ms of driver work
-# per call and these literals never change within a process.
+# (rows content, schema) -> (session, DataFrame): plan memo for the
+# tiny planted-row frames -- createDataFrame is ~50-100 ms of driver
+# work per call. Keyed by content, not id(rows): a freed list's id is
+# reused, and a new list must never get the frame of a dead one.
 _PLANTED_MEMO: dict = {}
 
 
 def _planted_df(spark, rows, schema):
-    key = (id(rows), schema)
+    key = (tuple(map(tuple, rows)), schema)
     hit = _PLANTED_MEMO.get(key)
     if hit is not None and hit[0] is spark:
         return hit[1]

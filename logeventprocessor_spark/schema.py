@@ -36,30 +36,6 @@ MATCHES_SCHEMA = T.StructType(
     ]
 )
 
-# Rules as a small dimension DataFrame (broadcast side of the
-# enrichment join, SURVEY.md 2.5 T4).
-RULE_STEP_SCHEMA = T.StructType(
-    [
-        T.StructField("step_idx", T.IntegerType(), False),
-        T.StructField("type", T.StringType(), False),
-        T.StructField("value", T.StringType(), True),
-        T.StructField("modifiers", T.IntegerType(), False),
-        T.StructField("delay_ms", T.IntegerType(), False),
-        T.StructField("enabled", T.BooleanType(), False),
-    ]
-)
-
-RULES_SCHEMA = T.StructType(
-    [
-        T.StructField("rule_id", T.StringType(), False),
-        T.StructField("rule_idx", T.IntegerType(), False),
-        T.StructField("pattern", T.StringType(), False),
-        T.StructField("cooldown_ms", T.IntegerType(), False),
-        T.StructField("enabled", T.BooleanType(), False),
-        T.StructField("steps", T.ArrayType(RULE_STEP_SCHEMA), False),
-    ]
-)
-
 # Final sink rows: one per (turn, fired rule, enabled step) under
 # exactly-once (FIXTURES.md section 4). Key for idempotent upsert:
 # (conv_id, turn_idx, rule_id, step_idx).
@@ -79,25 +55,3 @@ ACTIONS_SCHEMA = T.StructType(
 
 ACTION_KEY = ["conv_id", "turn_idx", "rule_id", "step_idx"]
 ORDER_KEY = ["conv_id", "turn_idx", "rule_idx", "step_idx"]
-
-
-def rules_to_rows(rules) -> list[tuple]:
-    return [
-        (
-            r.rule_id,
-            r.rule_idx,
-            r.pattern,
-            r.cooldown_ms,
-            r.enabled,
-            [
-                (s.step_idx, s.type, s.value, s.modifiers, s.delay_ms, s.enabled)
-                for s in r.steps
-            ],
-        )
-        for r in rules
-    ]
-
-
-def rules_df(spark, rules):
-    """Rules as a (tiny) DataFrame — the broadcast dimension table."""
-    return spark.createDataFrame(rules_to_rows(rules), schema=RULES_SCHEMA)

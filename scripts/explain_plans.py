@@ -23,7 +23,7 @@ SF = "/root/testdata/sf0.01"
 
 PLANS = [
     ("cep_match_actions",
-     "JVM literal prefilter -> mapInArrow match (no shuffle) -> broadcast step join -> render"),
+     "JVM literal prefilter -> mapInArrow match (no shuffle) -> literal step-map explode -> render"),
     ("cep_cooldown_fires",
      "single repartition(conv_id, rule_id) + in-partition sorted scan"),
     ("cep_sequence_pairs",

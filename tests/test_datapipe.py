@@ -907,3 +907,22 @@ def test_stream_contamination_gate_matches_batch(spark, tmp_path):
     pd.testing.assert_frame_equal(
         got.loc[[1, 2, 3], cols], batch[cols], check_dtype=False
     )
+
+
+def test_planted_df_memo_is_keyed_by_content(spark):
+    """Equal-content row lists share one memo entry; a list that takes a
+    memoized list's id (here: the same object, rewritten in place) gets
+    a frame of its own rows, never the stale one."""
+    from logeventprocessor_spark import queries as Q
+
+    schema = "doc_id long, text string"
+    a = [(-90, "planted a")]
+    b = [(-90, "planted a")]
+    first = Q._planted_df(spark, a, schema)
+    assert Q._planted_df(spark, b, schema) is first
+    n = len(Q._PLANTED_MEMO)
+    a[0] = (-91, "planted b")
+    got = Q._planted_df(spark, a, schema)
+    assert got is not first and len(Q._PLANTED_MEMO) == n + 1
+    assert [tuple(r) for r in got.collect()] == [(-91, "planted b")]
+    assert [tuple(r) for r in first.collect()] == [(-90, "planted a")]
