@@ -88,7 +88,6 @@ def greedy_keep(ts_ns, run_starts, cd_ns, prior_ns) -> np.ndarray:
 def apply_cooldown(
     matches: DataFrame,
     rules: list[Rule],
-    num_partitions: int | None = None,
     prior: DataFrame | None = None,
 ) -> DataFrame:
     """matches (MATCHES_SCHEMA) -> matches with cooldown-suppressed
@@ -140,11 +139,9 @@ def apply_cooldown(
             .select(*cols, "prior_ns")
         )
 
-    rep = (
-        matches.repartition(num_partitions, "conv_id", "rule_id")
-        if num_partitions
-        else matches.repartition("conv_id", "rule_id")
-    ).sortWithinPartitions("conv_id", "rule_id", "ts", "turn_idx")
+    rep = matches.repartition("conv_id", "rule_id").sortWithinPartitions(
+        "conv_id", "rule_id", "ts", "turn_idx"
+    )
 
     hot_ids = sorted(cooldowns)
 

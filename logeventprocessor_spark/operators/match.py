@@ -205,7 +205,7 @@ def _arrow_match_batches(batches, compiled, carry_cols=()):
     ~80% of the stage (a no-op mapInPandas cost 2.3 s where the whole
     match cost 2.8 s) and its allocator pressure is what made the
     stage scale at 0.41 efficiency from local[4] to local[16]
-    (scripts/match_scaling_probe.py). Here the literal pre-filter runs
+    (BENCH/BASELINE.md). Here the literal pre-filter runs
     as a C++ substring scan (pyarrow.compute.match_substring) over the
     zero-copy column, only CANDIDATE rows become Python strings for
     the exact ``re`` search+extract (identical semantics to the
@@ -313,18 +313,18 @@ def match_turns(
     ``ipc_meter``: optional 4-tuple of Spark accumulators
     (in_bytes, in_rows, out_bytes, out_rows) that tallies the Arrow
     RecordBatch volume actually crossing the JVM<->Python boundary --
-    the measured bottleneck of this operator. Used by the scaling
-    harness to report IPC-bytes-per-config instead of guessing;
-    ``None`` (the default) adds zero work to the hot path.
+    the measured bottleneck of this operator. perfbench's operator
+    ladder reads it as ``match.ipc_bytes_in``; ``None`` (the default)
+    adds zero work to the hot path.
 
     When EVERY enabled rule has a provable required literal, a
     JVM-side codegen'd pre-filter (OR of ``contains(lower(text), lit)``)
     drops non-candidate rows BEFORE the Python boundary -- the Arrow
     IPC transfer of the turn stream is the measured bottleneck of this
-    operator (scripts/match_scaling_probe.py), and a row containing no
-    rule's literal cannot match any rule, so only candidates need to
-    cross. The Python side re-applies its own per-rule prefilter +
-    exact ``re`` semantics, so this is purely a row-volume reduction.
+    operator (BENCH/BASELINE.md), and a row containing no rule's
+    literal cannot match any rule, so only candidates need to cross.
+    The Python side re-applies its own per-rule prefilter + exact
+    ``re`` semantics, so this is purely a row-volume reduction.
     """
     payload = _rules_payload(rules)
 

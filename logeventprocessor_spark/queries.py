@@ -43,7 +43,6 @@ from logeventprocessor_spark.operators.match import classify_unmatched, match_tu
 from logeventprocessor_spark.operators.sequence import sequence_detect
 from logeventprocessor_spark.operators.steps import expand_steps
 from logeventprocessor_spark.pipeline import match_actions
-from logeventprocessor_spark.schema import MATCHES_SCHEMA
 from logeventprocessor_spark.session import cached_parquet
 from logeventprocessor_spark.rules import Rule, RuleStep, canonical_rules, document_rules
 
@@ -1250,15 +1249,15 @@ def q_minhash_lsh_pairs(spark, sf_dir):
 
 def q_simhash_pairs(spark, sf_dir):
     """EXACT hamming<=3 pairs over the 64-bit xxhash SimHash with the
-    Manku compound-key geometry (6 blocks, 3-block combo keys >=30 bits
-    wide) -- the join-key cardinality that survives a 10^9-doc corpus
-    (round-3 verdict: the old max_hamming=6 single-block registration
-    had 9-bit keys, quadratic per bucket at scale; hamming>6 re-index
-    jobs keep ``simhash_pairs`` with its documented trade-off).
+    Manku compound-key geometry (``simhash_pairs``' default at
+    max_hamming=3: 6 blocks, 3-block combo keys >=30 bits wide) -- the
+    join-key cardinality that survives a 10^9-doc corpus (round-3
+    verdict: the old max_hamming=6 single-block registration had 9-bit
+    keys, quadratic per bucket at scale).
     Value-oracled: DuckDB brute-scans signatures computed by the
     INDEPENDENT pure-Python XXH64+SimHash (oracle.py) from the
     signature fixture."""
-    return D.simhash_pairs_compound(_docs(spark, sf_dir), max_hamming=3)
+    return D.simhash_pairs(_docs(spark, sf_dir), max_hamming=3)
 
 
 def q_simhash_md5_pairs(spark, sf_dir):
@@ -1266,7 +1265,7 @@ def q_simhash_md5_pairs(spark, sf_dir):
     SimHash, candidates via the Manku compound-key geometry (30-bit
     join keys -- the same 10^9-doc-safe shape as ``simhash_pairs``);
     DuckDB recomputes the identical signature and pair set."""
-    return D.simhash_md5_pairs(_docs(spark, sf_dir), max_hamming=3, compound=True)
+    return D.simhash_md5_pairs(_docs(spark, sf_dir), max_hamming=3)
 
 
 def q_lsh_ann_topk(spark, sf_dir):
@@ -1334,29 +1333,23 @@ def q_cep_actions_with_context(spark, sf_dir):
 
 def q_cep_actions_ctx_carry(spark, sf_dir):
     """The same row contract as ``cep_actions_with_context`` via the
-    CARRY-THROUGH plan: the matched turn's role/tool ride the match
-    operator's Arrow boundary (``match_turns(carry_cols=...)``, one
-    zero-copy ``pc.take`` per column) instead of being joined back
-    from a second pass over the turns. The cooldown gate still sees
-    pure MATCHES_SCHEMA columns (its Arrow path maps by POSITION), so
-    context is split off and re-attached after step expansion
-    (``start_pipeline(with_context_join=True)`` carries it through
-    the gate instead). Oracled with the SAME SQL as the join variant:
-    two physical plans, one logical result."""
+    CARRY-THROUGH plan of ``start_pipeline(with_context_join=True)``:
+    the matched turn's role/tool ride the match operator's Arrow
+    boundary (``match_turns(carry_cols=...)``, one zero-copy
+    ``pc.take`` per column), then pass through the cooldown gate (its
+    output schema mirrors its input) and step expansion
+    (``extra_cols``) -- one match pass, no second pass over the turns,
+    no join. Oracled with the SAME SQL as the join variant: two
+    physical plans, one logical result."""
     FX.transcripts_fixture_path()
     turns = transcripts_df(
         spark, make_transcripts(n_convs=FX.TRANSCRIPTS_N_CONVS, seed=42)
     )
     rules = canonical_rules()
-    m = match_turns(turns, rules, carry_cols=("role", "tool"))
-    ctx = m.select(
-        "conv_id", "turn_idx", "rule_id", "role", "tool"
-    ).dropDuplicates(["conv_id", "turn_idx", "rule_id"])
-    gated = apply_cooldown(
-        m.select(*[f.name for f in MATCHES_SCHEMA.fields]), rules
-    )
-    acts = expand_steps(gated, rules)
-    return acts.join(ctx, ["conv_id", "turn_idx", "rule_id"]).select(
+    ctx = ("role", "tool")
+    m = match_turns(turns, rules, carry_cols=ctx)
+    acts = expand_steps(apply_cooldown(m, rules), rules, extra_cols=ctx)
+    return acts.select(
         "conv_id", "turn_idx", "rule_id", "step_idx", "role", "tool",
         "rendered_value",
         F.date_format("ts", TS_FMT_SPARK_US).alias("ts"),

@@ -60,6 +60,10 @@ from logeventprocessor_spark.rules import Rule
 # eviction grace matches stream_cooldown's timeout slack (+1 s)
 GRACE_MS = 1000
 
+# snapshot generations kept: a restart only ever replays the last
+# uncommitted batch, so 2 would suffice
+RETENTION = 4
+
 _UNITS_MS = {
     "millisecond": 1, "milliseconds": 1,
     "second": 1000, "seconds": 1000,
@@ -88,8 +92,7 @@ def hot_cooldowns(rules: list[Rule]) -> dict[str, int]:
 class CooldownSnapshotState:
     """Layout:  state_dir/batch_id=N/{data/*.parquet, meta.json}
     (meta.json last = completeness marker; snapshots pruned to
-    ``retention`` generations -- a restart only ever replays the last
-    uncommitted batch, so 2 would suffice).
+    ``RETENTION`` generations).
 
     The rule set is an argument of every ``gate``/``advance`` call, not
     state of this object: ``start_pipeline`` resolves ONE rule set per
@@ -107,12 +110,10 @@ class CooldownSnapshotState:
         spark: SparkSession,
         state_dir: str,
         watermark_delay_ms: int,
-        retention: int = 4,
     ):
         self.spark = spark
         self.dir = state_dir
         self.delay_ms = watermark_delay_ms
-        self.retention = retention
         # per-batch memo of (batch_id, prior_df, prior_wm_ns): gate()
         # and advance() both need the prior snapshot, and within one
         # batch they are guaranteed to resolve the same one -- reading
@@ -281,7 +282,7 @@ class CooldownSnapshotState:
         for name in os.listdir(self.dir):
             if name.startswith("batch_id="):
                 n = int(name.split("=", 1)[1])
-                if n <= batch_id - self.retention:
+                if n <= batch_id - RETENTION:
                     shutil.rmtree(
                         os.path.join(self.dir, name), ignore_errors=True
                     )

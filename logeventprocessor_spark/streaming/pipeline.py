@@ -456,14 +456,11 @@ def build_match_stream(
     stream: DataFrame,
     rules: list[Rule],
     watermark: str = "10 minutes",
-    late_cutoff=None,
 ) -> DataFrame:
     """source stream -> rendered action rows (unsunk), the ``'state'``
     backend of ``start_pipeline``: zero-cooldown rules match straight
     into the output, cooldown-bearing rules go through the keyed
     ``applyInPandasWithState`` operator (``stream_cooldown``)."""
-    if late_cutoff is not None:
-        stream = stream.filter(F.col("ts") >= F.lit(late_cutoff))
     # the DAG forks per branch and each branch re-executes its lineage
     # per micro-batch, so split the RULE SET (not the match output):
     # each branch regexes only its own rules -- total regex CPU stays
@@ -486,6 +483,15 @@ def build_match_stream(
     return expand_steps(m, rules)
 
 
+def _ack_rows(actions: DataFrame, ack_types: list[str]) -> DataFrame:
+    """The ``acks`` table rows of a batch's action rows: one per step
+    whose type is in ``ack_types``."""
+    return actions.filter(F.col("action_type").isin(ack_types)).select(
+        "conv_id", "turn_idx", "rule_id", "step_idx",
+        F.lit("ack").alias("status"), "ts",
+    )
+
+
 def start_pipeline(
     spark: SparkSession,
     input_dir: str,
@@ -502,7 +508,6 @@ def start_pipeline(
     with_context_join: bool = False,
     context_mode: str = "join",
     pii_scrub: bool = False,
-    ipc_meter=None,
     state_partitions: int | None = None,
 ):
     """Wire the full query and start it. Returns (query, sink).
@@ -616,6 +621,8 @@ def start_pipeline(
     stream = read_transcripts_stream(spark, input_dir, max_files_per_trigger)
     if pii_scrub:
         stream = scrub_stream_text(stream)
+    if late_cutoff is not None:
+        stream = stream.filter(F.col("ts") >= F.lit(late_cutoff))
     sink = ParquetUpsertSink(out_dir)
 
     if cooldown_backend == "snapshot":
@@ -627,8 +634,6 @@ def start_pipeline(
             hot_cooldowns,
         )
 
-        if late_cutoff is not None:
-            stream = stream.filter(F.col("ts") >= F.lit(late_cutoff))
         batches = stream
         cool = CooldownSnapshotState(
             spark,
@@ -636,9 +641,6 @@ def start_pipeline(
             delay_to_ms(watermark),
         )
         carry = ("role", "tool") if with_context_join else ()
-
-        sink.phases = []  # per-batch wall-time decomposition, free to
-        # collect (4 clock reads/batch); the scaling harness reads it
 
         def process(df: DataFrame, batch_id: int) -> None:
             # ONE cache (the gated matches) and TWO jobs per batch:
@@ -657,11 +659,8 @@ def start_pipeline(
             # costing a persist of the raw frame plus an extra
             # exchange+agg and a join PER MICRO-BATCH for values the
             # rows already carried.
-            import time as _t
-
             from pyspark.sql import Observation
 
-            t0 = _t.time()
             # the batch's ONE rule set: every step below sees it
             batch_rules = (
                 load_rules_yaml(rules) if isinstance(rules, str) else rules
@@ -669,11 +668,9 @@ def start_pipeline(
             matches = match_turns(
                 df,
                 [r for r in batch_rules if r.enabled],
-                ipc_meter=ipc_meter,
                 carry_cols=carry,
             )
             gated = cool.gate(matches, batch_id, batch_rules).persist()
-            t_gate = _t.time()
             try:
                 obs = Observation(f"wm_{batch_id}")
                 # watermark source = HOT-rule event time only, matching
@@ -690,43 +687,25 @@ def start_pipeline(
                 )
                 sink.write(out, batch_id)
                 if ack_types:
-                    acks = out.filter(
-                        F.col("action_type").isin(ack_types)
-                    ).select(
-                        "conv_id", "turn_idx", "rule_id", "step_idx",
-                        F.lit("ack").alias("status"), "ts",
+                    sink.write_table(
+                        "acks", _ack_rows(out, ack_types), batch_id
                     )
-                    sink.write_table("acks", acks, batch_id)
-                t_sink = _t.time()
                 cool.advance(
                     gated, batch_id, batch_rules, max_ts=obs.get["max_ts"]
                 )
-                sink.phases.append({
-                    "batch_id": int(batch_id),
-                    # rule resolve + plan-build + snapshot read (driver)
-                    "gate_plan_s": round(t_gate - t0, 3),
-                    # job 1: scan->match->gate->expand->parquet write
-                    "sink_write_s": round(t_sink - t_gate, 3),
-                    # job 2: fires agg + snapshot commit
-                    "advance_s": round(_t.time() - t_sink, 3),
-                })
             finally:
                 gated.unpersist()
     else:
-        batches = build_match_stream(stream, rules, watermark, late_cutoff)
+        batches = build_match_stream(stream, rules, watermark)
 
         if ack_types:
             def process(df: DataFrame, batch_id: int) -> None:
                 df = df.persist()
                 try:
                     sink.write(df, batch_id)
-                    acks = df.filter(
-                        F.col("action_type").isin(ack_types)
-                    ).select(
-                        "conv_id", "turn_idx", "rule_id", "step_idx",
-                        F.lit("ack").alias("status"), "ts",
+                    sink.write_table(
+                        "acks", _ack_rows(df, ack_types), batch_id
                     )
-                    sink.write_table("acks", acks, batch_id)
                 finally:
                     df.unpersist()
         else:

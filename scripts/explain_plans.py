@@ -88,10 +88,11 @@ PLANS = [
      "lands whole in one window task"),
     ("cep_actions_ctx_carry",
      "same-turn context CARRIED through the match operator's Arrow "
-     "boundary (extra pc.take columns, no second source scan); "
-     "cooldown gate sees pure MATCHES columns; context re-attached "
-     "after step expansion by a join on the already-tiny action rows "
-     "-- the scale-safe T5 plan for same-turn context"),
+     "boundary (extra pc.take columns, no second source scan), then "
+     "through the cooldown gate and the step-map explode as "
+     "pass-through columns -- two MapInArrow, no join, no dedup "
+     "aggregate: start_pipeline(with_context_join=True)'s per-batch "
+     "plan"),
     ("orders_above_cust_avg",
      "correlated scalar subquery DECORRELATED: per-key aggregate + one "
      "join, not a per-row re-execution"),

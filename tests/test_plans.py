@@ -136,7 +136,7 @@ def _plans_md_sections() -> dict[str, str]:
     return sections
 
 
-def test_plans_md_in_lockstep_with_explain_spec():
+def test_plans_md_in_lockstep_with_explain_spec(spark, monkeypatch):
     """PLANS.md drift guard (round-4 verdict "what's wrong #2": the
     captured md5-SimHash plan was one commit behind the registered
     query). Two checks: (a) every (name, why) entry in
@@ -144,9 +144,9 @@ def test_plans_md_in_lockstep_with_explain_spec():
     why-text -- editing the spec without regenerating fails here; (b)
     the SimHash sections show the compound-key geometry the registered
     queries actually use (combo structs present, the old 4x15-bit
-    single-block mask absent)."""
+    single-block mask absent), and building the md5 query reaches the
+    candidate kernel with a >=30-bit geometry."""
     import importlib.util
-    import inspect
     import os
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -176,8 +176,45 @@ def test_plans_md_in_lockstep_with_explain_spec():
             f"{name}: shows the retired 4x15-bit single-block explode"
         )
 
-    # and the registered md5 query really does request the compound
-    # geometry (the plan text alone cannot prove which arg produced it)
+    # and the registered md5 query really does build the >=30-bit
+    # compound geometry (the plan text alone cannot prove which
+    # geometry produced it)
+    from logeventprocessor_spark import queries as Q
+    from logeventprocessor_spark.operators import dedup as D
+
+    seen = []
+    orig = D._simhash_compound_pairs
+
+    def spy(sig, n_bits, n_blocks, max_hamming):
+        seen.append((n_bits, n_blocks, max_hamming))
+        return orig(sig, n_bits, n_blocks, max_hamming)
+
+    monkeypatch.setattr(D, "_simhash_compound_pairs", spy)
+    Q.q_simhash_md5_pairs(spark, SF)
+    assert [b for b, _, _ in seen] == [60]
+    _, n_blocks, max_hamming = seen[0]
+    assert D.compound_key_bits(60, n_blocks, max_hamming) >= 30
+
+
+def test_ctx_carry_plan_carries_through_gate(spark):
+    """``cep_actions_ctx_carry`` is the streaming carry plan in batch
+    form: role/tool ride through the match operator, the cooldown gate
+    and step expansion, so its executed plan runs exactly two
+    MapInArrow (match, gate), no join and no dedup aggregate -- and its
+    rows equal the join-back variant's."""
     from logeventprocessor_spark import queries as Q
 
-    assert "compound=True" in inspect.getsource(Q.q_simhash_md5_pairs)
+    df = Q.q_cep_actions_ctx_carry(spark, SF)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()  # the final plan, not initial + final
+    plan = plan.toString()
+    assert "Join" not in plan, plan
+    assert "Aggregate" not in plan, plan
+    assert plan.count("MapInArrow") == 2, plan
+
+    key = lambda d: sorted(map(tuple, d.toPandas().itertuples(index=False)))
+    ref = Q.q_cep_actions_with_context(spark, SF)
+    assert df.columns == ref.columns
+    assert key(df) == key(ref)
