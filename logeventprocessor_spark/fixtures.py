@@ -221,6 +221,7 @@ def ngram_pairs_fixture(spark, sf_dir: str, threshold: float = 0.6) -> str:
             return path
         shutil.rmtree(path, ignore_errors=True)
     from logeventprocessor_spark.operators.dedup import ngram_jaccard_pairs
+    from logeventprocessor_spark.session import clear_parquet_memo
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     tmp = f"{path}.tmp.{os.getpid()}"
@@ -228,6 +229,8 @@ def ngram_pairs_fixture(spark, sf_dir: str, threshold: float = 0.6) -> str:
         "overwrite"
     ).parquet(tmp)
     _atomic_rename_dir(tmp, path)
+    # a reader memoized before the rebuild lists the old files
+    clear_parquet_memo()
     return path
 
 

@@ -1553,7 +1553,7 @@ ORACLES: dict[str, str] = {
         ), u AS (
           SELECT doc_id,
                  unnest(regexp_extract_all(text,
-                     'https?://[A-Za-z0-9.-]+(/[^\s]*)?', 0)) AS url
+                     'https?://[A-Za-z0-9.-]+(/[^\\s]*)?', 0)) AS url
           FROM ad
         )
         SELECT lower(regexp_extract(url, 'https?://([A-Za-z0-9.-]+)', 1))
@@ -1564,7 +1564,7 @@ ORACLES: dict[str, str] = {
     """,
     "dedup_clusters": """
         WITH RECURSIVE w AS (
-          SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS words FROM documents
+          SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words FROM documents
         ), g AS (
           SELECT DISTINCT doc_id,
                  words[i] || ' ' || words[i+1] || ' ' || words[i+2] AS shingle
@@ -1818,7 +1818,7 @@ ORACLES: dict[str, str] = {
     """,
     "benchmark_decontamination": """
         WITH w AS (
-          SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS words FROM documents
+          SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words FROM documents
         ), g AS (
           SELECT DISTINCT doc_id,
                  words[i] || ' ' || words[i+1] || ' ' || words[i+2] || ' ' ||
@@ -1842,7 +1842,7 @@ ORACLES: dict[str, str] = {
     """,
     "ngram_jaccard_pairs": """
         WITH w AS (
-          SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS words FROM documents
+          SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words FROM documents
         ), g AS (
           SELECT DISTINCT doc_id,
                  words[i] || ' ' || words[i+1] || ' ' || words[i+2] AS shingle
@@ -1911,7 +1911,7 @@ ORACLES: dict[str, str] = {
     "text_quality": """
         WITH x AS (
           SELECT doc_id, text,
-                 regexp_split_to_array(trim(text), '\s+') AS toks,
+                 regexp_split_to_array(trim(text), '\\s+') AS toks,
                  CAST(len(regexp_extract_all(text, '[^\\w\\s]')) AS INTEGER) AS n_punct
           FROM documents
         )
@@ -1934,7 +1934,7 @@ ORACLES: dict[str, str] = {
     "lang_id_pred": """
         WITH s AS (
           SELECT doc_id,
-            list_transform(regexp_split_to_array(trim(text), '\s+'), t -> lower(t)) AS toks
+            list_transform(regexp_split_to_array(trim(text), '\\s+'), t -> lower(t)) AS toks
           FROM documents
         ), sc AS (
           SELECT doc_id,
@@ -1962,7 +1962,7 @@ ORACLES: dict[str, str] = {
     "stratified_sample_docs": """
         WITH s AS (
           SELECT doc_id,
-            list_transform(regexp_split_to_array(trim(text), '\s+'), t -> lower(t)) AS toks
+            list_transform(regexp_split_to_array(trim(text), '\\s+'), t -> lower(t)) AS toks
           FROM documents
         ), sc AS (
           SELECT doc_id,
@@ -2018,7 +2018,7 @@ ORACLES: dict[str, str] = {
     """,
     "token_stats_by_lang": """
         SELECT lang, count(*) AS n_docs,
-               round(avg(CAST(len(regexp_split_to_array(trim(text), '\s+')) AS DOUBLE)), 4)
+               round(avg(CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS DOUBLE)), 4)
                  AS avg_tokens,
                CAST(sum(len(regexp_extract_all(text,
                  '[A-Za-z]+|[0-9]+|[^\\sA-Za-z0-9]'))) AS BIGINT)
