@@ -29,8 +29,9 @@ checkable by the driver's DuckDB comparison:
   probes; the fixture build only needs a few hundred vectors.
 
 Files are content-versioned by name (bump ``_V`` when generation
-logic changes) and written at most once; everything derives from
-seed 42 plus the driver's own parquet, so bytes are reproducible.
+logic changes; the near-dup pairs also carry ``GRAM_TAG``) and
+written at most once; everything derives from seed 42 plus the
+driver's own parquet, so bytes are reproducible.
 Writes are atomic and concurrency-safe: per-process tmp names
 (pid suffix) + os.replace/os.rename, so a bench run and a pytest run
 racing on first use cannot observe half-written files.
@@ -56,6 +57,13 @@ FIXTURES_ROOT = os.path.join(_REPO_ROOT, ".fixtures")
 # v2: transcript corpus gained interleaved rate-limit bursts (second
 # concurrent cooldown chain per conversation, round-4 verdict task #5)
 _V = "v3"
+# The gram builder the stored near-dup pairs were made with, part of the
+# pair fixture's name only (a _V bump would rebuild every fixture).
+# Change it whenever operators/dedup.py's _gram_array changes how text
+# becomes grams. "rx1": one codegen'd regexp_extract_all over
+# whitespace-normalised text, which replaced the interpreted transform
+# chain whose pairs the untagged name still holds.
+GRAM_TAG = "rx1"
 TRANSCRIPTS_N_CONVS = 40
 MEDIA_N = 60
 # sf dir the driver's oracle comparison runs at. The oracle SQL strings
@@ -197,9 +205,9 @@ def ngram_pairs_path(sf_dir: str, threshold: float = 0.6) -> str:
     # threshold is part of the cache key: a caller passing a
     # non-default threshold must never silently receive pairs
     # materialized at another one (round-6 advice #2). The default
-    # keeps the historical name so existing fixtures stay valid.
+    # threshold adds no suffix.
     t = "" if threshold == 0.6 else f"_t{threshold}"
-    return os.path.join(FIXTURES_ROOT, f"ngram_pairs_{_V}_{key}{t}")
+    return os.path.join(FIXTURES_ROOT, f"ngram_pairs_{_V}_{GRAM_TAG}_{key}{t}")
 
 
 def ngram_pairs_fixture(spark, sf_dir: str, threshold: float = 0.6) -> str:

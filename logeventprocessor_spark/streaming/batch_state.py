@@ -53,6 +53,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from logeventprocessor_spark.operators.cooldown import apply_cooldown
 from logeventprocessor_spark.rules import Rule
@@ -63,6 +64,15 @@ GRACE_MS = 1000
 # snapshot generations kept: a restart only ever replays the last
 # uncommitted batch, so 2 would suffice
 RETENTION = 4
+
+# one snapshot row per live key. Written and read with this schema: a
+# read without one starts a schema-inference job in every micro-batch
+# that has a prior snapshot
+SNAPSHOT_SCHEMA = T.StructType([
+    T.StructField("conv_id", T.StringType()),
+    T.StructField("rule_id", T.StringType()),
+    T.StructField("last_fire_ns", T.LongType()),
+])
 
 _UNITS_MS = {
     "millisecond": 1, "milliseconds": 1,
@@ -151,7 +161,7 @@ class CooldownSnapshotState:
             wm_ns = int(json.load(f)["wm_ns"])
         data = os.path.join(self._snap_dir(b), "data")
         df = (
-            self.spark.read.parquet(data)
+            self.spark.read.schema(SNAPSHOT_SCHEMA).parquet(data)
             if os.path.isdir(data)
             else None
         )
@@ -266,7 +276,9 @@ class CooldownSnapshotState:
                 * F.lit(1_000_000).cast("long")
                 > F.lit(int(wm_ns))
             )
-            live.write.mode("overwrite").parquet(data)
+            live.select(
+                *[F.col(f.name).cast(f.dataType) for f in SNAPSHOT_SCHEMA]
+            ).write.mode("overwrite").parquet(data)
         else:
             # no rule has a cooldown in this batch: every key is evicted
             # (a data-less snapshot reads back as "no prior")

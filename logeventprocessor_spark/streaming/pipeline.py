@@ -643,13 +643,18 @@ def start_pipeline(
         carry = ("role", "tool") if with_context_join else ()
 
         def process(df: DataFrame, batch_id: int) -> None:
-            # ONE cache (the gated matches) and TWO jobs per batch:
-            # (1) sink write -- which also populates the cache and
-            # computes the watermark's max event time for free via
-            # Observation; (2) the fires agg + snapshot write. A
-            # previous shape (cache raw matches AND gated, separate
-            # max-ts job) measured ~3.7 s of fixed per-batch work that
-            # capped streaming scaling (BENCH/BASELINE.md).
+            # ONE cache (the gated matches) and two phases that run
+            # jobs: (1) the sink write, which also populates the cache
+            # and computes the watermark's max event time for free via
+            # Observation; (2) advance, the fires agg + snapshot write.
+            # Jobs per batch, counted from status-store job ids around
+            # each phase of perfbench's stream_join input (local[4],
+            # AQE on): 5 without a prior snapshot (write 3, advance 2)
+            # and 7 with one (write 4, with the prior's broadcast;
+            # advance 3). Reading the prior runs none. A previous shape
+            # (cache raw matches AND gated, separate max-ts job)
+            # measured ~3.7 s of fixed per-batch work that capped
+            # streaming scaling (BENCH/BASELINE.md).
             #
             # Context (role/tool) rides THROUGH the gate and the step
             # expansion as pass-through columns (apply_cooldown's

@@ -45,6 +45,28 @@ def test_ngram_jaccard_pairs(spark, docs):
     assert got.set_index(["doc_a", "doc_b"]).loc[(0, 1), "jaccard"] == 1.0
 
 
+def test_changed_gram_tag_rebuilds_the_pair_fixture(spark, docs, tmp_path, monkeypatch):
+    """Pairs stored by another gram builder are never served: a changed
+    ``GRAM_TAG`` names a new path, where the fixture is built afresh."""
+    from logeventprocessor_spark import fixtures as FX
+
+    sf_dir = str(tmp_path / "sfx")
+    docs.write.parquet(f"{sf_dir}/documents.parquet")
+    monkeypatch.setattr(FX, "FIXTURES_ROOT", str(tmp_path / "fixtures"))
+    expected = sorted(D.ngram_jaccard_pairs(docs, threshold=0.6).collect())
+    assert expected
+    old = FX.ngram_pairs_path(sf_dir)
+    # a complete fixture from the old builder, with other pairs
+    spark.createDataFrame([], D.ngram_jaccard_pairs(docs).schema).write.parquet(old)
+    assert FX.ngram_pairs_fixture(spark, sf_dir) == old
+    monkeypatch.setattr(FX, "GRAM_TAG", "next")
+    new = FX.ngram_pairs_path(sf_dir)
+    assert new != old
+    assert FX.ngram_pairs_fixture(spark, sf_dir) == new
+    assert sorted(spark.read.parquet(new).collect()) == expected
+    assert spark.read.parquet(old).count() == 0
+
+
 def test_jaccard_matches_python(spark, docs):
     """Spark exact Jaccard == naive python on every shared-shingle pair."""
     got = D.ngram_jaccard_pairs(docs, threshold=0.0).toPandas()

@@ -1,7 +1,8 @@
 """The session factory (logeventprocessor_spark/session.py): the driver
 JVM runs the JIT profile and maps (or trains) the class-data archive, a
 caller's ``extra_conf`` replaces both, the archive's cache never serves
-a partial or stale file, shuffle partitions follow the master, and
+a partial or stale file, the generated-class cache holds a repeated
+pass's classes, shuffle partitions follow the master, and
 ``cached_parquet``'s reader memo neither pins a dead session's plans nor
 serves a rewritten path after ``clear_parquet_memo``. Also: every source
 file compiles with warnings raised as errors."""
@@ -148,6 +149,46 @@ def test_extra_conf_replaces_the_jit_profile(monkeypatch, cds_home):
         monkeypatch, extra_conf={"spark.driver.extraJavaOptions": "-Xms1g"}
     )
     _cds_flags(conf[JAVA_OPTS])
+
+
+CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
+
+
+def test_codegen_cache_size_is_a_session_default(monkeypatch, cds_home):
+    assert _built_conf(monkeypatch)[CODEGEN_CACHE] == str(S.CODEGEN_CACHE_ENTRIES)
+    conf = _built_conf(monkeypatch, extra_conf={CODEGEN_CACHE: "100"})
+    assert conf[CODEGEN_CACHE] == "100"
+
+
+def test_a_repeated_pass_compiles_no_class(spark):
+    """150 distinct generated classes, more than Spark's default cache
+    of 100 holds: a second pass over the same plans finds every class
+    in the cache and compiles none."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    base = spark.range(1)
+
+    def one_pass() -> int:
+        c0 = compiles.getCount()
+        for g in range(0, 150, 10):
+            # a union of ten projections, each its own whole-stage class
+            # with its literals inlined
+            df = reduce(DataFrame.union, [
+                base.select((F.col("id") * 31 + i).alias("x"))
+                for i in range(g, g + 10)
+            ])
+            # execute() compiles every child's class on the driver and
+            # returns the RDD unrun: no job starts
+            df._jdf.queryExecution().executedPlan().execute()
+        return compiles.getCount() - c0
+
+    assert one_pass() > 100
+    assert one_pass() == 0
 
 
 def _dead_pid() -> int:

@@ -632,6 +632,44 @@ def test_snapshot_state_evicts_under_batch_rules(spark, tmp_path):
     assert g2.toPandas()["turn_idx"].tolist() == [2]
 
 
+def test_snapshot_prior_starts_no_job(spark, tmp_path):
+    """The prior snapshot is read with its known schema: resolving it
+    lists files on the driver and runs no schema-inference job, which
+    every micro-batch with a prior snapshot would otherwise pay."""
+    from logeventprocessor_spark.schema import MATCHES_SCHEMA
+    from logeventprocessor_spark.streaming.batch_state import (
+        CooldownSnapshotState,
+    )
+
+    rules = [r for r in canonical_rules() if r.rule_id == "spam_guard"]
+    fire = spark.createDataFrame(
+        [("c", 1, "spam_guard", 0, "", "spam ping",
+          pd.Timestamp("2024-03-01 10:00:00").to_pydatetime())],
+        MATCHES_SCHEMA,
+    )
+    cool = CooldownSnapshotState(
+        spark, str(tmp_path / "state"), watermark_delay_ms=600_000
+    )
+    g = cool.gate(fire, 0, rules).persist()
+    cool.advance(g, 0, rules)
+    g.unpersist()
+
+    sc = spark.sparkContext
+
+    def last_job_id() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+    before = last_job_id()
+    prior, wm_ns = cool.prior(1)
+    assert last_job_id() == before
+    assert prior.schema.simpleString() == (
+        "struct<conv_id:string,rule_id:string,last_fire_ns:bigint>"
+    )
+    assert wm_ns > 0
+    assert prior.collect()[0]["conv_id"] == "c"
+
+
 def test_cooldown_backends_agree_on_late_data(spark, tmp_path):
     """Late-data parity (round-4 review finding): a hot-rule match
     arriving AFTER the watermark passed its cooldown window must be
