@@ -192,12 +192,6 @@ def query_vector(sf_dir: str) -> list[float]:
     return [float(x) for x in vecs[int(np.where(ids == 0)[0][0])]]
 
 
-def embedding_dim(sf_dir: str) -> int:
-    pf = pq.ParquetFile(augmented_embeddings_path(sf_dir))
-    batch = next(pf.iter_batches(batch_size=1, columns=["embedding"]))
-    return len(batch.column(0)[0])
-
-
 # --------------------- near-dup pair fixture ---------------------
 
 def ngram_pairs_path(sf_dir: str, threshold: float = 0.6) -> str:

@@ -61,6 +61,15 @@ def _epoch_ns(ts: pd.Series) -> np.ndarray:
     return ts.to_numpy().astype("datetime64[ns]").astype("int64")
 
 
+def hot_cooldowns(rules: list[Rule]) -> dict[str, int]:
+    """rule_id -> cooldown_ms of the enabled cooldown-bearing rules."""
+    return {
+        r.rule_id: r.cooldown_ms
+        for r in rules
+        if r.enabled and r.cooldown_ms > 0
+    }
+
+
 def greedy_keep(ts_ns, run_starts, cd_ns, prior_ns) -> np.ndarray:
     """The T1 greedy event-time scan: a bool keep-mask over ``ts_ns``.
 
@@ -109,7 +118,7 @@ def apply_cooldown(
     seed rides the same shuffle; nulls become ``NO_PRIOR`` JVM-side (a
     ns value must never pass through a nullable float, 2^63-scale ints
     lose precision there)."""
-    cooldowns = {r.rule_id: r.cooldown_ms for r in rules if r.cooldown_ms > 0}
+    cooldowns = hot_cooldowns(rules)
     if not cooldowns:
         return matches
 

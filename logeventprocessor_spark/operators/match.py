@@ -7,7 +7,7 @@ ActionManager.cpp:49-120, index-order determinism :126), emit one match
 row per (turn, rule) that fires, with ``extracted`` = group(1) if the
 pattern has >=1 group else group(0) (ActionManager.cpp:72-77).
 
-Two entry points remain, each for the reason written next to it:
+One entry point:
 
 * ``match_turns`` -- the hot path: Arrow-native ``mapInArrow``. Patterns are
   compiled ONCE per executor per rule-set (module-level cache keyed by
@@ -29,12 +29,9 @@ Two entry points remain, each for the reason written next to it:
   resolves a rule set per micro-batch on the driver and calls
   ``match_turns`` with it, so every task of a batch sees one version.
 
-* ``match_turns_sql`` -- the dialect-parity reference: pure-Catalyst
-  variant (RLIKE + regexp_extract inside whole-stage codegen) for rule
-  corpora whose group(1)-else-group(0) semantics regexp_extract can
-  express (we wrap group-free patterns in one capture group, which
-  makes group(1) == group(0)); pinned equal to ``match_turns`` by
-  tests/test_match_batch.py::test_sql_variant_agrees_with_udf_variant.
+The pre-filters of tiers (1) and (2) must never drop a row ``re``
+matches; tests/test_rules.py::test_prefilter_never_drops_matches pins
+that on generated Unicode text.
 """
 
 from __future__ import annotations
@@ -55,6 +52,13 @@ _COMPILED_CACHE: dict[tuple, list] = {}
 _META = set(".^$*+?()[]{}|\\")
 _ESCAPABLE = {c: c for c in ".^$*+?()[]{}|\\-/ "}
 
+# The code points above U+007F that Python's re.IGNORECASE matches to an
+# ASCII letter or digit are U+0130, U+0131, U+017F and U+212A (a scan of
+# every code point). Java and Arrow ``lower`` map the Kelvin sign to
+# 'k' but keep these three: the Arrow literal masks fold them first, and
+# the JVM prefilter passes every row that holds one.
+_ASCII_FOLD = {"\u017f": "s", "\u0131": "i", "\u0130": "i"}
+
 
 def prefilter_literal(pattern: str) -> str | None:
     """Longest literal substring REQUIRED by every match of ``pattern``
@@ -74,7 +78,9 @@ def prefilter_literal(pattern: str) -> str | None:
       likewise an opaque atom -- NOT the bare letter;
     * a run followed by '?', '*' or '{0' has an optional last atom ->
       trim the run's last char;
-    * escaped metachars (\\[ etc.) contribute their literal char.
+    * escaped metachars (\\[ etc.) contribute their literal char;
+    * a non-ASCII char ends the run: its case folds (``σ/ς/Σ``) have no
+      single lowercase form, so it cannot be matched after ``lower``.
     """
     if "|" in pattern or "(?" in pattern:
         return None
@@ -129,7 +135,7 @@ def prefilter_literal(pattern: str) -> str | None:
                 return None  # bare '{': unrecognized, give up
             i = j + 1
             continue
-        if c in _META:
+        if c in _META or c > "\x7f":
             if cur:
                 runs.append((i, "".join(cur)))
                 cur = []
@@ -170,21 +176,16 @@ def _compiled(payload: tuple) -> list:
         got = []
         for rule_id, rule_idx, pattern in payload:
             pat = re.compile(pattern, re.IGNORECASE)
-            # group-free patterns: wrap so extract() yields group(0)
-            extract_pat = (
-                pat if pat.groups >= 1 else re.compile(f"({pattern})", re.IGNORECASE)
-            )
             literal = prefilter_literal(pattern)
             # no provable literal, but the pattern sits in the
             # dialect-identical RE2 subset: the C++ RE2 scan
             # (pc.match_substring_regex) can produce the candidate mask
-            # -- no pandas conversion of the batch text
             safe_re2 = (
                 pattern
                 if literal is None and _safe_jvm_pattern(pattern)
                 else None
             )
-            got.append((rule_id, rule_idx, pat, extract_pat, literal, safe_re2))
+            got.append((rule_id, rule_idx, pat, literal, safe_re2))
         while len(_COMPILED_CACHE) >= _CACHE_CAPACITY:
             _COMPILED_CACHE.pop(next(iter(_COMPILED_CACHE)))
         _COMPILED_CACHE[payload] = got
@@ -205,17 +206,16 @@ def _arrow_match_batches(batches, compiled, carry_cols=()):
     ~80% of the stage (a no-op mapInPandas cost 2.3 s where the whole
     match cost 2.8 s) and its allocator pressure is what made the
     stage scale at 0.41 efficiency from local[4] to local[16]
-    (BENCH/BASELINE.md). Here the literal pre-filter runs
-    as a C++ substring scan (pyarrow.compute.match_substring) over the
-    zero-copy column, only CANDIDATE rows become Python strings for
-    the exact ``re`` search+extract (identical semantics to the
-    reference: icase unanchored search, group(1)-else-group(0),
-    ActionManager.cpp:72-77), and output columns are assembled with
-    ``pc.take`` -- no full-column Python materialization anywhere.
-
-    Rules without a provable literal fall back to one pandas
-    conversion of the text column per batch (shared across such
-    rules), preserving exact pandas-path semantics.
+    (BENCH/BASELINE.md). Here each rule's candidate mask is a C++ scan
+    over the zero-copy column -- a substring scan for its required
+    literal, or an RE2 scan for a literal-free pattern in the
+    dialect-identical subset -- and only CANDIDATE rows become Python
+    strings for the exact ``re`` search+extract (identical semantics to
+    the reference: icase unanchored search, group(1)-else-group(0),
+    ActionManager.cpp:72-77); output columns are assembled with
+    ``pc.take``. A rule with neither takes every row as a candidate,
+    from one ``to_pylist()`` of the batch text shared by all such
+    rules.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -225,15 +225,18 @@ def _arrow_match_batches(batches, compiled, carry_cols=()):
             continue
         ncol = {name: rb.column(i) for i, name in enumerate(rb.schema.names)}
         text = pc.fill_null(ncol["text"], "")
-        lowered = pc.utf8_lower(text)
-        text_pd = None  # lazy: only built if some rule has no prefilter
-        for rule_id, rule_idx, pat, extract_pat, literal, safe_re2 in compiled:
-            if literal is not None or safe_re2 is not None:
-                # candidate mask stays in C++: substring scan for
-                # literal-bearing rules, RE2 scan for literal-free
-                # rules inside the dialect-identical subset (replaces
-                # the former full-batch pandas conversion + pandas
-                # regex for such rules -- guide §4.2)
+        lowered = text
+        for src, dst in _ASCII_FOLD.items():
+            lowered = pc.replace_substring(lowered, src, dst)
+        lowered = pc.utf8_lower(lowered)
+        all_texts = None  # lazy: only built if some rule has no prefilter
+        for rule_id, rule_idx, pat, literal, safe_re2 in compiled:
+            if literal is None and safe_re2 is None:
+                cand_idx = None
+                if all_texts is None:
+                    all_texts = text.to_pylist()
+                cand_texts = all_texts
+            else:
                 if literal is not None:
                     mask = pc.match_substring(lowered, literal)
                 else:
@@ -244,29 +247,18 @@ def _arrow_match_batches(batches, compiled, carry_cols=()):
                 if len(cand_idx) == 0:
                     continue
                 cand_texts = pc.take(text, cand_idx).to_pylist()
-                keep, extracted = [], []
-                grp = 1 if pat.groups >= 1 else 0
-                for j, t in enumerate(cand_texts):
-                    m = pat.search(t)
-                    if m is not None:
-                        keep.append(j)
-                        extracted.append(m.group(grp) or "")
-                if not keep:
-                    continue
-                idx = pc.take(cand_idx, pa.array(keep, pa.int64()))
-            else:
-                if text_pd is None:
-                    text_pd = text.to_pandas()
-                import warnings
-
-                with warnings.catch_warnings():
-                    warnings.simplefilter("ignore", UserWarning)
-                    sub = text_pd[text_pd.str.contains(pat, na=False)]
-                if sub.empty:
-                    continue
-                ext = sub.str.extract(extract_pat, expand=True).iloc[:, 0]
-                extracted = ext.fillna("").tolist()
-                idx = pa.array(sub.index.to_numpy(), pa.int64())
+            keep, extracted = [], []
+            grp = 1 if pat.groups >= 1 else 0
+            for j, t in enumerate(cand_texts):
+                m = pat.search(t)
+                if m is not None:
+                    keep.append(j)
+                    extracted.append(m.group(grp) or "")
+            if not keep:
+                continue
+            idx = pa.array(keep, pa.int64())
+            if cand_idx is not None:
+                idx = pc.take(cand_idx, idx)
             n = len(idx)
             yield pa.RecordBatch.from_arrays(
                 [
@@ -288,6 +280,15 @@ def _arrow_match_batches(batches, compiled, carry_cols=()):
                 ]
                 + list(carry_cols),
             )
+
+
+def _tally(batches, acc_bytes, acc_rows):
+    """Pass Arrow batches through, adding their bytes and rows to two
+    Spark accumulators."""
+    for rb in batches:
+        acc_bytes.add(rb.nbytes)
+        acc_rows.add(rb.num_rows)
+        yield rb
 
 
 def match_turns(
@@ -317,38 +318,24 @@ def match_turns(
     ladder reads it as ``match.ipc_bytes_in``; ``None`` (the default)
     adds zero work to the hot path.
 
-    When EVERY enabled rule has a provable required literal, a
-    JVM-side codegen'd pre-filter (OR of ``contains(lower(text), lit)``)
-    drops non-candidate rows BEFORE the Python boundary -- the Arrow
-    IPC transfer of the turn stream is the measured bottleneck of this
-    operator (BENCH/BASELINE.md), and a row containing no rule's
-    literal cannot match any rule, so only candidates need to cross.
-    The Python side re-applies its own per-rule prefilter + exact
-    ``re`` semantics, so this is purely a row-volume reduction.
+    When every enabled rule admits a JVM-side pre-filter
+    (``prefilter_condition``), it drops non-candidate rows BEFORE the
+    Python boundary -- the Arrow IPC transfer of the turn stream is the
+    measured bottleneck of this operator (BENCH/BASELINE.md), and a row
+    no rule's pre-filter passes cannot match any rule. The Python side
+    re-applies its own per-rule prefilter + exact ``re`` semantics, so
+    this is purely a row-volume reduction.
     """
     payload = _rules_payload(rules)
-
     carry = tuple(carry_cols)
 
-    if ipc_meter is None:
-        def fn(batches):
-            yield from _arrow_match_batches(batches, _compiled(payload), carry)
-    else:
-        acc_ib, acc_ir, acc_ob, acc_or = ipc_meter
-
-        def fn(batches):
-            def metered(bs):
-                for rb in bs:
-                    acc_ib.add(rb.nbytes)
-                    acc_ir.add(rb.num_rows)
-                    yield rb
-
-            for ob in _arrow_match_batches(
-                metered(batches), _compiled(payload), carry
-            ):
-                acc_ob.add(ob.nbytes)
-                acc_or.add(ob.num_rows)
-                yield ob
+    def fn(batches):
+        if ipc_meter is not None:
+            batches = _tally(batches, *ipc_meter[:2])
+        out = _arrow_match_batches(batches, _compiled(payload), carry)
+        if ipc_meter is not None:
+            out = _tally(out, *ipc_meter[2:])
+        yield from out
 
     cols = [c for c in ("conv_id", "turn_idx", "text", "ts") if c in turns.columns]
     cols += [c for c in carry if c not in cols]
@@ -435,10 +422,10 @@ def prefilter_condition(rules: list[Rule]):
     character-class rule like ``[0-9]{6}`` that has no literal).
     Returns None when some rule admits neither -- then no JVM pruning
     is possible and every row crosses the Arrow boundary.
-    A row failing this cannot match ANY rule -- so it gates the Arrow
-    boundary in ``match_turns`` and equally prunes the CONTEXT side of
-    the stream-stream join (a turn that cannot match never needs its
-    role/tool buffered in join state)."""
+    A row failing this cannot match ANY rule, so it gates the Arrow
+    boundary in ``match_turns``. Rows holding an ``_ASCII_FOLD`` code
+    point pass: folding the text before ``lower`` made this filter 2-3x
+    slower, because Spark re-evaluates it in every OR branch."""
     payload = _rules_payload(rules)
     if not payload:
         return None
@@ -457,51 +444,15 @@ def prefilter_condition(rules: list[Rule]):
     for lit in sorted(lits):
         c = low.contains(F.lit(lit))
         cond = c if cond is None else (cond | c)
+    if lits:
+        # lower() keeps the _ASCII_FOLD code points, so a row holding one
+        # passes as a candidate; the Arrow side folds it before its scan
+        for ch in _ASCII_FOLD:
+            cond = cond | F.col("text").contains(F.lit(ch))
     for pat in sorted(rlikes):
         c = F.col("text").rlike(f"(?i){pat}")
         cond = c if cond is None else (cond | c)
     return F.coalesce(cond, F.lit(False))
-
-
-def _java_pattern(pattern: str, for_extract: bool) -> str:
-    """Case-insensitive Java-regex form; wrap group-free patterns for
-    extraction so group(1) == group(0)."""
-    n_groups = re.compile(pattern).groups
-    if for_extract and n_groups == 0:
-        pattern = f"({pattern})"
-    return f"(?i){pattern}"
-
-
-def match_turns_sql(turns: DataFrame, rules: list[Rule]) -> DataFrame:
-    """Pure-Catalyst (whole-stage-codegen) variant of ``match_turns``.
-
-    Builds one RLIKE/regexp_extract branch per rule and unions via a
-    stack of per-rule projections over a single scan (Catalyst collapses
-    the union into one pass when beneficial). Suitable when the rule
-    corpus is valid Java regex with the same semantics as Python re
-    (true for the canonical and document corpora -- pinned by tests).
-    """
-    enabled = sorted((r for r in rules if r.enabled), key=lambda r: r.rule_idx)
-    parts = []
-    for r in enabled:
-        m = turns.filter(F.col("text").rlike(_java_pattern(r.pattern, False)))
-        parts.append(
-            m.select(
-                "conv_id",
-                "turn_idx",
-                F.lit(r.rule_id).alias("rule_id"),
-                F.lit(r.rule_idx).cast("int").alias("rule_idx"),
-                F.regexp_extract(
-                    F.col("text"), _java_pattern(r.pattern, True), 1
-                ).alias("extracted"),
-                "text",
-                "ts",
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def classify_unmatched(turns: DataFrame, matches: DataFrame) -> DataFrame:

@@ -38,16 +38,6 @@ def sample_bucket(key_col: Column, salt: str = "s42") -> Column:
     return F.conv(F.substring(h, 1, 15), 16, 10).cast("long") % _BUCKETS
 
 
-def deterministic_sample(
-    df: DataFrame,
-    fraction: float,
-    key_col: str,
-    salt: str = "s42",
-) -> DataFrame:
-    """Keep a deterministic ``fraction`` of rows by hash of ``key_col``."""
-    return df.filter(sample_bucket(F.col(key_col), salt) < int(fraction * _BUCKETS))
-
-
 def stratified_sample(
     df: DataFrame,
     fractions: dict[str, float],

@@ -1176,14 +1176,6 @@ def q_embedding_cosine_query(spark, sf_dir):
     )
 
 
-def _aug_emb(spark, sf_dir):
-    """Driver embeddings + planted near-dups (fixtures.py): the raw
-    driver embeddings are near-random (max pairwise cosine ~0.51), so
-    near-dup/ANN operators need the planted ground truth to have
-    anything real to find."""
-    return cached_parquet(spark, FX.augmented_embeddings_path(sf_dir))
-
-
 def q_embedding_neardup_pairs(spark, sf_dir):
     """Near-dup pairs probing the PERSISTED LSH index (bucket column
     materialized at ingest; the probe plan has no UDF and no bucket

@@ -261,13 +261,12 @@ def canonical_rules() -> list[Rule]:
         ),
         # NO-LITERAL rule (round-5 verdict task #9): a pure
         # character-class pattern defeats the literal prefilter
-        # (prefilter_literal -> None), so the flagship corpus now
-        # exercises the per-rule pandas fallback inside the match
-        # operator end to end, not only in unit tests. The JVM-side
-        # candidate gate survives via the safe-subset RLIKE branch of
-        # prefilter_condition (the pattern is dialect-identical in
-        # Java, RE2, and Python re). extracted = group(0), the leftmost
-        # 6-digit run.
+        # (prefilter_literal -> None), so the flagship corpus
+        # exercises the match operator's RE2 candidate mask end to
+        # end. The JVM-side candidate gate survives via the safe-subset
+        # RLIKE branch of prefilter_condition (the pattern is
+        # dialect-identical in Java, RE2, and Python re). extracted =
+        # group(0), the leftmost 6-digit run.
         Rule(
             "pin_code",
             9,

@@ -54,4 +54,3 @@ ACTIONS_SCHEMA = T.StructType(
 )
 
 ACTION_KEY = ["conv_id", "turn_idx", "rule_id", "step_idx"]
-ORDER_KEY = ["conv_id", "turn_idx", "rule_idx", "step_idx"]

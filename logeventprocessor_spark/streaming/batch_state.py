@@ -55,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from logeventprocessor_spark.operators.cooldown import apply_cooldown
+from logeventprocessor_spark.operators.cooldown import apply_cooldown, hot_cooldowns
 from logeventprocessor_spark.rules import Rule
 
 # eviction grace matches stream_cooldown's timeout slack (+1 s)
@@ -88,15 +88,6 @@ def delay_to_ms(delay: str) -> int:
     use)."""
     n, unit = delay.strip().split()
     return int(n) * _UNITS_MS[unit.lower()]
-
-
-def hot_cooldowns(rules: list[Rule]) -> dict[str, int]:
-    """rule_id -> cooldown_ms of the enabled cooldown-bearing rules."""
-    return {
-        r.rule_id: r.cooldown_ms
-        for r in rules
-        if r.enabled and r.cooldown_ms > 0
-    }
 
 
 class CooldownSnapshotState:

@@ -54,6 +54,7 @@ from logeventprocessor_spark.operators.cooldown import (
     NO_PRIOR,
     _epoch_ns,
     greedy_keep,
+    hot_cooldowns,
 )
 from logeventprocessor_spark.operators.match import match_turns
 from logeventprocessor_spark.operators.steps import expand_steps
@@ -88,7 +89,7 @@ def stream_cooldown(matches: DataFrame, rules: list[Rule]) -> DataFrame:
     (ts, turn_idx) order -- the engine's deterministic ordering
     contract -- by ``greedy_keep`` (one run per key); ``last_fire_ns``
     persists across micro-batches."""
-    cooldowns = {r.rule_id: r.cooldown_ms for r in rules if r.cooldown_ms > 0}
+    cooldowns = hot_cooldowns(rules)
     if not cooldowns:
         return matches
 
@@ -631,7 +632,6 @@ def start_pipeline(
         from logeventprocessor_spark.streaming.batch_state import (
             CooldownSnapshotState,
             delay_to_ms,
-            hot_cooldowns,
         )
 
         batches = stream

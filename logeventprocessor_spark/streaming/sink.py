@@ -96,15 +96,8 @@ class ParquetUpsertSink:
         df.write.mode("overwrite").parquet(d)
 
     def read_table(self, spark: SparkSession, name: str, key: list[str]) -> DataFrame:
-        path = os.path.join(self.out_dir, "tables", name)
-        df = spark.read.option("basePath", path).parquet(path + "/batch_id=*")
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*key).orderBy("batch_id")
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "batch_id")
+        return _read_earliest(
+            spark, os.path.join(self.out_dir, "tables", name), key
         )
 
     def foreach_batch(self):
@@ -114,16 +107,9 @@ class ParquetUpsertSink:
         """The logical output table: union of batches, deduplicated by
         the action key (keep the earliest batch's row -- they are
         identical under exactly-once; the dedup is defensive)."""
-        path = os.path.join(self.out_dir, "batches")
-        df = spark.read.option("basePath", path).parquet(path + "/batch_id=*")
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*self.key).orderBy("batch_id")
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_part", "batch_id")
-        )
+        return _read_earliest(
+            spark, os.path.join(self.out_dir, "batches"), self.key
+        ).drop("_part")
 
     def lineage(self) -> list[dict]:
         out = []
@@ -132,3 +118,17 @@ class ParquetUpsertSink:
             with open(os.path.join(d, name)) as f:
                 out.append(json.load(f))
         return out
+
+
+def _read_earliest(spark: SparkSession, path: str, key: list[str]) -> DataFrame:
+    """The ``batch_id=N`` directories under ``path`` as one table, one
+    row per ``key``: the earliest batch's."""
+    from pyspark.sql import Window
+
+    df = spark.read.option("basePath", path).parquet(path + "/batch_id=*")
+    w = Window.partitionBy(*key).orderBy("batch_id")
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "batch_id")
+    )

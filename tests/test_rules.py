@@ -15,6 +15,7 @@ from logeventprocessor_spark.rules import (
     RuleValidationError,
     canonical_rules,
     collapse_double_backslashes,
+    document_rules,
     load_rules_yaml,
     template_to_regex,
     validate_rules,
@@ -131,29 +132,154 @@ def test_prefilter_literal_safety():
     assert prefilter_literal(r"ab.*") is None
 
 
-def test_prefilter_never_drops_matches():
-    """Property: any string matching the pattern contains the literal
-    (case-insensitively)."""
-    import re
+# Generated prefilter inputs. _FOLDS holds, for a lowercase letter, the
+# other code points Python's re.IGNORECASE matches to it: the four above
+# U+007F that fold onto ASCII letters (U+0130, U+0131, U+017F, U+212A),
+# and Greek sigma's three forms, which have no single lowercase form.
+_FOLDS = {"s": "S\u017f", "i": "I\u0131\u0130", "k": "K\u212a", "σ": "ςΣ"}
+_WS = "\t\n\r\x0b\x0c\x85\xa0\u2028\u3000"
+_VOCAB = ("spam", "ping", "kiss", "login", "minions", "sister", "ask", "is",
+          "σοφός", "bσσt")
+# texts the canonical and document rules match
+_PHRASES = (
+    "hello # world", "attack my minions", "clarice", "email test", "[error]",
+    "user login: a@b.co", "# tells you, 'hi'", "spam ping",
+    "rate limit exceeded on db", "code 123456", "spark # window",
+    "merge batch", "customer # query", "big table",
+)
+_SOUP = "abikpsz019 :[]'@." + _WS + "".join(_FOLDS.values())
 
+
+def _template(rng) -> str:
+    """A '#'-template over the shared vocabulary."""
+    return " ".join(
+        rng.choice(_VOCAB + ("#", ".*")) for _ in range(rng.randint(1, 4))
+    )
+
+
+def _text(rng, phrases):
+    """A null, empty or character-soup text, or rendered phrases joined
+    by (Unicode) whitespace; then random case flips and fold variants."""
+    roll = rng.random()
+    if roll < 0.05:
+        return None
+    if roll < 0.1:
+        return ""
+    if roll < 0.25:
+        return "".join(rng.choice(_SOUP) for _ in range(rng.randint(1, 30)))
+    t = rng.choice(_WS + "   ").join(
+        rng.choice(phrases).replace("#", rng.choice(_VOCAB)).replace(
+            ".*", rng.choice(_VOCAB)
+        )
+        for _ in range(rng.randint(1, 3))
+    )
+    out = []
+    for c in t:
+        r = rng.random()
+        if r < 0.25 and c in _FOLDS:
+            c = rng.choice(_FOLDS[c])
+        elif r < 0.35:
+            c = c.swapcase()
+        elif r < 0.4 and c == " ":
+            c = rng.choice(_WS)
+        out.append(c)
+    return "".join(out)
+
+
+def _draw(rng, n_rules, n_texts):
+    """Canonical + document rules plus ``n_rules`` template rules, and
+    ``n_texts`` texts built from all of their phrases."""
+    templates = [_template(rng) for _ in range(n_rules)]
+    rules = canonical_rules() + document_rules()
+    rules += [
+        Rule(f"t{j}", len(rules) + j, template_to_regex(t))
+        for j, t in enumerate(templates)
+    ]
+    texts = [_text(rng, _PHRASES + tuple(templates)) for _ in range(n_texts)]
+    return rules, texts
+
+
+def _re_hits(rules, texts):
+    """{(text index, rule_id, extracted)} of every Python ``re`` match."""
+    from logeventprocessor_spark.oracle import extract_value
+
+    hits = set()
+    for r in rules:
+        pat = re.compile(r.pattern, re.IGNORECASE)
+        for i, t in enumerate(texts):
+            m = pat.search(t or "")
+            if m:
+                hits.add((i, r.rule_id, extract_value(m)))
+    return hits
+
+
+def test_prefilter_never_drops_matches(spark):
+    """Property: no prefilter drops a row Python ``re`` (IGNORECASE)
+    matches, on generated ASCII/Unicode text -- case-fold code points,
+    Unicode whitespace, empty and null text -- against the canonical,
+    document and generated '#'-template rules.
+
+    * Arrow side: ``_arrow_match_batches`` (literal mask over the folded
+      lowercase text, RE2 mask for safe patterns, every row for the
+      rest) emits exactly the ``re`` matches;
+    * JVM side: ``prefilter_condition`` per rule and for the canonical
+      + document set, evaluated by Spark over one frame of a single
+      seeded draw (one job)."""
+    import random
+
+    import pyarrow as pa
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from logeventprocessor_spark.operators.match import prefilter_literal
-    from logeventprocessor_spark.rules import canonical_rules, document_rules
+    from logeventprocessor_spark.operators import match as M
 
-    rules = canonical_rules() + document_rules()
-    pats = [(re.compile(r.pattern, re.IGNORECASE), prefilter_literal(r.pattern))
-            for r in rules]
-
-    @settings(max_examples=300, deadline=None)
-    @given(st.text(alphabet=st.characters(codec="ascii"), max_size=80))
-    def check(s):
-        for pat, lit in pats:
-            if lit is not None and pat.search(s):
-                assert lit in s.lower()
+    @settings(max_examples=150, deadline=None, derandomize=True)
+    @given(st.randoms(use_true_random=False))
+    def check(rng):
+        rules, texts = _draw(rng, 2, 12)
+        rb = pa.RecordBatch.from_pydict({
+            "conv_id": ["c"] * len(texts),
+            "turn_idx": pa.array(range(len(texts)), pa.int32()),
+            "text": pa.array(texts, pa.string()),
+            "ts": pa.array([0] * len(texts), pa.timestamp("us")),
+        })
+        got = {
+            (i, rid, ext)
+            for ob in M._arrow_match_batches(
+                [rb], M._compiled(M._rules_payload(rules))
+            )
+            for i, rid, ext in zip(
+                ob.column(1).to_pylist(),
+                ob.column(2).to_pylist(),
+                ob.column(4).to_pylist(),
+            )
+        }
+        assert got == _re_hits(rules, texts)
 
     check()
+
+    rules, texts = _draw(random.Random(42), 12, 400)
+    n_fixed = len(rules) - 12
+    conds = {r.rule_id: M.prefilter_condition([r]) for r in rules}
+    conds["_fixed"] = M.prefilter_condition(rules[:n_fixed])
+    conds = {k: c for k, c in conds.items() if c is not None}
+    assert "_fixed" in conds and len(conds) > n_fixed
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "i int, text string"
+    )
+    passed = {
+        row["i"]: row
+        for row in df.select("i", *(c.alias(k) for k, c in conds.items()))
+        .collect()
+    }
+    fixed_ids = {r.rule_id for r in rules[:n_fixed]}
+    hits = _re_hits(rules, texts)
+    assert any(rid in fixed_ids for _, rid, _ in hits)
+    for i, rid, _ in hits:
+        if rid in conds:
+            assert passed[i][rid], (rid, texts[i])
+        if rid in fixed_ids:
+            assert passed[i]["_fixed"], (rid, texts[i])
 
 
 def test_prefilter_optional_group_guard():
