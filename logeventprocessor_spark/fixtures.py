@@ -19,14 +19,16 @@ checkable by the driver's DuckDB comparison:
   RAWV payloads) as parquet, so DuckDB can oracle the SQL-expressible
   decode outputs (kind, octet_length(payload), header width/height vs
   stored meta).
-* ``ivf_index`` / ``lsh_index`` -- PERSISTED ANN indexes over the
-  augmented embeddings, built ONCE here (driver-side numpy: KMeans /
+* ``ivf_index_fixture`` / ``lsh_index_fixture`` -- PERSISTED ANN
+  indexes over the augmented embeddings, built ONCE here (driver-side numpy: KMeans /
   hyperplane sign bits) so the registered probe queries are pure
   read-only scans (round-2 verdict: a query must not mutate
   .fixtures on first run). The Spark-side builders
   (``similarity.ivf_build`` / ``similarity.lsh_build``) are the
-  100 TB-scale path and are pytest-verified to produce equivalent
-  probes; the fixture build only needs a few hundred vectors.
+  100 TB-scale path and write the same layouts (centers.json +
+  lists/_list=N/, meta.json + data.parquet), so one probe function
+  per index family reads both; the fixture build only needs a few
+  hundred vectors.
 
 Files are content-versioned by name (bump ``_V`` when generation
 logic changes; the near-dup pairs also carry ``GRAM_TAG``) and
@@ -60,10 +62,12 @@ _V = "v3"
 # The gram builder the stored near-dup pairs were made with, part of the
 # pair fixture's name only (a _V bump would rebuild every fixture).
 # Change it whenever operators/dedup.py's _gram_array changes how text
-# becomes grams. "rx1": one codegen'd regexp_extract_all over
-# whitespace-normalised text, which replaced the interpreted transform
-# chain whose pairs the untagged name still holds.
-GRAM_TAG = "rx1"
+# becomes grams. "rx2": the tokens behind the size(toks) >= n filter are
+# split from the same whitespace-normalised string as the grams. "rx1":
+# one codegen'd regexp_extract_all over whitespace-normalised text,
+# which replaced the interpreted transform chain whose pairs the
+# untagged name still holds.
+GRAM_TAG = "rx2"
 TRANSCRIPTS_N_CONVS = 40
 MEDIA_N = 60
 # sf dir the driver's oracle comparison runs at. The oracle SQL strings

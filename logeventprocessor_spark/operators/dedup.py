@@ -12,7 +12,7 @@ JVM-side and the candidate set shrinks BEFORE any quadratic work:
                      for candidates -> exact-Jaccard verify
 * SimHash         -- 64 bitwise aggregates over exploded tokens (all
                      whole-stage codegen); hamming-distance candidates
-* embedding cosine -- see similarity.py (near_dup_pairs)
+* embedding cosine -- see similarity.py (near_dup_pairs_from_index)
 
 All shuffles are keyed on shingle/bucket values (high cardinality, no
 skew); doc-side explode fan-out is bounded by tokens-per-doc.
@@ -20,10 +20,10 @@ skew); doc-side explode fan-out is bounded by tokens-per-doc.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from logeventprocessor_spark.operators.text import with_fingerprint
+from logeventprocessor_spark.operators.text import fan_out, with_fingerprint
 
 
 def exact_duplicates(
@@ -45,8 +45,6 @@ def exact_duplicates(
 def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"):
     """Keep one representative (min id) per normalized-text group."""
     fp = with_fingerprint(df, text_col)
-    from pyspark.sql import Window
-
     w = Window.partitionBy("fp_md5").orderBy(id_col)
     return (
         fp.withColumn("_rn", F.row_number().over(w))
@@ -69,8 +67,16 @@ def dedup_stream_exact(stream: DataFrame, text_col: str = "text") -> DataFrame:
 def _gram_array(text_col: str, n: int):
     """(toks, grams) column expressions: whitespace-tokenize and build
     the word n-gram array. Shared by every shingle-based operator so
-    the tokenization can never drift between them (the DuckDB oracles
-    replicate exactly this split/lower/trim).
+    the tokenization can never drift between them.
+
+    Both halves derive from ONE normalization: every run of Java-regex
+    ``\\s`` collapsed to a single space, trimmed, lower-cased. The
+    tokens split that string on the space, so ``size(toks) - n + 1``
+    is the gram count whenever ``size(toks) >= n`` -- also on text
+    edged with tabs or newlines, which Spark's ``trim`` (spaces only)
+    would otherwise leave as empty edge tokens. The DuckDB oracles
+    split ``trim(text)`` on ``\\s+``, which agrees on every document
+    without such edges.
 
     The gram array is built with ONE codegen'd regex over the
     whitespace-normalized text -- a token-start anchor (``(?<!\\S)``)
@@ -90,8 +96,8 @@ def _gram_array(text_col: str, n: int):
     matches rather than the transform form's single partial gram --
     callers already filter ``size(toks) >= n`` before using grams,
     exactly as before."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
+    toks = F.split(norm, " ")
     pat = r"(?<!\S)(?=((?:\S+ ){%d}\S+))" % (n - 1)
     grams = F.regexp_extract_all(norm, F.lit(pat), 1)
     return toks, grams
@@ -108,7 +114,7 @@ def shingle_arrays(
     ``localCheckpoint`` it so the tokenization is never re-evaluated
     per consumer."""
     toks, grams = _gram_array(text_col, n)
-    return _fan_out(df.filter(F.size(toks) >= n)).select(
+    return fan_out(df.filter(F.size(toks) >= n)).select(
         F.col(id_col).alias("doc_id"),
         F.array_distinct(grams).alias("sh_arr"),
     )
@@ -134,7 +140,7 @@ def shingles(
     and derive both from the stored arrays instead."""
     toks, grams = _gram_array(text_col, n)
     return (
-        _fan_out(df.filter(F.size(toks) >= n))
+        fan_out(df.filter(F.size(toks) >= n))
         .select(
             F.col(id_col).alias("doc_id"),
             F.explode(F.array_distinct(grams)).alias("shingle"),
@@ -165,17 +171,10 @@ def ngram_contamination(
     ONCE: per-row ``array_distinct`` dedups shingles within the doc
     with NO shuffle (one row per doc makes within-row dedup exact),
     the broadcast left join marks hits JVM-side, and the only shuffle
-    is the final doc_id aggregation (map-side partial counts). The
-    global ``.distinct()`` that ``shingles()`` pays is deliberately
-    avoided on the big side."""
-    toks, grams = _gram_array(text_col, n)
-    corpus_sh = (
-        _fan_out(corpus.filter(F.size(toks) >= n))
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.array_distinct(grams)).alias("shingle"),
-        )
-    )
+    is the final doc_id aggregation (map-side partial counts). Both
+    sides shingle through ``shingles()``; only the small benchmark
+    side pays a global ``.distinct()``."""
+    corpus_sh = shingles(corpus, id_col, text_col, n)
     bench_sh = (
         shingles(benchmark, id_col, text_col, n)
         .select("shingle")
@@ -330,7 +329,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    prefix_filter: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by exact n-gram Jaccard >= threshold.
 
@@ -355,67 +353,48 @@ def ngram_jaccard_pairs(
     arr = shingle_arrays(df, id_col, text_col, n).localCheckpoint(eager=False)
     sh = arr.select("doc_id", F.explode("sh_arr").alias("shingle"))
     sizes = arr.select("doc_id", F.size("sh_arr").alias("n_sh"))
-
-    if prefix_filter:
-        from pyspark.sql import Window
-
-        dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        ranked = (
-            sh.join(dfreq, "shingle")
-            .withColumn(
-                "rk",
-                F.row_number().over(
-                    Window.partitionBy("doc_id").orderBy("df", "shingle")
-                ),
-            )
-            .join(sizes, "doc_id")
-            .filter(
-                F.col("rk")
-                <= F.floor((1 - threshold) * F.col("n_sh")).cast("int") + 1
-            )
-            # a prefix shingle with df == 1 exists in exactly one doc:
-            # it cannot produce a candidate pair, so drop it from BOTH
-            # sides of the self-join (ranks were assigned on the full
-            # prefix first, so pruning here cannot promote a non-prefix
-            # shingle). On word-salad corpora most shingles are unique
-            # -- this removes the bulk of the inverted-index volume.
-            .filter(F.col("df") >= 2)
-            .select("doc_id", "shingle")
-            # the self-join below reads BOTH sides from this subtree;
-            # un-materialized, Spark evaluates the dfreq-join + window
-            # lineage twice (no common-subexpression sharing across
-            # join branches -- guide §2.4)
-            .localCheckpoint(eager=False)
+    dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    ranked = (
+        sh.join(dfreq, "shingle")
+        .withColumn(
+            "rk",
+            F.row_number().over(
+                Window.partitionBy("doc_id").orderBy("df", "shingle")
+            ),
         )
-        a, b = ranked.alias("a"), ranked.alias("b")
-        cand = (
-            a.join(b, "shingle")
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .distinct()
+        .join(sizes, "doc_id")
+        .filter(
+            F.col("rk")
+            <= F.floor((1 - threshold) * F.col("n_sh")).cast("int") + 1
         )
-        return _jaccard_verify(cand, arr, threshold)
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
+        # a prefix shingle with df == 1 exists in exactly one doc:
+        # it cannot produce a candidate pair, so drop it from BOTH
+        # sides of the self-join (ranks were assigned on the full
+        # prefix first, so pruning here cannot promote a non-prefix
+        # shingle). On word-salad corpora most shingles are unique
+        # -- this removes the bulk of the inverted-index volume.
+        .filter(F.col("df") >= 2)
+        .select("doc_id", "shingle")
+        # the self-join below reads BOTH sides from this subtree;
+        # un-materialized, Spark evaluates the dfreq-join + window
+        # lineage twice (no common-subexpression sharing across
+        # join branches -- guide §2.4)
+        .localCheckpoint(eager=False)
+    )
+    a, b = ranked.alias("a"), ranked.alias("b")
+    cand = (
         a.join(b, "shingle")
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
         )
-        .agg(F.count(F.lit(1)).alias("n_inter"))
+        .distinct()
     )
-    return _jaccard_finish(inter, sizes, threshold)
+    return _jaccard_verify(cand, arr, threshold)
 
 
-def _jaccard_verify(
-    cand: DataFrame,
-    arr: DataFrame,
-    threshold: float,
-    broadcast_candidates: bool = True,
-) -> DataFrame:
+def _jaccard_verify(cand: DataFrame, arr: DataFrame, threshold: float) -> DataFrame:
     """Exact-Jaccard verification of candidate PAIRS against the
     per-doc shingle ARRAY table ``arr`` (doc_id, sh_arr): each pair is
     joined to its two stored arrays and the intersection is counted
@@ -430,15 +409,13 @@ def _jaccard_verify(
     is candidates x two arrays, the minimum any exact verify must
     move.
 
-    ``broadcast_candidates`` (default): the id-pair set is small BY
-    CONSTRUCTION (LSH/prefix pruning), so the first join broadcasts it
-    and the array table streams with NO shuffle -- without the hint,
-    AQE sometimes picks a sort-merge join that shuffles the full
-    table (observed 3-10x wall-clock swings)."""
+    The id-pair set is small BY CONSTRUCTION (LSH/prefix pruning), so
+    the first join broadcasts it and the array table streams with NO
+    shuffle -- without the hint, AQE sometimes picks a sort-merge join
+    that shuffles the full table (observed 3-10x wall-clock swings)."""
     a_ = arr.select(F.col("doc_id").alias("doc_a"), F.col("sh_arr").alias("_a"))
     b_ = arr.select(F.col("doc_id").alias("doc_b"), F.col("sh_arr").alias("_b"))
-    c = F.broadcast(cand) if broadcast_candidates else cand
-    pairs = a_.join(c, "doc_a").join(b_, "doc_b")
+    pairs = a_.join(F.broadcast(cand), "doc_a").join(b_, "doc_b")
     n_inter = F.size(F.array_intersect("_a", "_b"))
     return (
         pairs.select(
@@ -459,51 +436,6 @@ def _jaccard_verify(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-
-
-def _jaccard_finish(
-    inter: DataFrame,
-    sizes: DataFrame,
-    threshold: float,
-    broadcast_inter: bool = False,
-) -> DataFrame:
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    if broadcast_inter:
-        inter = F.broadcast(inter)
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    k: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
-    """k MinHash values per doc in ONE shuffle: groupBy(doc) with k
-    min(xxhash64(seed_i, shingle)) aggregates -- all JVM-side."""
-    sh = shingles(df, id_col, text_col, n)
-    # SQL-string form: one JVM parse per aggregate instead of ~4 py4j
-    # round-trips each (seed literal stays INT, identical hash input)
-    aggs = [
-        F.expr(f"min(xxhash64({i}, shingle))").alias(f"mh_{i}")
-        for i in range(k)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
 
 
 def minhash_lsh_pairs(
@@ -577,9 +509,9 @@ def with_minhash_buckets(
     a single keyed stateful operator (the aggregate-free formulation
     is what makes streaming near-dup possible: a groupBy(doc) minhash
     would be an unclosable stateful aggregation). The per-band minhash
-    values equal the batch ``minhash_signatures`` values for the same
-    (k, n) -- both take min(xxhash64(i, s)) over the doc's distinct
-    shingles -- though the bucket ids are band-salted here.
+    values equal the signatures batch ``minhash_lsh_pairs`` aggregates
+    for the same (k, n) -- both take min(xxhash64(i, s)) over the doc's
+    distinct shingles -- though the bucket ids are band-salted here.
 
     Cost note: higher-order fns are interpreted per element (~k * |S|
     evals/row); fine for ingest-rate streams, and the batch path keeps
@@ -689,17 +621,8 @@ def stream_neardup_candidates(
     )
 
 
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Rebalance BEFORE an explode: tokenization/shingling amplifies
-    rows ~|tokens|x, so the pre-explode partition count bounds the
-    parallelism of everything downstream (shared impl: text.fan_out)."""
-    from logeventprocessor_spark.operators.text import fan_out
-
-    return fan_out(df)
-
-
 def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    return _fan_out(df).select(
+    return fan_out(df).select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok"),
     )

@@ -1,22 +1,30 @@
 """Similarity search over embedding columns (array<float>).
 
-* ``cosine_topk``      -- brute-force exact top-k for one query vector:
-                          broadcast the query as a literal, dot product
-                          via built-in ``aggregate``/``zip_with`` (all
-                          JVM-side), ORDER BY + LIMIT (Spark plans
-                          TakeOrderedAndProject -- no full sort).
-* ``lsh_topk``         -- scale path: random-hyperplane LSH bucketing;
-                          only the query's bucket (plus optional
-                          multi-probe neighbors) is scanned exactly.
-* ``near_dup_pairs``   -- all-pairs cosine >= threshold via the same
-                          LSH buckets (candidates share a bucket), then
-                          exact verify. Avoids the O(n^2) cross join.
+* ``cosine_topk``     -- brute-force exact top-k for one query vector:
+                         broadcast the query as a literal, dot product
+                         via built-in ``aggregate``/``zip_with`` (all
+                         JVM-side), ORDER BY + LIMIT (Spark plans
+                         TakeOrderedAndProject -- no full sort).
+* banded LSH          -- ``lsh_build`` stores each vector's band-bucket
+                         array at ingest; ``lsh_load_topk`` (ANN top-k)
+                         and ``near_dup_pairs_from_index`` (all pairs
+                         with cosine >= threshold, candidates share a
+                         bucket, exact verify, no cross join) read the
+                         stored column. ``bands=1`` is the
+                         single-bucket scheme.
+* IVF                 -- ``ivf_build`` fits KMeans once and writes the
+                         table partitioned by list; ``ivf_load_topk``
+                         scans only the nearest lists.
+* ``brute_force_pairs`` -- exact all-pairs baseline (small inputs).
 
-Hyperplanes are generated driver-side from a fixed seed (numpy) and
-enter the plan as literals -- deterministic, no shuffle, no UDF.
+Hyperplanes are generated driver-side from a fixed seed (numpy), so a
+probe recomputes the query's buckets with the planes the index used.
 """
 
 from __future__ import annotations
+
+import json
+import os
 
 import numpy as np
 import pandas as pd
@@ -69,39 +77,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return h / np.linalg.norm(h, axis=1, keepdims=True)
 
 
-def lsh_bucket_expr(vec_col: str, planes: np.ndarray):
-    """Bucket id = sign-bit string of the vector against each plane."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    bits = []
-    for p in planes:
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        bits.append(F.when(_dot(v, plane) >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
-def lsh_topk(
-    df: DataFrame,
-    query: list[float],
-    k: int = 10,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """ANN top-k: scan only vectors whose LSH bucket equals the
-    query's. At 100 TB: the bucket column is precomputed/partitioned,
-    so this is a partition-pruned scan + small exact top-k."""
-    dim = len(query)
-    planes = _hyperplanes(dim, n_planes, seed)
-    qbits = "".join(
-        "1" if float(np.dot(p, np.asarray(query, dtype="float64"))) >= 0 else "0"
-        for p in planes
-    )
-    bucketed = df.withColumn("_bucket", lsh_bucket_expr(vec_col, planes))
-    cand = bucketed.filter(F.col("_bucket") == qbits)
-    return cosine_topk(cand, query, k, id_col, vec_col)
-
-
 def band_bucket_strings(
     m: np.ndarray, planes: np.ndarray, bands: int
 ) -> list[list[str]]:
@@ -143,93 +118,6 @@ def _query_band_buckets(query: list[float], planes: np.ndarray, bands: int):
     return [f"{b}:{''.join(bits[b * r:(b + 1) * r])}" for b in range(bands)]
 
 
-def banded_lsh_candidates(
-    df: DataFrame,
-    bands: int = 12,
-    rows_per_band: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Candidate id pairs (id_a < id_b) sharing >=1 band bucket.
-
-    Only (id, band, bucket) rows are shuffled -- vectors are joined
-    back by the caller -- so the exploded table is bands x |rows| of
-    small fixed-width rows. Bucket keys are high-cardinality
-    (2^rows_per_band per band), so the self-join is skew-free."""
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
-    planes = _hyperplanes(dim, bands * rows_per_band, seed)
-    udf = _band_buckets_udf(planes, bands)
-    bb = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(udf(F.col(vec_col))).alias("bucket"),
-    )
-    x, y = bb.alias("x"), bb.alias("y")
-    return (
-        x.join(y, "bucket")
-        .filter(F.col("x._id") < F.col("y._id"))
-        .select(F.col("x._id").alias("id_a"), F.col("y._id").alias("id_b"))
-        .distinct()
-    )
-
-
-def near_dup_pairs_banded(
-    df: DataFrame,
-    threshold: float = 0.9,
-    bands: int = 12,
-    rows_per_band: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Scale path for embedding near-dup pairs: banded-LSH candidates,
-    exact-cosine verify. No cross join anywhere: candidate volume is
-    sum over buckets of C(bucket_size, 2), tiny when near-dups are
-    tight clusters (the regime near-dup dedup targets)."""
-    cand = banded_lsh_candidates(
-        df, bands, rows_per_band, id_col, vec_col, seed, dim
-    )
-    a, b = _norm_sides(df, id_col, vec_col)
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            F.col("id_a").alias("vec_a"),
-            F.col("id_b").alias("vec_b"),
-            F.round(_pair_cos(), 6).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
-
-
-def lsh_topk_banded(
-    df: DataFrame,
-    query: list[float],
-    k: int = 10,
-    bands: int = 12,
-    rows_per_band: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    exclude_id=None,
-) -> DataFrame:
-    """ANN top-k with banded LSH: scan only rows sharing >=1 band
-    bucket with the query (a filter over precomputable bucket columns
-    -- at 100 TB the bucket array is materialized at ingest and the
-    scan prunes on it), exact cosine rerank on the survivors."""
-    dim = len(query)
-    planes = _hyperplanes(dim, bands * rows_per_band, seed)
-    udf = _band_buckets_udf(planes, bands)
-    qb = F.array(*[F.lit(s) for s in _query_band_buckets(query, planes, bands)])
-    cand = df.filter(F.arrays_overlap(udf(F.col(vec_col)), qb))
-    if exclude_id is not None:
-        cand = cand.filter(F.col(id_col) != exclude_id)
-    return cosine_topk(cand, query, k, id_col, vec_col)
-
-
 def lsh_build(
     df: DataFrame,
     path: str,
@@ -243,13 +131,10 @@ def lsh_build(
     """Materialize the banded-LSH bucket array AT INGEST (the 100 TB
     contract, mirroring ``ivf_build``): compute the band buckets once
     (Arrow-matmul UDF) and write them as a plain array<string> column
-    next to each vector, plus meta.json recording the geometry. Every
-    later probe is a columnar scan + ``arrays_overlap`` on the STORED
-    column -- no UDF, no recompute (round-2 verdict: the probe
-    queries were re-running the bucket UDF over the full table)."""
-    import json
-    import os
-
+    next to each vector in ``path/data.parquet``, plus meta.json
+    recording the geometry. Every later probe is a columnar scan on the
+    STORED column -- no UDF, no recompute. The fixture builder writes
+    the same layout as a single file."""
     if dim is None:
         dim = len(df.select(vec_col).first()[0])
     planes = _hyperplanes(dim, bands * rows_per_band, seed)
@@ -258,7 +143,7 @@ def lsh_build(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("embedding"),
         udf(F.col(vec_col)).alias("buckets"),
-    ).write.mode("overwrite").parquet(os.path.join(path, "data"))
+    ).write.mode("overwrite").parquet(os.path.join(path, "data.parquet"))
     meta = {"bands": bands, "rows_per_band": rows_per_band, "seed": seed,
             "dim": dim}
     tmp = os.path.join(path, f"meta.json.tmp.{os.getpid()}")
@@ -272,8 +157,6 @@ def lsh_load_topk(
     path: str,
     query: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exclude_id=None,
 ) -> DataFrame:
     """Probe a persisted LSH index: compute the query's band buckets
@@ -281,9 +164,6 @@ def lsh_load_topk(
     MATERIALIZED buckets column with ``arrays_overlap`` (pure built-in
     -- the plan contains no Python UDF), exact cosine rerank on the
     survivors."""
-    import json
-    import os
-
     with open(os.path.join(path, "meta.json")) as f:
         meta = json.load(f)
     planes = _hyperplanes(
@@ -292,18 +172,15 @@ def lsh_load_topk(
     qb = F.array(
         *[F.lit(s) for s in _query_band_buckets(query, planes, meta["bands"])]
     )
-    data = os.path.join(path, "data")
-    if not os.path.isdir(data):  # driver-built fixture layout
-        data = os.path.join(path, "data.parquet")
-    df = _cached(spark, data).filter(
+    df = _cached(spark, os.path.join(path, "data.parquet")).filter(
         F.arrays_overlap(F.col("buckets"), qb)
     )
     if exclude_id is not None:
-        df = df.filter(F.col(id_col) != exclude_id)
-    return cosine_topk(df, query, k, id_col, vec_col)
+        df = df.filter(F.col("vec_id") != exclude_id)
+    return cosine_topk(df, query, k)
 
 
-def _norm_sides(vecs: DataFrame, id_col: str, vec_col: str):
+def _norm_sides(vecs: DataFrame):
     """(id_a, va, na) / (id_b, vb, nb) projections with the vector
     cast to double and its norm PRECOMPUTED once per vector -- the
     per-pair cosine then evaluates one interpreted dot-fold instead of
@@ -312,9 +189,9 @@ def _norm_sides(vecs: DataFrame, id_col: str, vec_col: str):
     ``dot / (na * nb)`` performs the identical float ops in the
     identical order as the inline form, so rounded values are
     bit-equal."""
-    v = F.transform(F.col(vec_col), lambda t: t.cast("double"))
+    v = F.transform(F.col("embedding"), lambda t: t.cast("double"))
     base = vecs.select(
-        F.col(id_col).alias("_vid"), v.alias("_v"), _norm(v).alias("_n")
+        F.col("vec_id").alias("_vid"), v.alias("_v"), _norm(v).alias("_n")
     )
     a = base.select(
         F.col("_vid").alias("id_a"), F.col("_v").alias("va"),
@@ -327,30 +204,18 @@ def _norm_sides(vecs: DataFrame, id_col: str, vec_col: str):
     return a, b
 
 
-def _pair_cos():
-    return _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-
-
 def near_dup_pairs_from_index(
     spark,
     path: str,
     threshold: float = 0.9,
-    exclude_id=None,
 ) -> DataFrame:
     """All-pairs near-dup over a PERSISTED LSH index (``lsh_build`` /
     the fixture builder): explode the STORED bucket column into the
     (id, bucket) inverted index -- no UDF, no bucket recompute --
-    self-join on bucket for candidates, exact-cosine verify. The
-    ingest-time materialization closes the last recompute-per-query
-    path in the LSH family (round-2 verdict, what's-missing #4)."""
-    import os
-
-    data = os.path.join(path, "data")
-    if not os.path.isdir(data):
-        data = os.path.join(path, "data.parquet")
-    df = _cached(spark, data)
-    if exclude_id is not None:
-        df = df.filter(F.col("vec_id") != exclude_id)
+    self-join on bucket for candidates, exact-cosine verify. Candidate
+    volume is the sum over buckets of C(bucket_size, 2), small when
+    near-dups are tight clusters (the regime near-dup dedup targets)."""
+    df = _cached(spark, os.path.join(path, "data.parquet"))
     bb = df.select("vec_id", F.explode("buckets").alias("bucket"))
     x, y = bb.alias("x"), bb.alias("y")
     cand = (
@@ -359,7 +224,8 @@ def near_dup_pairs_from_index(
         .select(F.col("x.vec_id").alias("id_a"), F.col("y.vec_id").alias("id_b"))
         .distinct()
     )
-    a, b = _norm_sides(df, "vec_id", "embedding")
+    a, b = _norm_sides(df)
+    pair_cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
     return (
         F.broadcast(cand)
         .join(a, "id_a")
@@ -367,88 +233,10 @@ def near_dup_pairs_from_index(
         .select(
             F.col("id_a").alias("vec_a"),
             F.col("id_b").alias("vec_b"),
-            F.round(_pair_cos(), 6).alias("cos_sim"),
+            F.round(pair_cos, 6).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
     )
-
-
-def near_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Embedding near-duplicate pairs: candidates = same LSH bucket,
-    verified with exact cosine >= threshold."""
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
-    planes = _hyperplanes(dim, n_planes, seed)
-    v = F.transform(F.col(vec_col), lambda t: t.cast("double"))
-    b = df.select(
-        F.col(id_col).alias("vec_id"),
-        v.alias("v"),
-        _norm(v).alias("n"),
-        lsh_bucket_expr(vec_col, planes).alias("_bucket"),
-    )
-    x, y = b.alias("x"), b.alias("y")
-    cos = _dot(F.col("x.v"), F.col("y.v")) / (F.col("x.n") * F.col("y.n"))
-    return (
-        x.join(y, "_bucket")
-        .filter(F.col("x.vec_id") < F.col("y.vec_id"))
-        .select(
-            F.col("x.vec_id").alias("vec_a"),
-            F.col("y.vec_id").alias("vec_b"),
-            F.round(cos, 6).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
-
-
-def ivf_index(
-    df: DataFrame,
-    n_lists: int = 16,
-    seed: int = 42,
-    vec_col: str = "embedding",
-):
-    """IVF coarse quantizer: KMeans over the embeddings; every vector
-    is assigned to its nearest centroid's inverted list. At 100 TB the
-    index is precomputed once and the table is WRITTEN PARTITIONED BY
-    ``_list`` so a probe is a partition-pruned scan."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = df.withColumn(
-        "_v", array_to_vector(F.col(vec_col).cast("array<double>"))
-    )
-    model = KMeans(
-        k=n_lists, seed=seed, featuresCol="_v", predictionCol="_list"
-    ).fit(feat)
-    return model, model.transform(feat).drop("_v")
-
-
-def ivf_topk(
-    df: DataFrame,
-    query: list[float],
-    k: int = 10,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """ANN top-k via IVF: probe only the ``n_probe`` inverted lists
-    whose centroids are closest to the query, exact cosine inside.
-    n_probe == n_lists degenerates to exact brute force (tested)."""
-    model, indexed = ivf_index(df, n_lists, seed, vec_col)
-    q = np.asarray(query, dtype="float64")
-    dists = [float(np.linalg.norm(c - q)) for c in model.clusterCenters()]
-    probes = list(np.argsort(dists)[:n_probe])
-    cand = indexed.filter(F.col("_list").isin([int(p) for p in probes]))
-    return cosine_topk(cand, query, k, id_col, vec_col)
 
 
 def ivf_build(
@@ -459,18 +247,24 @@ def ivf_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Build + PERSIST the IVF index once: KMeans centers to
-    ``path/centers.json``, the assigned table to ``path/lists/``
-    WRITTEN PARTITIONED BY ``_list`` -- so every later probe is a
-    partition-pruned scan with no model fit (the 100 TB contract:
-    index build is one batch job, probes never re-cluster)."""
-    import json
-    import os
+    """Build + PERSIST the IVF index once: a KMeans coarse quantizer
+    assigns every vector to its nearest centroid's inverted list; the
+    centers go to ``path/centers.json`` and the assigned table to
+    ``path/lists/`` WRITTEN PARTITIONED BY ``_list`` -- so every later
+    probe is a partition-pruned scan with no model fit (the 100 TB
+    contract: index build is one batch job, probes never re-cluster)."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
 
-    model, indexed = ivf_index(df, n_lists, seed, vec_col)
-    indexed.select(id_col, vec_col, "_list").write.mode("overwrite").partitionBy(
-        "_list"
-    ).parquet(os.path.join(path, "lists"))
+    feat = df.withColumn(
+        "_v", array_to_vector(F.col(vec_col).cast("array<double>"))
+    )
+    model = KMeans(
+        k=n_lists, seed=seed, featuresCol="_v", predictionCol="_list"
+    ).fit(feat)
+    model.transform(feat).select(id_col, vec_col, "_list").write.mode(
+        "overwrite"
+    ).partitionBy("_list").parquet(os.path.join(path, "lists"))
     centers = [[float(x) for x in c] for c in model.clusterCenters()]
     # centers.json is written LAST and atomically (tmp + os.replace):
     # its existence is the "index is complete" marker probes key on,
@@ -495,9 +289,6 @@ def ivf_load_topk(
     centers driver-side (tiny JSON), scan ONLY those ``_list=``
     partitions (partition pruning -- check PushedFilters/PartitionFilters
     in the plan), exact cosine top-k inside."""
-    import json
-    import os
-
     with open(os.path.join(path, "centers.json")) as f:
         meta = json.load(f)
     q = np.asarray(query, dtype="float64")

@@ -32,7 +32,7 @@ def _ws_tokens(col):
     return F.split(F.trim(col), r"\s+")
 
 
-def fan_out(df: DataFrame, mode: str | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Rebalance a NARROW input before per-row token/n-gram expansion:
     the pre-transform partition count bounds downstream parallelism. A
     100 TB table arrives with thousands of splits and needs NO help; a
@@ -41,28 +41,16 @@ def fan_out(df: DataFrame, mode: str | None = None) -> DataFrame:
 
     Deliberately does NOT probe ``df.rdd.getNumPartitions()`` -- that
     forces plan analysis + an RDD conversion on the driver for every
-    query *construction*.  The decision is taken from ``mode``, else
-    the session conf ``spark.logep.fanOut.mode``, else the master URL:
-
-    - ``"always"``: round-robin repartition to ``defaultParallelism``.
-      Right for local/bench runs where inputs are a handful of small
-      files (file splits < cores).
-    - ``"never"``: pass through. Right for a real cluster whose scan
-      already yields >= cluster-parallelism splits -- repartitioning
-      100 TB of text just to reshape would be a pure-cost shuffle.
-
-    When neither ``mode`` nor the conf is set, a ``local[...]`` /
-    ``local-cluster[...]`` master implies ``always`` and anything else
-    (yarn, k8s, standalone) implies ``never`` -- the safe behavior is
-    the default at real scale and local runs need no configuration.
+    query *construction*. The master URL decides instead: a
+    ``local[...]`` / ``local-cluster[...]`` master round-robin
+    repartitions to ``defaultParallelism`` (local inputs are a handful
+    of small files, so file splits < cores); anything else (yarn, k8s,
+    standalone) passes through, because a real cluster's scan already
+    yields >= cluster-parallelism splits and repartitioning 100 TB of
+    text just to reshape it would be a pure-cost shuffle.
     """
     spark = df.sparkSession
-    if mode is None:
-        mode = spark.conf.get("spark.logep.fanOut.mode", "")
-        if not mode:
-            master = spark.conf.get("spark.master", "")
-            mode = "always" if master.startswith("local") else "never"
-    if mode == "never":
+    if not spark.conf.get("spark.master", "").startswith("local"):
         return df
     return df.repartition(spark.sparkContext.defaultParallelism)
 

@@ -999,7 +999,7 @@ def q_pii_scrub(spark, sf_dir):
     # fan_out: the scrub is 8 regex passes over a single-split local
     # scan -- rebalanced, it runs at cluster parallelism (A/B at sf0.1
     # local[32]: 0.45 -> 0.20 s); a real 100 TB scan arrives
-    # multi-split and fan_out passes through (mode="never")
+    # multi-split and fan_out passes through off a local master
     docs = Tx.fan_out(
         _docs(spark, sf_dir).select("doc_id", "text").unionByName(planted)
     )
@@ -1180,9 +1180,9 @@ def q_embedding_neardup_pairs(spark, sf_dir):
     """Near-dup pairs probing the PERSISTED LSH index (bucket column
     materialized at ingest; the probe plan has no UDF and no bucket
     recompute -- the scale path, no cross join); oracle is the
-    brute-force SQL over the same augmented fixture. The on-the-fly
-    variant (``near_dup_pairs_banded``) stays pytest-pinned as the
-    no-index path."""
+    brute-force SQL over the same augmented fixture. The Spark-side
+    index builder (``lsh_build``) feeding the same probe is
+    pytest-pinned against ``brute_force_pairs``."""
     return S.near_dup_pairs_from_index(
         spark, FX.lsh_index_fixture(sf_dir), threshold=0.9
     )

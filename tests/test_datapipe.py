@@ -290,23 +290,53 @@ def test_cosine_topk_exact(spark, vecs):
     assert got.iloc[1]["vec_id"] == 1  # the planted near-dup
 
 
-def test_lsh_topk_contains_self_and_neardup(spark, vecs):
+def _pair_set(p):
+    return set(map(tuple, p[["vec_a", "vec_b"]].values))
+
+
+def _np_band_buckets(base, bands, rows_per_band, seed=42):
+    """Independent band buckets per vector: the seeded unit hyperplanes,
+    the sign bits of ``vectors @ planes.T``, one (band, bits) key per
+    band."""
+    rng = np.random.RandomState(seed)
+    planes = rng.normal(size=(bands * rows_per_band, base.shape[1]))
+    planes /= np.linalg.norm(planes, axis=1, keepdims=True)
+    bits = base.astype("float64") @ planes.T >= 0
+    r = rows_per_band
+    return [
+        {(b, tuple(row[b * r:(b + 1) * r])) for b in range(bands)} for row in bits
+    ]
+
+
+def _np_cos(base):
+    b = base.astype("float64")
+    n = np.linalg.norm(b, axis=1)
+    return np.round((b @ b.T) / np.outer(n, n), 6)
+
+
+def test_lsh_topk_contains_self_and_neardup(spark, vecs, tmp_path):
+    """One band of four planes is the single-bucket scheme: the probe
+    scans only the query's bucket, which holds the query itself and
+    its near-identical copy."""
     df, base = vecs
+    path = str(tmp_path / "lsh1")
+    S.lsh_build(df, path, bands=1, rows_per_band=4)
     q = [float(x) for x in base[0]]
-    got = S.lsh_topk(df, q, k=5, n_planes=4).toPandas()
+    got = S.lsh_load_topk(spark, path, q, k=5).toPandas()
     assert 0 in got["vec_id"].tolist()
     assert 1 in got["vec_id"].tolist()  # near-identical -> same bucket
 
 
-def test_near_dup_pairs_lsh_vs_brute(spark, vecs):
+def test_near_dup_pairs_lsh_vs_brute(spark, vecs, tmp_path):
+    """Single-bucket index: the planted pair is found, and every pair
+    is brute-force truth (exact verify step)."""
     df, _ = vecs
-    lsh = S.near_dup_pairs(df, threshold=0.99, n_planes=4).toPandas()
-    brute = S.brute_force_pairs(df, threshold=0.99).toPandas()
-    assert (0, 1) in set(map(tuple, lsh[["vec_a", "vec_b"]].values))
-    # LSH pairs are a subset of brute-force truth (exact verify step)
-    assert set(map(tuple, lsh[["vec_a", "vec_b"]].values)) <= set(
-        map(tuple, brute[["vec_a", "vec_b"]].values)
-    )
+    path = str(tmp_path / "lsh1")
+    S.lsh_build(df, path, bands=1, rows_per_band=4)
+    lsh = _pair_set(S.near_dup_pairs_from_index(spark, path, threshold=0.99).toPandas())
+    brute = _pair_set(S.brute_force_pairs(df, threshold=0.99).toPandas())
+    assert (0, 1) in lsh
+    assert lsh <= brute
 
 
 def test_simhash_md5_matches_python(spark, docs):
@@ -340,16 +370,15 @@ def test_simhash_md5_matches_python(spark, docs):
         assert r.hamming == exp[(r.doc_a, r.doc_b)]
 
 
-def test_banded_neardup_matches_brute(spark, vecs):
+def test_banded_neardup_matches_brute(spark, vecs, tmp_path):
     """Banded LSH near-dup == brute force at the fixture (planted dup
     at cos ~0.9999: per-band agree prob >= 0.99^4, 8 bands)."""
     df, _ = vecs
-    lsh = S.near_dup_pairs_banded(
-        df, threshold=0.99, bands=8, rows_per_band=4, dim=16
-    ).toPandas()
+    path = str(tmp_path / "lsh8")
+    S.lsh_build(df, path, bands=8, rows_per_band=4, dim=16)
+    lsh = S.near_dup_pairs_from_index(spark, path, threshold=0.99).toPandas()
     brute = S.brute_force_pairs(df, threshold=0.99).toPandas()
-    key = lambda p: set(map(tuple, p[["vec_a", "vec_b"]].values))  # noqa: E731
-    assert key(lsh) == key(brute) and len(brute) >= 1
+    assert _pair_set(lsh) == _pair_set(brute) and len(brute) >= 1
 
 
 def test_ivf_persisted_probe_no_refit(spark, vecs, tmp_path, monkeypatch):
@@ -377,8 +406,8 @@ def test_ivf_persisted_probe_no_refit(spark, vecs, tmp_path, monkeypatch):
 def test_lsh_persisted_probe_no_udf(spark, vecs, tmp_path):
     """lsh_build materializes the band-bucket array at ingest; the
     probe reads the STORED column (plan contains no Python UDF and no
-    bucket recompute) and returns the same rows as the on-the-fly
-    banded probe."""
+    bucket recompute) and returns the exact cosine top-k of the rows
+    sharing a band bucket with the query, recomputed in numpy."""
     df, base = vecs
     path = str(tmp_path / "lsh")
     S.lsh_build(df, path, bands=8, rows_per_band=4, dim=16)
@@ -390,26 +419,32 @@ def test_lsh_persisted_probe_no_udf(spark, vecs, tmp_path):
     assert "buckets" in plan  # filters on the materialized column
 
     got = probe.toPandas()
-    fly = S.lsh_topk_banded(df, q, k=5, bands=8, rows_per_band=4).toPandas()
-    assert got["vec_id"].tolist() == fly["vec_id"].tolist()
-    assert 0 in got["vec_id"].tolist() and 1 in got["vec_id"].tolist()
+    buckets = _np_band_buckets(base, bands=8, rows_per_band=4)
+    cos = _np_cos(base)[0]
+    cand = [i for i in range(len(base)) if buckets[i] & buckets[0]]
+    expect = sorted(cand, key=lambda i: (-cos[i], i))[:5]
+    assert got["vec_id"].tolist() == expect
+    assert 0 in expect and 1 in expect
 
 
 def test_neardup_pairs_from_index(spark, vecs, tmp_path):
-    """The persisted-index pair path returns the same pairs as the
-    on-the-fly banded path (same planes/geometry via the shared bucket
-    fn) and its plan contains no Python UDF."""
-    df, _ = vecs
+    """The persisted-index pair path returns exactly the pairs that
+    share a band bucket and have cosine >= threshold, both recomputed
+    in numpy, and its plan contains no Python UDF."""
+    df, base = vecs
     path = str(tmp_path / "lshp")
     S.lsh_build(df, path, bands=8, rows_per_band=4, dim=16)
     idx = S.near_dup_pairs_from_index(spark, path, threshold=0.99)
     plan = idx._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan
-    fly = S.near_dup_pairs_banded(
-        df, threshold=0.99, bands=8, rows_per_band=4, dim=16
-    ).toPandas()
-    key = lambda p: set(map(tuple, p[["vec_a", "vec_b"]].values))  # noqa: E731
-    assert key(idx.toPandas()) == key(fly) and len(fly) >= 1
+    buckets = _np_band_buckets(base, bands=8, rows_per_band=4)
+    cos = _np_cos(base)
+    expect = {
+        (i, j)
+        for i in range(len(base)) for j in range(i + 1, len(base))
+        if buckets[i] & buckets[j] and cos[i, j] >= 0.99
+    }
+    assert _pair_set(idx.toPandas()) == expect and len(expect) >= 1
 
 
 def test_index_fixtures_probe_equals_exact(spark):
@@ -479,6 +514,60 @@ def test_repetition_ratio(spark):
     assert got.loc[0, "rep_ratio"] == 0.75 and got.loc[0, "n_grams"] == 4
     assert got.loc[1, "rep_ratio"] == 0.0
     assert pd.isna(got.loc[2, "rep_ratio"])
+
+
+def test_edge_whitespace_tokens_agree_with_grams(spark):
+    """Tokens and grams come from one normalisation: text edged with
+    tabs, newlines or spaces counts the same grams as Python's
+    whitespace split, in with_repetition_ratio and in the shingle
+    operators' size(toks) >= n filter."""
+    n = 3
+    texts = [
+        "a b c d\n",
+        "\tx y z x y z",
+        " p q r ",
+        "\nu v\n",
+        "\r\n k  l\tm k l m \t",
+        "\t\n",
+        "",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+
+    def py_grams(t):
+        toks = t.lower().split()
+        return [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+
+    got = Tx.with_repetition_ratio(df, n=n).toPandas().set_index("doc_id")
+    arrays = {
+        r.doc_id: sorted(r.sh_arr) for r in D.shingle_arrays(df, n=n).collect()
+    }
+    for i, t in enumerate(texts):
+        grams = py_grams(t)
+        if not grams:
+            assert pd.isna(got.loc[i, "n_grams"]), repr(t)
+            assert pd.isna(got.loc[i, "rep_ratio"]), repr(t)
+            assert i not in arrays, repr(t)
+            continue
+        assert got.loc[i, "n_grams"] == len(grams), repr(t)
+        assert got.loc[i, "rep_ratio"] == round(1 - len(set(grams)) / len(grams), 6), repr(t)
+        assert arrays[i] == sorted(set(grams)), repr(t)
+
+
+def test_fan_out_local_master_adds_one_round_robin_exchange(spark):
+    """On a local master fan_out adds exactly one round-robin exchange
+    to defaultParallelism partitions."""
+    assert spark.conf.get("spark.master").startswith("local")
+    df = spark.range(10)
+
+    def plan(d):
+        return d._jdf.queryExecution().executedPlan().toString()
+
+    assert "Exchange" not in plan(df)
+    out = plan(Tx.fan_out(df))
+    assert out.count("Exchange") == 1
+    assert out.count("RoundRobinPartitioning(") == 1
+    n = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({n})" in out
 
 
 def test_lang_id_heuristic(spark):
@@ -610,17 +699,15 @@ def test_frame_sample_plan(spark):
     assert n_frames == int(one["meta"]["duration_ms"] - 1) // 5000 + 1
 
 
-def test_ivf_topk(spark, vecs):
-    from logeventprocessor_spark.operators import similarity as S2
-
+def test_ivf_topk(spark, vecs, tmp_path):
+    """A one-list probe still finds the query's own list (self +
+    near-dup); the full probe is pinned to exact top-k in
+    test_ivf_persisted_probe_no_refit."""
     df, base = vecs
+    path = str(tmp_path / "ivf")
+    S.ivf_build(df, path, n_lists=4, seed=42)
     q = [float(x) for x in base[0]]
-    # full probe == exact brute-force top-k
-    full = S2.ivf_topk(df, q, k=5, n_lists=4, n_probe=4).toPandas()
-    exact = S2.cosine_topk(df, q, k=5).toPandas()
-    assert full["vec_id"].tolist() == exact["vec_id"].tolist()
-    # partial probe still finds the query's own list (self + near-dup)
-    part = S2.ivf_topk(df, q, k=5, n_lists=4, n_probe=1).toPandas()
+    part = S.ivf_load_topk(spark, path, q, k=5, n_probe=1).toPandas()
     assert 0 in part["vec_id"].tolist()
     assert 1 in part["vec_id"].tolist()
 
