@@ -31,7 +31,8 @@ checkable by the driver's DuckDB comparison:
   hundred vectors.
 
 Files are content-versioned by name (bump ``_V`` when generation
-logic changes; the near-dup pairs also carry ``GRAM_TAG``) and
+logic changes; the near-dup pairs and SimHash signatures also carry
+``GRAM_TAG``) and
 written at most once; everything derives from seed 42 plus the
 driver's own parquet, so bytes are reproducible.
 Writes are atomic and concurrency-safe: per-process tmp names
@@ -55,19 +56,22 @@ FIXTURES_ROOT = os.path.join(_REPO_ROOT, ".fixtures")
 
 # v3: canonical rules gained the no-literal pin_code rule ([0-9]{6})
 # and the corpus plants 6-digit access codes (round-5 verdict task #9)
-# -- the flagship now exercises the pandas fallback + RLIKE prefilter.
+# -- the flagship now exercises the RLIKE prefilter of a rule that has
+# no literal.
 # v2: transcript corpus gained interleaved rate-limit bursts (second
 # concurrent cooldown chain per conversation, round-4 verdict task #5)
 _V = "v3"
-# The gram builder the stored near-dup pairs were made with, part of the
-# pair fixture's name only (a _V bump would rebuild every fixture).
-# Change it whenever operators/dedup.py's _gram_array changes how text
-# becomes grams. "rx2": the tokens behind the size(toks) >= n filter are
-# split from the same whitespace-normalised string as the grams. "rx1":
-# one codegen'd regexp_extract_all over whitespace-normalised text,
-# which replaced the interpreted transform chain whose pairs the
-# untagged name still holds.
-GRAM_TAG = "rx2"
+# The tokenizer the stored near-dup pairs and SimHash signatures were
+# made with, part of those two fixtures' names only (a _V bump would
+# rebuild every fixture). Change it whenever operators/text.py's
+# ws_norm / gram_array or oracle.oracle_tokens changes how text becomes
+# tokens or grams. "ws3": one whitespace rule (Java's \s incl. VT, edge
+# runs trimmed) for the operators and oracle_tokens. "rx2": the tokens
+# behind the size(toks) >= n filter are split from the same
+# whitespace-normalised string as the grams. "rx1": one codegen'd
+# regexp_extract_all over whitespace-normalised text, which replaced the
+# interpreted transform chain whose pairs the untagged name still holds.
+GRAM_TAG = "ws3"
 TRANSCRIPTS_N_CONVS = 40
 MEDIA_N = 60
 # sf dir the driver's oracle comparison runs at. The oracle SQL strings
@@ -428,7 +432,7 @@ def lsh_index_fixture(
 
 def simhash_sig_path(sf_dir: str) -> str:
     tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return os.path.join(_dir(tag), f"simhash_sigs_{_V}.parquet")
+    return os.path.join(_dir(tag), f"simhash_sigs_{_V}_{GRAM_TAG}.parquet")
 
 
 def simhash_sig_fixture(sf_dir: str) -> str:

@@ -23,7 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from logeventprocessor_spark.operators.text import fan_out, with_fingerprint
+from logeventprocessor_spark.operators.text import (
+    fan_out, gram_array, with_fingerprint, ws_norm, ws_tokens,
+)
 
 
 def exact_duplicates(
@@ -64,45 +66,6 @@ def dedup_stream_exact(stream: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _gram_array(text_col: str, n: int):
-    """(toks, grams) column expressions: whitespace-tokenize and build
-    the word n-gram array. Shared by every shingle-based operator so
-    the tokenization can never drift between them.
-
-    Both halves derive from ONE normalization: every run of Java-regex
-    ``\\s`` collapsed to a single space, trimmed, lower-cased. The
-    tokens split that string on the space, so ``size(toks) - n + 1``
-    is the gram count whenever ``size(toks) >= n`` -- also on text
-    edged with tabs or newlines, which Spark's ``trim`` (spaces only)
-    would otherwise leave as empty edge tokens. The DuckDB oracles
-    split ``trim(text)`` on ``\\s+``, which agrees on every document
-    without such edges.
-
-    The gram array is built with ONE codegen'd regex over the
-    whitespace-normalized text -- a token-start anchor (``(?<!\\S)``)
-    plus a capturing lookahead of the next ``n`` tokens -- instead of
-    the former interpreted higher-order ``transform`` chain
-    (``concat_ws`` over ``element_at`` per element). The two produce
-    IDENTICAL arrays (verified: zero differing rows over the corpus;
-    both tokenize with the same Java-regex ``\\s`` class, and a
-    captured substring of single-space-normalized text IS the
-    space-joined token run), but the regex form measured ~3x faster
-    steady-state (0.18 vs 0.60 s for the sf0.1 explode) and, being
-    whole-stage-codegen'd rather than interpreted, has none of the
-    transform chain's multi-run JIT warm-up -- the main source of the
-    shingle family's early-sample inflation in bench loops.
-
-    Rows with fewer than ``n`` tokens yield the (shorter) list of
-    matches rather than the transform form's single partial gram --
-    callers already filter ``size(toks) >= n`` before using grams,
-    exactly as before."""
-    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
-    toks = F.split(norm, " ")
-    pat = r"(?<!\S)(?=((?:\S+ ){%d}\S+))" % (n - 1)
-    grams = F.regexp_extract_all(norm, F.lit(pat), 1)
-    return toks, grams
-
-
 def shingle_arrays(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:
@@ -113,7 +76,7 @@ def shingle_arrays(
     ``size(sh_arr)`` (no groupBy). Callers reusing the frame should
     ``localCheckpoint`` it so the tokenization is never re-evaluated
     per consumer."""
-    toks, grams = _gram_array(text_col, n)
+    toks, grams = gram_array(text_col, n)
     return fan_out(df.filter(F.size(toks) >= n)).select(
         F.col(id_col).alias("doc_id"),
         F.array_distinct(grams).alias("sh_arr"),
@@ -138,7 +101,7 @@ def shingles(
     per EXPLODED row (~|shingles| x per doc; measured 0.7 s -> 24 s at
     sf0.1). When sizes are needed too, materialize ``shingle_arrays``
     and derive both from the stored arrays instead."""
-    toks, grams = _gram_array(text_col, n)
+    toks, grams = gram_array(text_col, n)
     return (
         fan_out(df.filter(F.size(toks) >= n))
         .select(
@@ -246,7 +209,7 @@ def stream_contamination_gate(
     no shuffle -- the gate composes in append mode ahead of any sink
     at ingest rate. The per-row work splits at the usual boundary:
     shingling + ``array_distinct`` + xxhash64 stay JVM-side (the same
-    ``_gram_array`` tokenizer the batch side and the DuckDB oracles
+    ``gram_array`` tokenizer the batch side and the DuckDB oracles
     replicate), only ``array<long>`` hashes cross to Python, and
     membership against the sorted broadcast benchmark array is one
     vectorized ``np.searchsorted`` per Arrow batch via ``mapInPandas``.
@@ -262,7 +225,7 @@ def stream_contamination_gate(
     op follows."""
     sc = stream.sparkSession.sparkContext
     bcast = sc.broadcast(bench_hashes)
-    toks, grams = _gram_array(text_col, n)
+    toks, grams = gram_array(text_col, n)
     hashed = stream.select(
         F.col(id_col).alias("doc_id"),
         F.col(ts_col).alias("ts"),
@@ -518,7 +481,7 @@ def with_minhash_buckets(
     its one-shuffle agg formulation for bulk re-index jobs."""
     assert k % bands == 0
     rows = k // bands
-    toks, grams = _gram_array(text_col, n)
+    toks, grams = gram_array(text_col, n)
     sh = F.array_distinct(grams)
     mins = [
         F.array_min(F.transform(sh, lambda s, i=i: F.xxhash64(F.lit(i), s)))
@@ -624,7 +587,7 @@ def stream_neardup_candidates(
 def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return fan_out(df).select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok"),
+        F.explode(ws_tokens(F.lower(ws_norm(F.col(text_col))))).alias("tok"),
     )
 
 

@@ -260,14 +260,16 @@ def xxh64(data: bytes, seed: int = 42) -> int:
 _JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")  # Java regex \s (ASCII-only)
 
 
-def oracle_tokens(text: str) -> list[str]:
-    """Replicates the Spark side's ``split(lower(trim(text)), '\\s+')``
-    exactly (pinned empirically in tests/test_datapipe.py): Spark trim
-    strips ONLY the space char 0x20 (tabs/newlines survive), Java
-    ``\\s`` is ASCII-only (unlike Python's Unicode ``\\s``, so NBSP is
-    not a separator), and split keeps leading AND trailing empty tokens
-    (Java limit=-1 semantics, which ``re.split`` shares)."""
-    return _JAVA_WS.split(text.strip(" ").lower())
+def oracle_tokens(text: str | None) -> list[str] | None:
+    """The lower-cased whitespace tokens of ``text``, by the package's
+    one rule (``operators.text.ws_norm`` + ``ws_tokens``): every run of
+    Java ``\\s`` -- space, tab, newline, VT, FF, CR; not NBSP or other
+    Unicode spaces -- becomes one space, the edges are stripped, and
+    the rest splits on the space. Empty text has one empty token;
+    ``None`` has no token list."""
+    if text is None:
+        return None
+    return _JAVA_WS.sub(" ", text).strip(" ").lower().split(" ")
 
 
 def oracle_simhash64(text: str) -> int:

@@ -27,11 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logeventprocessor_spark import fixtures as FX
-from logeventprocessor_spark.generator import (
-    documents_as_transcripts,
-    make_transcripts,
-    transcripts_df,
-)
+from logeventprocessor_spark.generator import documents_as_transcripts
 from logeventprocessor_spark.operators import components as CC
 from logeventprocessor_spark.operators import dedup as D
 from logeventprocessor_spark.operators import multimodal as M
@@ -45,11 +41,18 @@ from logeventprocessor_spark.operators.steps import expand_steps
 from logeventprocessor_spark.pipeline import match_actions
 from logeventprocessor_spark.session import cached_parquet
 from logeventprocessor_spark.rules import Rule, RuleStep, canonical_rules, document_rules
+from logeventprocessor_spark.schema import TRANSCRIPTS_SCHEMA
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 TS_FMT_SPARK_US = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 TS_FMT_DUCK_US = "%Y-%m-%d %H:%M:%S.%f"
+
+# DuckDB form of operators/text.ws_norm, the one whitespace rule every
+# tokenising oracle reads: `string_split(..., ' ')` gives its tokens.
+# RE2's \s lacks \x0B, so Java's \s class is written out; one-argument
+# trim() would also strip NBSP and other Unicode spaces, so it names ' '.
+WS_NORM_SQL = r"trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g'), ' ')"
 
 # DuckDB fragment: the documents table in transcript shape (must stay
 # in lockstep with generator.documents_as_transcripts)
@@ -223,7 +226,7 @@ def _simhash_md5_oracle_sql(max_hamming: int = 3) -> str:
     return f"""
         WITH toks AS (
           SELECT doc_id,
-                 unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok
+                 unnest(string_split(lower({WS_NORM_SQL}), ' ')) AS tok
           FROM documents
         ), h AS (
           SELECT doc_id,
@@ -324,6 +327,14 @@ def _li(spark, sf_dir, name):
 # CEP family (documents-as-transcripts)
 # --------------------------------------------------------------------
 
+def _canon_turns(spark):
+    """The canonical transcript corpus, read from the parquet fixture
+    its oracles read (inferred, ``ts`` would be ``timestamp_ntz``)."""
+    return spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(
+        FX.transcripts_fixture_path()
+    )
+
+
 def q_cep_match_actions(spark, sf_dir):
     """Flagship: match + extract + render + step expansion (M1-M4,
     T3/T4), no cooldown."""
@@ -341,10 +352,7 @@ def q_cep_fallback_classify(spark, sf_dir):
     (left-anti join + CASE WHEN). Runs on the canonical transcript
     corpus, whose filler lines span all four classes (the documents
     corpus only exercised one -- round-1 verdict)."""
-    FX.transcripts_fixture_path()
-    turns = transcripts_df(
-        spark, make_transcripts(n_convs=FX.TRANSCRIPTS_N_CONVS, seed=42)
-    )
+    turns = _canon_turns(spark)
     m = match_turns(turns, canonical_rules())
     return (
         classify_unmatched(turns, m)
@@ -1285,12 +1293,10 @@ def q_ivf_ann_topk(spark, sf_dir):
 def q_cep_transcripts_flagship(spark, sf_dir):
     """The full canonical CEP pipeline (incl. cooldown state) on the
     deterministic transcript generator -- the engine's own fixtures.
-    The identical corpus is written to parquet (fixtures.py) so the
-    DuckDB oracle recomputes the WHOLE pipeline independently."""
-    FX.transcripts_fixture_path()
-    turns = transcripts_df(
-        spark, make_transcripts(n_convs=FX.TRANSCRIPTS_N_CONVS, seed=42)
-    )
+    Spark and the DuckDB oracle read the same parquet fixture
+    (fixtures.py); the oracle recomputes the WHOLE pipeline
+    independently."""
+    turns = _canon_turns(spark)
     acts = match_actions(turns, canonical_rules(), with_cooldown=True)
     return acts.select(
         "conv_id", "turn_idx", "rule_id", "rule_idx", "step_idx",
@@ -1310,10 +1316,7 @@ def q_cep_actions_with_context(spark, sf_dir):
     tests/test_streaming.py::test_context_join_pipeline_end_to_end.
     Reference analog: actions carry the original logLine forward
     (ActionManager.h:22, set at ActionManager.cpp:82)."""
-    FX.transcripts_fixture_path()
-    turns = transcripts_df(
-        spark, make_transcripts(n_convs=FX.TRANSCRIPTS_N_CONVS, seed=42)
-    )
+    turns = _canon_turns(spark)
     acts = match_actions(turns, canonical_rules(), with_cooldown=True)
     ctx = turns.select("conv_id", "turn_idx", "role", "tool")
     return acts.join(F.broadcast(ctx), ["conv_id", "turn_idx"]).select(
@@ -1333,10 +1336,7 @@ def q_cep_actions_ctx_carry(spark, sf_dir):
     (``extra_cols``) -- one match pass, no second pass over the turns,
     no join. Oracled with the SAME SQL as the join variant: two
     physical plans, one logical result."""
-    FX.transcripts_fixture_path()
-    turns = transcripts_df(
-        spark, make_transcripts(n_convs=FX.TRANSCRIPTS_N_CONVS, seed=42)
-    )
+    turns = _canon_turns(spark)
     rules = canonical_rules()
     ctx = ("role", "tool")
     m = match_turns(turns, rules, carry_cols=ctx)
@@ -1554,9 +1554,9 @@ ORACLES: dict[str, str] = {
                count(DISTINCT doc_id) AS n_docs
         FROM u GROUP BY domain
     """,
-    "dedup_clusters": """
+    "dedup_clusters": f"""
         WITH RECURSIVE w AS (
-          SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words FROM documents
+          SELECT doc_id, string_split(lower({WS_NORM_SQL}), ' ') AS words FROM documents
         ), g AS (
           SELECT DISTINCT doc_id,
                  words[i] || ' ' || words[i+1] || ' ' || words[i+2] AS shingle
@@ -1797,20 +1797,20 @@ ORACLES: dict[str, str] = {
                           WHERE o_custkey = c.c_custkey
                             AND o_totalprice > 300000)
     """,
-    "doc_fingerprints": """
+    "doc_fingerprints": f"""
         SELECT doc_id,
-               md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp_md5
+               md5(lower({WS_NORM_SQL})) AS fp_md5
         FROM documents
     """,
-    "dedup_exact_stats": """
+    "dedup_exact_stats": f"""
         SELECT count(*) AS n_docs,
-               count(DISTINCT md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))))
+               count(DISTINCT md5(lower({WS_NORM_SQL})))
                  AS n_distinct
         FROM documents
     """,
-    "benchmark_decontamination": """
+    "benchmark_decontamination": f"""
         WITH w AS (
-          SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words FROM documents
+          SELECT doc_id, string_split(lower({WS_NORM_SQL}), ' ') AS words FROM documents
         ), g AS (
           SELECT DISTINCT doc_id,
                  words[i] || ' ' || words[i+1] || ' ' || words[i+2] || ' ' ||
@@ -1832,9 +1832,9 @@ ORACLES: dict[str, str] = {
         FROM c LEFT JOIN b USING (shingle)
         GROUP BY c.doc_id
     """,
-    "ngram_jaccard_pairs": """
+    "ngram_jaccard_pairs": f"""
         WITH w AS (
-          SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS words FROM documents
+          SELECT doc_id, string_split(lower({WS_NORM_SQL}), ' ') AS words FROM documents
         ), g AS (
           SELECT DISTINCT doc_id,
                  words[i] || ' ' || words[i+1] || ' ' || words[i+2] AS shingle
@@ -1855,7 +1855,7 @@ ORACLES: dict[str, str] = {
         JOIN sizes sb ON sb.doc_id = doc_b
         WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.6
     """,
-    "domain_capped_docs": """
+    "domain_capped_docs": f"""
         WITH planted(doc_id, text) AS (VALUES
           (-11, 'see https://example.com/a and http://EXAMPLE.com/b?q=1 plus https://docs.example.org'),
           (-12, 'bare domain example.com is not a url but https://sub.tld-host.net/path/x.html is'),
@@ -1875,7 +1875,7 @@ ORACLES: dict[str, str] = {
           )
         ), x AS (
           SELECT doc_id,
-                 regexp_split_to_array(trim(text), '\\s+') AS toks,
+                 string_split({WS_NORM_SQL}, ' ') AS toks,
                  CAST(len(regexp_extract_all(text, '[^\\w\\s]')) AS INTEGER)
                    AS n_punct,
                  text
@@ -1886,7 +1886,7 @@ ORACLES: dict[str, str] = {
                    (CASE WHEN len(toks) BETWEEN 10 AND 100000 THEN 0.4 ELSE 0.0 END)
                  + (CASE WHEN CAST(n_punct AS DOUBLE) / greatest(length(text),1) <= 0.2
                          THEN 0.3 ELSE 0.0 END)
-                 + (CASE WHEN CAST(length(regexp_replace(text,'\\s+','','g')) AS DOUBLE)
+                 + (CASE WHEN CAST(length(replace({WS_NORM_SQL}, ' ', '')) AS DOUBLE)
                               / len(toks) BETWEEN 2 AND 12
                          THEN 0.3 ELSE 0.0 END), 2) AS quality_score
           FROM x
@@ -1900,10 +1900,10 @@ ORACLES: dict[str, str] = {
         )
         SELECT domain, doc_id, quality_score, rn FROM ranked WHERE rn <= 2
     """,
-    "text_quality": """
+    "text_quality": f"""
         WITH x AS (
           SELECT doc_id, text,
-                 regexp_split_to_array(trim(text), '\\s+') AS toks,
+                 string_split({WS_NORM_SQL}, ' ') AS toks,
                  CAST(len(regexp_extract_all(text, '[^\\w\\s]')) AS INTEGER) AS n_punct
           FROM documents
         )
@@ -1918,15 +1918,15 @@ ORACLES: dict[str, str] = {
                  (CASE WHEN len(toks) BETWEEN 10 AND 100000 THEN 0.4 ELSE 0.0 END)
                + (CASE WHEN CAST(n_punct AS DOUBLE) / greatest(length(text),1) <= 0.2
                        THEN 0.3 ELSE 0.0 END)
-               + (CASE WHEN CAST(length(regexp_replace(text,'\\s+','','g')) AS DOUBLE)
+               + (CASE WHEN CAST(length(replace({WS_NORM_SQL}, ' ', '')) AS DOUBLE)
                             / len(toks) BETWEEN 2 AND 12
                        THEN 0.3 ELSE 0.0 END), 2) AS quality_score
         FROM x
     """,
-    "lang_id_pred": """
+    "lang_id_pred": f"""
         WITH s AS (
           SELECT doc_id,
-            list_transform(regexp_split_to_array(trim(text), '\\s+'), t -> lower(t)) AS toks
+            list_transform(string_split({WS_NORM_SQL}, ' '), t -> lower(t)) AS toks
           FROM documents
         ), sc AS (
           SELECT doc_id,
@@ -1951,10 +1951,10 @@ ORACLES: dict[str, str] = {
                ELSE 'zh' END AS lang_pred
         FROM sc
     """,
-    "stratified_sample_docs": """
+    "stratified_sample_docs": f"""
         WITH s AS (
           SELECT doc_id,
-            list_transform(regexp_split_to_array(trim(text), '\\s+'), t -> lower(t)) AS toks
+            list_transform(string_split({WS_NORM_SQL}, ' '), t -> lower(t)) AS toks
           FROM documents
         ), sc AS (
           SELECT doc_id,
@@ -1991,7 +1991,7 @@ ORACLES: dict[str, str] = {
                                       WHEN 'de' THEN 800000
                                       ELSE 1000000 END
     """,
-    "doc_repetition": """
+    "doc_repetition": f"""
         WITH g AS (
           SELECT doc_id,
                  list_transform(
@@ -1999,7 +1999,7 @@ ORACLES: dict[str, str] = {
                    i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2]
                  ) AS grams
           FROM (SELECT doc_id,
-                       regexp_split_to_array(lower(trim(text)), '\\s+') AS words
+                       string_split(lower({WS_NORM_SQL}), ' ') AS words
                 FROM documents)
           WHERE len(words) >= 3
         )
@@ -2008,9 +2008,9 @@ ORACLES: dict[str, str] = {
                          / len(grams), 6) AS rep_ratio
         FROM g
     """,
-    "token_stats_by_lang": """
+    "token_stats_by_lang": f"""
         SELECT lang, count(*) AS n_docs,
-               round(avg(CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS DOUBLE)), 4)
+               round(avg(CAST(len(string_split({WS_NORM_SQL}, ' ')) AS DOUBLE)), 4)
                  AS avg_tokens,
                CAST(sum(len(regexp_extract_all(text,
                  '[A-Za-z]+|[0-9]+|[^\\sA-Za-z0-9]'))) AS BIGINT)
@@ -2087,7 +2087,7 @@ ORACLES["training_data_filter"] = f"""
     rn AS (
       SELECT doc_id,
              row_number() OVER (
-               PARTITION BY md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))
+               PARTITION BY md5(lower({WS_NORM_SQL}))
                ORDER BY doc_id) AS rn
       FROM documents
     )
@@ -2113,23 +2113,9 @@ ORACLES["minhash_lsh_pairs"] = ORACLES["ngram_jaccard_pairs"]
 ORACLES["cep_actions_ctx_carry"] = ORACLES["cep_actions_with_context"]
 
 def build_queries() -> dict:
-    # ORDER MATTERS: the driver's correctness gate checks the FIRST 50
-    # entries (round-3 verdict "what's wrong #2" -- the flagship fell
-    # outside the window at position 51). Highest-value oracled queries
-    # lead; redundant variants (brute-force baseline, trivial set ops)
-    # take the overflow slots; rows-only entries go last.
-    #
-    # DETERMINISTIC ROTATION (round-5 verdict "what's wrong #3"): the
-    # 50-slot window is self-managing. The registry below is the
-    # CANONICAL order; _rotate_window() then (a) keeps PINNED entries
-    # and this round's newcomers in-window, (b) parks a round-keyed
-    # rotating slice of the rest in overflow, so every registered
-    # query gets an official driver row at least every
-    # ceil(eligible/overflow) rounds (~every 5 rounds at the current
-    # registry size) with no per-round manual edit. ALL entries remain
-    # fully oracled + covered by scripts/check_oracles.py regardless
-    # of position.
-    qs = {
+    # The canonical registry, CEP family first. Every entry is oracled
+    # and checked by scripts/check_oracles.py whatever its position.
+    return {
         "cep_transcripts_flagship": q_cep_transcripts_flagship,
         "cep_match_actions": q_cep_match_actions,
         "cep_match_counts": q_cep_match_counts,
@@ -2193,69 +2179,3 @@ def build_queries() -> dict:
         "domain_capped_docs": q_domain_capped_docs,
         "stratified_sample_docs": q_stratified_sample_docs,
     }
-    return _rotate_window(qs)
-
-
-# Driver correctness window size (the driver checks the FIRST
-# WINDOW_SIZE entries of build_queries()).
-WINDOW_SIZE = 50
-
-# Always in-window: the flagship CEP family is the headline result a
-# judge/driver must witness every round.
-PINNED = (
-    "cep_transcripts_flagship",
-    "cep_match_actions",
-    "cep_match_counts",
-    "cep_actions_with_context",
-    "cep_fallback_classify",
-    "cep_cooldown_fires",
-    "cep_sequence_pairs",
-    "cep_session_convs",
-)
-
-# Queries added or materially changed THIS round -- forced in-window so
-# the round's CORRECTNESS json witnesses them. Reset each round.
-NEW_THIS_ROUND = (
-    "pii_scrub",       # round-5 newcomers that landed in overflow --
-    "dedup_clusters",  # round-5 verdict "what's missing #1"
-    "top_url_domains",
-    "cep_actions_ctx_carry",  # round-6: carry-through context plan
-    "domain_capped_docs",     # round-6: per-domain cap operator
-    "stratified_sample_docs",  # round-6: deterministic training-mix sampling
-)
-
-
-def _round_number() -> int:
-    """Current build round, derived from the driver's own artifacts:
-    1 + the highest CORRECTNESS_r{N}.json already on disk. Stable for
-    the whole round (the driver writes r{N} only after running the
-    queries), so the window is deterministic per round with no manual
-    bookkeeping."""
-    import glob as _glob
-    import os
-    import re as _re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds = [
-        int(m.group(1))
-        for p in _glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
-        if (m := _re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-    ]
-    return max(rounds, default=0) + 1
-
-
-def _rotate_window(qs: dict) -> dict:
-    """Reorder the canonical registry so a round-keyed slice of the
-    non-pinned entries takes the overflow (positions > WINDOW_SIZE).
-    Each round the slice advances by the overflow size, so every
-    eligible query returns to the window within a few rounds."""
-    names = list(qs)
-    k = max(len(names) - WINDOW_SIZE, 0)
-    if k == 0:
-        return qs
-    keep = set(PINNED) | set(NEW_THIS_ROUND)
-    eligible = [n for n in names if n not in keep]
-    start = (_round_number() * k) % len(eligible)
-    overflow = [eligible[(start + i) % len(eligible)] for i in range(k)]
-    ordered = [n for n in names if n not in set(overflow)] + overflow
-    return {n: qs[n] for n in ordered}

@@ -392,8 +392,11 @@ def union_response_stream(
 
 
 def drop_empty_turns(stream: DataFrame) -> DataFrame:
-    """F1 (LogReader.cpp:102): empty lines never become events."""
-    return stream.filter(F.length(F.trim(F.col("text"))) > 0)
+    """F1 (LogReader.cpp:102): empty lines never become events; a
+    line of whitespace alone counts as empty."""
+    from logeventprocessor_spark.operators.text import ws_norm
+
+    return stream.filter(F.length(ws_norm(F.col("text"))) > 0)
 
 
 def scrub_stream_text(stream: DataFrame) -> DataFrame:

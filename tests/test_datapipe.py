@@ -67,6 +67,34 @@ def test_changed_gram_tag_rebuilds_the_pair_fixture(spark, docs, tmp_path, monke
     assert spark.read.parquet(old).count() == 0
 
 
+def test_changed_gram_tag_rebuilds_the_signature_fixture(tmp_path, monkeypatch):
+    """SimHash signatures stored by another tokenizer are never served:
+    a changed ``GRAM_TAG`` names a new file, where ``oracle_simhash64``
+    writes them afresh."""
+    from logeventprocessor_spark import fixtures as FX
+    from logeventprocessor_spark.oracle import oracle_simhash64
+
+    sf_dir = tmp_path / "sfx"
+    sf_dir.mkdir()
+    texts = ["a b c\n", "\tx y"]
+    pd.DataFrame({"doc_id": [0, 1], "text": texts}).to_parquet(
+        sf_dir / "documents.parquet"
+    )
+    monkeypatch.setattr(FX, "FIXTURES_ROOT", str(tmp_path / "fixtures"))
+    old = FX.simhash_sig_path(str(sf_dir))
+    # a complete file from the old tokenizer, with other signatures
+    pd.DataFrame({"doc_id": [0, 1], "simhash": [7, 7]}).to_parquet(old)
+    assert FX.simhash_sig_fixture(str(sf_dir)) == old
+    monkeypatch.setattr(FX, "GRAM_TAG", "next")
+    new = FX.simhash_sig_path(str(sf_dir))
+    assert new != old
+    assert FX.simhash_sig_fixture(str(sf_dir)) == new
+    assert pd.read_parquet(new)["simhash"].tolist() == [
+        oracle_simhash64(t) for t in texts
+    ]
+    assert pd.read_parquet(old)["simhash"].tolist() == [7, 7]
+
+
 def test_jaccard_matches_python(spark, docs):
     """Spark exact Jaccard == naive python on every shared-shingle pair."""
     got = D.ngram_jaccard_pairs(docs, threshold=0.0).toPandas()
@@ -217,13 +245,30 @@ def test_simhash_compound_spread_bits(spark):
     assert pairs == brute
 
 
+# Whitespace and UTF-8 edge texts for the tokenizer parity tests:
+# Java-vs-Python whitespace/trim edges, every XXH64 length class (tail
+# bytes, 4-byte word, 8-byte words, 32-byte stripes), multi-byte UTF-8.
+EDGE_TEXTS = [
+    "",
+    "   ",
+    "\t a  b\t",
+    "a b c d\n",
+    "x\x0by\x0cz\r",  # VT, FF and CR separate, as in Java's \s
+    "one",
+    "exactly-eight!!",  # 15B -> 8B word + tail
+    "a" * 33,  # stripe + tail
+    "word " * 20,  # many tokens, 32B+ total
+    "café naïve 中文 emoji\U0001F600",  # multi-byte UTF-8
+    "a\xa0b",  # NBSP: not Java \s, must stay ONE token
+    "MiXeD CaSe TeXt",
+]
+
+
 def test_xxh64_oracle_parity(spark):
     """The pure-Python XXH64 + tokenizer (oracle.py) must match Spark's
-    xxhash64 + split(lower(trim(.)), '\\s+') byte-for-byte -- this is
-    what makes the simhash_pairs DuckDB oracle independent. Covers the
-    public xxh64 test vectors, every length class (tail bytes, 4-byte
-    word, 8-byte words, 32-byte stripes), multi-byte UTF-8, and the
-    Java-vs-Python whitespace/trim edge cases."""
+    xxhash64 over the ``ws_norm`` / ``ws_tokens`` tokens byte-for-byte
+    -- this is what makes the simhash_pairs DuckDB oracle independent.
+    Covers the public xxh64 test vectors and ``EDGE_TEXTS``."""
     from logeventprocessor_spark.oracle import (
         oracle_simhash64,
         oracle_tokens,
@@ -234,24 +279,13 @@ def test_xxh64_oracle_parity(spark):
     assert xxh64(b"", seed=0) & ((1 << 64) - 1) == 0xEF46DB3751D8E999
     assert xxh64(b"xxhash", seed=0) & ((1 << 64) - 1) == 0x32DD38952C4BC720
 
-    texts = [
-        "",
-        "   ",
-        "\t a  b\t",
-        "one",
-        "exactly-eight!!",  # 15B -> 8B word + tail
-        "a" * 33,  # stripe + tail
-        "word " * 20,  # many tokens, 32B+ total
-        "café naïve 中文 emoji\U0001F600",  # multi-byte UTF-8
-        "a b",  # NBSP: not Java \s, must stay ONE token
-        "MiXeD CaSe TeXt",
-    ]
+    texts = EDGE_TEXTS
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
                                "doc_id long, text string")
     toks = (
         df.select(
             "doc_id",
-            F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok"),
+            F.explode(Tx.ws_tokens(F.lower(Tx.ws_norm(F.col("text"))))).alias("tok"),
         )
         .withColumn("h", F.xxhash64("tok"))
         .collect()
@@ -267,6 +301,121 @@ def test_xxh64_oracle_parity(spark):
     sigs = {r.doc_id: r.simhash for r in D.simhash(df).collect()}
     for i, t in enumerate(texts):
         assert oracle_simhash64(t) == sigs[i], f"text {i!r}"
+
+
+def test_whitespace_tokens_agree_across_dialects(spark):
+    """Property: the Spark operators, ``oracle_tokens`` and the DuckDB
+    ``WS_NORM_SQL`` fragment split generated text into the same tokens:
+    ASCII words, runs of the six Java ``\\s`` separators inside and at
+    either edge, NBSP / U+2028 / U+3000 (which do not separate), empty
+    text and null. The letters are ones every dialect lower-cases
+    alike.
+
+    Each hypothesis example checks DuckDB against ``oracle_tokens``;
+    every drawn text then goes into one Spark frame, checked through
+    ``with_token_counts``, ``shingle_arrays`` sizes and ``simhash``
+    against ``oracle_simhash64``."""
+    import duckdb
+    from hypothesis import example, given, settings
+    from hypothesis import strategies as st
+
+    from logeventprocessor_spark.oracle import oracle_simhash64, oracle_tokens
+    from logeventprocessor_spark.queries import WS_NORM_SQL
+
+    con = duckdb.connect()
+    sql = f"SELECT string_split(lower({WS_NORM_SQL}), ' ') FROM (SELECT ?::VARCHAR AS text)"
+    word = st.text(alphabet="aAbBz\xa0\u2028\u3000", min_size=1, max_size=3)
+    ws_run = st.text(alphabet=" \t\n\x0b\x0c\r", min_size=1, max_size=3)
+    drawn: list = list(EDGE_TEXTS)
+
+    @settings(max_examples=300, deadline=None, derandomize=True)
+    @given(st.none() | st.lists(word | ws_run, max_size=10).map("".join))
+    @example("a b c d\n")
+    @example("a\x0bb")
+    def check(text):
+        drawn.append(text)
+        assert con.execute(sql, [text]).fetchone()[0] == oracle_tokens(text)
+
+    check()
+
+    texts = list(dict.fromkeys(drawn))
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    counts = {r.doc_id: r.n_tokens_ws for r in Tx.with_token_counts(df).collect()}
+    sizes = {r.doc_id: len(r.sh_arr) for r in D.shingle_arrays(df).collect()}
+    sigs = {r.doc_id: r.simhash for r in D.simhash(df).collect()}
+    for i, t in enumerate(texts):
+        toks = oracle_tokens(t)
+        if toks is None:
+            assert counts[i] is None and i not in sizes and i not in sigs
+            continue
+        grams = {" ".join(toks[j:j + 3]) for j in range(len(toks) - 2)}
+        assert counts[i] == len(toks), repr(t)
+        assert sizes.get(i, 0) == len(grams), repr(t)
+        assert sigs[i] == oracle_simhash64(t), repr(t)
+
+
+def test_one_whitespace_rule_per_dialect():
+    """Source guard: the whitespace rule is written once per dialect.
+
+    * Spark: only ``text.ws_norm`` / ``ws_tokens`` call a ``F`` split or
+      trim, and the only whitespace-run regex is ``text._WS_RUN``;
+    * Python: the only other whitespace-run regex is ``oracle._JAVA_WS``;
+    * DuckDB: an ``ORACLES`` string tokenises only by splitting
+      ``WS_NORM_SQL`` (or its lower case) on the single space."""
+    import ast
+    import re
+    import warnings
+    from pathlib import Path
+
+    from logeventprocessor_spark.queries import ORACLES, WS_NORM_SQL
+
+    pkg = Path(D.__file__).resolve().parent.parent
+    split_fns = {"split", "split_part", "trim", "ltrim", "rtrim", "btrim"}
+    callers, ws_regexes = set(), set()
+
+    def visit(node, rel, owner):
+        for child in ast.iter_child_nodes(node):
+            f = getattr(child, "func", None)
+            if (
+                isinstance(f, ast.Attribute)
+                and isinstance(f.value, ast.Name)
+                and f.value.id == "F"
+                and f.attr in split_fns
+            ):
+                callers.add(f"{rel}:{owner}")
+            if isinstance(child, ast.Constant) and isinstance(child.value, str):
+                try:
+                    with warnings.catch_warnings():
+                        warnings.simplefilter("ignore")  # prose read as regex
+                        if re.fullmatch(child.value, " \t\n\x0b"):
+                            ws_regexes.add(f"{rel}:{owner}")
+                except re.error:
+                    pass
+            inner = child.name if isinstance(child, ast.FunctionDef) else owner
+            visit(child, rel, inner)
+
+    for path in sorted(pkg.rglob("*.py")):
+        visit(ast.parse(path.read_text()), path.relative_to(pkg).as_posix(), "-")
+    assert callers == {"operators/text.py:ws_norm", "operators/text.py:ws_tokens"}
+    assert ws_regexes == {"operators/text.py:-", "oracle.py:-"}
+
+    tokenising = re.compile(
+        r"\b[lrb]?trim\(|regexp_split|split_part|string_to_array|\\s\+|\\t"
+        r"|string_split(?!\((?:lower\(WS\)|WS), ' '\))"
+    )
+    users = set()
+    for name, sql in ORACLES.items():
+        rest = sql.replace(WS_NORM_SQL, "WS")
+        assert not tokenising.search(rest), name
+        if rest != sql:
+            users.add(name)
+    assert users == {
+        "text_quality", "lang_id_pred", "token_stats_by_lang",
+        "training_data_filter", "domain_capped_docs", "stratified_sample_docs",
+        "doc_fingerprints", "dedup_exact_stats", "doc_repetition",
+        "ngram_jaccard_pairs", "minhash_lsh_pairs", "dedup_clusters",
+        "benchmark_decontamination", "simhash_md5_pairs",
+    }
 
 
 @pytest.fixture(scope="module")
