@@ -1,23 +1,29 @@
-"""Batch A-then-B sequence detection (SURVEY.md 2.5 T3 generalized).
+"""A-then-B sequence detection (SURVEY.md 2.5 T3 generalized).
 
 "Rule A fired, then rule B fired in the same conversation within
 ``within_ms``" -- the reference's chained-matcher semantics
 (ActionManager.cpp:188-199: step B follows step A after a delay)
-promoted to a CEP sequence operator across turns.
+promoted to a CEP sequence operator across turns. An A precedes a B
+iff ``(a_ts, a_turn) <= (b_ts, b_turn)`` and ``b_ts - a_ts <=
+within_ms``. Two event-selection policies: each B pairs with the
+LATEST preceding A, or with EVERY one.
 
-Batch realization is PURE window functions (no Python, whole-stage
-codegen): a running ``last`` over the per-conversation event-time
-order gives each B-fire the latest preceding A-fire; one filter
-applies the time bound. One shuffle on conv_id -- at 100 TB this is
-the minimal possible plan for a per-key ordered scan.
+Batch realization is pure Spark: ``sequence_detect`` (latest A) is a
+running ``last`` over the per-conversation event-time order, one
+shuffle on conv_id and no Python; ``sequence_detect_all`` (every A)
+is a time-bounded interval join.
 
-The streaming realization (streaming/pipeline.py
-``stream_sequence_detect``) holds the same "latest A" as keyed state;
-tests pin that both agree with the pure-Python oracle.
+``sequence_step`` is the ONE streaming kernel: both
+``applyInPandasWithState`` detectors (streaming/pipeline.py) call it
+once per key and micro-batch with one state shape, the bounded A list
+plus the emitted-B replay guard; the policy only decides how many of
+a B's candidate A's it pairs with. Tests pin the kernel against both
+pure-Python oracles.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -115,3 +121,52 @@ def sequence_detect(
         )
     )
     return out
+
+
+def _new_turns(ts, turn, seen):
+    """(ts, turn) of the first row of each turn not in ``seen``."""
+    _, first = np.unique(turn, return_index=True)
+    first = first[~np.isin(turn[first], seen)]
+    return ts[first], turn[first]
+
+
+def sequence_step(a, b, prior_a, prior_b, every_a, within_ns, wm_ns, cap):
+    """One key's micro-batch of the streaming A-then-B detectors.
+
+    ``a`` and ``b`` are this batch's A and B fires, ``prior_a`` the
+    key's buffered A's and ``prior_b`` its already-emitted B's, each a
+    ``(ts_ns, turn)`` pair of int64 arrays; a turn seen before counts
+    once (a replayed B emits nothing). Every new B pairs with the
+    buffered or new A's that precede it within ``within_ns``: all of
+    them when ``every_a``, else the latest. Returns the pairs as
+    ``(a_ts, a_turn, b_ts, b_turn)`` arrays and the next
+    ``(prior_a, prior_b)``: A's no B at or after the watermark
+    ``wm_ns`` can reach are evicted and the newest ``cap`` kept; B's
+    behind the watermark are evicted and the newest ``16 * cap``
+    kept."""
+    a_ts, a_turn = _new_turns(*a, prior_a[1])
+    b_ts, b_turn = _new_turns(*b, prior_b[1])
+    ts = np.concatenate([prior_a[0], a_ts, b_ts])
+    turn = np.concatenate([prior_a[1], a_turn, b_turn])
+    is_b = np.arange(len(ts)) >= len(ts) - len(b_ts)
+    # (ts, turn, is_b) order: at an identical (ts, turn) the A comes
+    # first, so the A's counted before a B are exactly those preceding it
+    o = np.lexsort((is_b, turn, ts))
+    hi = np.cumsum(~is_b[o])[is_b[o]]
+    pool_ts, pool_turn = ts[o[~is_b[o]]], turn[o[~is_b[o]]]
+    b_ts, b_turn = ts[o[is_b[o]]], turn[o[is_b[o]]]
+    lo = np.searchsorted(pool_ts, b_ts - within_ns, "left")
+    n = np.maximum(hi - lo, 0)
+    if not every_a:
+        n = np.minimum(n, 1)
+    # pair k of a B takes pool index hi - n + k
+    a_idx = np.repeat(hi - n - (np.cumsum(n) - n), n) + np.arange(n.sum())
+    b_idx = np.repeat(np.arange(len(b_ts)), n)
+    pairs = (pool_ts[a_idx], pool_turn[a_idx], b_ts[b_idx], b_turn[b_idx])
+    live = pool_ts + within_ns >= wm_ns
+    next_a = (pool_ts[live][-cap:], pool_turn[live][-cap:])
+    done_ts = np.concatenate([prior_b[0], b_ts])
+    done_turn = np.concatenate([prior_b[1], b_turn])
+    o = np.argsort(done_ts, kind="stable")
+    o = o[done_ts[o] >= wm_ns][-16 * cap:]
+    return pairs, (next_a, (done_ts[o], done_turn[o]))

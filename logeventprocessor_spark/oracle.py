@@ -148,42 +148,57 @@ def oracle_matches(
     ).reset_index(drop=True)
 
 
+def _sequence_candidates(matches, rule_a, rule_b, within_ms):
+    """(conv, B row, preceding A rows) per B fire: an A precedes a B iff
+    (a_ts, a_turn) <= (b_ts, b_turn) and b_ts - a_ts <= within_ms; a
+    turn fires each rule once."""
+    a = matches[matches.rule_id == rule_a].drop_duplicates(["conv_id", "turn_idx"])
+    b = matches[matches.rule_id == rule_b].drop_duplicates(["conv_id", "turn_idx"])
+    within = pd.Timedelta(milliseconds=within_ms)
+    for conv, bg in b.groupby("conv_id"):
+        ag = a[a.conv_id == conv]
+        for brow in bg.itertuples(index=False):
+            precedes = (ag.ts < brow.ts) | (
+                (ag.ts == brow.ts) & (ag.turn_idx <= brow.turn_idx)
+            )
+            yield conv, brow, ag[precedes & (brow.ts - ag.ts <= within)]
+
+
+def _pairs_frame(out) -> pd.DataFrame:
+    pdf = pd.DataFrame(
+        out, columns=["conv_id", "a_turn_idx", "b_turn_idx", "a_ts", "b_ts"]
+    )
+    return pdf.sort_values(["conv_id", "b_turn_idx", "a_turn_idx"]).reset_index(
+        drop=True
+    )
+
+
 def oracle_sequence_pairs(
     matches: pd.DataFrame, rule_a: str, rule_b: str, within_ms: int
 ) -> pd.DataFrame:
     """Batch oracle for A-then-B sequence detection (the reference's
     chained-matcher generalization, SURVEY.md 2.5 T3): for each fire of
-    rule B, the LATEST fire of rule A in the same conversation with
-    0 <= ts_b - ts_a <= within_ms.
-    """
+    rule B, the LATEST preceding fire of rule A in the same conversation
+    (latest by (ts, turn_idx))."""
     out = []
-    a = matches[matches.rule_id == rule_a].drop_duplicates(["conv_id", "turn_idx"])
-    b = matches[matches.rule_id == rule_b].drop_duplicates(["conv_id", "turn_idx"])
-    for conv, bg in b.groupby("conv_id"):
-        ag = a[a.conv_id == conv]
-        if ag.empty:
-            continue
-        for brow in bg.itertuples(index=False):
-            cand = ag[
-                (ag.ts <= brow.ts)
-                & ((brow.ts - ag.ts).dt.total_seconds() * 1000.0 <= within_ms)
-            ]
-            if cand.empty:
-                continue
+    for conv, brow, cand in _sequence_candidates(matches, rule_a, rule_b, within_ms):
+        if not cand.empty:
             arow = cand.sort_values(["ts", "turn_idx"]).iloc[-1]
-            out.append(
-                (
-                    conv,
-                    int(arow.turn_idx),
-                    int(brow.turn_idx),
-                    arow.ts,
-                    brow.ts,
-                )
-            )
-    pdf = pd.DataFrame(
-        out, columns=["conv_id", "a_turn_idx", "b_turn_idx", "a_ts", "b_ts"]
-    )
-    return pdf.sort_values(["conv_id", "b_turn_idx"]).reset_index(drop=True)
+            out.append((conv, int(arow.turn_idx), int(brow.turn_idx), arow.ts, brow.ts))
+    return _pairs_frame(out)
+
+
+def oracle_sequence_all_pairs(
+    matches: pd.DataFrame, rule_a: str, rule_b: str, within_ms: int
+) -> pd.DataFrame:
+    """EVERY-A counterpart of ``oracle_sequence_pairs``: one row per
+    (preceding A, B) fire pair."""
+    out = [
+        (conv, int(arow.turn_idx), int(brow.turn_idx), arow.ts, brow.ts)
+        for conv, brow, cand in _sequence_candidates(matches, rule_a, rule_b, within_ms)
+        for arow in cand.itertuples(index=False)
+    ]
+    return _pairs_frame(out)
 
 
 # --------------------------------------------------------------------

@@ -48,11 +48,21 @@ TS_FMT_SPARK_US = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 TS_FMT_DUCK_US = "%Y-%m-%d %H:%M:%S.%f"
 
+# Java's \s class in RE2 syntax: RE2's \s lacks \x0B, so every oracle
+# regex spells the six characters out.
+WS_CLASS_SQL = r" \t\n\x0B\f\r"
+
 # DuckDB form of operators/text.ws_norm, the one whitespace rule every
 # tokenising oracle reads: `string_split(..., ' ')` gives its tokens.
-# RE2's \s lacks \x0B, so Java's \s class is written out; one-argument
-# trim() would also strip NBSP and other Unicode spaces, so it names ' '.
-WS_NORM_SQL = r"trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g'), ' ')"
+# One-argument trim() would also strip NBSP and other Unicode spaces,
+# so it names ' '.
+WS_NORM_SQL = rf"trim(regexp_replace(text, '[{WS_CLASS_SQL}]+', ' ', 'g'), ' ')"
+
+# RE2 forms of operators/text.py's BPE_TOKEN_RE, with_quality_score's
+# punctuation class and URL_RE
+BPE_TOKEN_SQL = rf"'[A-Za-z]+|[0-9]+|[^{WS_CLASS_SQL}A-Za-z0-9]'"
+PUNCT_SQL = rf"'[^\w{WS_CLASS_SQL}]'"
+URL_SQL = rf"'https?://[A-Za-z0-9.-]+(/[^{WS_CLASS_SQL}]*)?'"
 
 # DuckDB fragment: the documents table in transcript shape (must stay
 # in lockstep with generator.documents_as_transcripts)
@@ -471,7 +481,7 @@ def q_sequence_all_pairs(spark, sf_dir):
     ALL signups in the preceding hour. Batch shape is the bounded
     interval join of ``sequence_detect_all``; the streaming twin
     (``stream_sequence_detect_all``, capped list state) is pinned
-    against this in tests/test_streaming_extras.py."""
+    against this in tests/test_streaming.py."""
     from logeventprocessor_spark.operators.sequence import sequence_detect_all
 
     e = _events(spark, sf_dir).select(
@@ -1534,7 +1544,7 @@ ORACLES: dict[str, str] = {
                min(event_id) AS first_event_id
         FROM events GROUP BY 1, 2, 3
     """,
-    "top_url_domains": """
+    "top_url_domains": f"""
         WITH planted(doc_id, text) AS (VALUES
           (-11, 'see https://example.com/a and http://EXAMPLE.com/b?q=1 plus https://docs.example.org'),
           (-12, 'bare domain example.com is not a url but https://sub.tld-host.net/path/x.html is'),
@@ -1545,7 +1555,7 @@ ORACLES: dict[str, str] = {
         ), u AS (
           SELECT doc_id,
                  unnest(regexp_extract_all(text,
-                     'https?://[A-Za-z0-9.-]+(/[^\\s]*)?', 0)) AS url
+                     {URL_SQL}, 0)) AS url
           FROM ad
         )
         SELECT lower(regexp_extract(url, 'https?://([A-Za-z0-9.-]+)', 1))
@@ -1870,13 +1880,13 @@ ORACLES: dict[str, str] = {
           FROM (
             SELECT doc_id,
                    unnest(regexp_extract_all(text,
-                       'https?://[A-Za-z0-9.-]+(/[^\\s]*)?', 0)) AS url
+                       {URL_SQL}, 0)) AS url
             FROM ad
           )
         ), x AS (
           SELECT doc_id,
                  string_split({WS_NORM_SQL}, ' ') AS toks,
-                 CAST(len(regexp_extract_all(text, '[^\\w\\s]')) AS INTEGER)
+                 CAST(len(regexp_extract_all(text, {PUNCT_SQL})) AS INTEGER)
                    AS n_punct,
                  text
           FROM ad
@@ -1904,7 +1914,7 @@ ORACLES: dict[str, str] = {
         WITH x AS (
           SELECT doc_id, text,
                  string_split({WS_NORM_SQL}, ' ') AS toks,
-                 CAST(len(regexp_extract_all(text, '[^\\w\\s]')) AS INTEGER) AS n_punct
+                 CAST(len(regexp_extract_all(text, {PUNCT_SQL})) AS INTEGER) AS n_punct
           FROM documents
         )
         SELECT doc_id,
@@ -2013,7 +2023,7 @@ ORACLES: dict[str, str] = {
                round(avg(CAST(len(string_split({WS_NORM_SQL}, ' ')) AS DOUBLE)), 4)
                  AS avg_tokens,
                CAST(sum(len(regexp_extract_all(text,
-                 '[A-Za-z]+|[0-9]+|[^\\sA-Za-z0-9]'))) AS BIGINT)
+                 {BPE_TOKEN_SQL}))) AS BIGINT)
                  AS total_bpe_tokens
         FROM documents GROUP BY lang
     """,

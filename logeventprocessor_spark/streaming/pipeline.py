@@ -44,6 +44,7 @@ context, where the enrichment comes from another turn or stream.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,6 +58,7 @@ from logeventprocessor_spark.operators.cooldown import (
     hot_cooldowns,
 )
 from logeventprocessor_spark.operators.match import match_turns
+from logeventprocessor_spark.operators.sequence import sequence_step
 from logeventprocessor_spark.operators.steps import expand_steps
 from logeventprocessor_spark.rules import Rule, load_rules_yaml
 from logeventprocessor_spark.schema import MATCHES_SCHEMA, TRANSCRIPTS_SCHEMA
@@ -142,12 +144,85 @@ SEQUENCE_SCHEMA = T.StructType(
     ]
 )
 
-SEQ_STATE_SCHEMA = T.StructType(
+SEQ_ALL_STATE_SCHEMA = T.StructType(
     [
-        T.StructField("a_ts_ns", T.LongType(), True),
-        T.StructField("a_turn_idx", T.IntegerType(), True),
+        T.StructField("a_ts_ns", T.ArrayType(T.LongType()), True),
+        T.StructField("a_turn", T.ArrayType(T.IntegerType()), True),
+        # B turns already emitted, kept within the watermark horizon:
+        # an at-least-once source replaying a B row in a LATER batch
+        # must not re-emit its pairs (the batch operators' .distinct()
+        # dedups globally). UnsafeRow state encoding validates at query
+        # start, so a checkpoint written under another state shape
+        # needs a fresh start (sink is batch-id idempotent; bounded
+        # source replay is safe).
+        T.StructField("b_ts_ns", T.ArrayType(T.LongType()), True),
+        T.StructField("b_turn", T.ArrayType(T.IntegerType()), True),
     ]
 )
+
+# A-list cap of both sequence detectors (``max_as``); the B replay
+# guard keeps 16x as many entries
+SEQ_MAX_AS = 64
+
+
+def _stream_sequence(matches, rule_a, rule_b, within_ms, every_a, max_as):
+    """Both streaming sequence detectors: ``applyInPandasWithState``
+    keyed by conv_id over ``operators.sequence.sequence_step``, with
+    SEQ_ALL_STATE_SCHEMA state, timed out once the watermark passes
+    the newest stored ts + within_ms."""
+    within_ns = within_ms * 1_000_000
+
+    def fn(key, pdf_iter, state: GroupState):
+        if state.hasTimedOut:
+            state.remove()
+            return
+        pdfs = [p for p in pdf_iter if not p.empty]
+        if not pdfs:
+            return
+        g = pd.concat(pdfs, ignore_index=True)
+        ts, turn = _epoch_ns(g["ts"]), g["turn_idx"].to_numpy(np.int64)
+        is_a = (g["rule_id"] == rule_a).to_numpy()
+        is_b = (g["rule_id"] == rule_b).to_numpy()
+        st = state.getOption
+        prior = [np.asarray(c, np.int64) for c in st or ([],) * 4]
+        wm = state.getCurrentWatermarkMs()
+        pairs, (next_a, next_b) = sequence_step(
+            (ts[is_a], turn[is_a]),
+            (ts[is_b], turn[is_b]),
+            prior[:2],
+            prior[2:],
+            every_a,
+            within_ns,
+            wm * 1_000_000,
+            max_as,
+        )
+        stored_ts = np.concatenate([next_a[0], next_b[0]])
+        if len(stored_ts):
+            state.update(tuple(c.tolist() for c in next_a + next_b))
+            state.setTimeoutTimestamp(
+                max(int(stored_ts.max()) // 1_000_000 + within_ms + 1000, wm + 1000)
+            )
+        elif st is not None:
+            state.remove()
+        if len(pairs[0]):
+            a_ts, a_turn, b_ts, b_turn = pairs
+            yield pd.DataFrame(
+                {
+                    "conv_id": key[0],
+                    "a_turn_idx": a_turn,
+                    "b_turn_idx": b_turn,
+                    "a_ts": a_ts.astype("datetime64[ns]"),
+                    "b_ts": b_ts.astype("datetime64[ns]"),
+                }
+            )
+
+    return matches.groupBy("conv_id").applyInPandasWithState(
+        fn,
+        outputStructType=SEQUENCE_SCHEMA,
+        stateStructType=SEQ_ALL_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
 
 
 def stream_sequence_detect(
@@ -157,84 +232,17 @@ def stream_sequence_detect(
     within_ms", keyed by conv_id (the reference's chained-matcher
     semantics, ActionManager.cpp:188-199, as a CEP sequence operator).
     Emits (conv, a_turn, b_turn, a_ts, b_ts) with the LATEST qualifying
-    A per B. State = last A (ts, turn); evicted when the watermark
-    passes a_ts + within_ms.
-    """
+    A per B; batch oracle ``operators.sequence.sequence_detect``.
 
-    def fn(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (conv_id,) = key
-        pdfs = [p for p in pdf_iter if not p.empty]
-        if not pdfs:
-            return
-        g = pd.concat(pdfs, ignore_index=True)
-        g = g[g["rule_id"].isin([rule_a, rule_b])]
-        # (ts, turn_idx, is_b) order matches batch sequence_detect and
-        # the oracle: at an identical (ts, turn_idx) the A row is
-        # processed first so a same-turn A qualifies as "preceding"
-        g = g.assign(_is_b=(g["rule_id"] == rule_b).astype(int))
-        g = g.drop_duplicates(["turn_idx", "rule_id"]).sort_values(
-            ["ts", "turn_idx", "_is_b"], kind="mergesort"
-        )
-        st = state.getOption
-        a_ts_ns = st[0] if st is not None else None
-        a_turn = st[1] if st is not None else None
-        out = []
-        for row in g.itertuples(index=False):
-            ts_ns = int(pd.Timestamp(row.ts).value)
-            if row.rule_id == rule_b and a_ts_ns is not None:
-                if 0 <= ts_ns - a_ts_ns <= within_ms * 1_000_000:
-                    out.append(
-                        (
-                            conv_id,
-                            int(a_turn),
-                            int(row.turn_idx),
-                            pd.Timestamp(a_ts_ns),
-                            pd.Timestamp(ts_ns),
-                        )
-                    )
-            # "latest A" state: a late-arriving OLDER A (possible across
-            # micro-batches) must never regress the stored timestamp
-            if row.rule_id == rule_a and (a_ts_ns is None or ts_ns >= a_ts_ns):
-                a_ts_ns, a_turn = ts_ns, int(row.turn_idx)
-        if a_ts_ns is not None:
-            state.update((int(a_ts_ns), int(a_turn)))
-            wm = state.getCurrentWatermarkMs()
-            timeout_ms = max(a_ts_ns // 1_000_000 + within_ms + 1000, wm + 1000)
-            state.setTimeoutTimestamp(timeout_ms)
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=["conv_id", "a_turn_idx", "b_turn_idx", "a_ts", "b_ts"],
-            )
+    State is that of ``stream_sequence_detect_all`` (the A list capped
+    at SEQ_MAX_AS, and the B replay guard), so a checkpoint written by
+    the earlier one-A state needs a fresh start.
 
-    return matches.groupBy("conv_id").applyInPandasWithState(
-        fn,
-        outputStructType=SEQUENCE_SCHEMA,
-        stateStructType=SEQ_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-SEQ_ALL_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("a_ts_ns", T.ArrayType(T.LongType()), True),
-        T.StructField("a_turn", T.ArrayType(T.IntegerType()), True),
-        # B turns already emitted, kept within the watermark horizon:
-        # an at-least-once source replaying a B row in a LATER batch
-        # must not re-emit its pairs (the batch operator's .distinct()
-        # dedups globally; intra-batch dupes are handled by
-        # drop_duplicates on the batch frame). Schema widened from the
-        # 2-field round-4 form -- UnsafeRow state encoding validates at
-        # query start, so upgrading needs a fresh checkpoint (sink is
-        # batch-id idempotent; bounded source replay is safe).
-        T.StructField("b_ts_ns", T.ArrayType(T.LongType()), True),
-        T.StructField("b_turn", T.ArrayType(T.IntegerType()), True),
-    ]
-)
+    Arrival-order contract: a B pairs with the latest A that precedes
+    it among the A's that arrived in an earlier micro-batch or in its
+    own. A@10s and A@20s in one batch, then B@15s in the next, emits
+    (A@10s, B@15s); an A arriving after its B never pairs with it."""
+    return _stream_sequence(matches, rule_a, rule_b, within_ms, False, SEQ_MAX_AS)
 
 
 def stream_sequence_detect_all(
@@ -242,7 +250,7 @@ def stream_sequence_detect_all(
     rule_a: str,
     rule_b: str,
     within_ms: int,
-    max_as: int = 64,
+    max_as: int = SEQ_MAX_AS,
 ) -> DataFrame:
     """EVERY-A-pairs streaming semantics (round-3 verdict task #8):
     each B emits one row per buffered A within ``within_ms`` -- the
@@ -258,119 +266,20 @@ def stream_sequence_detect_all(
       pathological conversations; evictions under the cap are recall
       losses by explicit contract, exactly like the reference's
       fixed-size buffers);
+    * B replay guard -- emitted B turns inside the watermark horizon,
+      capped at ``16 * max_as``, newest first: a conv emitting more
+      B's than that inside one horizon can re-emit pairs for its
+      oldest B's under at-least-once replay (bounded memory over
+      exactness);
     * batch oracle: ``operators.sequence.sequence_detect_all`` -- the
       parity test plants A-bursts and checks both emit identical pair
-      sets (tests/test_streaming_extras.py).
-    """
+      sets (tests/test_streaming.py).
 
-    def fn(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (conv_id,) = key
-        pdfs = [p for p in pdf_iter if not p.empty]
-        if not pdfs:
-            return
-        g = pd.concat(pdfs, ignore_index=True)
-        g = g[g["rule_id"].isin([rule_a, rule_b])]
-        g = g.assign(_is_b=(g["rule_id"] == rule_b).astype(int))
-        g = g.drop_duplicates(["turn_idx", "rule_id"]).sort_values(
-            ["ts", "turn_idx", "_is_b"], kind="mergesort"
-        )
-        st = state.getOption
-        buf: list[tuple[int, int]] = (
-            list(zip(st[0], st[1])) if st is not None else []
-        )
-        # B's whose pairs were already emitted (cross-batch replay
-        # guard); old 2-field state tuples have no b columns
-        b_done: list[tuple[int, int]] = (
-            list(zip(st[2], st[3]))
-            if st is not None and len(st) > 3 and st[2] is not None
-            else []
-        )
-        seen = {t for _, t in buf}
-        seen_b = {t for _, t in b_done}
-        out = []
-        within_ns = within_ms * 1_000_000
-        for row in g.itertuples(index=False):
-            ts_ns = int(pd.Timestamp(row.ts).value)
-            if row.rule_id == rule_b:
-                if row.turn_idx in seen_b:
-                    continue  # replayed B from an earlier batch
-                b_done.append((ts_ns, int(row.turn_idx)))
-                seen_b.add(row.turn_idx)
-                for a_ts_ns, a_turn in buf:
-                    # the equal-ts tie rule of the batch operator: an A
-                    # at the same timestamp precedes B only when
-                    # a_turn <= b_turn (matters for a cross-batch A
-                    # that arrived before this B but sorts after it)
-                    if (0 <= ts_ns - a_ts_ns <= within_ns) and not (
-                        ts_ns == a_ts_ns and a_turn > row.turn_idx
-                    ):
-                        out.append(
-                            (
-                                conv_id,
-                                int(a_turn),
-                                int(row.turn_idx),
-                                pd.Timestamp(a_ts_ns),
-                                pd.Timestamp(ts_ns),
-                            )
-                        )
-            else:
-                if row.turn_idx not in seen:
-                    buf.append((ts_ns, int(row.turn_idx)))
-                    seen.add(row.turn_idx)
-        wm_ns = state.getCurrentWatermarkMs() * 1_000_000
-        if buf:
-            # evict A's no future B (ts >= watermark) can reach, then
-            # apply the hard cap newest-first
-            buf = [a for a in buf if a[0] + within_ns >= wm_ns]
-            buf.sort(key=lambda a: a[0])
-            buf = buf[-max_as:]
-        if b_done:
-            # a replayed B reaches this operator only while its event
-            # time is >= the watermark (Spark drops later replays
-            # upstream of stateful ops), so the replay guard only needs
-            # entries inside the horizon -- watermark eviction alone
-            # bounds it. The cap is a last-resort skew guard and is
-            # deliberately MUCH larger than max_as (the guard list is
-            # two ints per B vs a recall contract for the A buffer): a
-            # conv that emits more than 16*max_as B's inside one
-            # watermark horizon can see duplicate pairs re-emitted for
-            # its evicted (oldest) B's under at-least-once replay --
-            # an explicit bounded-memory/exactness trade, newest wins
-            b_done = [b for b in b_done if b[0] >= wm_ns]
-            b_done.sort(key=lambda b: b[0])
-            b_done = b_done[-16 * max_as:]
-        if buf or b_done:
-            state.update(
-                (
-                    [a[0] for a in buf],
-                    [a[1] for a in buf],
-                    [b[0] for b in b_done],
-                    [b[1] for b in b_done],
-                )
-            )
-            wm = state.getCurrentWatermarkMs()
-            newest = max(x[0] for x in buf + b_done)
-            state.setTimeoutTimestamp(
-                max(newest // 1_000_000 + within_ms + 1000, wm + 1000)
-            )
-        elif st is not None:
-            state.remove()
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=["conv_id", "a_turn_idx", "b_turn_idx", "a_ts", "b_ts"],
-            )
-
-    return matches.groupBy("conv_id").applyInPandasWithState(
-        fn,
-        outputStructType=SEQUENCE_SCHEMA,
-        stateStructType=SEQ_ALL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    Arrival-order contract: a B pairs with the preceding A's that
+    arrived in an earlier micro-batch or in its own. B@15s in one
+    batch, then A@10s in the next, emits nothing: a B is not kept for
+    A's that arrive after it."""
+    return _stream_sequence(matches, rule_a, rule_b, within_ms, True, max_as)
 
 
 def dedup_stream(stream: DataFrame, keys: list[str]) -> DataFrame:

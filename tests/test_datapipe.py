@@ -261,6 +261,7 @@ EDGE_TEXTS = [
     "café naïve 中文 emoji\U0001F600",  # multi-byte UTF-8
     "a\xa0b",  # NBSP: not Java \s, must stay ONE token
     "MiXeD CaSe TeXt",
+    "see http://x.com/a\x0bb, ok",  # VT ends a URL, a BPE piece and no punct
 ]
 
 
@@ -314,16 +315,28 @@ def test_whitespace_tokens_agree_across_dialects(spark):
     Each hypothesis example checks DuckDB against ``oracle_tokens``;
     every drawn text then goes into one Spark frame, checked through
     ``with_token_counts``, ``shingle_arrays`` sizes and ``simhash``
-    against ``oracle_simhash64``."""
+    against ``oracle_simhash64``, and through ``n_tokens_bpe``,
+    ``punct_ratio`` and ``with_urls`` against the oracles' RE2
+    patterns (``BPE_TOKEN_SQL``, ``PUNCT_SQL``, ``URL_SQL``)."""
     import duckdb
     from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
     from logeventprocessor_spark.oracle import oracle_simhash64, oracle_tokens
-    from logeventprocessor_spark.queries import WS_NORM_SQL
+    from logeventprocessor_spark.queries import (
+        BPE_TOKEN_SQL,
+        PUNCT_SQL,
+        URL_SQL,
+        WS_NORM_SQL,
+    )
 
     con = duckdb.connect()
     sql = f"SELECT string_split(lower({WS_NORM_SQL}), ' ') FROM (SELECT ?::VARCHAR AS text)"
+    regex_sql = f"""SELECT len(regexp_extract_all(text, {BPE_TOKEN_SQL})),
+        round(len(regexp_extract_all(text, {PUNCT_SQL}))
+              / greatest(length(text), 1), 6),
+        regexp_extract_all(text, {URL_SQL}, 0)
+        FROM (SELECT ?::VARCHAR AS text)"""
     word = st.text(alphabet="aAbBz\xa0\u2028\u3000", min_size=1, max_size=3)
     ws_run = st.text(alphabet=" \t\n\x0b\x0c\r", min_size=1, max_size=3)
     drawn: list = list(EDGE_TEXTS)
@@ -341,6 +354,12 @@ def test_whitespace_tokens_agree_across_dialects(spark):
     texts = list(dict.fromkeys(drawn))
     df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
     counts = {r.doc_id: r.n_tokens_ws for r in Tx.with_token_counts(df).collect()}
+    regex = {
+        r.doc_id: (r.n_tokens_bpe, r.punct_ratio, r.urls)
+        for r in Tx.with_urls(Tx.with_quality_score(Tx.with_token_counts(df)))
+        .filter("text IS NOT NULL")
+        .collect()
+    }
     sizes = {r.doc_id: len(r.sh_arr) for r in D.shingle_arrays(df).collect()}
     sigs = {r.doc_id: r.simhash for r in D.simhash(df).collect()}
     for i, t in enumerate(texts):
@@ -350,6 +369,7 @@ def test_whitespace_tokens_agree_across_dialects(spark):
             continue
         grams = {" ".join(toks[j:j + 3]) for j in range(len(toks) - 2)}
         assert counts[i] == len(toks), repr(t)
+        assert regex[i] == con.execute(regex_sql, [t]).fetchone(), repr(t)
         assert sizes.get(i, 0) == len(grams), repr(t)
         assert sigs[i] == oracle_simhash64(t), repr(t)
 
@@ -361,13 +381,14 @@ def test_one_whitespace_rule_per_dialect():
       trim, and the only whitespace-run regex is ``text._WS_RUN``;
     * Python: the only other whitespace-run regex is ``oracle._JAVA_WS``;
     * DuckDB: an ``ORACLES`` string tokenises only by splitting
-      ``WS_NORM_SQL`` (or its lower case) on the single space."""
+      ``WS_NORM_SQL`` (or its lower case) on the single space, and
+      writes ``\\t`` only inside ``WS_CLASS_SQL``."""
     import ast
     import re
     import warnings
     from pathlib import Path
 
-    from logeventprocessor_spark.queries import ORACLES, WS_NORM_SQL
+    from logeventprocessor_spark.queries import ORACLES, WS_CLASS_SQL, WS_NORM_SQL
 
     pkg = Path(D.__file__).resolve().parent.parent
     split_fns = {"split", "split_part", "trim", "ltrim", "rtrim", "btrim"}
@@ -406,7 +427,7 @@ def test_one_whitespace_rule_per_dialect():
     users = set()
     for name, sql in ORACLES.items():
         rest = sql.replace(WS_NORM_SQL, "WS")
-        assert not tokenising.search(rest), name
+        assert not tokenising.search(rest.replace(WS_CLASS_SQL, "WSC")), name
         if rest != sql:
             users.add(name)
     assert users == {

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from logeventprocessor_spark.generator import make_transcripts, transcripts_df
@@ -31,7 +32,9 @@ def test_batch_sequence_equals_oracle(spark):
 
 
 def test_same_turn_a_qualifies(spark):
-    """A and B firing the same turn: A counts as preceding (ts_a <= ts_b)."""
+    """A and B firing the same turn: A counts as preceding (ts_a <= ts_b).
+    An A at B's ts on a LATER turn does not: conv "d" pairs its B with
+    the A five seconds earlier, not the A at the same ts."""
     from logeventprocessor_spark.rules import Rule, RuleStep
 
     rules = [
@@ -40,19 +43,23 @@ def test_same_turn_a_qualifies(spark):
     ]
     pdf = pd.DataFrame(
         {
-            "conv_id": ["c"],
-            "turn_idx": pd.array([0], dtype="int32"),
-            "role": ["user"],
-            "text": ["alpha and beta together"],
-            "tool": [""],
-            "ts": pd.to_datetime(["2024-03-01"]).astype("datetime64[us]"),
+            "conv_id": ["c", "d", "d", "d"],
+            "turn_idx": pd.array([0, 1, 3, 5], dtype="int32"),
+            "role": ["user"] * 4,
+            "text": ["alpha and beta together", "alpha", "beta", "alpha"],
+            "tool": [""] * 4,
+            "ts": pd.to_datetime(
+                ["2024-03-01 00:00:00", "2024-03-01 09:59:55",
+                 "2024-03-01 10:00:00", "2024-03-01 10:00:00"]
+            ).astype("datetime64[us]"),
         }
     )
     matches = match_turns(transcripts_df(spark, pdf), rules)
-    got = sequence_detect(matches, "a", "b", within_ms=1000).toPandas()
-    exp = oracle_sequence_pairs(matches.toPandas(), "a", "b", within_ms=1000)
-    assert len(got) == len(exp) == 1
-    assert got.iloc[0]["a_turn_idx"] == 0 and got.iloc[0]["b_turn_idx"] == 0
+    got = sequence_detect(matches, "a", "b", within_ms=10_000).toPandas()
+    exp = oracle_sequence_pairs(matches.toPandas(), "a", "b", within_ms=10_000)
+    cols, pairs = ["conv_id", "a_turn_idx", "b_turn_idx"], [("c", 0, 0), ("d", 1, 3)]
+    assert sorted(map(tuple, got[cols].values)) == pairs
+    assert list(map(tuple, exp[cols].values)) == pairs
 
 
 def test_tumbling_window_counts(spark):
@@ -139,3 +146,66 @@ def test_salted_agg_equals_plain_agg(spark):
     )
     assert (got["n_events"].values == exp["n_events"].values).all()
     assert abs(got["sum_v"].values - exp["sum_v"].values).max() < 1e-6
+
+
+def test_sequence_kernel_equals_oracles():
+    """Property, no Spark: ``sequence_step`` run over the micro-batches
+    of a key's fires cut in (ts, turn_idx, is_b) order emits exactly
+    ``oracle_sequence_pairs`` (latest A) and ``oracle_sequence_all_pairs``
+    (every A). Drawn runs hold equal-ts ties, gaps on the bound,
+    duplicate rows and A/B fires of one turn, timestamps across 1970 or
+    tz-aware, and a watermark trailing the batches by a drawn delay."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from logeventprocessor_spark.operators.cooldown import NO_PRIOR, _epoch_ns
+    from logeventprocessor_spark.operators.sequence import sequence_step
+    from logeventprocessor_spark.oracle import oracle_sequence_all_pairs
+
+    within_ms = 10_000
+    none = (np.empty(0, np.int64),) * 2
+
+    @settings(max_examples=150, deadline=None, derandomize=True)
+    @given(
+        fires=st.lists(
+            st.tuples(st.integers(0, 7), st.sampled_from("AB")), min_size=1, max_size=12
+        ),
+        turn_s=st.lists(st.integers(0, 15), min_size=8, max_size=8),
+        base=st.sampled_from(["2024-03-01", "1969-12-31 23:59:50"]),
+        tz=st.sampled_from([None, "UTC", "America/New_York"]),
+        cuts=st.lists(st.integers(1, 11), max_size=4),
+        delay_s=st.integers(0, 12),
+    )
+    def check(fires, turn_s, base, tz, cuts, delay_s):
+        t0 = pd.Timestamp(base, tz=tz)
+        pdf = pd.DataFrame(
+            [("c", t, r, t0 + pd.Timedelta(seconds=turn_s[t])) for t, r in fires],
+            columns=["conv_id", "turn_idx", "rule_id", "ts"],
+        )
+        ts, turn = _epoch_ns(pdf["ts"]), pdf["turn_idx"].to_numpy(np.int64)
+        is_b = (pdf["rule_id"] == "B").to_numpy()
+        batches = np.split(np.lexsort((is_b, turn, ts)), sorted(set(cuts)))
+        for every_a, oracle in (
+            (False, oracle_sequence_pairs),
+            (True, oracle_sequence_all_pairs),
+        ):
+            got, state, wm = [], (none, none), NO_PRIOR
+            for rows in batches:
+                a, b = rows[~is_b[rows]], rows[is_b[rows]]
+                pairs, state = sequence_step(
+                    (ts[a], turn[a]), (ts[b], turn[b]), *state,
+                    every_a, within_ms * 1_000_000, wm, 1 << 20,
+                )
+                got += zip(*(p.tolist() for p in pairs))
+                if len(rows):
+                    wm = max(wm, int(ts[rows].max()) - delay_s * 10**9)
+            exp = oracle(pdf, "A", "B", within_ms)
+            exp = zip(
+                _epoch_ns(pd.to_datetime(exp["a_ts"])).tolist(),
+                exp["a_turn_idx"].tolist(),
+                _epoch_ns(pd.to_datetime(exp["b_ts"])).tolist(),
+                exp["b_turn_idx"].tolist(),
+            )
+            assert sorted(got) == sorted(exp), (every_a, pdf)
+
+    check()

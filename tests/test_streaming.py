@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -15,7 +16,11 @@ from logeventprocessor_spark.generator import (
     transcripts_df,
     write_transcripts_parquet,
 )
-from logeventprocessor_spark.oracle import oracle_matches, oracle_sequence_pairs
+from logeventprocessor_spark.oracle import (
+    oracle_matches,
+    oracle_sequence_all_pairs,
+    oracle_sequence_pairs,
+)
 from logeventprocessor_spark.pipeline import match_actions
 from logeventprocessor_spark.rules import canonical_rules
 from logeventprocessor_spark.schema import ACTION_KEY
@@ -23,6 +28,7 @@ from logeventprocessor_spark.streaming.pipeline import (
     read_transcripts_stream,
     start_pipeline,
     stream_sequence_detect,
+    stream_sequence_detect_all,
 )
 from logeventprocessor_spark.operators.match import match_turns
 
@@ -180,186 +186,136 @@ def test_stream_sequence_detector_equals_batch_oracle(spark, tmp_path):
     )
 
 
+def _match_frame(rows):
+    """MATCHES_SCHEMA frame of (conv_id, turn_idx, rule_id, seconds
+    after 2024-03-01 10:00) rows."""
+    from logeventprocessor_spark.schema import MATCHES_SCHEMA
+
+    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "rule_id", "ts"])
+    pdf["ts"] = pd.Timestamp("2024-03-01 10:00") + pd.to_timedelta(pdf["ts"], unit="s")
+    pdf = pdf.astype({"turn_idx": "int32", "ts": "datetime64[us]"})
+    pdf = pdf.assign(rule_idx=np.int32(0), extracted="", text="t")
+    return pdf[[f.name for f in MATCHES_SCHEMA.fields]]
+
+
+def _sequence_stream_pairs(spark, tmp_path, detector, batches, **kw):
+    """Runs ``detector(m, "A", "B", within_ms=60_000, **kw)`` with a
+    10-minute watermark over one ``_match_frame`` file per micro-batch
+    and returns the (conv_id, a_turn_idx, b_turn_idx) rows it emitted."""
+    from logeventprocessor_spark.schema import MATCHES_SCHEMA
+
+    input_dir = str(tmp_path / "in")
+    os.makedirs(input_dir)
+    for i, rows in enumerate(batches):
+        p = f"{input_dir}/part-{i}.parquet"
+        _match_frame(rows).to_parquet(p, index=False)
+        os.utime(p, ns=(1_000_000_000_000_000_000 + i * 10**9,) * 2)
+    m = (
+        spark.readStream.schema(MATCHES_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(input_dir)
+        .withWatermark("ts", "10 minutes")
+    )
+    q = (
+        detector(m, "A", "B", within_ms=60_000, **kw)
+        .writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    return _pair_keys(spark.read.parquet(str(tmp_path / "out")).toPandas())
+
+
+def _pair_keys(pdf):
+    return sorted(map(tuple, pdf[["conv_id", "a_turn_idx", "b_turn_idx"]].values))
+
+
 def test_stream_sequence_all_equals_batch_oracle(spark, tmp_path):
     """EVERY-A-pairs semantics: the streaming capped-list-state detector
-    equals the batch interval-join operator AND a naive pandas scan on
-    a corpus with planted multi-A bursts, across micro-batches."""
-    import pandas as pd
+    equals the batch interval-join operator AND ``oracle_sequence_all_pairs``
+    on a corpus with planted multi-A bursts, across micro-batches."""
     from logeventprocessor_spark.operators.sequence import sequence_detect_all
     from logeventprocessor_spark.schema import MATCHES_SCHEMA
-    from logeventprocessor_spark.streaming.pipeline import (
-        stream_sequence_detect_all,
-    )
 
-    base = pd.Timestamp("2024-03-01 10:00:00")
-    rows = []
-    # conv_a: 3 A's inside the window, then 2 B's -> 3+3 pairs; a late A
-    # between the B's pairs only with the second B
-    for i, off in enumerate([0, 5, 10]):
-        rows.append(("conv_a", i, "A", base + pd.Timedelta(seconds=off)))
-    rows.append(("conv_a", 3, "B", base + pd.Timedelta(seconds=20)))
-    rows.append(("conv_a", 4, "A", base + pd.Timedelta(seconds=25)))
-    rows.append(("conv_a", 5, "B", base + pd.Timedelta(seconds=30)))
-    # conv_b: A too old for the window + one in-window pair
-    rows.append(("conv_b", 0, "A", base - pd.Timedelta(seconds=120)))
-    rows.append(("conv_b", 1, "A", base + pd.Timedelta(seconds=1)))
-    rows.append(("conv_b", 2, "B", base + pd.Timedelta(seconds=40)))
-    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "rule_id", "ts"])
-    pdf["rule_idx"] = 0
-    pdf["extracted"] = ""
-    pdf["text"] = "t"
-    pdf = pdf[[f.name for f in MATCHES_SCHEMA.fields]]
-    pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-    pdf["rule_idx"] = pdf["rule_idx"].astype("int32")
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-
-    # naive expectation
-    exp = set()
-    for conv, g in pdf.groupby("conv_id"):
-        a = g[g.rule_id == "A"]
-        for b in g[g.rule_id == "B"].itertuples(index=False):
-            for ar in a.itertuples(index=False):
-                gap = (b.ts - ar.ts).total_seconds()
-                if 0 <= gap <= 60:
-                    exp.add((conv, ar.turn_idx, b.turn_idx))
+    rows = [
+        # conv_a: 3 A's inside the window, then 2 B's -> 3+3 pairs; a
+        # late A between the B's pairs only with the second B
+        ("conv_a", 0, "A", 0), ("conv_a", 1, "A", 5), ("conv_a", 2, "A", 10),
+        ("conv_a", 3, "B", 20), ("conv_a", 4, "A", 25),
+        ("conv_a", 5, "B", 30),
+        # conv_b: A too old for the window + one in-window pair
+        ("conv_b", 0, "A", -120), ("conv_b", 1, "A", 1), ("conv_b", 2, "B", 40),
+    ]
+    pdf = _match_frame(rows)
+    exp = _pair_keys(oracle_sequence_all_pairs(pdf, "A", "B", within_ms=60_000))
     assert len(exp) == 3 + 4 + 1  # planted geometry
 
     batch = sequence_detect_all(
         spark.createDataFrame(pdf, MATCHES_SCHEMA), "A", "B", within_ms=60_000
-    ).toPandas()
-    assert set(map(tuple, batch[["conv_id", "a_turn_idx", "b_turn_idx"]].values)) == exp
-
-    input_dir = str(tmp_path / "matches_in")
-    import os
-
-    os.makedirs(input_dir, exist_ok=True)
-    # two files -> two micro-batches with maxFilesPerTrigger=1, so the
-    # A-buffer must survive in state across batches
-    pdf.iloc[:5].to_parquet(f"{input_dir}/part-0.parquet", index=False)
-    pdf.iloc[5:].to_parquet(f"{input_dir}/part-1.parquet", index=False)
-    m = (
-        spark.readStream.schema(MATCHES_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-        .withWatermark("ts", "10 minutes")
     )
-    seq = stream_sequence_detect_all(m, "A", "B", within_ms=60_000)
-    q = (
-        seq.writeStream.format("parquet")
-        .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    assert _pair_keys(batch.toPandas()) == exp
+    # two files -> two micro-batches, so the A-buffer must survive in
+    # state across batches
+    got = _sequence_stream_pairs(
+        spark, tmp_path, stream_sequence_detect_all, [rows[:5], rows[5:]]
     )
-    q.awaitTermination(300)
-    got = spark.read.parquet(str(tmp_path / "out")).toPandas()
-    assert set(map(tuple, got[["conv_id", "a_turn_idx", "b_turn_idx"]].values)) == exp
-    assert not got.duplicated(["conv_id", "a_turn_idx", "b_turn_idx"]).any()
+    assert got == exp
 
 
-def test_stream_sequence_all_b_replay_dedup(spark, tmp_path):
+@pytest.mark.parametrize(
+    "detector, exp",
+    [
+        pytest.param(stream_sequence_detect_all, [(0, 2), (1, 2)], id="every_a"),
+        pytest.param(stream_sequence_detect, [(1, 2)], id="latest_a"),
+    ],
+)
+def test_stream_sequence_all_b_replay_dedup(spark, tmp_path, detector, exp):
     """An at-least-once source replaying a B row in a LATER micro-batch
-    must not re-emit its pairs: the detector tracks emitted B turns in
-    state within the watermark horizon (round-4 advice). The batch
-    operator dedups globally via .distinct(); before this guard the
-    stream variant deduped only within one batch frame."""
-    import pandas as pd
-    from logeventprocessor_spark.schema import MATCHES_SCHEMA
-    from logeventprocessor_spark.streaming.pipeline import (
-        stream_sequence_detect_all,
-    )
-
-    base = pd.Timestamp("2024-03-01 10:00:00")
-    rows = [
-        ("c", 0, "A", base),
-        ("c", 1, "A", base + pd.Timedelta(seconds=5)),
-        ("c", 2, "B", base + pd.Timedelta(seconds=20)),
-    ]
-    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "rule_id", "ts"])
-    pdf["rule_idx"] = 0
-    pdf["extracted"] = ""
-    pdf["text"] = "t"
-    pdf = pdf[[f.name for f in MATCHES_SCHEMA.fields]]
-    pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-    pdf["rule_idx"] = pdf["rule_idx"].astype("int32")
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    input_dir = str(tmp_path / "in")
-    import os
-
-    os.makedirs(input_dir, exist_ok=True)
+    must not re-emit its pairs: both detectors track emitted B turns
+    in state within the watermark horizon. The batch operators dedup
+    globally via .distinct()."""
+    rows = [("c", 0, "A", 0), ("c", 1, "A", 5), ("c", 2, "B", 20)]
     # batch 0: both A's + the B; batch 1: the SAME B row redelivered
-    pdf.to_parquet(f"{input_dir}/part-0.parquet", index=False)
-    pdf.iloc[[2]].to_parquet(f"{input_dir}/part-1.parquet", index=False)
-    m = (
-        spark.readStream.schema(MATCHES_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-        .withWatermark("ts", "10 minutes")
+    got = _sequence_stream_pairs(spark, tmp_path, detector, [rows, rows[2:]])
+    assert [(a, b) for _, a, b in got] == exp
+
+
+def test_stream_sequence_latest_a_out_of_order_b(spark, tmp_path):
+    """Latest-A keeps its A list across batches: A@10s and A@20s in
+    batch 0, then B@15s in batch 1 pairs with A@10s, the latest A
+    preceding it (the batch oracle's answer)."""
+    got = _sequence_stream_pairs(
+        spark, tmp_path, stream_sequence_detect,
+        [[("c", 0, "A", 10), ("c", 1, "A", 20)], [("c", 2, "B", 15)]],
     )
-    seq = stream_sequence_detect_all(m, "A", "B", within_ms=60_000)
-    q = (
-        seq.writeStream.format("parquet")
-        .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    assert got == [("c", 0, 2)]
+
+
+def test_stream_sequence_every_a_late_a_never_pairs(spark, tmp_path):
+    """Every-A's arrival-order contract: B@15s in batch 0, then A@10s
+    in batch 1 emits nothing, though the batch oracle pairs them; a B
+    is not kept for A's that arrive after it."""
+    got = _sequence_stream_pairs(
+        spark, tmp_path, stream_sequence_detect_all,
+        [[("c", 1, "B", 15)], [("c", 0, "A", 10)]],
     )
-    q.awaitTermination(300)
-    got = spark.read.parquet(str(tmp_path / "out")).toPandas()
-    # exactly the two (A, B) pairs, each ONCE despite the B replay
-    assert sorted(
-        map(tuple, got[["a_turn_idx", "b_turn_idx"]].values)
-    ) == [(0, 2), (1, 2)]
+    assert got == []
 
 
 def test_stream_sequence_all_cap(spark, tmp_path):
     """The max_as hard cap keeps only the NEWEST A's: 5 planted A's with
     max_as=3 -> the B pairs with the last 3 only (explicit-recall-loss
     contract for pathological conversations)."""
-    import pandas as pd
-    from logeventprocessor_spark.schema import MATCHES_SCHEMA
-    from logeventprocessor_spark.streaming.pipeline import (
-        stream_sequence_detect_all,
-    )
-
-    base = pd.Timestamp("2024-03-01 10:00:00")
-    rows = [("c", i, "A", base + pd.Timedelta(seconds=i)) for i in range(5)]
-    rows.append(("c", 9, "B", base + pd.Timedelta(seconds=30)))
-    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "rule_id", "ts"])
-    pdf["rule_idx"] = 0
-    pdf["extracted"] = ""
-    pdf["text"] = "t"
-    pdf = pdf[[f.name for f in MATCHES_SCHEMA.fields]]
-    pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-    pdf["rule_idx"] = pdf["rule_idx"].astype("int32")
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    input_dir = str(tmp_path / "in")
-    import os
-
-    os.makedirs(input_dir, exist_ok=True)
+    a_rows = [("c", i, "A", i) for i in range(5)]
     # A's arrive in batch 0 (cap applies at state write), B in batch 1
-    pdf.iloc[:5].to_parquet(f"{input_dir}/part-0.parquet", index=False)
-    pdf.iloc[5:].to_parquet(f"{input_dir}/part-1.parquet", index=False)
-    m = (
-        spark.readStream.schema(MATCHES_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-        .withWatermark("ts", "10 minutes")
+    got = _sequence_stream_pairs(
+        spark, tmp_path, stream_sequence_detect_all,
+        [a_rows, [("c", 9, "B", 30)]], max_as=3,
     )
-    seq = stream_sequence_detect_all(m, "A", "B", within_ms=60_000, max_as=3)
-    q = (
-        seq.writeStream.format("parquet")
-        .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.read.parquet(str(tmp_path / "out")).toPandas()
-    assert sorted(got["a_turn_idx"]) == [2, 3, 4]
+    assert [a for _, a, _ in got] == [2, 3, 4]
 
 
 def test_context_join_pipeline_end_to_end(spark, fixture_dirs, tmp_path):
