@@ -32,7 +32,7 @@ checkable by the driver's DuckDB comparison:
 
 Files are content-versioned by name (bump ``_V`` when generation
 logic changes; the near-dup pairs and SimHash signatures also carry
-``GRAM_TAG``) and
+``GRAM_TAG``, and the pairs ``PAIR_RULE``) and
 written at most once; everything derives from seed 42 plus the
 driver's own parquet, so bytes are reproducible.
 Writes are atomic and concurrency-safe: per-process tmp names
@@ -72,6 +72,10 @@ _V = "v3"
 # regexp_extract_all over whitespace-normalised text, which replaced the
 # interpreted transform chain whose pairs the untagged name still holds.
 GRAM_TAG = "ws3"
+# The keep rule of the stored near-dup pairs, part of their name only.
+# "j1": the unrounded Jaccard ratio >= threshold, the DuckDB oracle's
+# rule; names without it hold pairs kept by round(J, 6) >= threshold.
+PAIR_RULE = "j1"
 TRANSCRIPTS_N_CONVS = 40
 MEDIA_N = 60
 # sf dir the driver's oracle comparison runs at. The oracle SQL strings
@@ -209,7 +213,9 @@ def ngram_pairs_path(sf_dir: str, threshold: float = 0.6) -> str:
     # materialized at another one (round-6 advice #2). The default
     # threshold adds no suffix.
     t = "" if threshold == 0.6 else f"_t{threshold}"
-    return os.path.join(FIXTURES_ROOT, f"ngram_pairs_{_V}_{GRAM_TAG}_{key}{t}")
+    return os.path.join(
+        FIXTURES_ROOT, f"ngram_pairs_{_V}_{GRAM_TAG}_{PAIR_RULE}_{key}{t}"
+    )
 
 
 def ngram_pairs_fixture(spark, sf_dir: str, threshold: float = 0.6) -> str:

@@ -5,7 +5,8 @@ JVM-side and the candidate set shrinks BEFORE any quadratic work:
 
 * exact           -- hash-groupBy on a normalized fingerprint
 * n-gram Jaccard  -- shingle explode -> candidate pairs sharing a
-                     shingle -> exact Jaccard (inverted-index join, no
+                     prefix shingle, kept by PPJoin's positional
+                     filter -> exact Jaccard (inverted-index join, no
                      full cross product)
 * MinHash + LSH   -- k minhashes per doc via ONE groupBy with k
                      xxhash64-min aggregates; banding -> bucket join
@@ -295,28 +296,44 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Near-dup pairs by exact n-gram Jaccard >= threshold.
 
-    Candidate generation uses EXACT prefix filtering (Chaudhuri et al.,
-    SSJoin): order every doc's shingles by global document frequency
-    (rarest first); two docs with J >= t MUST share a shingle among
-    each one's first floor((1-t)*|S|)+1 shingles -- so the inverted-
-    index self-join runs only on those prefixes. This removes the
-    hot high-frequency shingle groups (the n^2 blowup) without losing
-    a single qualifying pair; the full intersection count then runs
-    only on surviving candidates.
+    Only docs sharing a shingle become candidates, so a pair with no
+    shared shingle is never emitted: ``threshold=0`` returns every pair
+    that shares one, with its Jaccard.
+
+    Candidates come from PPJoin's prefix, positional and length filters
+    (Xiao et al., WWW'08) over one global shingle order: document
+    frequency, then the shingle (rarest first). Let the first shared
+    shingle of a pair sit at 1-based ranks ``rk_a`` and ``rk_b``. Every
+    shared shingle ranks at or after it in both docs, so
+    ``n_inter <= ub = 1 + min(n_a - rk_a, n_b - rk_b)``. Each filter is
+    the verify's comparison with ``n_inter`` replaced by such a bound:
+
+    * prefix, per doc shingle: ``(n - rk + 1) / n >= t``, as
+      ``n_inter <= n_a - rk_a + 1`` and the union holds at least
+      ``n_a`` shingles. In exact arithmetic these are the classic first
+      ``floor((1 - t) * n) + 1`` shingles;
+    * positional, on each joined row of a shared prefix shingle:
+      ``ub / (n_a + n_b - ub) >= t``. The first shared shingle's row
+      passes, so the test is exact row by row. It implies the length
+      filter ``min(n_a, n_b) / max(n_a, n_b) >= t``, as
+      ``ub <= min(n_a, n_b)``.
+
+    Each bound is at least ``n_inter / (n_a + n_b - n_inter)`` in exact
+    arithmetic, and a correctly rounded double division keeps that
+    order, so a filter can keep extra candidates but never drops a pair
+    the verify keeps; no slack is needed.
     """
-    # localCheckpoint (not .cache()): materializes once, truncates the
-    # lineage so the downstream uses read the stored blocks, and the
-    # blocks are released by the ContextCleaner when the plan is GC'd.
-    # (.persist() was A/B-measured for this frame and REJECTED: the
-    # columnar InMemoryRelation encode/decode tripled exec time --
-    # 1.05 -> 2.96 s at sf0.1 local[32].) The ARRAY form is the stored
-    # unit: the interpreted shingling runs once per doc, then exploded
-    # rows / per-doc sizes / the verify's intersection all derive from
-    # the stored arrays.
+    # The ARRAY form is the stored unit: the shingling runs once per
+    # doc, then the exploded rows, their sizes and the verify's
+    # intersection all read the stored arrays. (.persist() was measured
+    # for this frame and rejected: the columnar encode/decode tripled
+    # exec time, 1.05 -> 2.96 s at sf0.1 local[32].)
     arr = shingle_arrays(df, id_col, text_col, n).localCheckpoint(eager=False)
-    sh = arr.select("doc_id", F.explode("sh_arr").alias("shingle"))
-    sizes = arr.select("doc_id", F.size("sh_arr").alias("n_sh"))
+    sh = arr.select(
+        "doc_id", F.size("sh_arr").alias("n_sh"), F.explode("sh_arr").alias("shingle")
+    )
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    rk, n_sh = F.col("rk"), F.col("n_sh")
     ranked = (
         sh.join(dfreq, "shingle")
         .withColumn(
@@ -325,29 +342,31 @@ def ngram_jaccard_pairs(
                 Window.partitionBy("doc_id").orderBy("df", "shingle")
             ),
         )
-        .join(sizes, "doc_id")
-        .filter(
-            F.col("rk")
-            <= F.floor((1 - threshold) * F.col("n_sh")).cast("int") + 1
-        )
+        .filter(((n_sh - rk + 1) / n_sh) >= threshold)
         # a prefix shingle with df == 1 exists in exactly one doc:
         # it cannot produce a candidate pair, so drop it from BOTH
         # sides of the self-join (ranks were assigned on the full
-        # prefix first, so pruning here cannot promote a non-prefix
-        # shingle). On word-salad corpora most shingles are unique
-        # -- this removes the bulk of the inverted-index volume.
+        # shingle order first, so the bounds above stay exact). On
+        # word-salad corpora most shingles are unique.
         .filter(F.col("df") >= 2)
-        .select("doc_id", "shingle")
-        # the self-join below reads BOTH sides from this subtree;
-        # un-materialized, Spark evaluates the dfreq-join + window
-        # lineage twice (no common-subexpression sharing across
-        # join branches -- guide §2.4)
+        .select("doc_id", "shingle", "n_sh", "rk")
+        # the self-join reads both sides from this frame. With AQE on,
+        # localCheckpoint runs the frame's shuffle stages (dfreq, the
+        # join, the window) when it is called; only the last stage waits
+        # for the first action that reads the frame.
         .localCheckpoint(eager=False)
     )
     a, b = ranked.alias("a"), ranked.alias("b")
+    ub = 1 + F.least(
+        F.col("a.n_sh") - F.col("a.rk"), F.col("b.n_sh") - F.col("b.rk")
+    )
     cand = (
-        a.join(b, "shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
+            & (ub / (F.col("a.n_sh") + F.col("b.n_sh") - ub) >= threshold),
+        )
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -375,11 +394,16 @@ def _jaccard_verify(cand: DataFrame, arr: DataFrame, threshold: float) -> DataFr
     The id-pair set is small BY CONSTRUCTION (LSH/prefix pruning), so
     the first join broadcasts it and the array table streams with NO
     shuffle -- without the hint, AQE sometimes picks a sort-merge join
-    that shuffles the full table (observed 3-10x wall-clock swings)."""
+    that shuffles the full table (observed 3-10x wall-clock swings).
+
+    A pair is kept when the unrounded double ``n_inter / (n_a + n_b -
+    n_inter)`` is at least ``threshold``, the DuckDB oracle's rule;
+    only the emitted ``jaccard`` is rounded, to 6 places."""
     a_ = arr.select(F.col("doc_id").alias("doc_a"), F.col("sh_arr").alias("_a"))
     b_ = arr.select(F.col("doc_id").alias("doc_b"), F.col("sh_arr").alias("_b"))
     pairs = a_.join(F.broadcast(cand), "doc_a").join(b_, "doc_b")
     n_inter = F.size(F.array_intersect("_a", "_b"))
+    jaccard = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
     return (
         pairs.select(
             "doc_a",
@@ -388,16 +412,8 @@ def _jaccard_verify(cand: DataFrame, arr: DataFrame, threshold: float) -> DataFr
             F.size("_a").alias("n_a"),
             F.size("_b").alias("n_b"),
         )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+        .filter(jaccard >= threshold)
+        .select("doc_a", "doc_b", F.round(jaccard, 6).alias("jaccard"))
     )
 
 

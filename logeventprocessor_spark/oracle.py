@@ -287,6 +287,51 @@ def oracle_tokens(text: str | None) -> list[str] | None:
     return _JAVA_WS.sub(" ", text).strip(" ").lower().split(" ")
 
 
+def oracle_jaccard_pairs(
+    texts: dict[int, str | None], threshold: float, n: int = 3
+) -> dict[tuple[int, int], float]:
+    """All-pairs brute force of ``dedup.ngram_jaccard_pairs``:
+    ``{(a, b): round(J, 6)}`` for every ``a < b`` whose word ``n``-gram
+    sets (over ``oracle_tokens``) share a gram and whose unrounded
+    ``J = |A & B| / |A | B|`` is at least ``threshold``. A text with
+    fewer than ``n`` tokens has no grams."""
+    sets = {}
+    for i, t in texts.items():
+        toks = oracle_tokens(t)
+        if toks is not None and len(toks) >= n:
+            sets[i] = {" ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)}
+    ids = sorted(sets)
+    out = {}
+    for x, a in enumerate(ids):
+        for b in ids[x + 1:]:
+            inter = len(sets[a] & sets[b])
+            jac = inter / (len(sets[a]) + len(sets[b]) - inter)
+            if inter and jac >= threshold:
+                out[(a, b)] = round(jac, 6)
+    return out
+
+
+def oracle_components(pairs, vertices=()) -> dict[int, int]:
+    """Union-find twin of ``components.connected_components``: every
+    pair endpoint and every id in ``vertices`` mapped to the least id
+    of its connected component."""
+    parent: dict[int, int] = {}
+
+    def find(v: int) -> int:
+        parent.setdefault(v, v)
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for v in vertices:
+        find(v)
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
 def oracle_simhash64(text: str) -> int:
     """64-bit xxhash SimHash of one document -- the independent twin of
     ``operators.dedup.simhash`` (same tokenization, same per-bit

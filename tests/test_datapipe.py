@@ -110,6 +110,97 @@ def test_jaccard_matches_python(spark, docs):
         assert abs(r.jaccard - exp) < 1e-6
 
 
+# one corpus holding a pair at J == t for each threshold of
+# test_ngram_jaccard_pairs_equals_brute_force: 2/5, 1/2, 3/5, 2/3, 4/5, 1
+JACCARD_BOUNDARY_DOCS = [
+    "a1 a2 a3 a4 a5", "a1 a2 a3 a4 a6 a7",        # 2 of 5 grams
+    "b1 b2 b3", "b1 b2 b3 b4",                    # 1 of 2
+    "c1 c2 c3 c4 c5", "c1 c2 c3 c4 c5 c6 c7",     # 3 of 5
+    "d1 d2 d3 d4", "d1 d2 d3 d4 d5",              # 2 of 3
+    "e1 e2 e3 e4 e5 e6", "e1 e2 e3 e4 e5 e6 e7",  # 4 of 5
+    "f1 f2 f3 f1 f2 f3", "f1 f2 f3 f1 f2",        # 3 of 3, repeats once
+]
+JACCARD_THRESHOLDS = (0.4, 0.5, 0.6, 2 / 3, 0.8, 1.0)
+
+
+def test_ngram_jaccard_pairs_equals_brute_force(spark):
+    """Property: over corpora drawn from a 3-6 word vocabulary, where
+    almost every pair shares shingles and document frequencies tie,
+    ``ngram_jaccard_pairs`` returns the pair set and the ``jaccard``
+    values of ``oracle_jaccard_pairs`` at every threshold, pairs at
+    exactly J == t included. Each example's words carry its own
+    prefix, so the examples share no shingle and run as one frame per
+    threshold."""
+    from hypothesis import example, given, settings
+    from hypothesis import strategies as st
+
+    from logeventprocessor_spark.oracle import oracle_jaccard_pairs
+
+    corpora: list[list[str]] = []
+    corpus = st.integers(3, 6).flatmap(
+        lambda k: st.lists(
+            st.lists(st.sampled_from("abcdef"[:k]), min_size=3, max_size=20)
+            .map(" ".join),
+            min_size=2,
+            max_size=8,
+        )
+    )
+
+    @settings(max_examples=100, deadline=None, derandomize=True)
+    @given(corpus)
+    @example(JACCARD_BOUNDARY_DOCS)
+    def draw(texts):
+        corpora.append(texts)
+
+    draw()
+    texts = {
+        i: " ".join(f"{c}{w}" for w in t.split())
+        for i, (c, t) in enumerate(
+            (c, t) for c, ts in enumerate(corpora) for t in ts
+        )
+    }
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    for t in JACCARD_THRESHOLDS:
+        got = {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in D.ngram_jaccard_pairs(df, threshold=t).collect()
+        }
+        assert got == oracle_jaccard_pairs(texts, t), t
+    boundary = oracle_jaccard_pairs(
+        {i: t for i, t in enumerate(JACCARD_BOUNDARY_DOCS)}, 0.0
+    )
+    assert [boundary[(i, i + 1)] for i in range(0, 12, 2)] == [
+        round(t, 6) for t in JACCARD_THRESHOLDS
+    ]
+
+
+def test_jaccard_keeps_by_the_unrounded_ratio(spark):
+    """J = 2/3 rounds to 0.666667, above a threshold of 0.6666668, but
+    the ratio itself is below it: the DuckDB oracle's rule drops the
+    pair, and so do both operators. MinHash with one row per band makes
+    the pair a candidate, so its verify alone decides."""
+    df = spark.createDataFrame(
+        [(0, "a b c d"), (1, "a b c d e")], "doc_id long, text string"
+    )
+    for pairs in (
+        D.ngram_jaccard_pairs,
+        lambda df, threshold: D.minhash_lsh_pairs(df, bands=32, threshold=threshold),
+    ):
+        assert pairs(df, threshold=0.6666668).count() == 0
+        kept = pairs(df, threshold=2 / 3).collect()
+        assert [tuple(r) for r in kept] == [(0, 1, 0.666667)]
+
+
+def test_pair_fixture_path_names_the_keep_rule(monkeypatch):
+    """Pairs stored under another keep rule are never served: a changed
+    ``PAIR_RULE`` names a new fixture path."""
+    from logeventprocessor_spark import fixtures as FX
+
+    old = FX.ngram_pairs_path("/data/sf0.1")
+    monkeypatch.setattr(FX, "PAIR_RULE", "next")
+    assert FX.ngram_pairs_path("/data/sf0.1") != old
+
+
 def test_minhash_lsh_finds_near_dups(spark, docs):
     got = D.minhash_lsh_pairs(docs, k=16, bands=8, threshold=0.4).toPandas()
     pairs = set(map(tuple, got[["doc_a", "doc_b"]].values))
@@ -965,6 +1056,88 @@ def test_connected_components_long_chain_log_rounds(spark):
         for r in connected_components(pairs, max_iter=8).collect()
     }
     assert got == {i: 0 for i in range(60)}
+
+
+def _component_graphs(rng):
+    """One generated graph: (pairs, isolated ids) over local ids, as a
+    path of up to 64 vertices, a star, a clique or random edges, with
+    duplicate, reversed and self pairs mixed in."""
+    n = rng.randint(1, 64)
+    ids = rng.sample(range(100), n)
+    shape = rng.choice(["path", "star", "clique", "random"])
+    if shape == "path":
+        pairs = list(zip(ids, ids[1:]))
+    elif shape == "star":
+        pairs = [(ids[0], v) for v in ids[1:]]
+    elif shape == "clique":
+        pairs = [(a, b) for i, a in enumerate(ids[:9]) for b in ids[i + 1:9]]
+    else:
+        pairs = [tuple(rng.sample(ids, 2)) for _ in range(n // 2)] if n > 1 else []
+    pairs += [(b, a) for a, b in rng.sample(pairs, len(pairs) // 4)]
+    pairs += rng.sample(pairs, len(pairs) // 4)
+    pairs += [(v, v) for v in rng.sample(ids, n // 8)]
+    touched = {v for p in pairs for v in p}
+    return pairs, [v for v in ids if v not in touched] + [100 + rng.randint(0, 5)]
+
+
+def test_connected_components_equals_union_find(spark):
+    """Differential: ``connected_components`` labels every vertex with
+    its component's least id, as ``oracle_components`` does, over many
+    generated graphs run as one disjoint union: paths up to 64 vertices
+    (the min id anywhere on them), stars, cliques, random edges,
+    duplicate, reversed and self pairs, isolated and negative ids. With
+    ``vertices`` the isolated ids come out as singletons; without it
+    only pair endpoints are labelled."""
+    import random
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from logeventprocessor_spark.operators.components import (
+        connected_components,
+    )
+    from logeventprocessor_spark.oracle import oracle_components
+
+    graphs: list = []
+
+    @settings(max_examples=60, deadline=None, derandomize=True)
+    @given(st.randoms(use_true_random=False))
+    def draw(rng):
+        graphs.append(_component_graphs(rng))
+
+    draw()
+    # the worst case, pinned: a 64-vertex path whose ids fall along it
+    graphs.append((list(zip(range(63, 0, -1), range(62, -1, -1))), []))
+    pairs, isolated = [], []
+    for g, (ps, iso) in enumerate(graphs):
+        # a disjoint id range per graph, every other one negative
+        def gid(v, g=g):
+            return 1000 * g + v if g % 2 else -(1000 * g + v) - 1
+
+        pairs += [(gid(a), gid(b)) for a, b in ps]
+        isolated += [gid(v) for v in iso]
+    pdf = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    ends = {v for p in pairs for v in p}
+    vdf = spark.createDataFrame(
+        [(v,) for v in sorted(ends | set(isolated))], "doc_id long"
+    )
+    for vertices, ids in ((None, ()), (vdf, isolated)):
+        got = {r.id: r.comp for r in connected_components(pdf, vertices).collect()}
+        assert got == oracle_components(pairs, ids)
+
+
+def test_connected_components_raises_when_not_converged(spark):
+    """A long path cannot settle in one round: the operator raises
+    rather than return partial components."""
+    from logeventprocessor_spark.operators.components import (
+        connected_components,
+    )
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(16)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 1 "):
+        connected_components(pairs, max_iter=1)
 
 
 def test_cap_docs_per_domain_matches_naive_window(spark):
