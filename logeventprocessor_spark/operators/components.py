@@ -27,9 +27,10 @@ Each round then runs ONE edge exchange, a groupBy on the message target:
 
 Labels only shrink, and each stays the id of a vertex in its own
 component no greater than its vertex's id. Without the hook, a path
-whose ids do not fall along it needs O(diameter) rounds: in a scratch
-replay, 37 rounds for a 64-vertex path and 652 for a 1024-vertex one,
-against 9 and 14 with it (worst of five random id orders each). That
+whose ids do not fall along it needs O(diameter) rounds: a Python
+replay of the rounds took 37 for a 64-vertex path and 652 for a
+1024-vertex one, against 9 and 14 with it (worst of five random id
+orders each). That
 is the O(log n) behaviour of the large-star/small-star scheme of
 Kiveris et al., "Connected Components in MapReduce and Beyond"
 (SoCC'14), which GraphFrames implements.
@@ -79,7 +80,7 @@ def connected_components(
     Raises after ``max_iter`` non-converged rounds rather than
     returning silently-partial components (a wrong canonical id drops
     the WRONG document downstream). Rounds grow with the log of the
-    component size (16 for a random-order 4096-vertex path), so the
+    component size (15 for a random-order 4096-vertex path), so the
     default 25 leaves wide headroom.
     """
     s = F.col(src_col).cast("long")
@@ -151,10 +152,11 @@ def _without_size_estimate(df: DataFrame) -> DataFrame:
     a frame made from an RDD is. A checkpoint keeps the size estimate of
     the plan it stored, and an inner join estimates the product of its
     inputs' sizes. A round joins three copies of the previous labels,
-    so the estimate's digits would triple each round: planning took
-    20 s at round 11 of a 1024-vertex path, against 0.5 s this way.
-    From round 2 on the estimate is past any broadcast threshold
-    either way, so no plan choice changes."""
+    so the estimate's digits would triple each round: on a 1024-vertex
+    path (``local[4]``), round 11 took 20 s, nearly all of it size
+    estimation, against 0.5 s this way. From round 2 on the estimate
+    is past any broadcast threshold either way, so no plan choice
+    changes."""
     spark = df.sparkSession
     rows = spark._jsparkSession.createDataFrame(df._jdf.javaRDD(), df._jdf.schema())
     return DataFrame(rows, spark)

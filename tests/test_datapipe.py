@@ -153,12 +153,11 @@ def test_ngram_jaccard_pairs_equals_brute_force(spark):
         corpora.append(texts)
 
     draw()
-    texts = {
-        i: " ".join(f"{c}{w}" for w in t.split())
-        for i, (c, t) in enumerate(
-            (c, t) for c, ts in enumerate(corpora) for t in ts
-        )
-    }
+    texts = dict(enumerate(
+        " ".join(f"{c}{w}" for w in t.split())
+        for c, ts in enumerate(corpora)
+        for t in ts
+    ))
     df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
     for t in JACCARD_THRESHOLDS:
         got = {
@@ -1088,8 +1087,6 @@ def test_connected_components_equals_union_find(spark):
     duplicate, reversed and self pairs, isolated and negative ids. With
     ``vertices`` the isolated ids come out as singletons; without it
     only pair endpoints are labelled."""
-    import random
-
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
