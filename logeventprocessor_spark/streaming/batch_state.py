@@ -96,7 +96,7 @@ class CooldownSnapshotState:
     ``RETENTION`` generations).
 
     The rule set is an argument of every ``gate``/``advance`` call, not
-    state of this object: ``start_pipeline`` resolves ONE rule set per
+    state of this object: ``run_micro_batch`` resolves ONE rule set per
     micro-batch (a list, or a rules file re-read per batch) and hands
     the same list to match, gate, step rendering and advance. Eviction
     policy under a changing rule set: a snapshot key is evicted by the
@@ -180,7 +180,12 @@ class CooldownSnapshotState:
         here; cold-rule rows are never late-filtered in either backend
         (they bypass state entirely). The snapshot watermark can lag
         the store backend's by < cooldown (it derives from KEPT fires),
-        which is conservative -- it only ever drops a subset."""
+        which is conservative -- it only ever drops a subset.
+
+        Arrival-order contract: each key's scan is seeded by its last
+        kept fire from the earlier batches, so a fire event-time-earlier
+        than it has a negative gap and is suppressed, though
+        ``oracle.oracle_matches`` keeps it (``run_micro_batch``)."""
         hot_ids = list(hot_cooldowns(rules))
         if not hot_ids:
             return matches
@@ -202,17 +207,17 @@ class CooldownSnapshotState:
         return apply_cooldown(matches, rules, prior=pri)
 
     def advance(
-        self, gated: DataFrame, batch_id: int, rules: list[Rule], max_ts=None
+        self, gated: DataFrame, batch_id: int, rules: list[Rule], max_ts
     ) -> None:
         """Commit snapshot N = prior keys max-merged with this batch's
         kept fires, evicted at the advanced watermark under this batch's
         ``rules`` (class docstring). ``gated`` should be persisted by
         the caller (it also feeds the sink write).
 
-        ``max_ts``: the batch's max HOT-rule event time, ideally
-        harvested for free from the sink-write job via ``Observation``
-        (see ``start_pipeline``) -- passing None falls back to an extra
-        agg job over ``gated``'s hot rows. Cold rows never advance the
+        ``max_ts``: the max event time of ``gated``'s HOT-rule rows,
+        observed by the sink-write job (``run_micro_batch``); None means
+        there are none, and without a prior snapshot only ``meta.json``
+        is committed, with no Spark job. Cold rows never advance the
         watermark, as on the store backend, whose ``withWatermark`` sits
         on the hot match stream. Using gated (not raw) matches for the
         watermark is sound: a suppressed fire's later ts would only
@@ -224,12 +229,6 @@ class CooldownSnapshotState:
         prior_df, prior_wm = self._prior_cached(batch_id)
         if not cooldowns and prior_df is None:
             return  # no keys to keep and none to evict
-        if max_ts is None and cooldowns:
-            max_ts = (
-                gated.filter(F.col("rule_id").isin(list(cooldowns)))
-                .agg(F.max("ts"))
-                .collect()[0][0]
-            )
         wm_ns = prior_wm
         if max_ts is not None:
             wm_ns = max(
@@ -238,7 +237,7 @@ class CooldownSnapshotState:
             )
         snap = self._snap_dir(batch_id)
         data = os.path.join(snap, "data")
-        if cooldowns:
+        if cooldowns and (max_ts is not None or prior_df is not None):
             # greedy invariant: the last KEPT fire of a key IS its last fire
             fires = (
                 gated.filter(F.col("rule_id").isin(list(cooldowns)))
@@ -271,8 +270,9 @@ class CooldownSnapshotState:
                 *[F.col(f.name).cast(f.dataType) for f in SNAPSHOT_SCHEMA]
             ).write.mode("overwrite").parquet(data)
         else:
-            # no rule has a cooldown in this batch: every key is evicted
-            # (a data-less snapshot reads back as "no prior")
+            # no key to keep (no rule has a cooldown in this batch, or
+            # no hot fire and no prior): a data-less snapshot reads back
+            # as "no prior"
             shutil.rmtree(data, ignore_errors=True)
         os.makedirs(snap, exist_ok=True)
         tmp = f"{self._meta_path(batch_id)}.tmp.{os.getpid()}"

@@ -12,12 +12,13 @@ Two entry points wire the whole query, one per cooldown backend:
       -> filter(ts >= late_cutoff)          # F6: reference's startup-time
                                             # late-data rejection
                                             # (ActionSender.cpp:660-677)
-      -> foreachBatch(process)
+      -> foreachBatch(run_micro_batch)
 
-  and ``process`` resolves ONE rule set per micro-batch on the driver,
-  then runs match (M1/M2) -> cooldown gate (T1, seeded by a parquet
-  snapshot, streaming/batch_state.py) -> steps + render (T3/T4/M3) ->
-  ParquetUpsertSink (T2 + T6/K1) -> snapshot advance on that one list.
+  and ``run_micro_batch`` resolves ONE rule set per micro-batch on the
+  driver, then runs match (M1/M2) -> cooldown gate (T1, seeded by a
+  parquet snapshot, streaming/batch_state.py) -> steps + render
+  (T3/T4/M3) -> ParquetUpsertSink (T2 + T6/K1) -> snapshot advance on
+  that one list.
 
 * ``build_match_stream`` (``start_pipeline(cooldown_backend="state")``)
   -- the store-native backend: match -> withWatermark ->
@@ -44,9 +45,12 @@ context, where the enrichment comes from another turn or stream.
 
 from __future__ import annotations
 
+import functools
+import os
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
@@ -62,6 +66,10 @@ from logeventprocessor_spark.operators.sequence import sequence_step
 from logeventprocessor_spark.operators.steps import expand_steps
 from logeventprocessor_spark.rules import Rule, load_rules_yaml
 from logeventprocessor_spark.schema import MATCHES_SCHEMA, TRANSCRIPTS_SCHEMA
+from logeventprocessor_spark.streaming.batch_state import (
+    CooldownSnapshotState,
+    delay_to_ms,
+)
 from logeventprocessor_spark.streaming.sink import ParquetUpsertSink
 
 COOLDOWN_STATE_SCHEMA = T.StructType(
@@ -405,6 +413,86 @@ def _ack_rows(actions: DataFrame, ack_types: list[str]) -> DataFrame:
     )
 
 
+def run_micro_batch(
+    df: DataFrame, batch_id: int, *, rules: list[Rule] | str,
+    sink: ParquetUpsertSink, cool: CooldownSnapshotState,
+    carry: tuple[str, ...] = (), ack_types: list[str] | None = None,
+) -> None:
+    """The snapshot backend's body for one micro-batch of turns
+    (TRANSCRIPTS_SCHEMA, a streaming batch or a static frame).
+
+    Resolves ONE rule set on the driver (the list, or
+    ``load_rules_yaml(rules)``) and runs match (``carry`` columns ride
+    through the Arrow boundary) -> ``cool.gate`` -> ``expand_steps`` ->
+    ``sink.write`` (+ the ``acks`` table for ``ack_types``) ->
+    ``cool.advance`` on it. So no batch mixes two rule versions, and a
+    rule edit takes effect at the next batch while every key's
+    cooldown history survives it (the reference swaps the rule set
+    between events, main.cpp:185-241, and its cooldown map outlives
+    the swap, ActionManager.h:148-150). A replay of ``batch_id``
+    rewrites the same sink and snapshot directories.
+
+    Arrival-order contract: a key's fires are gated in batch order
+    across micro-batches and in ``(ts, turn_idx)`` order within one. A
+    hot-rule fire event-time-earlier than its key's kept fire from an
+    earlier batch has a negative gap and is suppressed: under a 60 s
+    cooldown, fire@100s in batch 0 then fire@0s in batch 1 sinks only
+    the 100 s turn, where ``oracle.oracle_matches`` keeps both.
+    Hot-rule rows behind the snapshot watermark are dropped; cold-rule
+    rows never are."""
+    # ONE cache (the gated matches) and two phases that run jobs: (1)
+    # the sink write, which also populates the cache and computes the
+    # watermark's max event time for free via Observation; (2) advance,
+    # the fires agg + snapshot write. Jobs per batch, counted from
+    # status-store job ids around each phase of perfbench's stream_join
+    # input (local[4], AQE on): 5 without a prior snapshot (write 3,
+    # advance 2) and 7 with one (write 4, with the prior's broadcast;
+    # advance 3). Reading the prior runs none, and neither does an
+    # advance with no hot-rule row and no prior. Caching the raw
+    # matches too, with a separate max-ts job, measured ~3.7 s of fixed
+    # per-batch work (BENCH/BASELINE.md).
+    #
+    # Context (role/tool) rides THROUGH the gate and the step expansion
+    # as pass-through columns (apply_cooldown's output schema mirrors
+    # its input; expand_steps appends extra_cols): splitting it off and
+    # re-joining it after expansion cost a persist, an exchange+agg and
+    # a join per micro-batch for values the rows already carry.
+    batch_rules = load_rules_yaml(rules) if isinstance(rules, str) else rules
+    matches = match_turns(
+        df, [r for r in batch_rules if r.enabled], carry_cols=carry
+    )
+    gated = cool.gate(matches, batch_id, batch_rules).persist()
+    try:
+        obs = Observation(f"wm_{batch_id}")
+        # watermark source = HOT-rule event time only, matching the
+        # store backend (its withWatermark sits on the hot match
+        # stream; cold rows must not advance eviction)
+        hot_ids = list(hot_cooldowns(batch_rules))
+        wm_src = F.when(F.col("rule_id").isin(hot_ids), F.col("ts"))
+        out = expand_steps(
+            gated.observe(obs, F.max(wm_src).alias("max_ts")),
+            batch_rules,
+            extra_cols=carry,
+        )
+        sink.write(out, batch_id)
+        if ack_types:
+            sink.write_table("acks", _ack_rows(out, ack_types), batch_id)
+        cool.advance(gated, batch_id, batch_rules, obs.get["max_ts"])
+    finally:
+        gated.unpersist()
+
+
+def _write_with_acks(df: DataFrame, batch_id: int, *, sink, ack_types) -> None:
+    """The ``'state'`` backend's sink step when ``ack_types`` is set:
+    the action rows, then their ``acks`` rows, from one cached frame."""
+    df = df.persist()
+    try:
+        sink.write(df, batch_id)
+        sink.write_table("acks", _ack_rows(df, ack_types), batch_id)
+    finally:
+        df.unpersist()
+
+
 def start_pipeline(
     spark: SparkSession,
     input_dir: str,
@@ -416,7 +504,6 @@ def start_pipeline(
     available_now: bool = True,
     max_files_per_trigger: int | None = 1,
     ack_types: list[str] | None = None,
-    state_store: str | None = None,
     cooldown_backend: str = "snapshot",
     with_context_join: bool = False,
     context_mode: str = "join",
@@ -427,20 +514,12 @@ def start_pipeline(
 
     ``rules``: the rule list, or the path of a rules YAML file for T8
     hot reload (snapshot backend only; any other backend raises
-    ``ValueError``). ``foreachBatch`` resolves ONE rule set per
-    micro-batch on the driver -- the list itself, or
-    ``load_rules_yaml(path)`` -- and runs match, cooldown gate, step
-    rendering, sink and snapshot advance on that one list, so no
-    batch mixes two rule versions, and a rule edit takes effect at the
-    next batch without a restart while every key's cooldown history
-    survives it (the reference swaps the rule set between events,
-    main.cpp:185-241, and its cooldown map outlives the swap,
-    ActionManager.h:148-150). Publish edits with
-    ``rules.publish_rules`` so the driver never reads a half-written
-    file. The snapshot eviction policy under a changing rule set is
-    ``CooldownSnapshotState``'s. Checkpoints of the earlier
-    executor-side reload pipeline hold cooldown history in Spark's
-    state store, which this path does not read: start them fresh.
+    ``ValueError``), resolved once per micro-batch by
+    ``run_micro_batch``. Publish edits with ``rules.publish_rules`` so
+    the driver never reads a half-written file. Checkpoints of the
+    earlier executor-side reload pipeline hold cooldown history in
+    Spark's state store, which this path does not read: start them
+    fresh.
 
     ``pii_scrub``: redact PII at INGEST (``scrub_stream_text``) so no
     raw PII reaches rule extraction, rendered values, or the sink --
@@ -482,19 +561,12 @@ def start_pipeline(
     response, ActionSender.cpp:741-764) -- written to a second logical
     table inside the SAME micro-batch write (multi-table exactly-once).
 
-    ``state_store='rocksdb'``: spillable off-heap keyed state (the
-    10^12-turn backend -- HDFS-backed in-memory state cannot hold one
-    entry per active (conv_id, rule_id)). Session-level conf; keep it
-    constant for the lifetime of a checkpoint.
-
     ``cooldown_backend`` selects the T1 keyed-state realization (pinned
     identical by tests/test_streaming.py::test_cooldown_backends_agree):
 
-    * ``'snapshot'`` (default, the throughput path): the streaming DAG
-      is ``readStream -> (pii scrub) -> (late cutoff) -> foreachBatch``;
-      ONE match pass over all rules, then cooldown as a seeded batch
-      ``mapInArrow``, both inside ``foreachBatch``, with per-batch-id
-      parquet state snapshots (streaming/batch_state.py). Measured at
+    * ``'snapshot'`` (default, the throughput path): ``run_micro_batch``
+      (module header), whose cooldown is a seeded batch ``mapInArrow``
+      over per-batch-id parquet state snapshots. Measured at
       local[32] by a since-deleted probe (historical, see
       BENCH/BASELINE.md): applyInPandasWithState cost ~3-4 s FIXED per
       trigger at 32 partitions even with zero rows; this backend
@@ -502,7 +574,11 @@ def start_pipeline(
     * ``'state'``: the store-native form -- hot/cold rule split with
       ``applyInPandasWithState`` eviction timers (build_match_stream),
       the one keyed-state backend; both call the same ``greedy_keep``
-      kernel.
+      kernel. Its store provider is the session conf
+      ``spark.sql.streaming.stateStore.providerClass`` (RocksDB's
+      spills off-heap, for one entry per active (conv_id, rule_id) at
+      10^12-turn scale): set it before the first start and keep it for
+      the lifetime of the checkpoint.
 
     Any other ``cooldown_backend`` raises ``ValueError``.
     """
@@ -525,12 +601,6 @@ def start_pipeline(
             "with_context_join is implemented for the snapshot "
             "backend (use stream_join_context directly otherwise)"
         )
-    if state_store == "rocksdb":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
     stream = read_transcripts_stream(spark, input_dir, max_files_per_trigger)
     if pii_scrub:
         stream = scrub_stream_text(stream)
@@ -539,94 +609,25 @@ def start_pipeline(
     sink = ParquetUpsertSink(out_dir)
 
     if cooldown_backend == "snapshot":
-        import os as _os
-
-        from logeventprocessor_spark.streaming.batch_state import (
-            CooldownSnapshotState,
-            delay_to_ms,
-        )
-
         batches = stream
         cool = CooldownSnapshotState(
-            spark,
-            _os.path.join(out_dir, "cooldown_state"),
-            delay_to_ms(watermark),
+            spark, os.path.join(out_dir, "cooldown_state"), delay_to_ms(watermark)
         )
-        carry = ("role", "tool") if with_context_join else ()
-
-        def process(df: DataFrame, batch_id: int) -> None:
-            # ONE cache (the gated matches) and two phases that run
-            # jobs: (1) the sink write, which also populates the cache
-            # and computes the watermark's max event time for free via
-            # Observation; (2) advance, the fires agg + snapshot write.
-            # Jobs per batch, counted from status-store job ids around
-            # each phase of perfbench's stream_join input (local[4],
-            # AQE on): 5 without a prior snapshot (write 3, advance 2)
-            # and 7 with one (write 4, with the prior's broadcast;
-            # advance 3). Reading the prior runs none. A previous shape
-            # (cache raw matches AND gated, separate max-ts job)
-            # measured ~3.7 s of fixed per-batch work that capped
-            # streaming scaling (BENCH/BASELINE.md).
-            #
-            # Context (role/tool) rides THROUGH the gate and the step
-            # expansion as pass-through columns (apply_cooldown's
-            # output schema mirrors its input; expand_steps appends
-            # extra_cols) -- a previous shape split the context off,
-            # dropDuplicates'd it, and re-joined after expansion,
-            # costing a persist of the raw frame plus an extra
-            # exchange+agg and a join PER MICRO-BATCH for values the
-            # rows already carried.
-            from pyspark.sql import Observation
-
-            # the batch's ONE rule set: every step below sees it
-            batch_rules = (
-                load_rules_yaml(rules) if isinstance(rules, str) else rules
-            )
-            matches = match_turns(
-                df,
-                [r for r in batch_rules if r.enabled],
-                carry_cols=carry,
-            )
-            gated = cool.gate(matches, batch_id, batch_rules).persist()
-            try:
-                obs = Observation(f"wm_{batch_id}")
-                # watermark source = HOT-rule event time only, matching
-                # the store backend (its withWatermark sits on the hot
-                # match stream; cold rows must not advance eviction)
-                hot_ids = list(hot_cooldowns(batch_rules))
-                wm_src = F.when(
-                    F.col("rule_id").isin(hot_ids), F.col("ts")
-                )
-                out = expand_steps(
-                    gated.observe(obs, F.max(wm_src).alias("max_ts")),
-                    batch_rules,
-                    extra_cols=carry,
-                )
-                sink.write(out, batch_id)
-                if ack_types:
-                    sink.write_table(
-                        "acks", _ack_rows(out, ack_types), batch_id
-                    )
-                cool.advance(
-                    gated, batch_id, batch_rules, max_ts=obs.get["max_ts"]
-                )
-            finally:
-                gated.unpersist()
+        process = functools.partial(
+            run_micro_batch,
+            rules=rules,
+            sink=sink,
+            cool=cool,
+            carry=("role", "tool") if with_context_join else (),
+            ack_types=ack_types,
+        )
     else:
         batches = build_match_stream(stream, rules, watermark)
-
-        if ack_types:
-            def process(df: DataFrame, batch_id: int) -> None:
-                df = df.persist()
-                try:
-                    sink.write(df, batch_id)
-                    sink.write_table(
-                        "acks", _ack_rows(df, ack_types), batch_id
-                    )
-                finally:
-                    df.unpersist()
-        else:
-            process = sink.foreach_batch()
+        process = (
+            functools.partial(_write_with_acks, sink=sink, ack_types=ack_types)
+            if ack_types
+            else sink.write
+        )
 
     writer = (
         batches.writeStream.foreachBatch(process)

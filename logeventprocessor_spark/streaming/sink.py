@@ -100,9 +100,6 @@ class ParquetUpsertSink:
             spark, os.path.join(self.out_dir, "tables", name), key
         )
 
-    def foreach_batch(self):
-        return lambda df, bid: self.write(df, bid)
-
     def read(self, spark: SparkSession) -> DataFrame:
         """The logical output table: union of batches, deduplicated by
         the action key (keep the earliest batch's row -- they are

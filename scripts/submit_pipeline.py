@@ -33,7 +33,7 @@ def main():
     t0 = time.time()
     q, sink = start_pipeline(
         spark, input_dir, rules, out_dir, ckpt,
-        max_files_per_trigger=None, state_store="rocksdb",
+        max_files_per_trigger=None,
     )
     q.awaitTermination()
     rows = sink.read(spark).count()

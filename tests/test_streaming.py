@@ -23,13 +23,16 @@ from logeventprocessor_spark.oracle import (
 )
 from logeventprocessor_spark.pipeline import match_actions
 from logeventprocessor_spark.rules import canonical_rules
-from logeventprocessor_spark.schema import ACTION_KEY
+from logeventprocessor_spark.schema import ACTION_KEY, TRANSCRIPTS_SCHEMA
+from logeventprocessor_spark.streaming.batch_state import CooldownSnapshotState
 from logeventprocessor_spark.streaming.pipeline import (
     read_transcripts_stream,
+    run_micro_batch,
     start_pipeline,
     stream_sequence_detect,
     stream_sequence_detect_all,
 )
+from logeventprocessor_spark.streaming.sink import ParquetUpsertSink
 from logeventprocessor_spark.operators.match import match_turns
 
 KEY = ACTION_KEY
@@ -37,12 +40,12 @@ CMP = ["conv_id", "turn_idx", "rule_id", "rule_idx", "step_idx", "extracted",
        "action_type", "rendered_value", "ts"]
 
 
-def _norm(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = pdf[CMP].copy()
+def _norm(pdf: pd.DataFrame, cols: list[str] = CMP) -> pd.DataFrame:
+    out = pdf[cols].copy()
     out["ts"] = pd.to_datetime(out["ts"])
     for c in ("turn_idx", "rule_idx", "step_idx"):
         out[c] = out[c].astype("int64")
-    return out.sort_values(CMP, kind="mergesort").reset_index(drop=True)
+    return out.sort_values(cols, kind="mergesort").reset_index(drop=True)
 
 
 @pytest.fixture(scope="module")
@@ -397,22 +400,49 @@ def test_context_carry_matches_context_join(spark, fixture_dirs, tmp_path):
     pd.testing.assert_frame_equal(outs["join"], outs["carry"])
 
 
+def _turn_frame(rows) -> pd.DataFrame:
+    """Turns from (conv_id, turn_idx, role, text, tool, ts) rows."""
+    pdf = pd.DataFrame(rows, columns=[f.name for f in TRANSCRIPTS_SCHEMA.fields])
+    pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
+    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+    return pdf
+
+
 def _write_turn_files(input_dir, files):
     """One parquet file per list of (conv_id, turn_idx, role, text,
     tool, ts) rows, with increasing mtimes so the file source reads
     them in list order."""
-    from logeventprocessor_spark.schema import TRANSCRIPTS_SCHEMA
-
     os.makedirs(input_dir)
     for i, rows in enumerate(files):
-        pdf = pd.DataFrame(
-            rows, columns=[f.name for f in TRANSCRIPTS_SCHEMA.fields]
-        )
-        pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
         p = f"{input_dir}/part-{i}.parquet"
-        pdf.to_parquet(p, index=False)
+        _turn_frame(rows).to_parquet(p, index=False)
         os.utime(p, ns=(1_000_000_000_000_000_000 + i * 10**9,) * 2)
+
+
+def _snapshot_engine(spark, tmp_path):
+    """The sink and cooldown state ``start_pipeline`` would give
+    ``run_micro_batch`` for out_dir ``tmp_path/out`` (watermark delay
+    10 minutes)."""
+    sink = ParquetUpsertSink(str(tmp_path / "out"))
+    cool = CooldownSnapshotState(
+        spark, str(tmp_path / "out" / "cooldown_state"), 600_000
+    )
+    return sink, cool
+
+
+def _run_batch(spark, sink, cool, batch_id, rows, rules, **kw) -> list[int]:
+    """``run_micro_batch`` on a static frame of turn rows; returns the
+    distinct turn_idx of the batch's sunk action rows."""
+    df = spark.createDataFrame(_turn_frame(rows), TRANSCRIPTS_SCHEMA)
+    run_micro_batch(df, batch_id, rules=rules, sink=sink, cool=cool, **kw)
+    sunk = pd.read_parquet(sink.batch_dir(batch_id), columns=["turn_idx"])
+    return sorted(set(sunk["turn_idx"]))
+
+
+def _last_job_id(spark) -> int:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
 
 
 def test_context_join_keeps_late_cold_matches(spark, tmp_path):
@@ -500,58 +530,39 @@ def test_snapshot_state_replay_identical(spark, tmp_path):
     """Crash-replay contract of the snapshot cooldown state: re-running
     batch N (after a crash between output write and checkpoint commit)
     reads only committed snapshots < N, so it recomputes the IDENTICAL
-    gated rows and snapshot -- exactly-once end to end."""
-    import pandas as pd
-    from logeventprocessor_spark.schema import MATCHES_SCHEMA
-    from logeventprocessor_spark.streaming.batch_state import (
-        CooldownSnapshotState,
-    )
-
+    gated rows, sink table and snapshot -- exactly-once end to end."""
     rules = [r for r in canonical_rules() if r.rule_id == "spam_guard"]
     assert rules and rules[0].cooldown_ms > 0
     base = pd.Timestamp("2024-03-01 10:00:00")
+    cd = pd.Timedelta(milliseconds=rules[0].cooldown_ms)
+    sink, cool = _snapshot_engine(spark, tmp_path)
 
-    def matches(rows):
-        pdf = pd.DataFrame(
-            rows, columns=["conv_id", "turn_idx", "ts"]
-        ).assign(rule_id="spam_guard", rule_idx=0, extracted="", text="spam ping")
-        pdf = pdf[[f.name for f in MATCHES_SCHEMA.fields]]
-        pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-        pdf["rule_idx"] = pdf["rule_idx"].astype("int32")
-        return spark.createDataFrame(pdf, MATCHES_SCHEMA)
+    def fire(turn_idx, ts):
+        return ("c", turn_idx, "user", "spam ping", "", ts)
 
-    cool = CooldownSnapshotState(
-        spark, str(tmp_path / "state"), watermark_delay_ms=600_000
-    )
-    cd_s = rules[0].cooldown_ms / 1000.0
+    def snapshot(batch_id):
+        return pd.read_parquet(os.path.join(cool._snap_dir(batch_id), "data"))
 
     # batch 0: two fires inside one cooldown window -> second suppressed
-    b0 = matches([("c", 1, base), ("c", 2, base + pd.Timedelta(seconds=cd_s / 2))])
-    g0 = cool.gate(b0, 0, rules).persist()
-    assert sorted(g0.toPandas()["turn_idx"]) == [1]
-    cool.advance(g0, 0, rules)
-    g0.unpersist()
+    b0 = [fire(1, base), fire(2, base + cd / 2)]
+    assert _run_batch(spark, sink, cool, 0, b0, rules) == [1]
 
     # batch 1: one fire still inside batch-0's window -> suppressed
-    b1 = matches([("c", 3, base + pd.Timedelta(seconds=cd_s * 0.75))])
-    g1 = cool.gate(b1, 1, rules).persist()
-    first = sorted(g1.toPandas()["turn_idx"])
-    cool.advance(g1, 1, rules)
-    g1.unpersist()
+    b1 = [fire(3, base + cd * 0.75)]
+    first = _run_batch(spark, sink, cool, 1, b1, rules)
     assert first == []
+    table, snap = _norm(sink.read(spark).toPandas()), snapshot(1)
 
     # REPLAY batch 1 (the snapshot written by the crashed attempt at 1
-    # must be ignored): identical result, identical snapshot
-    g1r = cool.gate(b1, 1, rules).persist()
-    assert sorted(g1r.toPandas()["turn_idx"]) == first
-    cool.advance(g1r, 1, rules)
-    g1r.unpersist()
+    # must be ignored): identical result, sink table and snapshot
+    assert _run_batch(spark, sink, cool, 1, b1, rules) == first
+    pd.testing.assert_frame_equal(_norm(sink.read(spark).toPandas()), table)
+    pd.testing.assert_frame_equal(snapshot(1), snap)
 
     # batch 2 past the window -> fires again, seeded by the replayed
     # (not doubled) state
-    b2 = matches([("c", 4, base + pd.Timedelta(seconds=cd_s + 1))])
-    g2 = cool.gate(b2, 2, rules)
-    assert sorted(g2.toPandas()["turn_idx"]) == [4]
+    b2 = [fire(4, base + cd + pd.Timedelta(seconds=1))]
+    assert _run_batch(spark, sink, cool, 2, b2, rules) == [4]
 
 
 def test_snapshot_state_evicts_under_batch_rules(spark, tmp_path):
@@ -561,31 +572,15 @@ def test_snapshot_state_evicts_under_batch_rules(spark, tmp_path):
     the first is kept rather than suppressed by forgotten history."""
     from dataclasses import replace
 
-    from logeventprocessor_spark.schema import MATCHES_SCHEMA
-    from logeventprocessor_spark.streaming.batch_state import (
-        CooldownSnapshotState,
-    )
-
     rules = [r for r in canonical_rules() if r.rule_id == "spam_guard"]
     no_cd = [replace(r, cooldown_ms=0) for r in rules]
     base = pd.Timestamp("2024-03-01 10:00:00")
-
-    def fire(turn_idx, ts):
-        return spark.createDataFrame(
-            [("c", turn_idx, "spam_guard", 0, "", "spam ping",
-              ts.to_pydatetime())],
-            MATCHES_SCHEMA,
-        )
-
-    cool = CooldownSnapshotState(
-        spark, str(tmp_path / "state"), watermark_delay_ms=600_000
-    )
-    for batch_id, batch_rules in enumerate([rules, no_cd]):
-        g = cool.gate(fire(batch_id, base), batch_id, batch_rules).persist()
-        cool.advance(g, batch_id, batch_rules)
-        g.unpersist()
-    g2 = cool.gate(fire(2, base + pd.Timedelta(seconds=1)), 2, rules)
-    assert g2.toPandas()["turn_idx"].tolist() == [2]
+    sink, cool = _snapshot_engine(spark, tmp_path)
+    schedule = [(base, rules), (base, no_cd), (base + pd.Timedelta(seconds=1), rules)]
+    for batch_id, (ts, batch_rules) in enumerate(schedule):
+        rows = [("c", batch_id, "user", "spam ping", "", ts)]
+        kept = _run_batch(spark, sink, cool, batch_id, rows, batch_rules)
+    assert kept == [2]
 
 
 def test_snapshot_prior_starts_no_job(spark, tmp_path):
@@ -593,37 +588,131 @@ def test_snapshot_prior_starts_no_job(spark, tmp_path):
     lists files on the driver and runs no schema-inference job, which
     every micro-batch with a prior snapshot would otherwise pay."""
     from logeventprocessor_spark.schema import MATCHES_SCHEMA
-    from logeventprocessor_spark.streaming.batch_state import (
-        CooldownSnapshotState,
-    )
 
     rules = [r for r in canonical_rules() if r.rule_id == "spam_guard"]
+    ts = pd.Timestamp("2024-03-01 10:00:00")
     fire = spark.createDataFrame(
-        [("c", 1, "spam_guard", 0, "", "spam ping",
-          pd.Timestamp("2024-03-01 10:00:00").to_pydatetime())],
+        [("c", 1, "spam_guard", 0, "", "spam ping", ts.to_pydatetime())],
         MATCHES_SCHEMA,
     )
     cool = CooldownSnapshotState(
         spark, str(tmp_path / "state"), watermark_delay_ms=600_000
     )
     g = cool.gate(fire, 0, rules).persist()
-    cool.advance(g, 0, rules)
+    cool.advance(g, 0, rules, max_ts=ts)
     g.unpersist()
 
-    sc = spark.sparkContext
-
-    def last_job_id() -> int:
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
-
-    before = last_job_id()
+    before = _last_job_id(spark)
     prior, wm_ns = cool.prior(1)
-    assert last_job_id() == before
+    assert _last_job_id(spark) == before
     assert prior.schema.simpleString() == (
         "struct<conv_id:string,rule_id:string,last_fire_ns:bigint>"
     )
     assert wm_ns > 0
     assert prior.collect()[0]["conv_id"] == "c"
+
+
+def test_advance_without_hot_rows_starts_no_job(spark, tmp_path):
+    """A batch whose rules have cooldowns but whose gated rows are all
+    cold, with no prior snapshot, has nothing to keep or evict: advance
+    commits meta.json alone, starts no Spark job, and the next batch
+    reads no prior."""
+    from logeventprocessor_spark.schema import MATCHES_SCHEMA
+
+    rules = [r for r in canonical_rules() if r.rule_id in ("test", "spam_guard")]
+    cold = spark.createDataFrame(
+        [("c", 1, "test", 2, "", "clarice",
+          pd.Timestamp("2024-03-01 10:00:00").to_pydatetime())],
+        MATCHES_SCHEMA,
+    )
+    cool = CooldownSnapshotState(
+        spark, str(tmp_path / "state"), watermark_delay_ms=600_000
+    )
+    g = cool.gate(cold, 0, rules).persist()
+    try:
+        before = _last_job_id(spark)
+        cool.advance(g, 0, rules, max_ts=None)
+        assert _last_job_id(spark) == before
+    finally:
+        g.unpersist()
+    assert os.path.exists(os.path.join(cool._snap_dir(0), "meta.json"))
+    assert cool.prior(1) == (None, 0)
+
+
+def test_cooldown_out_of_order_fire_is_suppressed(spark, tmp_path):
+    """Arrival-order contract (``run_micro_batch``, ``gate``): under a
+    60 s cooldown, a fire at 100 s in batch 0 and a fire at 0 s in
+    batch 1, both inside the watermark, sink only the 100 s turn; the
+    event-time oracle keeps both."""
+    from logeventprocessor_spark.rules import Rule, RuleStep
+
+    rules = [Rule("r", 0, ".*spam ping.*", cooldown_ms=60_000,
+                  steps=(RuleStep(0, "command", "ack"),))]
+    base = pd.Timestamp("2024-03-01 10:00:00")
+    batches = [
+        [("c", 1, "user", "spam ping", "", base + pd.Timedelta(seconds=100))],
+        [("c", 0, "user", "spam ping", "", base)],
+    ]
+    sink, cool = _snapshot_engine(spark, tmp_path)
+    for batch_id, rows in enumerate(batches):
+        _run_batch(spark, sink, cool, batch_id, rows, rules)
+    assert sink.read(spark).toPandas()["turn_idx"].tolist() == [1]
+    exp = oracle_matches(_turn_frame(batches[0] + batches[1]), rules)
+    assert sorted(exp["turn_idx"]) == [0, 1]
+
+
+def _source_files(ckpt: str) -> list[list[str]]:
+    """The files each micro-batch of a file-source query read, from the
+    checkpoint's source log (one ``v1`` line, then a JSON entry per
+    file)."""
+    import json
+
+    d = os.path.join(ckpt, "sources", "0")
+    out = []
+    for n in sorted(int(x) for x in os.listdir(d) if x.isdigit()):
+        with open(os.path.join(d, str(n))) as f:
+            out.append([json.loads(x)["path"] for x in f.read().splitlines()[1:]])
+    return out
+
+
+def test_run_micro_batch_equals_start_pipeline(spark, fixture_dirs, tmp_path):
+    """``run_micro_batch`` on static frames, one fixture file per call,
+    writes the sink table, acks table and lineage row counts that
+    ``start_pipeline`` writes from the same files, one per trigger."""
+    _, input_dir, _ = fixture_dirs
+    rules, ack_types = canonical_rules(), ["email", "sms"]
+    ckpt = str(tmp_path / "ckpt")
+    q, ref = start_pipeline(
+        spark, input_dir, rules, str(tmp_path / "out_query"), ckpt,
+        max_files_per_trigger=1, with_context_join=True, ack_types=ack_types,
+    )
+    q.awaitTermination(300)
+    files = _source_files(ckpt)
+    assert len(files) == 4
+
+    sink, cool = _snapshot_engine(spark, tmp_path)
+    for batch_id, paths in enumerate(files):
+        run_micro_batch(
+            spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(*paths), batch_id,
+            rules=rules, sink=sink, cool=cool, carry=("role", "tool"),
+            ack_types=ack_types,
+        )
+    cols = CMP + ["role", "tool"]
+    pd.testing.assert_frame_equal(
+        _norm(sink.read(spark).toPandas(), cols),
+        _norm(ref.read(spark).toPandas(), cols),
+    )
+    ack_cols = KEY + ["status", "ts"]
+
+    def acks(s):
+        got = s.read_table(spark, "acks", KEY).toPandas()[ack_cols]
+        return got.sort_values(KEY).reset_index(drop=True)
+
+    assert len(acks(ref)) > 0
+    pd.testing.assert_frame_equal(acks(sink), acks(ref))
+    assert [m["rows"] for m in sink.lineage()] == [
+        m["rows"] for m in ref.lineage()
+    ]
 
 
 def test_cooldown_backends_agree_on_late_data(spark, tmp_path):

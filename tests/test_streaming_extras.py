@@ -468,6 +468,11 @@ def test_rocksdb_state_store_parity(stream_input, tmp_path):
     pdf, input_dir, _ = stream_input
     # fresh session: the provider conf must hold for the whole query
     spark2 = get_spark("rocksdb-test", master="local[4]", shuffle_partitions=4)
+    spark2.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    )
     try:
         q, sink = start_pipeline(
             spark2,
@@ -475,7 +480,6 @@ def test_rocksdb_state_store_parity(stream_input, tmp_path):
             canonical_rules(),
             out_dir=str(tmp_path / "out"),
             checkpoint_dir=str(tmp_path / "ckpt"),
-            state_store="rocksdb",
             # the store provider only matters for the DAG-stateful
             # backend; the snapshot backend keeps no store state
             cooldown_backend="state",
