@@ -117,7 +117,8 @@ def apply_cooldown(
     (streaming/batch_state.py). Joined BEFORE the repartition so the
     seed rides the same shuffle; nulls become ``NO_PRIOR`` JVM-side (a
     ns value must never pass through a nullable float, 2^63-scale ints
-    lose precision there)."""
+    lose precision there). Without ``prior`` every row is seeded with a
+    literal ``NO_PRIOR``, so the kernel sees one input shape."""
     cooldowns = hot_cooldowns(rules)
     if not cooldowns:
         return matches
@@ -132,21 +133,16 @@ def apply_cooldown(
     # re-joining after step expansion (a dropDuplicates + join per
     # micro-batch).
     out_schema = matches.schema
-    has_prior = prior is not None
-    if has_prior:
-        cols = matches.columns
-        # the USING-join moves its keys to the front; restore the
-        # original order -- mapInArrow matches output batches to the
-        # declared schema BY POSITION, so a reordered frame would have
-        # Spark reading rule_id bytes as turn_idx ints
-        matches = (
-            matches.join(prior, ["conv_id", "rule_id"], "left")
-            .withColumn(
-                "prior_ns",
-                F.coalesce(F.col("prior_ns"), F.lit(NO_PRIOR)).cast("long"),
-            )
-            .select(*cols, "prior_ns")
-        )
+    cols = matches.columns
+    seed = F.lit(NO_PRIOR)
+    if prior is not None:
+        matches = matches.join(prior, ["conv_id", "rule_id"], "left")
+        seed = F.coalesce(F.col("prior_ns"), seed).cast("long")
+    # the USING-join moves its keys to the front; restore the original
+    # order -- mapInArrow matches output batches to the declared schema
+    # BY POSITION, so a reordered frame would have Spark reading
+    # rule_id bytes as turn_idx ints
+    matches = matches.select(*cols, seed.alias("prior_ns"))
 
     rep = matches.repartition("conv_id", "rule_id").sortWithinPartitions(
         "conv_id", "rule_id", "ts", "turn_idx"
@@ -179,33 +175,26 @@ def apply_cooldown(
                 _epoch_ns(pdf["ts"]),
                 starts,
                 [cooldowns[r] * 1_000_000 for r in rule[starts]],
-                pdf["prior_ns"].to_numpy()[starts]
-                if has_prior
-                else [NO_PRIOR] * len(starts),
+                pdf["prior_ns"].to_numpy()[starts],
             )
             if not keep.any():
                 return None
-            out = pdf[keep]
-            if has_prior:
-                out = out.drop(columns=["prior_ns"])
             return pa.RecordBatch.from_pandas(
-                out, schema=schema, preserve_index=False
+                pdf[keep].drop(columns=["prior_ns"]),
+                schema=schema,
+                preserve_index=False,
             )
 
         for rb in batches:
             if rb.num_rows == 0:
                 continue
             if schema is None:
-                schema = rb.schema
-                if has_prior:
-                    schema = schema.remove(schema.get_field_index("prior_ns"))
+                schema = rb.schema.remove(rb.num_columns - 1)  # prior_ns
             rule_col = rb.column(rb.schema.get_field_index("rule_id"))
             hot_mask = pc.is_in(rule_col, value_set=hot_set)
             cold = rb.filter(pc.invert(hot_mask))
             if cold.num_rows:
-                if has_prior:
-                    cold = cold.select([f.name for f in schema])
-                yield cold  # zero-copy pass-through, no Python objects
+                yield cold.select(schema.names)  # zero-copy, no Python objects
             hot = rb.filter(hot_mask)
             if hot.num_rows == 0:
                 continue

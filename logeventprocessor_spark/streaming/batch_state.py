@@ -35,9 +35,10 @@ Exactly-once / resumability contract:
   requirement).
 
 State-size note at cluster scale: the snapshot rewrite per batch is a
-shuffle-free columnar write of the ACTIVE keys only (evicted keys never
-land); the seed join in ``apply_cooldown`` rides the cooldown's own
-repartition, and Spark broadcasts the snapshot side while it is small.
+columnar write of the ACTIVE keys only (evicted keys never land), with
+one shuffle when the batch has hot-rule rows and none without; the
+seed join in ``apply_cooldown`` rides the cooldown's own repartition,
+and Spark broadcasts the snapshot side while it is small.
 
 Reference: the cooldown map lives in ActionManager
 (/root/reference/LogEventProcessor/ActionManager.h:148-150,
@@ -216,13 +217,15 @@ class CooldownSnapshotState:
 
         ``max_ts``: the max event time of ``gated``'s HOT-rule rows,
         observed by the sink-write job (``run_micro_batch``); None means
-        there are none, and without a prior snapshot only ``meta.json``
-        is committed, with no Spark job. Cold rows never advance the
-        watermark, as on the store backend, whose ``withWatermark`` sits
-        on the hot match stream. Using gated (not raw) matches for the
-        watermark is sound: a suppressed fire's later ts would only
-        advance the watermark by < cooldown, and a SMALLER watermark is
-        always conservative (delays eviction, never wrong results)."""
+        there are none: the prior snapshot then passes the eviction
+        filter alone, with no aggregate (one write job), and without a
+        prior only ``meta.json`` is committed, with no Spark job. Cold
+        rows never advance the watermark, as on the store backend,
+        whose ``withWatermark`` sits on the hot match stream. Using
+        gated (not raw) matches for the watermark is sound: a suppressed
+        fire's later ts would only advance the watermark by < cooldown,
+        and a SMALLER watermark is always conservative (delays eviction,
+        never wrong results)."""
         import pandas as pd
 
         cooldowns = hot_cooldowns(rules)
@@ -238,19 +241,21 @@ class CooldownSnapshotState:
         snap = self._snap_dir(batch_id)
         data = os.path.join(snap, "data")
         if cooldowns and (max_ts is not None or prior_df is not None):
-            # greedy invariant: the last KEPT fire of a key IS its last fire
-            fires = (
-                gated.filter(F.col("rule_id").isin(list(cooldowns)))
-                .groupBy("conv_id", "rule_id")
-                .agg((F.unix_micros(F.max("ts")) * 1000).alias("last_fire_ns"))
-            )
-            merged = (
-                prior_df.unionByName(fires)
-                .groupBy("conv_id", "rule_id")
-                .agg(F.max("last_fire_ns").alias("last_fire_ns"))
-                if prior_df is not None
-                else fires
-            )
+            # greedy invariant: the last KEPT fire of a key IS its last
+            # fire, so ONE max per key over the prior and this batch's
+            # hot fires; without hot rows the prior is the merge
+            merged = prior_df
+            if max_ts is not None:
+                fires = gated.filter(F.col("rule_id").isin(list(cooldowns)))
+                fires = fires.select(
+                    "conv_id", "rule_id",
+                    (F.unix_micros("ts") * 1000).alias("last_fire_ns"),
+                )
+                if prior_df is not None:
+                    fires = prior_df.unionByName(fires)
+                merged = fires.groupBy("conv_id", "rule_id").agg(
+                    F.max("last_fire_ns").alias("last_fire_ns")
+                )
             # a key whose rule has no cooldown in this batch looks up
             # null and fails the filter: it is evicted here
             cd_ms = F.create_map(

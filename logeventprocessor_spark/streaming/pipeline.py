@@ -443,11 +443,12 @@ def run_micro_batch(
     # ONE cache (the gated matches) and two phases that run jobs: (1)
     # the sink write, which also populates the cache and computes the
     # watermark's max event time for free via Observation; (2) advance,
-    # the fires agg + snapshot write. Jobs per batch, counted from
+    # one max-merge agg + snapshot write. Jobs per batch, counted from
     # status-store job ids around each phase of perfbench's stream_join
     # input (local[4], AQE on): 5 without a prior snapshot (write 3,
-    # advance 2) and 7 with one (write 4, with the prior's broadcast;
-    # advance 3). Reading the prior runs none, and neither does an
+    # advance 2) and 6 with one (write 4, with the prior's broadcast;
+    # advance 2). An advance with a prior and no hot-rule row runs 1
+    # (the write); reading the prior runs none, and neither does an
     # advance with no hot-rule row and no prior. Caching the raw
     # matches too, with a separate max-ts job, measured ~3.7 s of fixed
     # per-batch work (BENCH/BASELINE.md).

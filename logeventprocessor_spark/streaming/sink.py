@@ -37,9 +37,8 @@ class ParquetUpsertSink:
       lineage/batch_N.json           (per-partition row counts)
     """
 
-    def __init__(self, out_dir: str, key: list[str] | None = None):
+    def __init__(self, out_dir: str):
         self.out_dir = out_dir
-        self.key = key or ACTION_KEY
         os.makedirs(os.path.join(out_dir, "batches"), exist_ok=True)
         os.makedirs(os.path.join(out_dir, "lineage"), exist_ok=True)
 
@@ -48,9 +47,8 @@ class ParquetUpsertSink:
 
     def write(self, df: DataFrame, batch_id: int) -> None:
         t0 = time.time()
-        with_part = df.withColumn("_part", F.spark_partition_id())
         # one action: write the batch directory (idempotent overwrite)
-        with_part.write.mode("overwrite").parquet(self.batch_dir(batch_id))
+        df.write.mode("overwrite").parquet(self.batch_dir(batch_id))
         # lineage from parquet FOOTERS only (one file per write task):
         # a read-back groupBy would rescan the whole batch
         import pyarrow.parquet as pq
@@ -105,8 +103,8 @@ class ParquetUpsertSink:
         the action key (keep the earliest batch's row -- they are
         identical under exactly-once; the dedup is defensive)."""
         return _read_earliest(
-            spark, os.path.join(self.out_dir, "batches"), self.key
-        ).drop("_part")
+            spark, os.path.join(self.out_dir, "batches"), ACTION_KEY
+        )
 
     def lineage(self) -> list[dict]:
         out = []

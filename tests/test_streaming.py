@@ -124,7 +124,7 @@ def test_replay_is_idempotent(spark, fixture_dirs, tmp_path):
 
     # replay batch 0: write the same logical rows again under batch_id 0
     # (materialize first -- the write overwrites the directory read here)
-    replay_pdf = spark.read.parquet(sink.batch_dir(0)).drop("_part").toPandas()
+    replay_pdf = spark.read.parquet(sink.batch_dir(0)).toPandas()
     sink.write(spark.createDataFrame(replay_pdf), 0)
     after = _norm(sink.read(spark).toPandas())
     pd.testing.assert_frame_equal(before, after)
@@ -637,6 +637,69 @@ def test_advance_without_hot_rows_starts_no_job(spark, tmp_path):
         g.unpersist()
     assert os.path.exists(os.path.join(cool._snap_dir(0), "meta.json"))
     assert cool.prior(1) == (None, 0)
+
+
+@pytest.mark.parametrize("hot", [True, False], ids=["hot", "cold"])
+def test_advance_merges_prior_in_one_aggregate(spark, tmp_path, hot):
+    """With a prior snapshot, advance max-merges it with the batch's hot
+    fires in one aggregate and write (2 jobs); a batch without hot-rule
+    rows writes the prior's keys back through the eviction filter alone
+    (1 job)."""
+    from logeventprocessor_spark.schema import MATCHES_SCHEMA
+
+    rules = [r for r in canonical_rules() if r.rule_id in ("test", "spam_guard")]
+    base = pd.Timestamp("2024-03-01 10:00:00")
+    s = pd.Timedelta(seconds=1)
+
+    def matches(rows):
+        return spark.createDataFrame(
+            [(c, i, rule, 0, "", "", ts.to_pydatetime())
+             for c, i, rule, ts in rows],
+            MATCHES_SCHEMA,
+        )
+
+    cool = CooldownSnapshotState(
+        spark, str(tmp_path / "state"), watermark_delay_ms=600_000
+    )
+    g0 = cool.gate(matches([("a", 0, "spam_guard", base),
+                            ("b", 0, "spam_guard", base + s)]), 0, rules)
+    cool.advance(g0, 0, rules, max_ts=base + s)
+
+    if hot:
+        # an existing key past its cooldown, and a new key
+        rows = [("a", 1, "spam_guard", base + 10 * s),
+                ("c", 1, "spam_guard", base + 2 * s)]
+        max_ts, jobs = base + 10 * s, 2
+        exp = {("a", base + 10 * s), ("b", base + s), ("c", base + 2 * s)}
+    else:
+        rows = [("c", 1, "test", base + 10 * s)]
+        max_ts, jobs = None, 1
+        exp = {("a", base), ("b", base + s)}
+    g1 = cool.gate(matches(rows), 1, rules).persist()
+    try:
+        g1.count()  # the sink write materializes gated first
+        before = _last_job_id(spark)
+        cool.advance(g1, 1, rules, max_ts=max_ts)
+        assert _last_job_id(spark) - before == jobs
+    finally:
+        g1.unpersist()
+    snap = pd.read_parquet(os.path.join(cool._snap_dir(1), "data"))
+    assert set(zip(snap["conv_id"], snap["rule_id"], snap["last_fire_ns"])) == {
+        (c, "spam_guard", ts.value) for c, ts in exp
+    }
+
+
+def test_sink_writes_only_the_frames_columns(spark, tmp_path):
+    """A sink batch directory holds exactly the written frame's
+    columns: lineage reads partition ids from the file names, so no
+    bookkeeping column lands in the table."""
+    df = spark.createDataFrame(_turn_frame(
+        [("c", 0, "user", "hi", "", pd.Timestamp("2024-03-01 10:00:00"))]
+    ), TRANSCRIPTS_SCHEMA)
+    sink = ParquetUpsertSink(str(tmp_path / "out"))
+    sink.write(df, 0)
+    assert list(pd.read_parquet(sink.batch_dir(0)).columns) == df.columns
+    assert sink.lineage()[0]["rows"] == 1
 
 
 def test_cooldown_out_of_order_fire_is_suppressed(spark, tmp_path):
