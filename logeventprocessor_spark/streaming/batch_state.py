@@ -1,6 +1,6 @@
-"""Cross-batch cooldown state as per-batch-id parquet snapshots,
-managed inside ``foreachBatch`` -- the high-throughput backend of the
-streaming cooldown operator (T1).
+"""Cross-batch cooldown state as one driver-side Arrow snapshot file
+per batch id, managed inside ``foreachBatch`` -- the high-throughput
+backend of the streaming cooldown operator (T1).
 
 Why this exists (round-3 verdict task #4; historical local[32] numbers
 from a since-deleted probe, see BENCH/BASELINE.md):
@@ -14,9 +14,9 @@ seeds the greedy scan, and writes a new snapshot keyed by batch id.
 
 The pattern (stateful logic in ``foreachBatch`` + an idempotent keyed
 store) is the standard Structured-Streaming recipe for state that
-outgrows the built-in store; with Iceberg the snapshot write is a
-``MERGE INTO`` (SURVEY.md 7.1) -- the parquet layout here is the same
-sandbox stand-in the action sink uses.
+outgrows the built-in store. The state is one ``last_fire_ns`` per live
+``(conv_id, rule_id)``, so the driver reads, merges and writes it with
+pyarrow.
 
 Exactly-once / resumability contract:
 
@@ -24,9 +24,10 @@ Exactly-once / resumability contract:
   batch N's reader ignores any snapshot >= N -- so a replayed batch
   (crash between output write and checkpoint commit) recomputes the
   identical gated rows and overwrites both directories idempotently;
-* ``meta.json`` is written LAST via atomic rename -- a half-written
-  snapshot is never trusted;
-* the watermark is maintained in the snapshot meta
+* snapshot N is one file, written under a dot-prefixed tmp name and
+  renamed into place (``os.replace``): its presence marks N committed,
+  and a half-written one is never read;
+* the watermark is kept in that file's metadata
   (``max(prior_wm, max_event_ts - delay)``, Spark's own definition)
   and drives event-time eviction: a key is dropped once the watermark
   passes ``last_fire + cooldown + grace``, the exact timeout rule of
@@ -34,11 +35,10 @@ Exactly-once / resumability contract:
   fire-rate x cooldown horizon, not stream length (the 10^12-turn
   requirement).
 
-State-size note at cluster scale: the snapshot rewrite per batch is a
-columnar write of the ACTIVE keys only (evicted keys never land), with
-one shuffle when the batch has hot-rule rows and none without; the
-seed join in ``apply_cooldown`` rides the cooldown's own repartition,
-and Spark broadcasts the snapshot side while it is small.
+State-size note: the snapshot holds the ACTIVE keys only (evicted keys
+never land), and the driver merges all of them once per batch:
+``start_pipeline`` states the measured key-count bound, beyond which
+the ``'state'`` backend is the path.
 
 Reference: the cooldown map lives in ActionManager
 (/root/reference/LogEventProcessor/ActionManager.h:148-150,
@@ -48,13 +48,14 @@ ActionSender.cpp:719-731.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from logeventprocessor_spark.operators.cooldown import apply_cooldown, hot_cooldowns
 from logeventprocessor_spark.rules import Rule
@@ -66,13 +67,11 @@ GRACE_MS = 1000
 # uncommitted batch, so 2 would suffice
 RETENTION = 4
 
-# one snapshot row per live key. Written and read with this schema: a
-# read without one starts a schema-inference job in every micro-batch
-# that has a prior snapshot
-SNAPSHOT_SCHEMA = T.StructType([
-    T.StructField("conv_id", T.StringType()),
-    T.StructField("rule_id", T.StringType()),
-    T.StructField("last_fire_ns", T.LongType()),
+# one snapshot row per live key
+SNAPSHOT_SCHEMA = pa.schema([
+    ("conv_id", pa.string()),
+    ("rule_id", pa.string()),
+    ("last_fire_ns", pa.int64()),
 ])
 
 _UNITS_MS = {
@@ -92,9 +91,10 @@ def delay_to_ms(delay: str) -> int:
 
 
 class CooldownSnapshotState:
-    """Layout:  state_dir/batch_id=N/{data/*.parquet, meta.json}
-    (meta.json last = completeness marker; snapshots pruned to
-    ``RETENTION`` generations).
+    """Layout:  state_dir/batch_id=N/data/part-0.parquet
+    (``SNAPSHOT_SCHEMA``, ``wm_ns`` in its key-value metadata; no keys
+    = zero rows), pruned to ``RETENTION`` generations. State written by
+    the earlier layout (``meta.json`` + Spark part files) is not read.
 
     The rule set is an argument of every ``gate``/``advance`` call, not
     state of this object: ``run_micro_batch`` resolves ONE rule set per
@@ -116,11 +116,9 @@ class CooldownSnapshotState:
         self.spark = spark
         self.dir = state_dir
         self.delay_ms = watermark_delay_ms
-        # per-batch memo of (batch_id, prior_df, prior_wm_ns): gate()
+        # per-batch memo of (batch_id, prior_table, prior_wm_ns): gate()
         # and advance() both need the prior snapshot, and within one
-        # batch they are guaranteed to resolve the same one -- reading
-        # it twice (listdir + meta + parquet scan) per trigger was pure
-        # per-batch latency
+        # batch they are guaranteed to resolve the same one
         self._memo: tuple | None = None
         os.makedirs(state_dir, exist_ok=True)
 
@@ -128,8 +126,8 @@ class CooldownSnapshotState:
     def _snap_dir(self, batch_id: int) -> str:
         return os.path.join(self.dir, f"batch_id={batch_id}")
 
-    def _meta_path(self, batch_id: int) -> str:
-        return os.path.join(self._snap_dir(batch_id), "meta.json")
+    def _snap_file(self, batch_id: int) -> str:
+        return os.path.join(self._snap_dir(batch_id), "data", "part-0.parquet")
 
     def _latest_before(self, batch_id: int) -> int | None:
         best = None
@@ -140,31 +138,27 @@ class CooldownSnapshotState:
             # only COMMITTED snapshots strictly before this batch: a
             # leftover snapshot of a crashed attempt at N itself must
             # not feed N's replay
-            if n < batch_id and os.path.exists(self._meta_path(n)):
+            if n < batch_id and os.path.exists(self._snap_file(n)):
                 best = n if best is None or n > best else best
         return best
 
-    def prior(self, batch_id: int) -> tuple[DataFrame | None, int]:
-        """(last committed snapshot before batch_id, its watermark ns)."""
+    def prior(self, batch_id: int) -> tuple[pa.Table | None, int]:
+        """(last committed snapshot before batch_id, its watermark ns);
+        the table is None when there is no snapshot or it has no keys."""
         b = self._latest_before(batch_id)
         if b is None:
             return None, 0
-        with open(self._meta_path(b)) as f:
-            wm_ns = int(json.load(f)["wm_ns"])
-        data = os.path.join(self._snap_dir(b), "data")
-        df = (
-            self.spark.read.schema(SNAPSHOT_SCHEMA).parquet(data)
-            if os.path.isdir(data)
-            else None
-        )
-        return df, wm_ns
+        table = pq.read_table(self._snap_file(b))
+        wm_ns = int(table.schema.metadata[b"wm_ns"])
+        table = table.replace_schema_metadata(None)
+        return (table if table.num_rows else None), wm_ns
 
-    def _prior_cached(self, batch_id: int) -> tuple[DataFrame | None, int]:
+    def _prior_cached(self, batch_id: int) -> tuple[pa.Table | None, int]:
         if self._memo is not None and self._memo[0] == batch_id:
             return self._memo[1], self._memo[2]
-        df, wm = self.prior(batch_id)
-        self._memo = (batch_id, df, wm)
-        return df, wm
+        table, wm = self.prior(batch_id)
+        self._memo = (batch_id, table, wm)
+        return table, wm
 
     # -- the operator --------------------------------------------------
     def gate(
@@ -190,21 +184,19 @@ class CooldownSnapshotState:
         hot_ids = list(hot_cooldowns(rules))
         if not hot_ids:
             return matches
-        prior_df, wm_ns = self._prior_cached(batch_id)
+        prior, wm_ns = self._prior_cached(batch_id)
         if wm_ns > 0:
             matches = matches.filter(
                 (~F.col("rule_id").isin(hot_ids))
                 | (F.unix_micros(F.col("ts")) * F.lit(1000).cast("long")
                    >= F.lit(int(wm_ns)))
             )
-        pri = (
-            prior_df.select(
-                "conv_id", "rule_id",
-                F.col("last_fire_ns").alias("prior_ns"),
+        pri = None
+        if prior is not None:
+            # built on the driver: no Spark job
+            pri = self.spark.createDataFrame(
+                prior.rename_columns(["conv_id", "rule_id", "prior_ns"])
             )
-            if prior_df is not None
-            else None
-        )
         return apply_cooldown(matches, rules, prior=pri)
 
     def advance(
@@ -216,74 +208,55 @@ class CooldownSnapshotState:
         the caller (it also feeds the sink write).
 
         ``max_ts``: the max event time of ``gated``'s HOT-rule rows,
-        observed by the sink-write job (``run_micro_batch``); None means
-        there are none: the prior snapshot then passes the eviction
-        filter alone, with no aggregate (one write job), and without a
-        prior only ``meta.json`` is committed, with no Spark job. Cold
-        rows never advance the watermark, as on the store backend,
-        whose ``withWatermark`` sits on the hot match stream. Using
-        gated (not raw) matches for the watermark is sound: a suppressed
+        observed by the sink-write job (``run_micro_batch``); None
+        means there are none, and no Spark job runs. Otherwise one
+        ``toArrow`` job collects the kept hot fires, and the watermark
+        advances from their ``unix_micros`` event times, not from
+        ``max_ts`` (a naive datetime in the driver's local zone). Cold
+        rows never advance the watermark, as on the store backend, whose
+        ``withWatermark`` sits on the hot match stream. Using gated
+        (not raw) matches for the watermark is sound: a suppressed
         fire's later ts would only advance the watermark by < cooldown,
-        and a SMALLER watermark is always conservative (delays eviction,
-        never wrong results)."""
-        import pandas as pd
-
+        and a SMALLER watermark is always conservative (delays
+        eviction, never wrong results)."""
         cooldowns = hot_cooldowns(rules)
-        prior_df, prior_wm = self._prior_cached(batch_id)
-        if not cooldowns and prior_df is None:
+        prior, wm_ns = self._prior_cached(batch_id)
+        if not cooldowns and prior is None:
             return  # no keys to keep and none to evict
-        wm_ns = prior_wm
+        snap = prior if prior is not None else SNAPSHOT_SCHEMA.empty_table()
         if max_ts is not None:
+            fires = gated.filter(F.col("rule_id").isin(list(cooldowns))).select(
+                "conv_id", "rule_id",
+                (F.unix_micros("ts") * 1000).alias("last_fire_ns"),
+            ).toArrow().cast(SNAPSHOT_SCHEMA)
             wm_ns = max(
-                prior_wm,
-                int(pd.Timestamp(max_ts).value) - self.delay_ms * 1_000_000,
+                wm_ns,
+                pc.max(fires["last_fire_ns"]).as_py() - self.delay_ms * 1_000_000,
             )
-        snap = self._snap_dir(batch_id)
-        data = os.path.join(snap, "data")
-        if cooldowns and (max_ts is not None or prior_df is not None):
             # greedy invariant: the last KEPT fire of a key IS its last
-            # fire, so ONE max per key over the prior and this batch's
-            # hot fires; without hot rows the prior is the merge
-            merged = prior_df
-            if max_ts is not None:
-                fires = gated.filter(F.col("rule_id").isin(list(cooldowns)))
-                fires = fires.select(
-                    "conv_id", "rule_id",
-                    (F.unix_micros("ts") * 1000).alias("last_fire_ns"),
-                )
-                if prior_df is not None:
-                    fires = prior_df.unionByName(fires)
-                merged = fires.groupBy("conv_id", "rule_id").agg(
-                    F.max("last_fire_ns").alias("last_fire_ns")
-                )
-            # a key whose rule has no cooldown in this batch looks up
-            # null and fails the filter: it is evicted here
-            cd_ms = F.create_map(
-                *[
-                    x
-                    for k, v in cooldowns.items()
-                    for x in (F.lit(k), F.lit(int(v)))
-                ]
-            )[F.col("rule_id")]
-            live = merged.filter(
-                F.col("last_fire_ns")
-                + (cd_ms.cast("long") + F.lit(GRACE_MS).cast("long"))
-                * F.lit(1_000_000).cast("long")
-                > F.lit(int(wm_ns))
-            )
-            live.select(
-                *[F.col(f.name).cast(f.dataType) for f in SNAPSHOT_SCHEMA]
-            ).write.mode("overwrite").parquet(data)
-        else:
-            # no key to keep (no rule has a cooldown in this batch, or
-            # no hot fire and no prior): a data-less snapshot reads back
-            # as "no prior"
-            shutil.rmtree(data, ignore_errors=True)
-        os.makedirs(snap, exist_ok=True)
-        tmp = f"{self._meta_path(batch_id)}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "wm_ns": int(wm_ns)}, f)
-        os.replace(tmp, self._meta_path(batch_id))
+            # fire, so ONE max per key over the prior and the fires
+            merged = pa.concat_tables([snap, fires]).group_by(
+                ["conv_id", "rule_id"]
+            ).aggregate([("last_fire_ns", "max")])
+            snap = merged.select(
+                ["conv_id", "rule_id", "last_fire_ns_max"]
+            ).rename_columns(SNAPSHOT_SCHEMA.names)
+        # a key whose rule has no cooldown in this batch looks up null
+        # and fails the filter: it is evicted here
+        cd_ms = pc.take(
+            pa.array(list(cooldowns.values()), pa.int64()),
+            pc.index_in(snap["rule_id"], pa.array(list(cooldowns), pa.string())),
+        )
+        horizon = pc.add(
+            snap["last_fire_ns"],
+            pc.multiply(pc.add(cd_ms, GRACE_MS), 1_000_000),
+        )
+        live = snap.filter(pc.greater(horizon, wm_ns))
+        data = os.path.dirname(self._snap_file(batch_id))
+        os.makedirs(data, exist_ok=True)
+        tmp = os.path.join(data, f".part-0.tmp.{os.getpid()}")
+        pq.write_table(live.replace_schema_metadata({"wm_ns": str(wm_ns)}), tmp)
+        os.replace(tmp, self._snap_file(batch_id))
         self._prune(batch_id)
 
     def _prune(self, batch_id: int) -> None:

@@ -16,7 +16,7 @@ Two entry points wire the whole query, one per cooldown backend:
 
   and ``run_micro_batch`` resolves ONE rule set per micro-batch on the
   driver, then runs match (M1/M2) -> cooldown gate (T1, seeded by a
-  parquet snapshot, streaming/batch_state.py) -> steps + render
+  driver-side snapshot file, streaming/batch_state.py) -> steps + render
   (T3/T4/M3) -> ParquetUpsertSink (T2 + T6/K1) -> snapshot advance on
   that one list.
 
@@ -441,17 +441,18 @@ def run_micro_batch(
     Hot-rule rows behind the snapshot watermark are dropped; cold-rule
     rows never are."""
     # ONE cache (the gated matches) and two phases that run jobs: (1)
-    # the sink write, which also populates the cache and computes the
-    # watermark's max event time for free via Observation; (2) advance,
-    # one max-merge agg + snapshot write. Jobs per batch, counted from
-    # status-store job ids around each phase of perfbench's stream_join
-    # input (local[4], AQE on): 5 without a prior snapshot (write 3,
-    # advance 2) and 6 with one (write 4, with the prior's broadcast;
-    # advance 2). An advance with a prior and no hot-rule row runs 1
-    # (the write); reading the prior runs none, and neither does an
-    # advance with no hot-rule row and no prior. Caching the raw
-    # matches too, with a separate max-ts job, measured ~3.7 s of fixed
-    # per-batch work (BENCH/BASELINE.md).
+    # the sink write, which also populates the cache and observes
+    # whether the batch has hot-rule rows (Observation); (2) advance,
+    # one toArrow of the kept hot fires from the cache, merged into
+    # the snapshot on the driver. Jobs per batch, counted from
+    # status-store job ids around each phase (4 batches of 200 seeded
+    # conversations, canonical rules with a 5 min cooldown, local[4],
+    # AQE on): 4 without a prior snapshot (write 3, advance 1) and 5
+    # with one (write 4, with the prior's broadcast; advance 1). An
+    # advance without hot-rule rows runs none, and neither does
+    # reading the prior or seeding the gate from it. Caching the raw
+    # matches too, with a separate max-ts job, measured ~3.7 s of
+    # fixed per-batch work (BENCH/BASELINE.md).
     #
     # Context (role/tool) rides THROUGH the gate and the step expansion
     # as pass-through columns (apply_cooldown's output schema mirrors
@@ -551,7 +552,7 @@ def start_pipeline(
     query's checkpoint at first start (Spark reads the session conf at
     query planning; the session value is restored right after
     ``start()``). On the snapshot backend the streaming plan holds no
-    stateful operator, so it sizes only the gate/advance shuffles run
+    stateful operator, so it sizes only the gate's shuffle run
     inside ``foreachBatch``. On the ``'state'`` backend it also sets
     the partition count of the cooldown state stores, each paying a
     FIXED open/commit/maintenance cost per micro-batch: size it to the
@@ -567,11 +568,20 @@ def start_pipeline(
 
     * ``'snapshot'`` (default, the throughput path): ``run_micro_batch``
       (module header), whose cooldown is a seeded batch ``mapInArrow``
-      over per-batch-id parquet state snapshots. Measured at
-      local[32] by a since-deleted probe (historical, see
-      BENCH/BASELINE.md): applyInPandasWithState cost ~3-4 s FIXED per
-      trigger at 32 partitions even with zero rows; this backend
-      removes that floor and the hot/cold double source scan.
+      over per-batch-id snapshot files that the driver reads, merges
+      and writes with pyarrow. Measured at local[32] by a
+      since-deleted probe (historical, see BENCH/BASELINE.md):
+      applyInPandasWithState cost ~3-4 s FIXED per trigger at 32
+      partitions even with zero rows; this backend removes that floor
+      and the hot/cold double source scan. Its bound: the driver
+      merges every live key once per batch. Gate planning + advance
+      (local[4], median of 3) against the earlier Spark-side merge,
+      in process-tree CPU-s / wall s: 1.27/1.04 vs 2.33/1.08 at 3x10^5
+      keys, 2.93/2.56 vs 3.55/1.30 at 10^6, 4.0/2.7 vs 8.6/2.8 at
+      3x10^6; 1.62/0.98 vs 2.68/0.96 at 10^6 hot fires per batch. CPU
+      stayed lower throughout, but the wall time was twice the Spark
+      merge's at 10^6 keys: past about 10^6 live keys, use the
+      ``'state'`` backend.
     * ``'state'``: the store-native form -- hot/cold rule split with
       ``applyInPandasWithState`` eviction timers (build_match_stream),
       the one keyed-state backend; both call the same ``greedy_keep``

@@ -9,6 +9,8 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from logeventprocessor_spark.generator import (
@@ -440,9 +442,22 @@ def _run_batch(spark, sink, cool, batch_id, rows, rules, **kw) -> list[int]:
 
 
 def _last_job_id(spark) -> int:
+    """The newest job id in the status store, whatever its job group
+    (a running streaming query's jobs carry the query's group).
+    ``jobsList`` runs newest first."""
     sc = spark.sparkContext
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    return -1 if jobs.isEmpty() else jobs.head().jobId()
+
+
+def _snap_file(cool, batch_id) -> str:
+    return os.path.join(cool._snap_dir(batch_id), "data", "part-0.parquet")
+
+
+def _snap_wm_ns(cool, batch_id) -> int:
+    """The watermark committed in snapshot ``batch_id``'s metadata."""
+    return int(pq.read_schema(_snap_file(cool, batch_id)).metadata[b"wm_ns"])
 
 
 def test_context_join_keeps_late_cold_matches(spark, tmp_path):
@@ -584,9 +599,10 @@ def test_snapshot_state_evicts_under_batch_rules(spark, tmp_path):
 
 
 def test_snapshot_prior_starts_no_job(spark, tmp_path):
-    """The prior snapshot is read with its known schema: resolving it
-    lists files on the driver and runs no schema-inference job, which
-    every micro-batch with a prior snapshot would otherwise pay."""
+    """The prior snapshot is one Arrow file read on the driver, and the
+    gate seeds the cooldown from a driver-built frame: resolving the
+    prior and planning the seeded gate run no Spark job, which every
+    micro-batch with a prior snapshot would otherwise pay."""
     from logeventprocessor_spark.schema import MATCHES_SCHEMA
 
     rules = [r for r in canonical_rules() if r.rule_id == "spam_guard"]
@@ -604,19 +620,22 @@ def test_snapshot_prior_starts_no_job(spark, tmp_path):
 
     before = _last_job_id(spark)
     prior, wm_ns = cool.prior(1)
+    cool.gate(fire, 1, rules)
     assert _last_job_id(spark) == before
-    assert prior.schema.simpleString() == (
-        "struct<conv_id:string,rule_id:string,last_fire_ns:bigint>"
-    )
-    assert wm_ns > 0
-    assert prior.collect()[0]["conv_id"] == "c"
+    assert prior.schema == pa.schema([
+        ("conv_id", pa.string()),
+        ("rule_id", pa.string()),
+        ("last_fire_ns", pa.int64()),
+    ])
+    assert wm_ns == _snap_wm_ns(cool, 0) == (ts - pd.Timedelta(minutes=10)).value
+    assert prior.column("conv_id").to_pylist() == ["c"]
 
 
 def test_advance_without_hot_rows_starts_no_job(spark, tmp_path):
     """A batch whose rules have cooldowns but whose gated rows are all
     cold, with no prior snapshot, has nothing to keep or evict: advance
-    commits meta.json alone, starts no Spark job, and the next batch
-    reads no prior."""
+    commits a zero-row snapshot file carrying ``wm_ns``, starts no Spark
+    job, and the next batch reads no prior."""
     from logeventprocessor_spark.schema import MATCHES_SCHEMA
 
     rules = [r for r in canonical_rules() if r.rule_id in ("test", "spam_guard")]
@@ -635,16 +654,17 @@ def test_advance_without_hot_rows_starts_no_job(spark, tmp_path):
         assert _last_job_id(spark) == before
     finally:
         g.unpersist()
-    assert os.path.exists(os.path.join(cool._snap_dir(0), "meta.json"))
+    assert pq.read_metadata(_snap_file(cool, 0)).num_rows == 0
+    assert _snap_wm_ns(cool, 0) == 0
     assert cool.prior(1) == (None, 0)
 
 
 @pytest.mark.parametrize("hot", [True, False], ids=["hot", "cold"])
-def test_advance_merges_prior_in_one_aggregate(spark, tmp_path, hot):
+def test_advance_merges_prior_on_the_driver(spark, tmp_path, hot):
     """With a prior snapshot, advance max-merges it with the batch's hot
-    fires in one aggregate and write (2 jobs); a batch without hot-rule
-    rows writes the prior's keys back through the eviction filter alone
-    (1 job)."""
+    fires on the driver: one job collects the fires; a batch without
+    hot-rule rows writes the prior's keys back through the eviction
+    filter alone, with no job."""
     from logeventprocessor_spark.schema import MATCHES_SCHEMA
 
     rules = [r for r in canonical_rules() if r.rule_id in ("test", "spam_guard")]
@@ -669,11 +689,11 @@ def test_advance_merges_prior_in_one_aggregate(spark, tmp_path, hot):
         # an existing key past its cooldown, and a new key
         rows = [("a", 1, "spam_guard", base + 10 * s),
                 ("c", 1, "spam_guard", base + 2 * s)]
-        max_ts, jobs = base + 10 * s, 2
+        max_ts, jobs = base + 10 * s, 1
         exp = {("a", base + 10 * s), ("b", base + s), ("c", base + 2 * s)}
     else:
         rows = [("c", 1, "test", base + 10 * s)]
-        max_ts, jobs = None, 1
+        max_ts, jobs = None, 0
         exp = {("a", base), ("b", base + s)}
     g1 = cool.gate(matches(rows), 1, rules).persist()
     try:
@@ -687,6 +707,74 @@ def test_advance_merges_prior_in_one_aggregate(spark, tmp_path, hot):
     assert set(zip(snap["conv_id"], snap["rule_id"], snap["last_fire_ns"])) == {
         (c, "spam_guard", ts.value) for c, ts in exp
     }
+
+
+def _spam_fire(turn_idx, ts):
+    return ("c", turn_idx, "user", "spam ping", "", ts)
+
+
+def test_snapshot_watermark_ignores_driver_time_zone(spark, tmp_path, monkeypatch):
+    """The snapshot watermark comes from Spark's epoch event times, not
+    from a collected datetime, which PySpark hands back naive in the
+    Python process's local zone: under TZ=Asia/Tokyo, fires at T and at
+    T + 6 s (5 s cooldown) in two batches both sink, and snapshot 0's
+    watermark is T - 10 min."""
+    import time
+
+    rules = [r for r in canonical_rules() if r.rule_id == "spam_guard"]
+    assert rules[0].cooldown_ms == 5000
+    t = pd.Timestamp("2024-03-01 10:00:00")
+    sink, cool = _snapshot_engine(spark, tmp_path)
+    monkeypatch.setenv("TZ", "Asia/Tokyo")
+    time.tzset()
+    try:
+        sunk = [
+            _run_batch(spark, sink, cool, 0, [_spam_fire(0, t)], rules),
+            _run_batch(spark, sink, cool, 1,
+                       [_spam_fire(1, t + pd.Timedelta(seconds=6))], rules),
+        ]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert sunk == [[0], [1]]
+    assert _snap_wm_ns(cool, 0) == (t - pd.Timedelta(minutes=10)).value
+
+
+def test_snapshot_replay_ignores_crash_artifacts(spark, tmp_path):
+    """A crashed attempt at batch N can leave a stray tmp file and even
+    a committed snapshot file in N's directory. N's replay, by a fresh
+    state object over the same directory (a restart), reads neither;
+    a later restart resumes from the replayed snapshot."""
+    rules = [r for r in canonical_rules() if r.rule_id == "spam_guard"]
+    t = pd.Timestamp("2024-03-01 10:00:00")
+    sink, cool = _snapshot_engine(spark, tmp_path)
+    assert _run_batch(spark, sink, cool, 0, [_spam_fire(0, t)], rules) == [0]
+
+    # batch 1's crashed attempt: a half-written tmp file, and a snapshot
+    # whose key and watermark would suppress or drop the replayed fire
+    data = os.path.join(cool._snap_dir(1), "data")
+    os.makedirs(data)
+    with open(os.path.join(data, ".part-0.tmp.99999"), "wb") as f:
+        f.write(b"PAR1 torn")
+    bogus = pa.table({
+        "conv_id": ["c"], "rule_id": ["spam_guard"],
+        "last_fire_ns": [(t + pd.Timedelta(seconds=5)).value],
+    }).replace_schema_metadata({"wm_ns": str((t + pd.Timedelta(hours=1)).value)})
+    pq.write_table(bogus, _snap_file(cool, 1))
+
+    _, restarted = _snapshot_engine(spark, tmp_path)
+    fire1 = _spam_fire(1, t + pd.Timedelta(seconds=6))
+    assert _run_batch(spark, sink, restarted, 1, [fire1], rules) == [1]
+    table, wm_ns = restarted.prior(2)
+    assert table.to_pylist() == [{
+        "conv_id": "c", "rule_id": "spam_guard",
+        "last_fire_ns": (t + pd.Timedelta(seconds=6)).value,
+    }]
+    assert wm_ns == (t + pd.Timedelta(seconds=6) - pd.Timedelta(minutes=10)).value
+
+    _, resumed = _snapshot_engine(spark, tmp_path)
+    again, again_wm = resumed.prior(2)
+    assert again.equals(table) and again_wm == wm_ns
 
 
 def test_sink_writes_only_the_frames_columns(spark, tmp_path):
