@@ -16,7 +16,7 @@ The pattern (stateful logic in ``foreachBatch`` + an idempotent keyed
 store) is the standard Structured-Streaming recipe for state that
 outgrows the built-in store. The state is one ``last_fire_ns`` per live
 ``(conv_id, rule_id)``, so the driver reads, merges and writes it with
-pyarrow.
+pyarrow, and the gate ships it to the scan by broadcast.
 
 Exactly-once / resumability contract:
 
@@ -24,6 +24,11 @@ Exactly-once / resumability contract:
   batch N's reader ignores any snapshot >= N -- so a replayed batch
   (crash between output write and checkpoint commit) recomputes the
   identical gated rows and overwrites both directories idempotently;
+* the batch's kept fires reach the driver through an accumulator
+  (``FireReport``), filled by the sink write's own job: Spark merges
+  the updates of successful tasks only, and a task that runs again
+  (a retry, or a re-read after a cache eviction) reports the same
+  last fire per key, which the per-key max merge ignores;
 * snapshot N is one file, written under a dot-prefixed tmp name and
   renamed into place (``os.replace``): its presence marks N committed,
   and a half-written one is never read;
@@ -55,9 +60,13 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from logeventprocessor_spark.operators.cooldown import apply_cooldown, hot_cooldowns
+from logeventprocessor_spark.operators.cooldown import (
+    FIRES_SCHEMA,
+    FireReport,
+    apply_cooldown,
+    hot_cooldowns,
+)
 from logeventprocessor_spark.rules import Rule
 
 # eviction grace matches stream_cooldown's timeout slack (+1 s)
@@ -66,13 +75,6 @@ GRACE_MS = 1000
 # snapshot generations kept: a restart only ever replays the last
 # uncommitted batch, so 2 would suffice
 RETENTION = 4
-
-# one snapshot row per live key
-SNAPSHOT_SCHEMA = pa.schema([
-    ("conv_id", pa.string()),
-    ("rule_id", pa.string()),
-    ("last_fire_ns", pa.int64()),
-])
 
 _UNITS_MS = {
     "millisecond": 1, "milliseconds": 1,
@@ -92,7 +94,7 @@ def delay_to_ms(delay: str) -> int:
 
 class CooldownSnapshotState:
     """Layout:  state_dir/batch_id=N/data/part-0.parquet
-    (``SNAPSHOT_SCHEMA``, ``wm_ns`` in its key-value metadata; no keys
+    (``FIRES_SCHEMA``, ``wm_ns`` in its key-value metadata; no keys
     = zero rows), pruned to ``RETENTION`` generations. State written by
     the earlier layout (``meta.json`` + Spark part files) is not read.
 
@@ -120,6 +122,7 @@ class CooldownSnapshotState:
         # and advance() both need the prior snapshot, and within one
         # batch they are guaranteed to resolve the same one
         self._memo: tuple | None = None
+        self._fires = FireReport(spark.sparkContext)
         os.makedirs(state_dir, exist_ok=True)
 
     # -- snapshot bookkeeping -----------------------------------------
@@ -165,70 +168,50 @@ class CooldownSnapshotState:
         self, matches: DataFrame, batch_id: int, rules: list[Rule]
     ) -> DataFrame:
         """Cooldown-suppress this batch's matches under this batch's
-        ``rules``, seeded by the prior snapshot. Zero-cooldown rules
-        never touch the scan (the same hot/cold Arrow split as the batch
-        pipeline).
+        ``rules``, seeded by the prior snapshot, which ``apply_cooldown``
+        ships to its scan by broadcast with the snapshot watermark. The
+        scan reports the batch's kept fires for ``advance``. Zero-cooldown
+        rules never touch the scan (the same hot/cold Arrow split as the
+        batch pipeline).
 
         Late-data contract (parity with the store backend, where Spark
         drops rows older than the watermark before the stateful op):
         HOT-rule matches with ts < the snapshot watermark are dropped
-        here; cold-rule rows are never late-filtered in either backend
-        (they bypass state entirely). The snapshot watermark can lag
-        the store backend's by < cooldown (it derives from KEPT fires),
-        which is conservative -- it only ever drops a subset.
+        by the scan; cold-rule rows are never late-filtered in either
+        backend (they bypass state entirely). The snapshot watermark can
+        lag the store backend's by < cooldown (it derives from KEPT
+        fires), which is conservative -- it only ever drops a subset.
 
         Arrival-order contract: each key's scan is seeded by its last
         kept fire from the earlier batches, so a fire event-time-earlier
         than it has a negative gap and is suppressed, though
         ``oracle.oracle_matches`` keeps it (``run_micro_batch``)."""
-        hot_ids = list(hot_cooldowns(rules))
-        if not hot_ids:
-            return matches
         prior, wm_ns = self._prior_cached(batch_id)
-        if wm_ns > 0:
-            matches = matches.filter(
-                (~F.col("rule_id").isin(hot_ids))
-                | (F.unix_micros(F.col("ts")) * F.lit(1000).cast("long")
-                   >= F.lit(int(wm_ns)))
-            )
-        pri = None
-        if prior is not None:
-            # built on the driver: no Spark job
-            pri = self.spark.createDataFrame(
-                prior.rename_columns(["conv_id", "rule_id", "prior_ns"])
-            )
-        return apply_cooldown(matches, rules, prior=pri)
+        return apply_cooldown(
+            matches, rules, prior, wm_ns=wm_ns, report=self._fires, tag=batch_id
+        )
 
-    def advance(
-        self, gated: DataFrame, batch_id: int, rules: list[Rule], max_ts
-    ) -> None:
+    def advance(self, gated: DataFrame, batch_id: int, rules: list[Rule]) -> None:
         """Commit snapshot N = prior keys max-merged with this batch's
         kept fires, evicted at the advanced watermark under this batch's
-        ``rules`` (class docstring). ``gated`` should be persisted by
-        the caller (it also feeds the sink write).
+        ``rules`` (class docstring). Runs no Spark job.
 
-        ``max_ts``: the max event time of ``gated``'s HOT-rule rows,
-        observed by the sink-write job (``run_micro_batch``); None
-        means there are none, and no Spark job runs. Otherwise one
-        ``toArrow`` job collects the kept hot fires, and the watermark
-        advances from their ``unix_micros`` event times, not from
-        ``max_ts`` (a naive datetime in the driver's local zone). Cold
-        rows never advance the watermark, as on the store backend, whose
-        ``withWatermark`` sits on the hot match stream. Using gated
-        (not raw) matches for the watermark is sound: a suppressed
-        fire's later ts would only advance the watermark by < cooldown,
-        and a SMALLER watermark is always conservative (delays
-        eviction, never wrong results)."""
+        ``gated``: the frame ``gate`` returned, after a job has run it:
+        its tasks reported the last kept fire per hot key, and the
+        fires of any other batch are dropped here. The watermark
+        advances from those fires' epoch event times. Cold rows never
+        advance it, as on the store backend, whose ``withWatermark``
+        sits on the hot match stream. Using gated (not raw) matches for
+        the watermark is sound: a suppressed fire's later ts would only
+        advance the watermark by < cooldown, and a SMALLER watermark is
+        always conservative (delays eviction, never wrong results)."""
         cooldowns = hot_cooldowns(rules)
         prior, wm_ns = self._prior_cached(batch_id)
+        fires = self._fires.take(batch_id)
         if not cooldowns and prior is None:
             return  # no keys to keep and none to evict
-        snap = prior if prior is not None else SNAPSHOT_SCHEMA.empty_table()
-        if max_ts is not None:
-            fires = gated.filter(F.col("rule_id").isin(list(cooldowns))).select(
-                "conv_id", "rule_id",
-                (F.unix_micros("ts") * 1000).alias("last_fire_ns"),
-            ).toArrow().cast(SNAPSHOT_SCHEMA)
+        snap = prior if prior is not None else FIRES_SCHEMA.empty_table()
+        if fires.num_rows:
             wm_ns = max(
                 wm_ns,
                 pc.max(fires["last_fire_ns"]).as_py() - self.delay_ms * 1_000_000,
@@ -240,7 +223,7 @@ class CooldownSnapshotState:
             ).aggregate([("last_fire_ns", "max")])
             snap = merged.select(
                 ["conv_id", "rule_id", "last_fire_ns_max"]
-            ).rename_columns(SNAPSHOT_SCHEMA.names)
+            ).rename_columns(FIRES_SCHEMA.names)
         # a key whose rule has no cooldown in this batch looks up null
         # and fails the filter: it is evicted here
         cd_ms = pc.take(

@@ -50,7 +50,7 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
@@ -440,19 +440,19 @@ def run_micro_batch(
     the 100 s turn, where ``oracle.oracle_matches`` keeps both.
     Hot-rule rows behind the snapshot watermark are dropped; cold-rule
     rows never are."""
-    # ONE cache (the gated matches) and two phases that run jobs: (1)
-    # the sink write, which also populates the cache and observes
-    # whether the batch has hot-rule rows (Observation); (2) advance,
-    # one toArrow of the kept hot fires from the cache, merged into
-    # the snapshot on the driver. Jobs per batch, counted from
-    # status-store job ids around each phase (4 batches of 200 seeded
-    # conversations, canonical rules with a 5 min cooldown, local[4],
-    # AQE on): 4 without a prior snapshot (write 3, advance 1) and 5
-    # with one (write 4, with the prior's broadcast; advance 1). An
-    # advance without hot-rule rows runs none, and neither does
-    # reading the prior or seeding the gate from it. Caching the raw
-    # matches too, with a separate max-ts job, measured ~3.7 s of
-    # fixed per-batch work (BENCH/BASELINE.md).
+    # ONE pass: the sink write's jobs run match -> gate -> steps ->
+    # write, and the gate's scan reports the kept hot fires to the
+    # driver by accumulator, so advance merges them into the snapshot
+    # with no Spark job, and nothing re-reads the gated rows. Jobs per
+    # batch, counted from status-store job ids (local[4], AQE on): 2
+    # with or without a prior snapshot (the gate's shuffle stage and
+    # the write; the prior rides a broadcast variable, not a broadcast
+    # join), none of them in advance -- pinned by
+    # test_micro_batch_runs_two_jobs, and the same in every batch of a
+    # 30 s perfbench stream_live run (4-5 tasks per warm batch).
+    # The gated rows are cached only for the acks write, which re-reads
+    # them; its tasks report nothing new (a re-run reports the same
+    # fires, and the merge takes a max).
     #
     # Context (role/tool) rides THROUGH the gate and the step expansion
     # as pass-through columns (apply_cooldown's output schema mirrors
@@ -463,25 +463,18 @@ def run_micro_batch(
     matches = match_turns(
         df, [r for r in batch_rules if r.enabled], carry_cols=carry
     )
-    gated = cool.gate(matches, batch_id, batch_rules).persist()
+    gated = cool.gate(matches, batch_id, batch_rules)
+    if ack_types:
+        gated = gated.persist()
     try:
-        obs = Observation(f"wm_{batch_id}")
-        # watermark source = HOT-rule event time only, matching the
-        # store backend (its withWatermark sits on the hot match
-        # stream; cold rows must not advance eviction)
-        hot_ids = list(hot_cooldowns(batch_rules))
-        wm_src = F.when(F.col("rule_id").isin(hot_ids), F.col("ts"))
-        out = expand_steps(
-            gated.observe(obs, F.max(wm_src).alias("max_ts")),
-            batch_rules,
-            extra_cols=carry,
-        )
+        out = expand_steps(gated, batch_rules, extra_cols=carry)
         sink.write(out, batch_id)
         if ack_types:
             sink.write_table("acks", _ack_rows(out, ack_types), batch_id)
-        cool.advance(gated, batch_id, batch_rules, obs.get["max_ts"])
+        cool.advance(gated, batch_id, batch_rules)
     finally:
-        gated.unpersist()
+        if ack_types:
+            gated.unpersist()
 
 
 def _write_with_acks(df: DataFrame, batch_id: int, *, sink, ack_types) -> None:
@@ -574,14 +567,15 @@ def start_pipeline(
       applyInPandasWithState cost ~3-4 s FIXED per trigger at 32
       partitions even with zero rows; this backend removes that floor
       and the hot/cold double source scan. Its bound: the driver
-      merges every live key once per batch. Gate planning + advance
-      (local[4], median of 3) against the earlier Spark-side merge,
-      in process-tree CPU-s / wall s: 1.27/1.04 vs 2.33/1.08 at 3x10^5
-      keys, 2.93/2.56 vs 3.55/1.30 at 10^6, 4.0/2.7 vs 8.6/2.8 at
-      3x10^6; 1.62/0.98 vs 2.68/0.96 at 10^6 hot fires per batch. CPU
-      stayed lower throughout, but the wall time was twice the Spark
-      merge's at 10^6 keys: past about 10^6 live keys, use the
-      ``'state'`` backend.
+      merges every live key once per batch and broadcasts the hot
+      rules' keys to the scan. One batch over a prior of K keys (gate,
+      the scan's job and advance; local[4], median of 3), in
+      process-tree CPU-s / wall s, against the earlier broadcast join
+      plus ``toArrow`` collect: 0.68/0.45 vs 5.16/3.06 at 3x10^5 keys,
+      1.46/0.85 vs 9.2/6.79 at 10^6, 3.13/2.18 vs 6.67/3.33 at 3x10^6;
+      7.68/2.46 vs 10.87/3.79 at 10^6 hot fires per batch. Past about
+      3x10^6 live keys, the largest measured, use the ``'state'``
+      backend.
     * ``'state'``: the store-native form -- hot/cold rule split with
       ``applyInPandasWithState`` eviction timers (build_match_stream),
       the one keyed-state backend; both call the same ``greedy_keep``

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -100,10 +101,10 @@ def test_prior_fire_before_1970_still_suppresses(spark):
     snapshot backend's seed must too."""
     _, turns = _turns(spark, [("ping", "1969-12-31 23:59:59")])
     matches = match_turns(turns, RULES)
-    prior = spark.createDataFrame(
-        [("c", "ping", int(pd.Timestamp("1969-12-31 23:59:58").value))],
-        "conv_id string, rule_id string, prior_ns long",
-    )
+    prior = pa.table({
+        "conv_id": ["c"], "rule_id": ["ping"],
+        "last_fire_ns": [pd.Timestamp("1969-12-31 23:59:58").value],
+    })
     assert apply_cooldown(matches, RULES).count() == 1
     assert apply_cooldown(matches, RULES, prior=prior).count() == 0
 

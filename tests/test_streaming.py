@@ -600,7 +600,7 @@ def test_snapshot_state_evicts_under_batch_rules(spark, tmp_path):
 
 def test_snapshot_prior_starts_no_job(spark, tmp_path):
     """The prior snapshot is one Arrow file read on the driver, and the
-    gate seeds the cooldown from a driver-built frame: resolving the
+    gate ships it to the cooldown scan by broadcast: resolving the
     prior and planning the seeded gate run no Spark job, which every
     micro-batch with a prior snapshot would otherwise pay."""
     from logeventprocessor_spark.schema import MATCHES_SCHEMA
@@ -614,9 +614,9 @@ def test_snapshot_prior_starts_no_job(spark, tmp_path):
     cool = CooldownSnapshotState(
         spark, str(tmp_path / "state"), watermark_delay_ms=600_000
     )
-    g = cool.gate(fire, 0, rules).persist()
-    cool.advance(g, 0, rules, max_ts=ts)
-    g.unpersist()
+    g = cool.gate(fire, 0, rules)
+    g.count()  # the sink write runs the gate's scan first
+    cool.advance(g, 0, rules)
 
     before = _last_job_id(spark)
     prior, wm_ns = cool.prior(1)
@@ -647,13 +647,11 @@ def test_advance_without_hot_rows_starts_no_job(spark, tmp_path):
     cool = CooldownSnapshotState(
         spark, str(tmp_path / "state"), watermark_delay_ms=600_000
     )
-    g = cool.gate(cold, 0, rules).persist()
-    try:
-        before = _last_job_id(spark)
-        cool.advance(g, 0, rules, max_ts=None)
-        assert _last_job_id(spark) == before
-    finally:
-        g.unpersist()
+    g = cool.gate(cold, 0, rules)
+    g.count()  # the sink write runs the gate's scan first
+    before = _last_job_id(spark)
+    cool.advance(g, 0, rules)
+    assert _last_job_id(spark) == before
     assert pq.read_metadata(_snap_file(cool, 0)).num_rows == 0
     assert _snap_wm_ns(cool, 0) == 0
     assert cool.prior(1) == (None, 0)
@@ -661,10 +659,10 @@ def test_advance_without_hot_rows_starts_no_job(spark, tmp_path):
 
 @pytest.mark.parametrize("hot", [True, False], ids=["hot", "cold"])
 def test_advance_merges_prior_on_the_driver(spark, tmp_path, hot):
-    """With a prior snapshot, advance max-merges it with the batch's hot
-    fires on the driver: one job collects the fires; a batch without
+    """With a prior snapshot, advance max-merges it on the driver with
+    the hot fires the gate's scan reported, with no job; a batch without
     hot-rule rows writes the prior's keys back through the eviction
-    filter alone, with no job."""
+    filter alone, with no job either."""
     from logeventprocessor_spark.schema import MATCHES_SCHEMA
 
     rules = [r for r in canonical_rules() if r.rule_id in ("test", "spam_guard")]
@@ -683,30 +681,150 @@ def test_advance_merges_prior_on_the_driver(spark, tmp_path, hot):
     )
     g0 = cool.gate(matches([("a", 0, "spam_guard", base),
                             ("b", 0, "spam_guard", base + s)]), 0, rules)
-    cool.advance(g0, 0, rules, max_ts=base + s)
+    g0.count()  # the sink write runs the gate's scan first
+    cool.advance(g0, 0, rules)
 
     if hot:
         # an existing key past its cooldown, and a new key
         rows = [("a", 1, "spam_guard", base + 10 * s),
                 ("c", 1, "spam_guard", base + 2 * s)]
-        max_ts, jobs = base + 10 * s, 1
         exp = {("a", base + 10 * s), ("b", base + s), ("c", base + 2 * s)}
     else:
         rows = [("c", 1, "test", base + 10 * s)]
-        max_ts, jobs = None, 0
         exp = {("a", base), ("b", base + s)}
-    g1 = cool.gate(matches(rows), 1, rules).persist()
-    try:
-        g1.count()  # the sink write materializes gated first
-        before = _last_job_id(spark)
-        cool.advance(g1, 1, rules, max_ts=max_ts)
-        assert _last_job_id(spark) - before == jobs
-    finally:
-        g1.unpersist()
+    g1 = cool.gate(matches(rows), 1, rules)
+    g1.count()
+    before = _last_job_id(spark)
+    cool.advance(g1, 1, rules)
+    assert _last_job_id(spark) == before
     snap = pd.read_parquet(os.path.join(cool._snap_dir(1), "data"))
     assert set(zip(snap["conv_id"], snap["rule_id"], snap["last_fire_ns"])) == {
         (c, "spam_guard", ts.value) for c, ts in exp
     }
+
+
+def _hot_and_cold_turns(turn_idx, ts):
+    """Hot ``spam_guard`` fires on conversations a-c and a cold ``test``
+    match on d, all at ``ts``."""
+    return [(c, turn_idx, "user", "spam ping", "", ts) for c in "abc"] + [
+        ("d", turn_idx, "user", "hi clarice", "", ts)
+    ]
+
+
+def test_micro_batch_runs_two_jobs(spark, tmp_path, monkeypatch):
+    """One pass per micro-batch: the sink write runs the gate's shuffle
+    stage and the write, with or without a prior snapshot (the prior
+    rides a broadcast variable), and advance runs none, because the
+    scan reported the kept fires by accumulator."""
+    rules = canonical_rules()
+    t = pd.Timestamp("2024-03-01 10:00:00")
+    sink, cool = _snapshot_engine(spark, tmp_path)
+    advance, advance_jobs = cool.advance, []
+
+    def counted(*a):
+        before = _last_job_id(spark)
+        advance(*a)
+        advance_jobs.append(_last_job_id(spark) - before)
+
+    monkeypatch.setattr(cool, "advance", counted)
+    jobs = []
+    for batch_id in range(2):
+        before = _last_job_id(spark)
+        rows = _hot_and_cold_turns(batch_id, t + pd.Timedelta(seconds=10 * batch_id))
+        assert _run_batch(spark, sink, cool, batch_id, rows, rules) == [batch_id]
+        jobs.append(_last_job_id(spark) - before)
+    assert cool.prior(1)[0].num_rows == 3
+    assert jobs == [2, 2]
+    assert advance_jobs == [0, 0]
+
+
+def test_snapshot_state_keeps_driver_state_bounded(spark, tmp_path):
+    """One state object holds one accumulator for all its batches, and
+    each batch's advance destroys the broadcast of its seed: PySpark's
+    accumulator registry and the context's broadcast files keep their
+    size over 5 batches."""
+    from pyspark.accumulators import _accumulatorRegistry
+
+    rules = canonical_rules()
+    t = pd.Timestamp("2024-03-01 10:00:00")
+    sink, cool = _snapshot_engine(spark, tmp_path)
+    sizes = []
+    for batch_id in range(6):
+        rows = _hot_and_cold_turns(batch_id, t + pd.Timedelta(seconds=10 * batch_id))
+        _run_batch(spark, sink, cool, batch_id, rows, rules)
+        sizes.append((len(_accumulatorRegistry),
+                      len(os.listdir(spark.sparkContext._temp_dir))))
+    assert cool.prior(6)[0].num_rows == 3
+    assert sizes[1:] == sizes[:1] * 5
+
+
+def test_advance_ignores_repeated_and_stale_fire_reports(spark, tmp_path):
+    """Reports sent twice (every task of the gated frame runs again),
+    a report of another batch, and the report of an earlier attempt at
+    this batch under other input leave snapshot 1 as a clean run
+    writes it: same keys, fires and watermark."""
+    from logeventprocessor_spark.schema import MATCHES_SCHEMA
+
+    rules = [r for r in canonical_rules() if r.rule_id == "spam_guard"]
+    base = pd.Timestamp("2024-03-01 10:00:00")
+    s, h = pd.Timedelta(seconds=1), pd.Timedelta(hours=1)
+
+    def matches(rows):
+        return spark.createDataFrame(
+            [(c, i, "spam_guard", 0, "", "", ts.to_pydatetime())
+             for c, i, ts in rows],
+            MATCHES_SCHEMA,
+        )
+
+    def snapshot_1(state_dir, noisy):
+        cool = CooldownSnapshotState(spark, str(tmp_path / state_dir), 600_000)
+        g0 = cool.gate(matches([("a", 0, base), ("b", 0, base + s)]), 0, rules)
+        g0.count()
+        cool.advance(g0, 0, rules)
+        if noisy:
+            cool.gate(matches([("a", 9, base + h)]), 1, rules).count()
+        g1 = cool.gate(matches([("a", 1, base + 10 * s), ("c", 1, base + 2 * s)]),
+                       1, rules)
+        g1.count()
+        if noisy:
+            g1.count()
+            cool.gate(matches([("c", 9, base + h)]), 7, rules).count()
+        cool.advance(g1, 1, rules)
+        table = pq.read_table(_snap_file(cool, 1))
+        return table.sort_by("conv_id"), _snap_wm_ns(cool, 1)
+
+    clean, clean_wm = snapshot_1("clean", False)
+    noisy, noisy_wm = snapshot_1("noisy", True)
+    assert clean.to_pylist() == [
+        {"conv_id": c, "rule_id": "spam_guard", "last_fire_ns": ts.value}
+        for c, ts in [("a", base + 10 * s), ("b", base + s), ("c", base + 2 * s)]
+    ]
+    assert noisy.to_pylist() == clean.to_pylist()
+    assert noisy_wm == clean_wm == (base + 10 * s - pd.Timedelta(minutes=10)).value
+
+
+def test_new_watermarks_compile_no_class(spark, tmp_path):
+    """The snapshot watermark reaches the scan by broadcast, not as a
+    literal in generated code: after a warm-up schedule, batches whose
+    watermarks are all new compile no class."""
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    rules = canonical_rules()
+    m = pd.Timedelta(minutes=1)
+
+    def schedule(name, start) -> list[int]:
+        sink, cool = _snapshot_engine(spark, tmp_path / name)
+        out = []
+        for batch_id in range(4):
+            c0 = compiles.getCount()
+            rows = _hot_and_cold_turns(batch_id, start + batch_id * m)
+            _run_batch(spark, sink, cool, batch_id, rows, rules)
+            out.append(compiles.getCount() - c0)
+        return out
+
+    t = pd.Timestamp("2024-03-01 10:00:00")
+    schedule("warm", t)
+    assert schedule("moving", t + pd.Timedelta(days=1)) == [0, 0, 0, 0]
 
 
 def _spam_fire(turn_idx, ts):
